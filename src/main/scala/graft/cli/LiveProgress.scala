@@ -6,10 +6,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, S
   * the reference's per-file progress bars + ETA (`progress.rs:6-197`).
   *
   * The reference tracks one bar per reader thread over its file; here the
-  * unit of execution is the Spark TASK, which on the byte fast paths IS one
-  * input file (one task per file, `CsvByteConcat.scala`), and on the typed
-  * path is one input split. The listener renders a single carriage-return
-  * line on the driver from scheduler-bus task completions:
+  * unit of execution is the Spark TASK, which on the byte fast paths' multi-
+  * file output IS one input file (one task per file, `CsvByteConcat.scala`),
+  * and on the typed path is one input split. Single-file byte conversions
+  * run on the driver with no Spark job, so they render no bar; their
+  * per-file `--json-logs` completion events still fire. The listener
+  * renders a single carriage-return line on the driver from scheduler-bus
+  * task completions:
   *
   *   [#####.....] 12/24 tasks  3.4 MB/s  elapsed 2.1s  eta 2.2s
   *

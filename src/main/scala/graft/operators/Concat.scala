@@ -87,9 +87,8 @@ object Concat {
       conv: org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter,
       conf: org.apache.hadoop.conf.Configuration)
       : org.apache.spark.sql.types.StructType = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = HConf.openParquet(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(path), conf))
     val msg = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
     forceNullable(conv.convert(msg))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
@@ -125,7 +124,10 @@ object Concat {
       .asInstanceOf[org.apache.spark.sql.types.StructType]
   }
 
-  /** Per-file schema WITHOUT a per-file DataFrameReader: CSV resolves via
+  /** One file's schema — the one-file case of [[fileSchemasTry]], which
+    * holds the single format dispatch.
+    *
+    * Per-file schema WITHOUT a per-file DataFrameReader: CSV resolves via
     * the driver-side bounded sample (zero Spark jobs); parquet reads the
     * file FOOTER directly and converts through Spark's own
     * parquet->Catalyst converter (constructed from the session conf, so
@@ -137,20 +139,7 @@ object Concat {
     */
   def fileSchema(spark: SparkSession, f: InputFile,
       csv: CsvSource.CsvOptions): org.apache.spark.sql.types.StructType =
-    f.format match {
-      case Csv   => CsvSource.resolveSchema(spark, f.path, csv)
-      case Jsonl => JsonSource.resolveSchema(spark, f.path,
-        JsonSource.JsonOptions(inferRows = csv.inferRows)) // --infer-rows is format-shared
-      case Parquet =>
-        parquetFooterSchema(f.path,
-          new org.apache.spark.sql.execution.datasources.parquet
-            .ParquetToSparkSchemaConverter(spark.sessionState.conf),
-          spark.sessionState.newHadoopConf())
-      case Orc => orcFooterSchema(f.path, spark.sessionState.newHadoopConf())
-      case Avro => avroHeaderSchema(f.path, spark.sessionState.newHadoopConf())
-      case Xml => XmlSource.resolveSchema(spark, f.path,
-        XmlSource.XmlOptions(inferRows = csv.inferRows))
-    }
+    fileSchemasTry(spark, Seq(f), csv).head.get
 
   /** All files' schemas, probed concurrently on the driver pool — one
     * bounded sample or footer read per file, never a reader setup. The
@@ -179,7 +168,7 @@ object Concat {
       Future.sequence(files.map(f => Future(scala.util.Try(f.format match {
         case Csv     => CsvSource.resolveSchema(spark, f.path, csv)
         case Jsonl   => JsonSource.resolveSchema(spark, f.path,
-          JsonSource.JsonOptions(inferRows = csv.inferRows))
+          JsonSource.JsonOptions(inferRows = csv.inferRows)) // --infer-rows is format-shared
         case Parquet => parquetFooterSchema(f.path, conv, conf)
         case Orc     => orcFooterSchema(f.path, conf)
         case Avro    => avroHeaderSchema(f.path, conf)
@@ -255,7 +244,10 @@ object Concat {
     require(resolved.nonEmpty,
       s"every input failed its schema probe: ${files.map(_.path).mkString(", ")}")
     // group contiguous-in-sort-order files by (format, schema): each group
-    // is one scan; discovery order is preserved across groups
+    // is one scan, and the groups keep discovery order. WITHIN a group the
+    // scan does not: Spark packs a scan's files into partitions by size,
+    // largest first, so a multi-file group's rows come out in that order.
+    // The byte fast paths keep discovery order.
     val groups = resolved
       .foldLeft(Vector.empty[(Format, org.apache.spark.sql.types.StructType, Vector[String])]) {
         case (acc, (f, s)) =>

@@ -3,8 +3,8 @@ package graft.operators
 import graft.sinks.Sink
 import graft.sources.CsvSource
 import graft.sources.Discovery.{Csv, InputFile}
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
-import org.apache.hadoop.fs.Path
+import java.io.{BufferedInputStream, InputStream, OutputStream}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** CSV->CSV concatenation at byte level — the conversion fast path.
@@ -22,15 +22,20 @@ import org.apache.spark.sql.SparkSession
   * all-string Concat+Sink path in every case; only incidental representation
   * (gratuitous source quoting) is preserved rather than re-rendered.
   *
-  * Scale shape: one task per input file (a files RDD — genuine per-partition
-  * imperative byte I/O, the documented last-resort case), each streaming
-  * through the Hadoop FS API so local/HDFS/S3 behave alike. No shuffle, no
-  * row materialization; throughput is storage-bound and scales with file
-  * count across executors. Multi-file output is written directly to
-  * deterministic final names (idempotent overwrite — no committer
-  * round-trip); single-file output concatenates parts driver-side — the
-  * same inherent single-writer bottleneck as the reference's one-file
-  * contract (and Sink's coalesce(1) path), documented there.
+  * Scale shape: single-file output (`-o out.csv`, the reference's one-file
+  * contract) streams every input on the DRIVER, in discovery order, into
+  * one temp file — no Spark job, no staged parts to re-read. Each file is
+  * scanned twice there: a validate pass into a discarding stream, then the
+  * copy (or the record fallback) into the merged file, so a dirty file
+  * never leaves half its bytes in the output. Every byte funnels through
+  * one writer under that contract anyway (the same bottleneck as Sink's
+  * coalesce(1)), so validation moving from executors to the driver costs
+  * no parallelism the output could use. Multi-file output is the scale
+  * path: one task per input file (a files RDD — genuine per-partition
+  * imperative byte I/O, the documented last-resort case) writes its own
+  * part, which the driver renames to a deterministic final name. Both
+  * stream through the Hadoop FS API so local/HDFS/S3 behave alike; no
+  * shuffle, no row materialization, and rows keep discovery order.
   */
 object CsvByteConcat {
 
@@ -117,82 +122,41 @@ object CsvByteConcat {
 
     val delim = cfg.csv.delimiter.charAt(0).toByte
     val width = countFields(header, delim)
-    val tmpDir = sink.path + ".bytes-out"
-    val fs0 = new Path(tmpDir).getFileSystem(hconf)
-    fs0.delete(new Path(tmpDir), true)
-    fs0.mkdirs(new Path(tmpDir))
-
     val naBytes = cfg.csv.naValues.map(_.getBytes("UTF-8")).toArray
     val naOut = sink.naString
-    val singleFile = sink.singleFile
     val bufBytes = sink.writerBufferBytes
-    val paths = files.map(_.path).zipWithIndex
-    val headerBc = spark.sparkContext.broadcast(header)
-    val hconfBc = spark.sparkContext.broadcast(HConf.snapshot(hconf))
     val csvOpts = cfg.csv
 
-    // one task per file: scan+copy (or record fallback) into its own part.
-    // Tasks rebuild the DRIVER's Hadoop Configuration from a broadcast
-    // snapshot (SerializableConfiguration is private[spark]) so runtime
-    // spark.hadoop.* settings / object-store credentials survive.
-    //
-    // COMMIT PROTOCOL: every task writes an ATTEMPT-UNIQUE file inside the
-    // temp dir and the driver promotes exactly the attempts it collected —
-    // never write a final path from a task. Writing final part names
-    // directly would (a) truncate an INPUT when output names overlap the
-    // inputs (chained concat of a previous run's rolled output is the
-    // advertised fast-path workflow), and (b) let a speculative/zombie
-    // duplicate attempt interleave bytes with the winner's stream.
-    val results = spark.sparkContext
-      .parallelize(paths, paths.size)
-      .map { case (path, idx) =>
-        val t0 = System.nanoTime()
-        val conf = HConf.restore(hconfBc.value)
-        val inPath = new Path(path)
-        val ifs = inPath.getFileSystem(conf)
-        val inBytes = ifs.getFileStatus(inPath).getLen
-        val attemptName =
-          f"part-$idx%05d-a${org.apache.spark.TaskContext.get.taskAttemptId}%d"
-        val outPath = new Path(tmpDir, attemptName)
-        val ofs = outPath.getFileSystem(conf)
-        def withOut[A](f: OutputStream => A): A = {
-          val o = new BufferedOutputStream(ofs.create(outPath, true), bufBytes)
-          try {
-            if (!singleFile) { o.write(headerBc.value); o.write(Lf.toInt) }
-            f(o)
-          } finally o.close()
-        }
-        // first pass: validate + copy; if dirty, rewrite the whole part
-        // record-by-record (create(overwrite) truncates the part cleanly
-        // because the first stream is closed before the second opens)
-        val clean = withOut { out =>
-          val in = new BufferedInputStream(ifs.open(inPath), 1 << 20)
-          try { skipLine(in); scanAndCopy(in, out, delim, naBytes, width) }
-          finally in.close()
-        }
-        val n = clean.getOrElse {
-          withOut { out =>
-            val in = new BufferedInputStream(ifs.open(inPath), 1 << 20)
-            try parseAndRender(in, out, csvOpts, naOut, width)
-            finally in.close()
-          }
-        }
-        (idx, attemptName, n, inBytes, (System.nanoTime() - t0) / 1e9)
+    val (results, bytesWritten) = if (sink.singleFile) {
+      // driver loop into ONE merged file (headerless bodies after the one
+      // header). A dirty file is found before any of its bytes reach the
+      // merged stream: a validate pass into a discarding stream, then the
+      // clean copy or the record fallback.
+      BytePromote.writeSingleFile(hconf, sink.path, ".csv", files.map(_.path),
+        bufBytes, header = Some(header)) { (fs, p, out) =>
+        def copyClean(o: OutputStream): Option[Long] =
+          opened(fs, p) { in => skipLine(in); scanAndCopy(in, o, delim, naBytes, width) }
+        if (copyClean(OutputStream.nullOutputStream()).isEmpty)
+          opened(fs, p)(parseAndRender(_, out, csvOpts, naOut, width))
+        else copyClean(out).getOrElse(
+          throw new java.io.IOException(s"$p changed while it was being copied"))
       }
-      .collect()
-
-    // PROMOTE: all new data is fully materialized in the temp dir before
-    // anything at the output paths is touched — the destructive window is
-    // the renames, not the whole copy. Stale-part cleanup runs AFTER, the
-    // same contract as Sink.promote.
-    val total = results.map(_._3).sum
-    val bytesRead = results.map(_._4).sum
-    // single-file mode prepends the ONE header (parts are headerless there)
-    val bytesWritten = BytePromote.promote(hconf, sink.path, ".csv", tmpDir,
-      results.toIndexedSeq, singleFile, bufBytes, header = Some(header))
-    val perFile = BytePromote.perFileMetrics(results.toIndexedSeq, i => files(i).path)
-    Some(Map("rows_written" -> total, "bytes_read" -> bytesRead,
-      "bytes_written" -> bytesWritten, "files" -> perFile))
+    } else {
+      // one task per file into its own part (header first): validate +
+      // copy; if dirty, rewrite the whole part record-by-record (reopening
+      // truncates it cleanly because the first stream is closed first).
+      // The closure is shipped to tasks, so it calls object methods only.
+      BytePromote.writeParts(spark, sink.path, ".csv", files.map(_.path), bufBytes) {
+        (fs, p, openPart) =>
+          def withOut[A](f: OutputStream => A): A = {
+            val o = openPart()
+            try { o.write(header); o.write(Lf.toInt); f(o) } finally o.close()
+          }
+          withOut(out => opened(fs, p) { in => skipLine(in); scanAndCopy(in, out, delim, naBytes, width) })
+            .getOrElse(withOut(out => opened(fs, p)(parseAndRender(_, out, csvOpts, naOut, width))))
+      }
+    }
+    Some(BytePromote.metrics(results, bytesWritten, i => files(i).path))
   }
 
   /** Read one line's bytes (without LF / trailing CR); null on empty EOF. */
@@ -206,6 +170,11 @@ object CsvByteConcat {
     }
     val arr = buf.toByteArray
     if (arr.nonEmpty && arr(arr.length - 1) == Cr) arr.dropRight(1) else arr
+  }
+
+  private def opened[A](fs: FileSystem, p: Path)(f: InputStream => A): A = {
+    val in = new BufferedInputStream(fs.open(p), 1 << 20)
+    try f(in) finally in.close()
   }
 
   private def skipLine(in: InputStream): Unit = {

@@ -2,8 +2,8 @@ package graft.operators
 
 import graft.sinks.Sink
 import graft.sources.Discovery.{InputFile, Jsonl}
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
-import org.apache.hadoop.fs.Path
+import java.io.{BufferedInputStream, InputStream, OutputStream}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** JSONL->JSONL concatenation at byte level — the fast path CSV gets from
@@ -17,11 +17,11 @@ import org.apache.spark.sql.SparkSession
   * normalization: the whole transform is "copy the bytes, normalize the
   * final newline".
   *
-  * Scale shape: one task per input file (files RDD, genuine per-partition
-  * byte I/O — the documented last-resort case, same as the CSV path),
-  * streaming through the Hadoop FS API. No shuffle, no row
-  * materialization; storage-bound and scales with file count across
-  * executors.
+  * Scale shape: the same as the CSV path. Single-file output streams every
+  * input on the driver, in discovery order, into one temp file (no Spark
+  * job); multi-file output runs one task per input file (files RDD, genuine
+  * per-partition byte I/O — the documented last-resort case). Both stream
+  * through the Hadoop FS API; no shuffle, no row materialization.
   *
   * Contract note: fidelity is to the SOURCE BYTES, which is STRONGER than
   * the typed path — the typed plan is bounded by the `--infer-rows` sample
@@ -32,9 +32,9 @@ import org.apache.spark.sql.SparkSession
   * against a full-inference read of the inputs, not the sampled typed plan
   * (Maw.verifyOutput).
   *
-  * Commit protocol mirrors CsvByteConcat: every task writes an
-  * ATTEMPT-UNIQUE file in the temp dir, the driver promotes exactly the
-  * attempts it collected (never a final path from a task) — chained
+  * Commit protocol: [[BytePromote]], shared with CsvByteConcat — tasks
+  * write ATTEMPT-UNIQUE files in the temp dir, the driver promotes exactly
+  * the attempts it collected (never a final path from a task), so chained
   * concats of a previous run's rolled output can't truncate their own
   * inputs, and a zombie duplicate attempt can't interleave with the
   * winner's stream.
@@ -62,43 +62,23 @@ object JsonByteConcat {
         files.exists(f => graft.sources.Discovery.isGzip(f.path))) // see CsvByteConcat
       return None
     val hconf = spark.sparkContext.hadoopConfiguration
-    val tmpDir = sink.path + ".bytes-out"
-    val fs0 = new Path(tmpDir).getFileSystem(hconf)
-    fs0.delete(new Path(tmpDir), true)
-    fs0.mkdirs(new Path(tmpDir))
-    val singleFile = sink.singleFile
     val bufBytes = sink.writerBufferBytes
-    val paths = files.map(_.path).zipWithIndex
-    val hconfBc = spark.sparkContext.broadcast(HConf.snapshot(hconf))
-
-    val results = spark.sparkContext
-      .parallelize(paths, paths.size)
-      .map { case (path, idx) =>
-        val t0 = System.nanoTime()
-        val conf = HConf.restore(hconfBc.value)
-        val inPath = new Path(path)
-        val ifs = inPath.getFileSystem(conf)
-        val inBytes = ifs.getFileStatus(inPath).getLen
-        val attemptName =
-          f"part-$idx%05d-a${org.apache.spark.TaskContext.get.taskAttemptId}%d"
-        val outPath = new Path(tmpDir, attemptName)
-        val ofs = outPath.getFileSystem(conf)
-        val out = new BufferedOutputStream(ofs.create(outPath, true), bufBytes)
-        val rows = try {
-          val in = new BufferedInputStream(ifs.open(inPath), 1 << 20)
-          try copyCountingLines(in, out) finally in.close()
-        } finally out.close()
-        (idx, attemptName, rows, inBytes, (System.nanoTime() - t0) / 1e9)
+    val (results, bytesWritten) = if (sink.singleFile) {
+      BytePromote.writeSingleFile(hconf, sink.path, ".jsonl", files.map(_.path),
+        bufBytes, header = None)(copyFile)
+    } else {
+      BytePromote.writeParts(spark, sink.path, ".jsonl", files.map(_.path), bufBytes) {
+        (fs, p, openPart) =>
+          val out = openPart()
+          try copyFile(fs, p, out) finally out.close()
       }
-      .collect()
+    }
+    Some(BytePromote.metrics(results, bytesWritten, i => files(i).path))
+  }
 
-    val total = results.map(_._3).sum
-    val bytesRead = results.map(_._4).sum
-    val bytesWritten = BytePromote.promote(hconf, sink.path, ".jsonl", tmpDir,
-      results.toIndexedSeq, singleFile, bufBytes, header = None)
-    Some(Map("rows_written" -> total, "bytes_read" -> bytesRead,
-      "bytes_written" -> bytesWritten,
-      "files" -> BytePromote.perFileMetrics(results.toIndexedSeq, i => files(i).path)))
+  private def copyFile(fs: FileSystem, p: Path, out: OutputStream): Long = {
+    val in = new BufferedInputStream(fs.open(p), 1 << 20)
+    try copyCountingLines(in, out) finally in.close()
   }
 
   /** Stream `in` to `out`, counting non-empty lines, normalizing the file's

@@ -3,7 +3,7 @@ package graft.operators
 import graft.sinks.Sink
 import graft.sources.Discovery.{InputFile, Parquet}
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
@@ -15,7 +15,7 @@ import scala.jdk.CollectionConverters._
   * (`writer_parquet.rs:77-96`), so its 200 MB/s target is only meaningful
   * as "don't decode what you don't have to". This operator does what real
   * parquet tools (parquet-cli `merge`) do: copy whole row groups byte-for-
-  * byte via `ParquetFileWriter.appendFile` — pages, dictionaries, encodings,
+  * byte via `ParquetFileReader.appendTo` — pages, dictionaries, encodings,
   * per-chunk statistics and source compression all pass through untouched;
   * only the footer is rewritten with rebased offsets. No decode, no
   * re-encode, no row materialization.
@@ -33,8 +33,11 @@ import scala.jdk.CollectionConverters._
   * file, driver-side — the same per-file metadata cost Discovery's listing
   * already pays). Multi-file output copies one input per task across the
   * cluster; single-file output is an inherent single-writer step (the
-  * reference's one-file contract), but at row-group-copy speed it is
-  * storage-bound, not CPU-bound.
+  * reference's one-file contract) that the driver runs itself, in
+  * discovery order and with no Spark job — at row-group-copy speed it is
+  * storage-bound, not CPU-bound. Every open (footer or row-group copy) goes
+  * through [[HConf.openParquet]] with the session's Hadoop conf, so no
+  * open re-parses Hadoop's XML defaults.
   */
 object ParquetByteConcat {
 
@@ -69,9 +72,8 @@ object ParquetByteConcat {
       import scala.concurrent.ExecutionContext.Implicits.global
       Await.result(Future.sequence(files.map { f =>
         Future {
-          val p = new Path(f.path)
-          val inFile = HadoopInputFile.fromPath(p, hconf)
-          val r = ParquetFileReader.open(inFile)
+          val inFile = HadoopInputFile.fromPath(new Path(f.path), hconf)
+          val r = HConf.openParquet(inFile)
           try {
             val md = r.getFooter.getFileMetaData
             (md.getSchema, r.getFooter.getBlocks.asScala.map(_.getRowCount).sum,
@@ -107,14 +109,13 @@ object ParquetByteConcat {
     // pre-existing output before the new one exists (single-file mode even
     // truncated an INPUT when the output path was among the inputs), and
     // rolled task writes would race speculative duplicate attempts.
-    val tmpDir = sink.path + ".bytes-out"
+    val tmpDir = BytePromote.freshTmpDir(hconf, sink.path)
     val outFs = new Path(sink.path).getFileSystem(hconf)
-    outFs.delete(new Path(tmpDir), true)
-    outFs.mkdirs(new Path(tmpDir))
     Option(new Path(sink.path).getParent).foreach(outFs.mkdirs)
     val perFileSec: Seq[Double] = if (sink.singleFile) {
-      // one output file = one writer (the reference's single-file contract);
-      // sequential appendFile is storage-bound: no decode happens
+      // one output file = one writer (the reference's single-file contract):
+      // the driver appends each input's row groups in discovery order — no
+      // Spark job, no decode; storage-bound
       val merged = new Path(tmpDir, "merged.parquet")
       val out = HadoopOutputFile.fromPath(merged, hconf)
       val w = new ParquetFileWriter(out, schema,
@@ -122,7 +123,7 @@ object ParquetByteConcat {
       w.start()
       val secs = files.map { f =>
         val t0 = System.nanoTime()
-        w.appendFile(HadoopInputFile.fromPath(new Path(f.path), hconf))
+        appendTo(w, f.path, hconf)
         (System.nanoTime() - t0) / 1e9
       }
       w.end(footerMeta.asJava)
@@ -148,7 +149,7 @@ object ParquetByteConcat {
           val w = new ParquetFileWriter(out, sch,
             ParquetFileWriter.Mode.OVERWRITE, RowGroupSize, MaxPadding)
           w.start()
-          w.appendFile(HadoopInputFile.fromPath(new Path(path), conf))
+          appendTo(w, path, conf)
           w.end(footerMeta.asJava)
           (idx, attemptName, (System.nanoTime() - t0) / 1e9)
         }
@@ -172,5 +173,12 @@ object ParquetByteConcat {
     }
     Some(Map("rows_written" -> totalRows, "bytes_read" -> totalBytes,
       "bytes_written" -> bytesWritten, "files" -> perFile))
+  }
+
+  /** Copy every row group of `path` into `w` byte-for-byte. */
+  private def appendTo(w: ParquetFileWriter, path: String,
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val r = HConf.openParquet(HadoopInputFile.fromPath(new Path(path), conf))
+    try r.appendTo(w) finally r.close()
   }
 }

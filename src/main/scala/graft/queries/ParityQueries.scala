@@ -252,7 +252,7 @@ object ParityQueries {
         .filter(p => p.getName.startsWith("liz-") && p.getName.endsWith(".parquet"))
       var total = 0L; var matching = 0L
       parts.foreach { p =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        val r = graft.operators.HConf.openParquet(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
         try {
           val schema = r.getFooter.getFileMetaData.getSchema
@@ -394,7 +394,7 @@ object ParityQueries {
         .filter(p => p.getName.endsWith(".parquet"))
       var total = 0L; var matching = 0L
       parts.foreach { p =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        val r = graft.operators.HConf.openParquet(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
         try {
           val schema = r.getFooter.getFileMetaData.getSchema

@@ -81,8 +81,10 @@ object SchemaUnifier {
   }
 
   /** Full pipeline: unify schemas of all sources, align each, UNION ALL.
-    * Left-to-right union order preserves the discovery order (U1,
-    * pipeline.rs:76-100 / README.md:77).
+    * The union keeps the sources' left-to-right order (U1,
+    * pipeline.rs:76-100 / README.md:77); rows inside one source keep that
+    * DataFrame's partition order, which for a multi-file scan is Spark's
+    * size-packed file order (largest file first), not discovery order.
     */
   def concat(
       dfs: Seq[DataFrame],

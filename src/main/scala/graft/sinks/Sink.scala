@@ -14,8 +14,12 @@ import scala.jdk.CollectionConverters._
   *   - Rolling output `--roll-by-rows` (cli.rs:70-77, unimplemented there) via
   *     `maxRecordsPerFile`; `--roll-by-bytes` approximated from sampled row size
   *   - Single-file output contract (`-o out.csv` = one file): `coalesce(1)` +
-  *     part-file promotion. NOTE: single-file output is inherently a 1-task
-  *     bottleneck; at cluster scale prefer `singleFile=false` (directory out).
+  *     part-file promotion. NOTE: single-file output is inherently a
+  *     one-writer bottleneck; at cluster scale prefer `singleFile=false`
+  *     (rolled parts). The byte fast paths (graft.operators.CsvByteConcat,
+  *     JsonByteConcat, ParquetByteConcat) never reach this sink: they write
+  *     a single file on the driver with no Spark job, and rolled parts with
+  *     one task per input.
   */
 object Sink {
 
@@ -31,11 +35,15 @@ object Sink {
       singleFile: Boolean = true,
       /** Byte-path output buffer (P1 --writer-buffer, cli.rs:93-95). */
       writerBufferBytes: Int = 1 << 20,
-      /** The reference's single-writer contract preserves row order
-        * (README.md:77). When order is NOT required (rolled/directory
-        * output), setting this false repartitions up to the session's
-        * parallelism so narrow single-partition inputs still write with
-        * every core.
+      /** Write rows in the plan's partition order (no rebalance). The
+        * reference's single-writer contract keeps input order
+        * (README.md:77), but the plan's order is only discovery order
+        * across scan groups: inside one multi-file scan Spark packs files
+        * by size, largest first (see Concat.planFor). The byte fast paths
+        * do keep discovery order. When order is NOT required
+        * (rolled/directory output), setting this false repartitions up to
+        * the session's parallelism so narrow single-partition inputs still
+        * write with every core.
         */
       preserveOrder: Boolean = true,
       /** Hive-style partitioned layout (`--partition-by lang,split`):

@@ -141,6 +141,21 @@ class FaultInjectionSpec extends SparkSpec {
       s"byte path diverged under a task retry: $retried vs $clean")
   }
 
+  test("HConf.restore(snapshot(conf)) has exactly conf's entries, runtime-set keys included") {
+    import graft.operators.HConf
+    import scala.jdk.CollectionConverters._
+    def entries(c: org.apache.hadoop.conf.Configuration): Map[String, String] =
+      c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    val live = spark.sparkContext.hadoopConfiguration
+    val restored = HConf.restore(HConf.snapshot(live))
+    assert(restored.get("fs.fault.impl") == classOf[FaultRenameFs].getName)
+    assert(entries(restored) == entries(live))
+    // no classpath defaults are loaded on top: an empty snapshot stays empty
+    val bare = new org.apache.hadoop.conf.Configuration(false)
+    bare.set("graft.only.key", "1")
+    assert(entries(HConf.restore(HConf.snapshot(bare))) == Map("graft.only.key" -> "1"))
+  }
+
   test("Parquet multi-part promote killed mid-rename: no torn parts; rerun repairs") {
     import spark.implicits._
     val d = tmpDir("faultpq")
