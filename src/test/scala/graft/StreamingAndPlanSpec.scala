@@ -495,6 +495,32 @@ class StreamingAndPlanSpec extends SparkSpec {
     assert(byUrl.values.forall(_.size == 1), "duplicate url_norm admitted")
   }
 
+  /** Rows of `streamed` and `oneShot` at sf0.001 are equal as sets and
+    * non-empty — the batch == streaming equality the two queries' shared
+    * DuckDB oracle asserts.
+    */
+  private def assertStreamedEqualsOneShot(streamed: String, oneShot: String): Unit = {
+    val dir = "/root/testdata/sf0.001"
+    def rows(q: String) = SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSet
+    val got = rows(streamed)
+    val want = rows(oneShot)
+    assert(got == want, s"$streamed diverged from $oneShot: " +
+      s"only-$streamed=${(got -- want).take(3)} only-$oneShot=${(want -- got).take(3)}")
+    assert(want.nonEmpty, s"$oneShot returned no rows — the pin is vacuous")
+  }
+
+  test("st21 streaming bm25 maintenance == one-shot t36") {
+    assertStreamedEqualsOneShot("st21_streaming_bm25", "t36_bm25_retrieval")
+  }
+
+  test("st22 streaming positional maintenance == one-shot t39") {
+    assertStreamedEqualsOneShot("st22_streaming_phrase", "t39_phrase_search")
+  }
+
+  test("st24 streaming perceptual pairs == one-shot m05") {
+    assertStreamedEqualsOneShot("st24_streaming_perceptual", "m05_perceptual_dedup")
+  }
+
   test("t34 upweighted mixture: quota upweights restore clipped-cluster mass") {
     val dir = "/root/testdata/sf0.001"
     val rows = SparkEntry.queries("t34_upweighted_mixture")(spark, dir)
