@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.streaming.IngestLoop
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,7 +20,7 @@ import Q._
 object PipelineQueries {
 
   /** Per-batch wall seconds of the most recent st13 invocation, in batch
-    * order — soak ATTRIBUTION only (written by the foreachBatch closure,
+    * order — soak ATTRIBUTION only (the walls IngestLoop.run returns,
     * read by ScaleSoak after the query returns; harnesses are
     * single-threaded over legs). st13's product claim is per-batch cost
     * flat in corpus size / linear in batch rows; the total leg wall mixes
@@ -100,12 +101,7 @@ object PipelineQueries {
     s.table(sinkName)
   }
 
-  /** Write `df` as ONE parquet file named `<stage>.parquet` inside `dir` —
-    * the unit of arrival for a file-source micro-batch; calling this between
-    * `processAllAvailable()` calls delivers data in a known batch order
-    * (no modification-time races).
-    */
-  /** Wall seconds spent STAGING stream-input fixtures (addStreamFile's
+  /** Wall seconds spent STAGING stream-input fixtures (IngestLoop.land's
     * coalesce(1) writes) since the last reset — ScaleSoak zeroes this
     * before a timed run and subtracts it from the corpus-sized streaming
     * legs (st16/st17), whose input staging is test harness, not operator
@@ -114,35 +110,15 @@ object PipelineQueries {
     */
   @volatile var lastStagingSecs: Double = 0.0
 
-  private def addStreamFile(df: DataFrame, dir: java.nio.file.Path, stage: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val tStage0 = System.nanoTime()
-    try addStreamFileInner(df, dir, stage)
-    finally lastStagingSecs += (System.nanoTime() - tStage0) / 1e9
-  }
+  /** (doc_id, text): the input schema of the document ingest loops. */
+  private val docSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("text", StringType)))
 
-  private def addStreamFileInner(df: DataFrame, dir: java.nio.file.Path, stage: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    // stage OUTSIDE the watched dir: a _tmp subdir inside it races the file
-    // source's recursive listing (it can list the dir, then hit
-    // FileNotFoundException when the staging tree is deleted mid-listing);
-    // only the final atomic move may touch the watched tree
-    val tmp = java.nio.file.Files.createTempDirectory(s"${dir.getFileName}_stage_$stage")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Using.resource(java.nio.file.Files.list(tmp)) { st =>
-      st.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("part-") && n.endsWith(".parquet")
-      }.toList.head
-    }
-    java.nio.file.Files.move(part, dir.resolve(s"$stage.parquet"))
-    deleteRecursively(tmp)
-  }
-
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    graft.util.Fs.deleteRecursively(root)
+  /** A fresh [[IngestLoop]] for (tag, key) under the local temp dir; its
+    * input staging counts into [[lastStagingSecs]].
+    */
+  private def ingestLoop(s: SparkSession, tag: String, key: String): IngestLoop =
+    IngestLoop.local(s, tag, key, secs => lastStagingSecs += secs)
 
   /** embeddings + 5 EXACT duplicates of each query vector (< 10), planted at
     * ids 100000 + query*10 + j. The recall-1 trick d05/d06 use for the dedup
@@ -164,22 +140,6 @@ object PipelineQueries {
     (e.unionByName(planted), qs)
   }
 
-  /** s12's build-once serving index: bucketed assigned-corpus table +
-    * persisted centroids, keyed by the fixture's identity (path, size,
-    * mtime — a regenerated fixture gets a fresh key and rebuilds).
-    * Returns (table name, loaded model). Within a session every
-    * invocation after the first measures only centroid load + pruned
-    * probe — the production serving shape where assignment is paid at
-    * ingest. (Scope note: the default in-memory catalog forgets managed
-    * tables at JVM exit, so build-once is per-JVM; on a real cluster with
-    * a persistent metastore the same code is build-once per corpus.)
-    */
-  /** Fixture-identity key for build-once serving tables: dir + the backing
-    * parquet's (length, mtime), so a regenerated fixture at the same path
-    * gets fresh tables (a stale index would silently serve old data). One
-    * definition for all five build-once families — a keying fix must land
-    * once, not five times.
-    */
   /** d20's planted off-grid offset: exactly 37 chars (off every 100-char
     * grid point), shared by the Spark fixture, the SQL oracle, and the spec
     * that proves d18's fixed grid misses the duplicate behind it.
@@ -276,12 +236,28 @@ object PipelineQueries {
     (0 until 8).foldLeft("0")((acc, k) =>
       s"(($acc * 257 + unicode(substr(text, i - ${7 - k}, 1))) % 1048573)")
 
+  /** Fixture-identity key for build-once serving tables: dir + the backing
+    * parquet's (length, mtime), so a regenerated fixture at the same path
+    * gets fresh tables (a stale index would silently serve old data). One
+    * definition for all five build-once families — a keying fix must land
+    * once, not five times.
+    */
   private def fixtureKey(dir: String, table: String): String = {
     val f = new java.io.File(s"$dir/$table.parquet")
     java.lang.Integer.toHexString(
       (dir + ":" + f.length + ":" + f.lastModified).hashCode)
   }
 
+  /** s12's build-once serving index: bucketed assigned-corpus table +
+    * persisted centroids, keyed by the fixture's identity (path, size,
+    * mtime — a regenerated fixture gets a fresh key and rebuilds).
+    * Returns (table name, loaded model). Within a session every
+    * invocation after the first measures only centroid load + pruned
+    * probe — the production serving shape where assignment is paid at
+    * ingest. (Scope note: the default in-memory catalog forgets managed
+    * tables at JVM exit, so build-once is per-JVM; on a real cluster with
+    * a persistent metastore the same code is build-once per corpus.)
+    */
   private def s12ServeIndex(s: SparkSession, dir: String,
       corpus: DataFrame): (String, graft.operators.IvfIndex.Model) = {
     // staged-swap versioned: the bucketed table AND its model parquet share
@@ -438,8 +414,8 @@ object PipelineQueries {
     * the same docs for both; [[st13FixedBatchIngest]] scales only the
     * corpus. Body is the load-bearing st13 shape: per-invocation index,
     * probe -> admitted rows staged to parquet BEFORE the append -> bucketed
-    * append -> per-batch marker (full redelivery a skip, partial-apply
-    * replay refused by the append's duplicate-id guard).
+    * append, committed by [[IngestLoop]] (a crash between the append and
+    * the publish replays into the append's duplicate-id refusal).
     */
   private def st13Ingest(s: SparkSession, corpusDocs: DataFrame,
       batchDocs: DataFrame, key: String): DataFrame = {
@@ -468,73 +444,34 @@ object PipelineQueries {
           array_join(transform(toks, t => concat(t, lit("_xr"))), " ")
             .as("text"))
       val batch2 = c.unionByName(d).unionByName(n2)
-      val base = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"st13_ingest_$key")
-      deleteRecursively(base)
-      val deltaDir = base.resolve("delta")
-      val admittedDir = base.resolve("admitted")
-      java.nio.file.Files.createDirectories(deltaDir)
-      java.nio.file.Files.createDirectories(admittedDir)
-      val stream = s.readStream.schema(
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType)))).parquet(deltaDir.toString)
-      lastIngestBatchWalls = Nil
-      val applyBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
-        val tb0 = System.nanoTime()
-        val marker = admittedDir.resolve(s"b$batchId")
-        // per-batch stages are sized by the BATCH, not by the global
-        // shuffle-partition setting (which a soak/production session sizes
-        // for the CORPUS): round 13 measured the 1x->16x fixed-batch step
-        // (4.54 -> 7.65 s) tracking the soak's 32->1024 partition scaling,
-        // pure task-scheduling overhead. Pinning to the core count makes
-        // per-batch wall flat from 1x; the corpus side is bucketed, so the
-        // probe join never reshuffles it regardless of this setting.
-        if (!batch.isEmpty && !java.nio.file.Files.exists(marker))
-          withShufflePartitions(s, s.sparkContext.defaultParallelism) {
-            // probe + prep in one pass (round-21): the append below derives
-            // from the probe's checkpointed prep, so the batch's
-            // shingle+minhash walk runs once per micro-batch (it previously
-            // re-ran over the staged re-read)
-            val (pairs, prep) = Dedup.incrementalJaccardPairsIndexedWithPrep(
-              s, bandT, shT, batch, "doc_id", "text",
-              shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
-            val staged = base.resolve(s"stage_b$batchId")
-            // materialize admitted BEFORE the append mutates the index
-            batch.join(pairs.select(col("idA").as("doc_id")).distinct(),
-                Seq("doc_id"), "left_anti")
-              .write.mode("overwrite").parquet(staged.toString)
-            // append only the ADMITTED slice of the prep: a broadcast semi
-            // against the just-staged ids over the checkpointed prep —
-            // admitted ⊆ batch, whose ids the probe's guard just proved
-            // unique against the same tables
-            Dedup.appendJaccardIngestIndexPrepped(s, bandT, shT,
-              prep.join(broadcast(s.read.parquet(staged.toString)
-                  .select(col("doc_id").as("id"))), Seq("id"), "left_semi"),
-              numHashes = 16, bandRows = 1, buckets = 16)
-            java.nio.file.Files.move(staged, marker)
-            lastIngestBatchWalls =
-              lastIngestBatchWalls :+ (System.nanoTime() - tb0) / 1e9
-          }
+      // the loop's batch-sized shuffle partitions keep per-batch wall flat
+      // in corpus size (round 13 measured the 1x->16x fixed-batch step,
+      // 4.54 -> 7.65 s, tracking the soak's 32->1024 partition scaling);
+      // the corpus side is bucketed, so the probe join never reshuffles it
+      val loop = ingestLoop(s, "st13_ingest", key)
+      lastIngestBatchWalls = loop.run(docSchema, Seq(batch1, batch2)) { (batch, _, out) =>
+        // probe + prep in one pass (round-21): the append below derives
+        // from the probe's checkpointed prep, so the batch's
+        // shingle+minhash walk runs once per micro-batch (it previously
+        // re-ran over the staged re-read)
+        val (pairs, prep) = Dedup.incrementalJaccardPairsIndexedWithPrep(
+          s, bandT, shT, batch, "doc_id", "text",
+          shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+        // materialize admitted BEFORE the append mutates the index
+        batch.join(pairs.select(col("idA").as("doc_id")).distinct(),
+            Seq("doc_id"), "left_anti")
+          .write.mode("overwrite").parquet(out)
+        // append only the ADMITTED slice of the prep: a broadcast semi
+        // against the just-staged ids over the checkpointed prep —
+        // admitted ⊆ batch, whose ids the probe's guard just proved
+        // unique against the same tables
+        Dedup.appendJaccardIngestIndexPrepped(s, bandT, shT,
+          prep.join(broadcast(s.read.parquet(out)
+              .select(col("doc_id").as("id"))), Seq("id"), "left_semi"),
+          numHashes = 16, bandRows = 1, buckets = 16)
       }
-      val q = stream.writeStream
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .foreachBatch(applyBatch: (DataFrame, Long) => Unit).start()
-      try {
-        addStreamFile(batch1, deltaDir, "b1")
-        q.processAllAvailable()
-        addStreamFile(batch2, deltaDir, "b2")
-        q.processAllAvailable()
-      } finally q.stop()
-      val parts = {
-        import scala.jdk.CollectionConverters._
-        scala.util.Using.resource(java.nio.file.Files.list(admittedDir)) {
-          st => st.iterator().asScala.map(_.toString).toSeq.sorted
-        }
-      }
-      require(parts.size == 2,
-        s"st13: expected 2 admitted micro-batches, saw ${parts.size}")
       // the result must OUTLIVE the finally-swept index tables
-      ordered(s.read.parquet(parts: _*).select("doc_id")).localCheckpoint()
+      ordered(s.read.parquet(loop.payloads(): _*).select("doc_id")).localCheckpoint()
     } finally graft.util.TableRetention.sweep(s, "st13_", keep = Set.empty)
   }
 
@@ -653,10 +590,9 @@ object PipelineQueries {
     * into the index by the SAME (n_chars DESC, doc_id ASC) argmax. Argmax
     * is associative and commutative, so the final index equals d22's
     * one-shot survivors for ANY batch split — d22's oracle pins batch ==
-    * streaming exactly. Index versions land as `after_bN` dirs via
-    * staged writes: a redelivered batch finds its marker dir and skips
-    * (idempotent), a torn write leaves only the staged dir (never a
-    * half-visible version). Per-batch cost: the batch's narrow
+    * streaming exactly. Each batch's merged index is one [[IngestLoop]]
+    * payload, written whole and then published, so a replay rewrites it
+    * from the same prior version. Per-batch cost: the batch's narrow
     * normalization + one url-partitioned window over (index + batch best)
     * — index-sized, never corpus-history-sized.
     */
@@ -664,58 +600,25 @@ object PipelineQueries {
     val corpus = d22Corpus(s, dir)
     val batch1 = corpus.where(col("doc_id") < 5000000L)
     val batch2 = corpus.where(col("doc_id") >= 5000000L)
-    val base = ingestLoopBase("st20_url", dir)
-    deleteRecursively(base)
-    val deltaDir = base.resolve("delta")
-    val idxDir = base.resolve("idx")
-    java.nio.file.Files.createDirectories(deltaDir)
-    java.nio.file.Files.createDirectories(idxDir)
-    def versions(): Seq[java.nio.file.Path] = {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.list(idxDir)) { st =>
-        st.iterator().asScala.filter(
-          _.getFileName.toString.startsWith("after_b")).toSeq
-          .sortBy(p => p.getFileName.toString.stripPrefix("after_b").toLong)
-      }
-    }
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("url_norm"))
       .orderBy(col("n_chars").desc, col("doc_id").asc)
-    val applyBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
-      val marker = idxDir.resolve(s"after_b$batchId")
-      if (!batch.isEmpty && !java.nio.file.Files.exists(marker))
-        withShufflePartitions(s, s.sparkContext.defaultParallelism) {
-          val batchBest = urlAllowed(s, batch)
+    val loop = ingestLoop(s, "st20_url", dir)
+    loop.run(StructType(Seq(StructField("doc_id", LongType),
+        StructField("url", StringType), StructField("n_chars", LongType))),
+        Seq(batch1, batch2)) { (batch, _, out) =>
+      val batchBest = urlAllowed(s, batch)
+        .withColumn("__rk", row_number().over(w))
+        .where(col("__rk") === 1).drop("__rk")
+      val merged = loop.payloads().lastOption match {
+        case Some(prior) =>
+          s.read.parquet(prior).unionByName(batchBest)
             .withColumn("__rk", row_number().over(w))
             .where(col("__rk") === 1).drop("__rk")
-          val merged = versions().lastOption match {
-            case Some(prior) =>
-              s.read.parquet(prior.toString).unionByName(batchBest)
-                .withColumn("__rk", row_number().over(w))
-                .where(col("__rk") === 1).drop("__rk")
-            case None => batchBest
-          }
-          val staged = base.resolve(s"stage_b$batchId")
-          merged.write.mode("overwrite").parquet(staged.toString)
-          java.nio.file.Files.move(staged, marker)
-        }
+        case None => batchBest
+      }
+      merged.write.mode("overwrite").parquet(out)
     }
-    val stream = s.readStream.schema(
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("url", StringType), StructField("n_chars", LongType))))
-      .parquet(deltaDir.toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .foreachBatch(applyBatch: (DataFrame, Long) => Unit).start()
-    try {
-      addStreamFile(batch1, deltaDir, "b1")
-      q.processAllAvailable()
-      addStreamFile(batch2, deltaDir, "b2")
-      q.processAllAvailable()
-    } finally q.stop()
-    val vs = versions()
-    require(vs.size == 2,
-      s"st20: expected 2 admitted micro-batches, saw ${vs.size}")
-    ordered(s.read.parquet(vs.last.toString)
+    ordered(s.read.parquet(loop.payloads().last)
       .select("doc_id", "url_norm", "n_chars"))
   }
 
@@ -734,14 +637,13 @@ object PipelineQueries {
     * final index equals the one-shot t36 build for ANY batch split and
     * t36's DuckDB oracle pins batch == streaming verbatim (st20's argmax
     * argument, applied to additive index state). Versions land as
-    * `_b<N>`-derived table trios gated by `after_b<N>` marker dirs: a
-    * redelivered batch finds its marker and skips; a crash between merge
-    * and marker replays the merge from the prior committed version (the
-    * delta rebuild and every merge output are mode-overwrite) —
-    * idempotent (Bm25Spec pins the kill-between-merge-and-marker case).
-    * RETENTION runs inside the loop (round-18 verdict #4): after each
-    * commit, versions beyond the newest two are swept —
-    * VersionedTable's keep-newest-2 rule applied to the segment-sharing
+    * `_b<N>` table trios, committed by [[IngestLoop]] markers without a
+    * payload; a replay rebuilds the merge from the prior committed version
+    * (the delta rebuild and every merge output are mode-overwrite —
+    * Bm25Spec pins the kill-between-merge-and-marker case).
+    * RETENTION runs inside the loop (round-18 verdict #4): each batch
+    * keeps its own version and the newest committed one and sweeps the
+    * rest — VersionedTable's keep-newest-2 rule applied to the segment-sharing
     * chain, where a postings segment stays live while ANY kept version's
     * manifest references it — so a long-running ingest loop's version
     * litter is bounded. The final probe runs the REAL t36 serving path
@@ -753,56 +655,23 @@ object PipelineQueries {
     val docs = t(s, dir, "documents").select("doc_id", "text")
     val batch1 = docs.where(col("doc_id") % 2 === 0)
     val batch2 = docs.where(col("doc_id") % 2 =!= 0)
-    val base = ingestLoopBase("st21_bm25", dir)
-    deleteRecursively(base)
-    val deltaDir = base.resolve("delta")
-    val idxDir = base.resolve("idx")
-    java.nio.file.Files.createDirectories(deltaDir)
-    java.nio.file.Files.createDirectories(idxDir)
     val tblBase = s"st21bm25_${java.lang.Integer.toHexString(dir.hashCode)}"
     wipeWarehousePrefix(s, tblBase)
-    def committed(): Seq[Long] = {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.list(idxDir)) { st =>
-        st.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("after_b"))
-          .map(_.stripPrefix("after_b").toLong).toSeq.sorted
-      }
+    def version(n: Long) = s"${tblBase}_b$n"
+    val loop = ingestLoop(s, "st21_bm25", dir)
+    loop.run(docSchema, Seq(batch1, batch2)) { (batch, id, _) =>
+      val delta = s"${tblBase}_delta"
+      graft.operators.Bm25Index.build(batch, "doc_id", "text", delta)
+      val prior = loop.committedIds()
+      graft.operators.Bm25Index.appendSegment(s, prior.lastOption.map(version),
+        delta, version(id))
+      // in-loop retention: this version and the newest committed one stay
+      // (plus every segment a kept manifest references — segments are
+      // shared, append-only state); older version trios sweep
+      graft.operators.Bm25Index.sweepVersions(s, tblBase,
+        (prior :+ id).takeRight(2).map(version))
     }
-    val applyBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
-      val marker = idxDir.resolve(s"after_b$batchId")
-      if (!batch.isEmpty && !java.nio.file.Files.exists(marker))
-        withShufflePartitions(s, s.sparkContext.defaultParallelism) {
-          val delta = s"${tblBase}_delta"
-          graft.operators.Bm25Index.build(batch, "doc_id", "text", delta)
-          val prior = committed().lastOption.map(n => s"${tblBase}_b$n")
-          graft.operators.Bm25Index.appendSegment(s, prior, delta,
-            s"${tblBase}_b$batchId")
-          java.nio.file.Files.createDirectory(marker)
-          // in-loop retention: newest-2 committed versions stay (plus
-          // every segment a kept manifest references — segments are
-          // shared, append-only state); older version trios sweep
-          graft.operators.Bm25Index.sweepVersions(s, tblBase,
-            committed().takeRight(2).map(n => s"${tblBase}_b$n"))
-        }
-    }
-    val stream = s.readStream.schema(
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .parquet(deltaDir.toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .foreachBatch(applyBatch: (DataFrame, Long) => Unit).start()
-    try {
-      addStreamFile(batch1, deltaDir, "b1")
-      q.processAllAvailable()
-      addStreamFile(batch2, deltaDir, "b2")
-      q.processAllAvailable()
-    } finally q.stop()
-    val vs = committed()
-    require(vs.size == 2,
-      s"st21: expected 2 merged micro-batches, saw ${vs.size}")
-    val idx = s"${tblBase}_b${vs.last}"
+    val idx = version(loop.committedIds().last)
     // selectTerms refuses loudly on empty/stopword-saturated indexes
     val terms = graft.operators.Bm25Index.selectTerms(s, idx)
     val top = graft.operators.Bm25Index.topK(s, idx, terms)
@@ -942,61 +811,28 @@ object PipelineQueries {
     * sibling merges arithmetically (positions AND bigrams are doc-local,
     * so both merges are associative + commutative and the maintained
     * index equals the one-shot t39 build for ANY batch split — t39's
-    * DuckDB oracle pins batch == streaming verbatim). Same marker
-    * idempotence, in-loop keep-newest-2 retention, and probe plan gates
+    * DuckDB oracle pins batch == streaming verbatim). Same replay
+    * contract, in-loop keep-newest-2 retention, and probe plan gates
     * (every segment scan bucket-pruned, no text rescan) as st21.
     */
   private def st22PhraseMaintain(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select("doc_id", "text")
     val batch1 = docs.where(col("doc_id") % 2 === 0)
     val batch2 = docs.where(col("doc_id") % 2 =!= 0)
-    val base = ingestLoopBase("st22_phrase", dir)
-    deleteRecursively(base)
-    val deltaDir = base.resolve("delta")
-    val idxDir = base.resolve("idx")
-    java.nio.file.Files.createDirectories(deltaDir)
-    java.nio.file.Files.createDirectories(idxDir)
     val tblBase = s"st22pos_${java.lang.Integer.toHexString(dir.hashCode)}"
     wipeWarehousePrefix(s, tblBase)
-    def committed(): Seq[Long] = {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.list(idxDir)) { st =>
-        st.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("after_b"))
-          .map(_.stripPrefix("after_b").toLong).toSeq.sorted
-      }
+    def version(n: Long) = s"${tblBase}_b$n"
+    val loop = ingestLoop(s, "st22_phrase", dir)
+    loop.run(docSchema, Seq(batch1, batch2)) { (batch, id, _) =>
+      val delta = s"${tblBase}_delta"
+      graft.operators.Bm25Index.buildPositional(batch, "doc_id", "text", delta)
+      val prior = loop.committedIds()
+      graft.operators.Bm25Index.appendPositionalSegment(s,
+        prior.lastOption.map(version), delta, version(id))
+      graft.operators.Bm25Index.sweepVersions(s, tblBase,
+        (prior :+ id).takeRight(2).map(version))
     }
-    val applyBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
-      val marker = idxDir.resolve(s"after_b$batchId")
-      if (!batch.isEmpty && !java.nio.file.Files.exists(marker))
-        withShufflePartitions(s, s.sparkContext.defaultParallelism) {
-          val delta = s"${tblBase}_delta"
-          graft.operators.Bm25Index.buildPositional(batch, "doc_id", "text", delta)
-          val prior = committed().lastOption.map(n => s"${tblBase}_b$n")
-          graft.operators.Bm25Index.appendPositionalSegment(s, prior, delta,
-            s"${tblBase}_b$batchId")
-          java.nio.file.Files.createDirectory(marker)
-          graft.operators.Bm25Index.sweepVersions(s, tblBase,
-            committed().takeRight(2).map(n => s"${tblBase}_b$n"))
-        }
-    }
-    val stream = s.readStream.schema(
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .parquet(deltaDir.toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .foreachBatch(applyBatch: (DataFrame, Long) => Unit).start()
-    try {
-      addStreamFile(batch1, deltaDir, "b1")
-      q.processAllAvailable()
-      addStreamFile(batch2, deltaDir, "b2")
-      q.processAllAvailable()
-    } finally q.stop()
-    val vs = committed()
-    require(vs.size == 2,
-      s"st22: expected 2 merged micro-batches, saw ${vs.size}")
-    val idx = s"${tblBase}_b${vs.last}"
+    val idx = version(loop.committedIds().last)
     val phrase = graft.operators.Bm25Index.derivePhrase(s, idx)
     val hits = graft.operators.Bm25Index.phraseHits(s, idx, phrase)
     val plan = hits.queryExecution.executedPlan.toString
@@ -1101,12 +937,11 @@ object PipelineQueries {
     * batch the only text shingled), transitions the persisted closure
     * state ([[graft.operators.Dedup.closureMerge]]: stored labels
     * append-only, merges composed into the slim remap — prior clusters
-    * never re-walk), and appends the batch to the index. State versions
-    * land as `after_b<N>` marker dirs via staged writes (st20's
-    * idempotence: a redelivered batch skips; a torn write leaves only
-    * the staged dir; a crash between index append and marker replays
-    * into the probe's duplicate-id refusal — st13's loud partial-apply
-    * contract). The final labels equal the one-shot d09 closure for ANY
+    * never re-walk), and appends the batch to the index. Each batch's
+    * state version (stored labels + remap) is one [[IngestLoop]] payload;
+    * a crash between the index append and the publish replays into the
+    * probe's duplicate-id refusal — st13's loud partial-apply contract.
+    * The final labels equal the one-shot d09 closure for ANY
     * batch split (the union-find induction in closureMerge's doc), so
     * d09's recursive-CTE oracle pins batch == streaming verbatim.
     */
@@ -1116,15 +951,13 @@ object PipelineQueries {
       corpus.where(col("doc_id") < 1000000L && col("doc_id") % 2 === 0),
       corpus.where(col("doc_id") < 1000000L && col("doc_id") % 2 =!= 0),
       corpus.where(col("doc_id") >= 1000000L))
-    val base = ingestLoopBase("st23_closure", dir)
-    deleteRecursively(base)
     val tblBase = s"st23cl_${java.lang.Integer.toHexString(dir.hashCode)}"
-    st23Ingest(s, batches, base, tblBase)
+    st23Ingest(s, batches, ingestLoop(s, "st23_closure", dir), tblBase)
   }
 
-  /** The st23 ingest loop body, shared with the fixed-batch soak probe:
-    * stream `batches` through a file source, maintaining the jaccard
-    * ingest index + the closure state per micro-batch. Per-batch cost is
+  /** The st23 ingest loop: stream `batches` through `loop`, maintaining
+    * the jaccard ingest index + the closure state per micro-batch.
+    * Per-batch cost is
     * O(batch + pairs + remap): the corpus-sized stored frame is only
     * narrow-scanned under a broadcast endpoint filter inside
     * closureMerge, and the index append is bucketed — nothing
@@ -1132,112 +965,64 @@ object PipelineQueries {
     * ingested.
     */
   private[graft] def st23Ingest(s: SparkSession, batches: Seq[DataFrame],
-      base: java.nio.file.Path, tblBase: String): DataFrame = {
+      loop: IngestLoop, tblBase: String): DataFrame = {
     val bandT = s"${tblBase}_band"; val shT = s"${tblBase}_sh"
     graft.util.TableRetention.sweep(s, tblBase, keep = Set.empty)
-    val deltaDir = base.resolve("delta")
-    val idxDir = base.resolve("idx")
-    java.nio.file.Files.createDirectories(deltaDir)
-    java.nio.file.Files.createDirectories(idxDir)
     // seed an EMPTY ingest index: the loop is then uniform — batch 1
     // probes it (its own internal pairs still surface through the
     // fresh-vs-fresh leg) and appends, exactly like every later batch
     Dedup.buildJaccardIngestIndex(batches.head.limit(0), "doc_id", "text",
       bandT, shT, shingleN = 3, numHashes = 16, bandRows = 1, buckets = 16)
-    def committed(): Seq[Long] = {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.list(idxDir)) { st =>
-        st.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("after_b"))
-          .map(_.stripPrefix("after_b").toLong).toSeq.sorted
+    lastClosureBatchWalls = loop.run(docSchema, batches) { (batch, id, out) =>
+      def label(x: String): Unit =
+        s.sparkContext.setJobDescription(s"st23 b$id: $x")
+      label("probe")
+      // probe + prep in one pass (round-21): the checkpointed prep
+      // carries the batch's ids AND feeds the index append below, so
+      // the shingle+minhash walk — the batch's dominant compute —
+      // runs exactly once per micro-batch (it previously re-ran for
+      // the staged re-read) and the streaming batch frame is scanned
+      // once instead of per consumer
+      val (pairs, prep) = Dedup.incrementalJaccardPairsIndexedWithPrep(
+        s, bandT, shT, batch, "doc_id", "text",
+        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      val vs = loop.payloads()
+      val storedPrior =
+        if (vs.isEmpty)
+          batch.select(col("doc_id").as("id"),
+            col("doc_id").as("cluster")).limit(0)
+        else s.read.parquet(vs.map(_ + "/stored"): _*)
+      val remapPrior = vs.lastOption match {
+        case None => batch.select(col("doc_id").as("cluster"),
+          col("doc_id").as("root")).limit(0)
+        case Some(v) => s.read.parquet(v + "/remap")
       }
+      label("closure merge")
+      val (storedApp, remapNew) = Dedup.closureMerge(
+        storedPrior, remapPrior,
+        prep.select(col("id").as("doc_id")), pairs)
+      // the two staged writes are independent (closureMerge returns
+      // frames over checkpointed inputs) — run them concurrently
+      // (guide §2.6): each is mostly fixed job/commit cost per batch.
+      // The index append consumes the probe's checkpointed prep
+      // (rebound to the main session inside the Prepped overload —
+      // a bucketed saveAsTable append fed the streaming batch DF
+      // directly writes through the micro-batch's cloned session and
+      // lands zero rows in the shared catalog's table), so the
+      // previous staged batch copy — read by nothing else — is gone
+      label("staged state writes")
+      graft.util.Par.actions(
+        () => storedApp.write.mode("overwrite").parquet(out + "/stored"),
+        () => remapNew.write.mode("overwrite").parquet(out + "/remap"))
+      label("index append")
+      Dedup.appendJaccardIngestIndexPrepped(s, bandT, shT, prep,
+        numHashes = 16, bandRows = 1, buckets = 16)
+      s.sparkContext.setJobDescription(null)
     }
-    def storedPaths(vs: Seq[Long]): Seq[String] =
-      vs.map(n => idxDir.resolve(s"after_b$n").resolve("stored").toString)
-    def remapPath(n: Long): String =
-      idxDir.resolve(s"after_b$n").resolve("remap").toString
-    lastClosureBatchWalls = Nil
-    val applyBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
-      val marker = idxDir.resolve(s"after_b$batchId")
-      if (!batch.isEmpty && !java.nio.file.Files.exists(marker))
-        withShufflePartitions(s, s.sparkContext.defaultParallelism) {
-          val tb0 = System.nanoTime()
-          def label(x: String): Unit =
-            s.sparkContext.setJobDescription(s"st23 b$batchId: $x")
-          label("probe")
-          // probe + prep in one pass (round-21): the checkpointed prep
-          // carries the batch's ids AND feeds the index append below, so
-          // the shingle+minhash walk — the batch's dominant compute —
-          // runs exactly once per micro-batch (it previously re-ran for
-          // the staged re-read) and the streaming batch frame is scanned
-          // once instead of per consumer
-          val (pairs, prep) = Dedup.incrementalJaccardPairsIndexedWithPrep(
-            s, bandT, shT, batch, "doc_id", "text",
-            shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
-          val vs = committed()
-          val storedPrior =
-            if (vs.isEmpty)
-              batch.select(col("doc_id").as("id"),
-                col("doc_id").as("cluster")).limit(0)
-            else s.read.parquet(storedPaths(vs): _*)
-          val remapPrior = vs.lastOption match {
-            case None => batch.select(col("doc_id").as("cluster"),
-              col("doc_id").as("root")).limit(0)
-            case Some(n) => s.read.parquet(remapPath(n))
-          }
-          label("closure merge")
-          val (storedApp, remapNew) = Dedup.closureMerge(
-            storedPrior, remapPrior,
-            prep.select(col("id").as("doc_id")), pairs)
-          // stage the FULL version dir, append the index, THEN move the
-          // staged dir to the marker: a torn write leaves only the
-          // staged dir (never a half-visible version); a crash between
-          // append and move replays into the probe's duplicate-id
-          // refusal — st13's loud partial-apply contract
-          val staged = base.resolve(s"stage_b$batchId")
-          // the two staged writes are independent (closureMerge returns
-          // frames over checkpointed inputs) — run them concurrently
-          // (guide §2.6): each is mostly fixed job/commit cost per batch.
-          // The index append consumes the probe's checkpointed prep
-          // (rebound to the main session inside the Prepped overload —
-          // a bucketed saveAsTable append fed the streaming batch DF
-          // directly writes through the micro-batch's cloned session and
-          // lands zero rows in the shared catalog's table), so the
-          // previous staged batch copy — read by nothing else — is gone
-          label("staged state writes")
-          graft.util.Par.actions(
-            () => storedApp.write.mode("overwrite")
-              .parquet(staged.resolve("stored").toString),
-            () => remapNew.write.mode("overwrite")
-              .parquet(staged.resolve("remap").toString))
-          label("index append")
-          Dedup.appendJaccardIngestIndexPrepped(s, bandT, shT, prep,
-            numHashes = 16, bandRows = 1, buckets = 16)
-          java.nio.file.Files.move(staged, marker)
-          s.sparkContext.setJobDescription(null)
-          lastClosureBatchWalls =
-            lastClosureBatchWalls :+ (System.nanoTime() - tb0) / 1e9
-        }
-    }
-    val stream = s.readStream.schema(
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .parquet(deltaDir.toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .foreachBatch(applyBatch: (DataFrame, Long) => Unit).start()
-    try {
-      batches.zipWithIndex.foreach { case (b, i) =>
-        addStreamFile(b, deltaDir, s"b${i + 1}")
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val vs = committed()
-    require(vs.size == batches.size,
-      s"st23: expected ${batches.size} merged micro-batches, saw ${vs.size}")
+    val vs = loop.payloads()
     val labels = Dedup.closureLabels(
-      s.read.parquet(storedPaths(vs): _*),
-      s.read.parquet(remapPath(vs.last)))
+      s.read.parquet(vs.map(_ + "/stored"): _*),
+      s.read.parquet(vs.last + "/remap"))
     // the result must OUTLIVE the finally-swept index tables
     val out = ordered(labels.select(col("id").as("doc_id"), col("cluster")))
       .localCheckpoint()
@@ -1322,11 +1107,10 @@ object PipelineQueries {
     * band index ([[graft.operators.Dedup.incrementalSimhashPairsIndexed]]
     * — the old side is one bucket-pruned scan semi-filtered by the
     * batch's broadcast bucket set, so per-batch shuffle is
-    * occupancy-bounded), and its signatures append to the index. Pair
-    * results land as idempotent per-batch parquet dirs gated by marker
-    * moves (st13's contract: redelivery skips, a crash between append
-    * and marker replays into the probe's duplicate-id refusal). The
-    * union over batches equals the one-shot m05 banded pairs for any
+    * occupancy-bounded), and its signatures append to the index. Each
+    * batch's pairs are one [[IngestLoop]] payload; a crash between the
+    * append and the publish replays into the probe's duplicate-id refusal
+    * (st13's contract). The union over batches equals the one-shot m05 banded pairs for any
     * batch split (orientation-normalized, min-hamming deduped), so
     * m05's brute-force DuckDB oracle pins batch == streaming verbatim.
     */
@@ -1352,73 +1136,38 @@ object PipelineQueries {
         docs.where(col("doc_id") % 9 === 4)
           .select((col("doc_id") + 3000000L).as("doc_id"), col("text")),
         "doc_id", "text", rgb = true))
-    val base = ingestLoopBase("st24_perceptual", dir)
-    deleteRecursively(base)
     val tblBase = s"st24pd_${java.lang.Integer.toHexString(dir.hashCode)}"
     val bandT = s"${tblBase}_band"
     graft.util.TableRetention.sweep(s, tblBase, keep = Set.empty)
-    val deltaDir = base.resolve("delta")
-    val idxDir = base.resolve("idx")
-    java.nio.file.Files.createDirectories(deltaDir)
-    java.nio.file.Files.createDirectories(idxDir)
     // seed an EMPTY band index — the uniform-loop trick st23 uses
     Dedup.buildSimhashIngestIndex(
       batch1.select(col("media_id").as("id"), lit(0L).as("sig")).limit(0),
       "id", "sig", bandT, maxHamming = 4, blocks = 8)
-    def committed(): Seq[Long] = {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.list(idxDir)) { st =>
-        st.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("after_b"))
-          .map(_.stripPrefix("after_b").toLong).toSeq.sorted
-      }
-    }
-    val applyBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
-      val marker = idxDir.resolve(s"after_b$batchId")
-      if (!batch.isEmpty && !java.nio.file.Files.exists(marker))
-        withShufflePartitions(s, s.sparkContext.defaultParallelism) {
-          // decode ONLY the batch — the corpus side is the slim persisted
-          // band index, never re-decoded
-          val sigs = Multimodal.withDHash(batch)
-            .where(col("dhash").isNotNull).localCheckpoint()
-          val pairs = Dedup.incrementalSimhashPairsIndexed(s, bandT,
-            sigs, "media_id", "dhash", maxHamming = 4, blocks = 8)
-          val staged = base.resolve(s"stage_b$batchId")
-          pairs.write.mode("overwrite")
-            .parquet(staged.resolve("pairs").toString)
-          // append the CHECKPOINTED signatures directly (round-21): the
-          // probe's require just proved these ids unique against the same
-          // table (idsPrechecked skips the re-check), and the append
-          // rebinds the frame through the main session internally (the
-          // st23 lesson: a bucketed saveAsTable append fed a
-          // streaming-derived frame writes through the micro-batch's
-          // cloned session and lands zero rows) — so the staged sigs
-          // copy, read by nothing else, is gone
-          Dedup.appendSimhashIngestIndex(s, bandT, sigs,
-            "media_id", "dhash", maxHamming = 4, blocks = 8,
-            idsPrechecked = true)
-          java.nio.file.Files.move(staged, marker)
-        }
-    }
-    val stream = s.readStream.schema(
-      StructType(Seq(StructField("media_id", LongType),
+    val loop = ingestLoop(s, "st24_perceptual", dir)
+    loop.run(StructType(Seq(StructField("media_id", LongType),
         StructField("payload", BinaryType),
-        StructField("meta", Multimodal.mediaSchema("meta").dataType))))
-      .parquet(deltaDir.toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .foreachBatch(applyBatch: (DataFrame, Long) => Unit).start()
-    try {
-      addStreamFile(batch1, deltaDir, "b1")
-      q.processAllAvailable()
-      addStreamFile(batch2, deltaDir, "b2")
-      q.processAllAvailable()
-    } finally q.stop()
-    val vs = committed()
-    require(vs.size == 2,
-      s"st24: expected 2 merged micro-batches, saw ${vs.size}")
-    val out = ordered(s.read.parquet(vs.map(n =>
-        idxDir.resolve(s"after_b$n").resolve("pairs").toString): _*)
+        StructField("meta", Multimodal.mediaSchema("meta").dataType))),
+        Seq(batch1, batch2)) { (batch, _, out) =>
+      // decode ONLY the batch — the corpus side is the slim persisted
+      // band index, never re-decoded
+      val sigs = Multimodal.withDHash(batch)
+        .where(col("dhash").isNotNull).localCheckpoint()
+      val pairs = Dedup.incrementalSimhashPairsIndexed(s, bandT,
+        sigs, "media_id", "dhash", maxHamming = 4, blocks = 8)
+      pairs.write.mode("overwrite").parquet(out + "/pairs")
+      // append the CHECKPOINTED signatures directly (round-21): the
+      // probe's require just proved these ids unique against the same
+      // table (idsPrechecked skips the re-check), and the append
+      // rebinds the frame through the main session internally (the
+      // st23 lesson: a bucketed saveAsTable append fed a
+      // streaming-derived frame writes through the micro-batch's
+      // cloned session and lands zero rows) — so the staged sigs
+      // copy, read by nothing else, is gone
+      Dedup.appendSimhashIngestIndex(s, bandT, sigs,
+        "media_id", "dhash", maxHamming = 4, blocks = 8,
+        idsPrechecked = true)
+    }
+    val out = ordered(s.read.parquet(loop.payloads().map(_ + "/pairs"): _*)
       .select(col("idA"), col("idB"), col("hamming").cast("int").as("hamming")))
       .localCheckpoint()
     graft.util.TableRetention.sweep(s, tblBase, keep = Set.empty)
@@ -1453,147 +1202,13 @@ object PipelineQueries {
     * micro-batches) and each batch is decontamination-checked inside
     * foreachBatch against the PERSISTED train-hash table — the
     * build-once/probe-streaming pairing d17/st13 have, applied to d19.
-    * Results land as one idempotent parquet dir per batch id (a replayed
-    * batch overwrites its own output and a marker skips the probe —
-    * exactly-once results without an index mutation to guard). Per-doc
-    * counts are batch-local AND correct: a document's windows all arrive
-    * in its batch, so the union over batches equals the one-shot d19
-    * output — one oracle pins all three paths (d11, d19, st15).
-    *
-    * The probe's shuffle stages are pinned to the session's core count
-    * rather than `spark.sql.shuffle.partitions`: per-batch work is sized
-    * by the BATCH, and inheriting a corpus-sized global setting would
-    * charge each micro-batch the task-scheduling cost of the whole-corpus
-    * configuration (the st13 coupling round 13 measured).
+    * Results land as one [[IngestLoop]] payload per batch (a replayed
+    * batch overwrites its own staged output — exactly-once results
+    * without an index mutation to guard). Per-doc counts are batch-local
+    * AND correct: a document's windows all arrive in its batch, so the
+    * union over batches equals the one-shot d19 output — one oracle pins
+    * all three paths (d11, d19, st15).
     */
-  /** Shared two-micro-batch foreachBatch harness (st15/st16 — this
-    * idempotency scaffold was hand-copied per loop, and its conventions
-    * are hard-won: stage OUTSIDE the watched dir, write-then-atomic-move
-    * output markers keyed by batch id, EMPTY batches still marked so the
-    * trailing delivered-batch check holds, per-batch stages pinned to the
-    * core count because per-batch work is sized by the BATCH, not the
-    * corpus-global shuffle setting — a no-op for exchange-free decisions
-    * like st16's). Streams `batch1` then `batch2` through a file source,
-    * decides each arriving batch with `perBatch`, lands one idempotent
-    * parquet dir per batch id, and returns the union read plus per-batch
-    * walls. st13/st12 keep their own loops — mutating an index between
-    * batches is a different contract.
-    */
-  private def twoBatchIngestLoop(s: SparkSession, tag: String, key: String,
-      schema: StructType, batch1: DataFrame, batch2: DataFrame,
-      /** Applied to the STREAMING plan itself (st17's transformWithState
-        * lives here — state carried by the stream, not foreachBatch).
-        * Row-local decisions stay in `perBatch`; genuinely stateful ones
-        * must be in-plan or the state store never sees them.
-        */
-      transformStream: DataFrame => DataFrame = identity,
-      /** Stop the query after batch 1 and restart from the checkpoint for
-        * batch 2 — proves cross-batch state survives a process handover,
-        * not just consecutive triggers (st17's durability claim).
-        */
-      restartBetweenBatches: Boolean = false,
-      /** Streaming output mode — stateful in-plan transforms declare
-        * theirs and the query must match (st17: update).
-        */
-      outputMode: String = "append")
-      (perBatch: DataFrame => DataFrame): (DataFrame, List[Double]) = {
-    val base = ingestLoopBase(tag, key)
-    deleteRecursively(base)
-    val deltaDir = base.resolve("delta")
-    val outDir = base.resolve("out")
-    java.nio.file.Files.createDirectories(deltaDir)
-    java.nio.file.Files.createDirectories(outDir)
-    var walls: List[Double] = Nil
-    val applyBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
-      val tb0 = System.nanoTime()
-      val marker = outDir.resolve(s"b$batchId")
-      if (!java.nio.file.Files.exists(marker)) {
-        if (batch.isEmpty) {
-          // an EMPTY micro-batch (no-data trigger) is still a delivered
-          // batch — mark it so the trailing delivered-batch check holds —
-          // but without a parquet payload: relying on the writer to emit a
-          // schema-bearing empty part file is fragile, and an empty marker
-          // records neither a wall (nothing was decided) nor a union member
-          // (the read below skips payload-less markers)
-          java.nio.file.Files.createDirectories(marker)
-        } else {
-          withShufflePartitions(s, s.sparkContext.defaultParallelism) {
-            val staged = base.resolve(s"stage_b$batchId")
-            perBatch(batch).write.mode("overwrite").parquet(staged.toString)
-            java.nio.file.Files.move(staged, marker)
-          }
-          walls = walls :+ (System.nanoTime() - tb0) / 1e9
-        }
-      }
-    }
-    def startQuery() =
-      transformStream(s.readStream.schema(schema).parquet(deltaDir.toString))
-        .writeStream
-        .outputMode(outputMode)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .foreachBatch(applyBatch: (DataFrame, Long) => Unit).start()
-    if (restartBetweenBatches) {
-      val q1 = startQuery()
-      try {
-        addStreamFile(batch1, deltaDir, "b1")
-        q1.processAllAvailable()
-      } finally q1.stop()
-      val q2 = startQuery()
-      try {
-        addStreamFile(batch2, deltaDir, "b2")
-        q2.processAllAvailable()
-      } finally q2.stop()
-    } else {
-      val q = startQuery()
-      try {
-        addStreamFile(batch1, deltaDir, "b1")
-        q.processAllAvailable()
-        addStreamFile(batch2, deltaDir, "b2")
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    val parts = {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.list(outDir)) {
-        st => st.iterator().asScala.map(_.toString).toSeq.sorted
-      }
-    }
-    require(parts.size == 2,
-      s"$tag: expected 2 decided micro-batches, saw ${parts.size}")
-    // only markers WITH a parquet payload join the union read (an empty
-    // delivered batch's marker carries no part files and no schema)
-    val decided = committedBatchOutputs(outDir)
-    require(decided.nonEmpty, s"$tag: every delivered micro-batch was empty")
-    (s.read.parquet(decided: _*), walls)
-  }
-
-  /** The ingest harness's base dir for (tag, key) — ONE definition shared
-    * with consumers that read the harness's own committed outputs (st18's
-    * event-sourced running profile); a second hand-copied path formula
-    * would silently desynchronize the moment this one changes.
-    */
-  private def ingestLoopBase(tag: String, key: String): java.nio.file.Path =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"${tag}_${java.lang.Integer.toHexString(key.hashCode)}")
-
-  /** Marker dirs under `outDir` that carry a parquet payload — the
-    * committed non-empty batches (an empty delivered batch marks without
-    * payload). Shared by the harness's final union read and st18's prior
-    * scan for the same no-drift reason as [[ingestLoopBase]].
-    */
-  private def committedBatchOutputs(outDir: java.nio.file.Path): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    if (!java.nio.file.Files.exists(outDir)) return Seq.empty
-    scala.util.Using.resource(java.nio.file.Files.list(outDir)) {
-      st => st.iterator().asScala.map(_.toString).toSeq.sorted
-    }.filter { p =>
-      scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(p))) {
-        st => st.iterator().asScala.exists(_.getFileName.toString.startsWith("part-"))
-      }
-    }
-  }
-
   private def st15Probe(s: SparkSession, dir: String, baseDir: String): DataFrame = {
     val train = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val table = d19ContaminationIndex(s, dir, train)
@@ -1606,14 +1221,14 @@ object PipelineQueries {
     // route NULL ids
     val batch1 = eval0.where(col("doc_id") % 2 === 0)
     val batch2 = eval0.where(col("doc_id") % 2 =!= 0)
-    val (res, walls) = twoBatchIngestLoop(s, "st15_probe", dir + "|" + baseDir,
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))), batch1, batch2) { batch =>
+    val loop = ingestLoop(s, "st15_probe", dir + "|" + baseDir)
+    lastProbeBatchWalls = loop.run(docSchema, Seq(batch1, batch2)) { (batch, _, out) =>
       Dedup.crossContaminationIndexed(s, table, batch, "doc_id", "text")
         .select(col("id").as("doc_id"), col("n_windows"), col("n_contaminated"))
+        .write.mode("overwrite").parquet(out)
     }
-    lastProbeBatchWalls = walls
-    ordered(res.select("doc_id", "n_windows", "n_contaminated"))
+    ordered(s.read.parquet(loop.payloads(): _*)
+      .select("doc_id", "n_windows", "n_contaminated"))
   }
 
   /** st15's loop with the train index from `dir` (soak-scaled) and the
@@ -1626,7 +1241,7 @@ object PipelineQueries {
     st15Probe(s, dir, baseDir)
 
   /** st16's ingest loop: two parity micro-batches of documents decided by
-    * [[curationDecision]] through [[twoBatchIngestLoop]] — see the query
+    * [[curationDecision]] through an [[IngestLoop]] — see the query
     * entry for the batch==streaming argument. NULL doc_ids route to
     * batch1: the parity predicates alone would drop them from BOTH sides
     * (NULL % 2 is NULL) while the one-shot t28 decides them — the
@@ -1636,11 +1251,13 @@ object PipelineQueries {
     val docs = t(s, dir, "documents").select("doc_id", "text", "source")
     val batch1 = docs.where(col("doc_id") % 2 === 0 || col("doc_id").isNull)
     val batch2 = docs.where(col("doc_id") % 2 =!= 0)
-    val (res, _) = twoBatchIngestLoop(s, "st16_funnel", dir,
-      StructType(Seq(StructField("doc_id", LongType),
+    val loop = ingestLoop(s, "st16_funnel", dir)
+    loop.run(StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType), StructField("source", StringType))),
-      batch1, batch2)(curationDecision)
-    ordered(res.select("doc_id", "keep", "reason"))
+        Seq(batch1, batch2)) { (batch, _, out) =>
+      curationDecision(batch).write.mode("overwrite").parquet(out)
+    }
+    ordered(s.read.parquet(loop.payloads(): _*).select("doc_id", "keep", "reason"))
   }
 
   /** Per-batch wall seconds of the most recent st17 invocation (batch
@@ -1657,10 +1274,10 @@ object PipelineQueries {
     * running token total on the RocksDB state store. Unlike st16's
     * row-local gates, the batch boundary CUTS the prefix sum: batch ==
     * one-shot (t27's oracle) holds only because the ValueState CARRIES.
-    * st17 proves the strongest form of that by STOPPING the query after
-    * batch 1 and restarting from the checkpoint for batch 2 — the running
-    * totals survive a process handover, not just consecutive triggers.
-    * Output lands via the shared idempotent marker discipline.
+    * st17 proves the strongest form of that through [[IngestLoop]]'s
+    * stateful mode, which STOPS the query after batch 1 and restarts it
+    * from the checkpoint for batch 2 — the running totals survive a
+    * process handover, not just consecutive triggers.
     */
   private def st17Pack(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1685,17 +1302,18 @@ object PipelineQueries {
     // state-store partition count pins at the first batch, so the scope
     // covers BOTH query incarnations. Partitions derived from the stream's
     // row volume (see stateStorePartitions), not the session core count.
-    val (res, walls) = withConf(s, "spark.sql.streaming.stateStore.providerClass",
+    val loop = ingestLoop(s, "st17_pack", dir)
+    lastPackBatchWalls = withConf(s, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       withShufflePartitions(s, stateStorePartitions(s, nRows)) {
-      twoBatchIngestLoop(s, "st17_pack", dir,
-        StructType(Seq(StructField("doc_id", LongType),
+      loop.run(StructType(Seq(StructField("doc_id", LongType),
           StructField("lang", StringType), StructField("n_tokens", LongType))),
-        batch1, batch2, transformStream = pack,
-        restartBetweenBatches = true, outputMode = "update")(b => b)
+          Seq(batch1, batch2), stateful = Some(pack)) { (batch, _, out) =>
+        batch.write.mode("overwrite").parquet(out)
+      }
     } }
-    lastPackBatchWalls = walls
-    ordered(res.select("doc_id", "lang", "n_tokens", "pack_id"))
+    ordered(s.read.parquet(loop.payloads(): _*)
+      .select("doc_id", "lang", "n_tokens", "pack_id"))
   }
 
   /** st19: q55's last-touch funnel attribution as a stateful stream — see
@@ -1732,19 +1350,20 @@ object PipelineQueries {
         TimeMode.None(), OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[graft.streaming.FunnelOut])
       .toDF("user_id", "event_id", "converted")
-    val (res, _) = withConf(s, "spark.sql.streaming.stateStore.providerClass",
+    val loop = ingestLoop(s, "st19_funnel", dir)
+    withConf(s, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       // state partitions sized by the stream's row volume, not core count
       withShufflePartitions(s, stateStorePartitions(s, ev.count())) {
-      twoBatchIngestLoop(s, "st19_funnel", dir,
-        StructType(Seq(StructField("user_id", LongType),
+      loop.run(StructType(Seq(StructField("user_id", LongType),
           StructField("event_id", LongType),
           StructField("ts_us", LongType),
           StructField("event_type", StringType))),
-        batch1, batch2, transformStream = attribute,
-        restartBetweenBatches = true, outputMode = "update")(b => b)
+          Seq(batch1, batch2), stateful = Some(attribute)) { (batch, _, out) =>
+        batch.write.mode("overwrite").parquet(out)
+      }
     } }
-    ordered(res.groupBy("user_id")
+    ordered(s.read.parquet(loop.payloads(): _*).groupBy("user_id")
       .agg(count(lit(1)).as("n_purchases"),
         sum(when(col("converted"), 1L).otherwise(0L)).as("n_conversions")))
   }
@@ -1757,11 +1376,11 @@ object PipelineQueries {
     * the running rate by > 0.10 raises `null_drift` — catching an
     * upstream regression (batch 2 plants one: `text` degraded to NULL for
     * doc_id % 5) the moment it lands instead of at the next d24 snapshot
-    * diff. The running state is EVENT-SOURCED from the harness's own
-    * committed batch outputs (prior totals = sum over existing markers'
-    * rows) rather than a side table: a replayed batch recomputes from the
-    * same priors and a crash leaves no half-applied running state — the
-    * marker move is the only commit point. Drift compares are two exact
+    * diff. The running state is EVENT-SOURCED from the loop's own
+    * committed batch outputs (prior totals = sum over its payloads' rows)
+    * rather than a side table: a replayed batch recomputes from the same
+    * priors and a crash leaves no half-applied running state — the
+    * publish is the only commit point. Drift compares are two exact
     * integer-derived double divisions (same operands both engines — IEEE
     * division is deterministic); at warehouse scale the same compare runs
     * on DECIMAL(38) cross-multiplies, here rates are the readable form.
@@ -1773,10 +1392,6 @@ object PipelineQueries {
     val batch2 = docs.where(col("doc_id") % 2 =!= 0)
       .withColumn("text", when(col("doc_id") % 5 === 0,
         lit(null).cast("string")).otherwise(col("text")))
-    // the closure reads prior batches' committed outputs from the same
-    // outDir the harness writes (shared ingestLoopBase — one path
-    // definition), which is what makes the running state event-sourced
-    val outDir = ingestLoopBase("st18_profile", dir).resolve("out")
     def slimProfile(df: DataFrame): DataFrame = {
       val aggs = count(lit(1)).as("n_rows") +: cols.map(c =>
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c"))
@@ -1786,8 +1401,14 @@ object PipelineQueries {
             col(s"__nulls_$c").as("n_nulls"))): _*)).as("p"))
         .select("p.col_name", "p.n_rows", "p.n_nulls")
     }
-    val decide: DataFrame => DataFrame = batch => {
-      val committed = committedBatchOutputs(outDir)
+    val loop = ingestLoop(s, "st18_profile", dir)
+    loop.run(StructType(Seq(StructField("doc_id", LongType),
+        StructField("text", StringType), StructField("lang", StringType),
+        StructField("source", StringType))),
+        Seq(batch1, batch2)) { (batch, _, out) =>
+      // the prior batches' outputs, read back through the loop, are the
+      // event-sourced running state
+      val committed = loop.payloads()
       val prior =
         if (committed.isEmpty)
           s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1812,14 +1433,10 @@ object PipelineQueries {
               abs(col("n_nulls").cast("double") / col("n_rows") -
                 col("prior_nulls").cast("double") / col("prior_rows")) > 0.10)
             .as("null_drift"))
+        .write.mode("overwrite").parquet(out)
     }
-    val (res, _) = twoBatchIngestLoop(s, "st18_profile", dir,
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType), StructField("lang", StringType),
-        StructField("source", StringType))),
-      batch1, batch2)(decide)
-    ordered(res.select("col_name", "batch_seq", "batch_rows", "batch_nulls",
-      "total_rows", "total_nulls", "null_drift"))
+    ordered(s.read.parquet(loop.payloads(): _*).select("col_name", "batch_seq",
+      "batch_rows", "batch_nulls", "total_rows", "total_nulls", "null_drift"))
   }
 
   /** embeddings + a slightly perturbed copy of each (id offset by 1e6). */
@@ -2732,7 +2349,7 @@ object PipelineQueries {
     // index hash-equals d22's one-shot survivors (ONE oracle pins batch ==
     // streaming). The split puts every planted collision group ACROSS the
     // boundary, so batch 2 genuinely replaces and loses against admitted
-    // batch-1 state; redelivery skips on the version marker. See
+    // batch-1 state; IngestLoop skips a redelivered committed batch. See
     // st20UrlIngest.
     "st20_streaming_url_dedup" -> ((s, dir) => st20UrlIngest(s, dir)),
     // BM25 postings maintained incrementally at ingest; the final merged
@@ -2843,12 +2460,9 @@ object PipelineQueries {
     "st11_streaming_merge" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select("doc_id", "text", "lang", "source", "n_chars")
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"st11_merge_${java.lang.Integer.toHexString(dir.hashCode)}")
-      deleteRecursively(base)
-      val deltaDir = base.resolve("delta")
-      java.nio.file.Files.createDirectories(deltaDir)
-      val snap = base.resolve("snapshot")
+      val loop = ingestLoop(s, "st11_merge", dir)
+      val snap = java.nio.file.Paths.get(
+        new org.apache.hadoop.fs.Path(loop.base, "snapshot").toUri)
       docs.write.parquet(snap.toString)
       val updates = docs.where(col("doc_id") % 10 === 0)
         .withColumn("text", concat(lit("u:"), col("text")))
@@ -2859,8 +2473,8 @@ object PipelineQueries {
         .withColumn("doc_id", col("doc_id") + 5000000L)
         .withColumn("text", concat(lit("n:"), col("text")))
         .withColumn("op", lit("upsert"))
-      val stream = s.readStream.schema(updates.schema).parquet(deltaDir.toString)
-      val applyBatch: (DataFrame, Long) => Unit = (batch, _) =>
+      loop.feed(updates.schema,
+          Seq(updates.unionByName(deletes), inserts)) { (batch, _) =>
         if (!batch.isEmpty) {
           // crash inside a previous promote leaves the contract path empty
           // with the complete tree at .next (or .old) — recover FIRST, so
@@ -2873,15 +2487,7 @@ object PipelineQueries {
           // state recoverable by recoverStaged (see its contract)
           graft.util.Fs.promoteStaged(snap)
         }
-      val q = stream.writeStream
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .foreachBatch(applyBatch: (DataFrame, Long) => Unit).start()
-      try {
-        addStreamFile(updates.unionByName(deletes), deltaDir, "b1")
-        q.processAllAvailable()
-        addStreamFile(inserts, deltaDir, "b2")
-        q.processAllAvailable()
-      } finally q.stop()
+      }
       ordered(s.read.parquet(snap.toString)
         .select("doc_id", "text", "lang", "source", "n_chars"))
     }),
@@ -2912,11 +2518,6 @@ object PipelineQueries {
         .select((lit(200000L) + col("vec_id") * 10 + col("j")).as("vec_id"),
           col("embedding"), lit("upsert").as("op"))
       val key = java.lang.Integer.toHexString(dir.hashCode)
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"st12_annidx_$key")
-      deleteRecursively(base)
-      val deltaDir = base.resolve("delta")
-      java.nio.file.Files.createDirectories(deltaDir)
       // version tables are keyed by the sink's BATCH ID — the foreachBatch
       // exactly-once idiom: a batch redelivered after a crash-restart
       // rewrites ITS OWN table (mode overwrite), so replay is idempotent
@@ -2930,15 +2531,10 @@ object PipelineQueries {
       graft.util.TableRetention.sweep(s, "st12_ivfpq_", keep = Set.empty)
       var current = baseTable
       val applied = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val stream = s.readStream.schema(
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("embedding", vecT),
-          org.apache.spark.sql.types.StructField("op",
-            org.apache.spark.sql.types.StringType))))
-        .parquet(deltaDir.toString)
-      val applyBatch: (DataFrame, Long) => Unit = (batch, batchId) =>
+      ingestLoop(s, "st12_annidx", dir).feed(StructType(Seq(
+          StructField("vec_id", LongType), StructField("embedding", vecT),
+          StructField("op", StringType))),
+          Seq(del.unionByName(moved), news)) { (batch, batchId) =>
         if (!batch.isEmpty) {
           val next = versionTable(batchId)
           PqIndex.mergeAssigned(s, current,
@@ -2947,15 +2543,7 @@ object PipelineQueries {
           current = next
           applied += batchId
         }
-      val q = stream.writeStream
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .foreachBatch(applyBatch: (DataFrame, Long) => Unit).start()
-      try {
-        addStreamFile(del.unionByName(moved), deltaDir, "b1")
-        q.processAllAvailable()
-        addStreamFile(news, deltaDir, "b2")
-        q.processAllAvailable()
-      } finally q.stop()
+      }
       try {
         require(applied.size == 2 && current == versionTable(applied.last),
           s"st12: expected 2 delta micro-batches, applied ${applied.size}")
@@ -3017,10 +2605,9 @@ object PipelineQueries {
     // are per-invocation (appends mutate them — never d17's shared
     // fixture index); a batch's admitted rows are materialized to parquet
     // BEFORE the append so the probe never re-evaluates against its own
-    // appended rows, and the per-batch marker directory makes a fully
-    // applied batch's redelivery a skip (a crash BETWEEN append and
-    // marker is refused loudly on replay by the append's duplicate-id
-    // guard — never silently double-applied).
+    // appended rows, and IngestLoop skips a committed batch's redelivery
+    // (a crash BETWEEN append and publish is refused loudly on replay by
+    // the append's duplicate-id guard — never silently double-applied).
     "st13_streaming_ingest_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id", "text")
       st13Ingest(s, docs, docs, java.lang.Integer.toHexString(dir.hashCode))
@@ -3047,10 +2634,9 @@ object PipelineQueries {
         s"st14_ckpt_${java.lang.Integer.toHexString(dir.hashCode)}")
       // invocation-fresh checkpoint: a stale one from another fixture at
       // the same path would serve that fixture's state
-      deleteRecursively(ckpt)
-      val q = agg.writeStream.outputMode("update")
+      graft.util.Fs.deleteRecursively(ckpt)
+      val q = agg.writeStream.outputMode("update").format("noop")
         .option("checkpointLocation", ckpt.toString)
-        .foreachBatch((b: DataFrame, _: Long) => { b.count(); () })
         .start()
       try { q.processAllAvailable() } finally q.stop()
       // the state source returns (key struct, value struct, partition_id);
@@ -3092,8 +2678,8 @@ object PipelineQueries {
     // STREAMING decontamination (round-13 verdict ask #4): the same eval
     // set arrives as two micro-batches and each is probed inside
     // foreachBatch against d19's persisted train-hash table — the
-    // build-once/probe-streaming pairing d17/st13 already have. Idempotent
-    // per-batch parquet output + redelivery marker; union over batches ==
+    // build-once/probe-streaming pairing d17/st13 already have. One
+    // IngestLoop payload per batch; union over batches ==
     // the one-shot d19 output by construction, so d11's oracle pins this
     // path too.
     "st15_streaming_decontamination" -> ((s, dir) => st15Probe(s, dir, dir)),
@@ -3218,9 +2804,9 @@ object PipelineQueries {
     // the one-shot t28 output BY CONSTRUCTION (NULL ids explicitly routed
     // — see st16Funnel) and t28's oracle pins batch == streaming exactly
     // (the d11/d19/st15 triangulation discipline applied to curation).
-    // Results land as one idempotent parquet dir per batch id via the
-    // shared twoBatchIngestLoop (redelivery overwrites its own output, a
-    // marker skips re-work); the decision itself is exchange-free, so the
+    // Results land as one IngestLoop payload per batch (redelivery
+    // overwrites its own staged output, a committed batch is skipped); the
+    // decision itself is exchange-free, so the
     // per-batch cost is the scan + projection + write.
     "st16_streaming_curation" -> ((s, dir) => st16Funnel(s, dir)),
     // Token-budget packing AT INGEST (round-15 verdict ask #1): t27's
@@ -3240,7 +2826,7 @@ object PipelineQueries {
     // query restarted between batches so the checkpoint carry is proven.
     // The corpus splits per-user evenly (each user's history cut
     // mid-activity — order preserved, chains straddle), per-purchase
-    // decisions land via the idempotent marker discipline, and the final
+    // decisions land as IngestLoop payloads, and the final
     // per-user rollup over the union hash-equals q55's one-shot output —
     // ONE oracle pins batch == streaming for the whole attribution chain.
     // See st19Funnel.
@@ -4578,9 +4164,9 @@ object PipelineQueries {
       // normalize BEFORE the split: the parity is on the microsecond value,
       // which exists for every fixture vintage after normalizeTs
       val ev = normalizeTs(s.read.parquet(s"$dir/events.parquet"))
-      val srcDir = java.nio.file.Files.createTempDirectory("st05_src")
-      addStreamFile(ev.where(pmod(unix_micros(col("ts")), lit(2)) === 0), srcDir, "f1")
-      val stream = s.readStream.schema(ev.schema).parquet(srcDir.toString)
+      val src = ingestLoop(s, "st05_src", dir)
+      src.land(ev.where(pmod(unix_micros(col("ts")), lit(2)) === 0), "f1")
+      val stream = s.readStream.schema(ev.schema).parquet(src.delta.toString)
       val deduped = stream
         .withWatermark("ts", "35 days")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
@@ -4590,9 +4176,9 @@ object PipelineQueries {
         .queryName(sinkName).start()
       try {
         q.processAllAvailable() // batch 1; watermark = max(f1 ts) - 35d < min(ts)
-        addStreamFile(ev.where(pmod(unix_micros(col("ts")), lit(2)) === 1), srcDir, "f2")
+        src.land(ev.where(pmod(unix_micros(col("ts")), lit(2)) === 1), "f2")
         q.processAllAvailable() // batch 2: cross-batch dups hit live state
-      } finally { q.stop(); deleteRecursively(srcDir) }
+      } finally q.stop()
       ordered(s.table(sinkName))
     }),
     // late-data DROP proof: after file1 establishes the watermark
@@ -4604,9 +4190,9 @@ object PipelineQueries {
     // sees the original events.
     "st06_late_data_drop" -> ((s, dir) => withShufflePartitions(s, 8) {
       val ev = normalizeTs(s.read.parquet(s"$dir/events.parquet"))
-      val srcDir = java.nio.file.Files.createTempDirectory("st06_src")
-      addStreamFile(ev, srcDir, "f1")
-      val stream = s.readStream.schema(ev.schema).parquet(srcDir.toString)
+      val src = ingestLoop(s, "st06_src", dir)
+      src.land(ev, "f1")
+      val stream = s.readStream.schema(ev.schema).parquet(src.delta.toString)
       val agg = stream
         .withWatermark("ts", "30 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -4619,9 +4205,9 @@ object PipelineQueries {
       try {
         q.processAllAvailable() // watermark = max(ts) - 30 min
         // every replay is 30 days early: far below the watermark
-        addStreamFile(ev.withColumn("ts", col("ts") - expr("INTERVAL 30 DAYS")), srcDir, "f2")
+        src.land(ev.withColumn("ts", col("ts") - expr("INTERVAL 30 DAYS")), "f2")
         q.processAllAvailable() // late rows dropped; no-data batch flushes
-      } finally { q.stop(); deleteRecursively(srcDir) }
+      } finally q.stop()
       ordered(s.table(sinkName))
     }),
     // ---- structured streaming (memory sink, drained synchronously) ----

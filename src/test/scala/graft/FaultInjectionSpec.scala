@@ -46,7 +46,9 @@ object FaultRenameFs {
   * so a promote killed mid-flight leaves every file at the contract path
   * either complete-old or complete-new, never torn, and a plain re-run
   * converges to all-new. (Sink.replaceMove renames FIRST — atomic overwrite
-  * on POSIX — falling back to delete+rename only where that fails.)
+  * on POSIX — falling back to delete+rename only where that fails.) The
+  * ingest loop's commit protocol is pinned here too: a kill before the
+  * marker re-runs the batch, a kill after it skips the batch.
   */
 class FaultInjectionSpec extends SparkSpec {
 
@@ -237,5 +239,70 @@ class FaultInjectionSpec extends SparkSpec {
       assert(Files.readString(snap.resolve("data.txt")) == "v3")
       assert(!Files.exists(staged3) && !Files.exists(base.resolve("snapshot.old")))
     } finally graft.util.Fs.deleteRecursively(base)
+  }
+
+  /** An [[graft.streaming.IngestLoop]] on the `fault:` scheme: every
+    * marker check, publish and listing goes through [[FaultRenameFs]].
+    */
+  private def faultLoop(prefix: String) = graft.streaming.IngestLoop(spark,
+    new org.apache.hadoop.fs.Path(s"fault://${tmpDir(prefix)}"), _ => ())
+
+  private def loopBatch = {
+    import spark.implicits._
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+  }
+
+  /** A commit body that counts its calls and writes the batch. */
+  private class CountingBody {
+    var calls = 0
+    def apply(b: org.apache.spark.sql.DataFrame, id: Long, out: String): Unit = {
+      calls += 1
+      b.write.mode("overwrite").parquet(out)
+    }
+  }
+
+  test("ingest loop: a rename fault after the body leaves no marker; redelivery commits once") {
+    val loop = faultLoop("loopfault")
+    val body = new CountingBody
+    val e = intercept[java.io.IOException](loop.commit(loopBatch, 0L) { (b, id, out) =>
+      body(b, id, out)
+      FaultRenameFs.failAfter(0) // the publish rename dies
+    })
+    assert(e.getMessage.contains("injected rename fault"), e.getMessage)
+    FaultRenameFs.allowAll()
+    assert(loop.committedIds().isEmpty, "a failed publish must leave no marker")
+    // the redelivered batch runs the body again and commits exactly once
+    assert(loop.commit(loopBatch, 0L)(body(_, _, _)).isDefined)
+    assert(body.calls == 2)
+    assert(loop.committedIds() == Seq(0L))
+    val got = spark.read.parquet(loop.payloads(): _*).collect()
+      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(got == Seq((1L, "a"), (2L, "b")), s"committed payload: $got")
+  }
+
+  test("ingest loop: a committed batch id redelivered does not run the body") {
+    val loop = faultLoop("loopredeliver")
+    val body = new CountingBody
+    assert(loop.commit(loopBatch, 3L)(body(_, _, _)).isDefined)
+    assert(loop.commit(loopBatch, 3L)(body(_, _, _)).isEmpty)
+    assert(body.calls == 1 && loop.committedIds() == Seq(3L))
+  }
+
+  test("ingest loop: a body that throws leaves no marker") {
+    val loop = faultLoop("loopthrow")
+    val boom = intercept[RuntimeException](loop.commit(loopBatch, 0L) { (b, _, out) =>
+      b.write.mode("overwrite").parquet(out)
+      throw new RuntimeException("injected body crash")
+    })
+    assert(boom.getMessage == "injected body crash")
+    assert(loop.committedIds().isEmpty && loop.payloads().isEmpty)
+  }
+
+  test("ingest loop: an empty batch gets a marker without payload; the body is not called") {
+    val loop = faultLoop("loopempty")
+    val body = new CountingBody
+    assert(loop.commit(loopBatch.limit(0), 0L)(body(_, _, _)).isEmpty)
+    assert(body.calls == 0)
+    assert(loop.committedIds() == Seq(0L) && loop.payloads().isEmpty)
   }
 }

@@ -53,11 +53,9 @@ class St23ClosureSpec extends SparkSpec {
       all.where(col("doc_id") <= 100L && col("doc_id") % 2 === 0),
       all.where(col("doc_id") <= 100L && col("doc_id") % 2 =!= 0),
       all.where(col("doc_id") > 100L))
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "st23dbg_loop")
-    graft.util.Fs.deleteRecursively(base)
+    val loop = graft.streaming.IngestLoop.local(spark, "st23dbg_loop", "", _ => ())
     val got = graft.queries.PipelineQueries
-      .st23Ingest(spark, batches, base, "st23dbg2")
+      .st23Ingest(spark, batches, loop, "st23dbg2")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val pairs = Dedup.ngramJaccardPairs(all, "doc_id", "text",
       shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
