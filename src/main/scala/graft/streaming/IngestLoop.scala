@@ -26,6 +26,7 @@ final class IngestLoop private (s: SparkSession, val base: Path,
     onStaged: Double => Unit) {
 
   private val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+
   /** The watched input dir that [[land]] writes into. */
   val delta = new Path(base, "delta")
   private val staged = new Path(base, "staged")

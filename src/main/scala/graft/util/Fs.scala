@@ -4,9 +4,9 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 /** Local-filesystem helpers shared by the bench/soak/verify harnesses.
-  * (The data path proper uses the Hadoop FS API — see graft.sinks.Sink for
-  * output promotes and graft.streaming.IngestLoop for the micro-batch
-  * commit; these are for driver-local temp trees only.)
+  * (The data path proper uses the Hadoop FS API — see graft.sinks.Sink, and
+  * graft.streaming.IngestLoop for the micro-batch commit;
+  * these are for driver-local temp trees only.)
   */
 object Fs {
 

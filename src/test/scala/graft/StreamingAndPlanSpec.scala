@@ -495,12 +495,12 @@ class StreamingAndPlanSpec extends SparkSpec {
     assert(byUrl.values.forall(_.size == 1), "duplicate url_norm admitted")
   }
 
-  /** Rows of `streamed` and `oneShot` at sf0.001 are equal as sets and
-    * non-empty — the batch == streaming equality the two queries' shared
-    * DuckDB oracle asserts.
+  /** Rows of `streamed` and `oneShot` on the fixture [[sf]] reads by
+    * default (sf0.001) are equal as sets and non-empty — the batch ==
+    * streaming equality the two queries' shared DuckDB oracle asserts.
     */
   private def assertStreamedEqualsOneShot(streamed: String, oneShot: String): Unit = {
-    val dir = "/root/testdata/sf0.001"
+    val dir = new java.io.File(new java.net.URI(sf("documents").inputFiles.head)).getParent
     def rows(q: String) = SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSet
     val got = rows(streamed)
     val want = rows(oneShot)
