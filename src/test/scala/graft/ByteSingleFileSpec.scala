@@ -7,9 +7,7 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.scalacheck.{Gen, Prop, Test}
-import org.scalacheck.rng.Seed
-import org.scalacheck.util.Pretty
+import org.scalacheck.{Gen, Prop}
 
 /** The byte paths write single-file output on the driver and multi-file
   * output with one task per input. Over generated inputs the two must agree
@@ -84,15 +82,6 @@ class ByteSingleFileSpec extends SparkSpec {
     eol <- Gen.oneOf("\n", "\r\n")
     finalEol <- Gen.oneOf(true, false)
   } yield rows.mkString(eol) + (if (finalEol && rows.nonEmpty) eol else "")
-
-  private def check(prop: Prop): Unit = {
-    val res = Test.check(Test.Parameters.default
-      .withMinSuccessfulTests(12).withInitialSeed(Seed(20261017L)), prop)
-    res.status match {
-      case Test.PropException(_, e, _) => throw e // the failing assertion, as is
-      case _ => assert(res.passed, Pretty.pretty(Pretty.prettyTestRes(res)))
-    }
-  }
 
   /** Single-file output == header + the multi-file parts' bodies, in order,
     * and 0 jobs; the multi-file run (one task per file) is the listener's

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalacheck.{Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (cheap, avoids N×JVM-warmup). */
@@ -37,5 +40,17 @@ abstract class SparkSpec extends AnyFunSuite {
     java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.writeString(p, content)
     p.toString
+  }
+
+  /** Runs a ScalaCheck property over `samples` inputs from a fixed seed, so
+    * a failure reproduces; a failing sample rethrows its own assertion.
+    */
+  def check(prop: Prop, samples: Int = 12): Unit = {
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(samples).withInitialSeed(Seed(20261017L)), prop)
+    res.status match {
+      case Test.PropException(_, e, _) => throw e // the failing assertion, as is
+      case _ => assert(res.passed, Pretty.pretty(Pretty.prettyTestRes(res)))
+    }
   }
 }
