@@ -57,21 +57,11 @@ object Dedup {
       .repartition(col("id"))
       .select(col("id"), sigFn(col("__t"), shingleN, numHashes).as("sig"))
       .localCheckpoint()
-    // Band hash: one flat variadic xxhash64 over the band's signature slice,
-    // UNROLLED in Scala (literal getItem indices) rather than a nested
-    // higher-order transform — HOFs are CodegenFallback and a lambda that
-    // slices an attribute array per band turned out pathologically slow
-    // (~3ms/row); the unrolled form stays inside whole-stage codegen.
-    val bandKeys = (0 until bands).map { b =>
-      xxhash64(((0 until rows).map(r => col("sig").getItem(b * rows + r)) :+ lit(b)): _*)
-    }
     // Slim banding: only (id, band, bucket) goes through the bucket shuffle
     // and self-join — the 512B signature payload would otherwise be shuffled
     // bands× times. Payloads are re-attached per UNIQUE candidate pair.
-    val banded = sig.select(col("id"), posexplode(array(bandKeys: _*)))
-      .withColumnRenamed("col", "bucket")
-      .withColumnRenamed("pos", "band")
-    val candidates = pairCandidates(banded, Seq("band", "bucket"), maxBucketSize)
+    val candidates = pairCandidates(jaccardBand(sig, numHashes, rows),
+      Seq("band", "bucket"), maxBucketSize)
     val nEqual = (0 until numHashes)
       .map(i => when(col("sigA").getItem(i) === col("sigB").getItem(i), 1).otherwise(0))
       .reduce(_ + _) // unrolled equal-position count (codegen-friendly)
@@ -119,23 +109,8 @@ object Dedup {
       // path); 0: single-chunk banding over `bands` (small-corpus path)
       blocks: Int = 0): DataFrame = {
     val sig = docs.select(col(idCol).as("id"), sigFn(col(textCol)).as("sig"))
-    val banded = if (blocks > 0) {
-      require(bits % blocks == 0, s"blocks must divide $bits (got $blocks)")
-      require(maxHamming < blocks,
-        s"maxHamming ($maxHamming) must be < blocks ($blocks) for the pigeonhole guarantee")
-      val width = bits / blocks
-      // width == 64 (blocks = 1): Java's shift wraps, (1L << 64) - 1 == 0
-      // — every signature would collapse into one bucket
-      val mask = if (width == 64) -1L else (1L << width) - 1
-      val chunk = (b: Int) => shiftright(col("sig"), b * width).bitwiseAND(mask)
-      val combos = (0 until blocks).combinations(blocks - maxHamming).toSeq
-      // key = hash of (combo id, the chosen chunks) — unrolled, in codegen
-      val comboKeys = combos.zipWithIndex.map { case (c, i) =>
-        xxhash64((lit(i) +: c.map(chunk)): _*)
-      }
-      sig.select(col("id"), col("sig"), posexplode(array(comboKeys: _*)))
-        .withColumnRenamed("col", "chunk").withColumnRenamed("pos", "band")
-    } else {
+    val banded = if (blocks > 0) simhashBandRows(sig, bits, blocks, maxHamming)
+    else {
       // the pigeonhole guarantee (any pair within maxHamming shares >=1
       // exact chunk) needs even chunks covering all signature bits and more
       // chunks than allowed differing bits
@@ -256,26 +231,13 @@ object Dedup {
       bandRows: Int = 2,
       maxBucketSize: Int = 1000): DataFrame = {
     require(numHashes % bandRows == 0, "bandRows must divide numHashes")
-    // repartition BEFORE the shingle/minhash projection (round-20, guide
-    // §2.5): written select-then-repartition, the expensive text walk ran
-    // map-side on the scan's split count — ONE task for a single-file
-    // corpus — and the exchange carried the fatter (sh, sig) rows.
-    // Repartitioning the raw text rows first runs the walk at full shuffle
-    // parallelism; the localCheckpoint keeps it computed ONCE for the three
+    // the localCheckpoint keeps the text walk computed ONCE for the three
     // consumers (banding + both verify attaches), the role the shared
-    // exchange played before (see minhashPairs).
-    val base = docs.select(col(idCol).as("id"), col(textCol).as("__t"))
-      .repartition(col("id"))
-      .select(
-        col("id"),
-        TF.shingleHashes(col("__t"), shingleN).as("sh"),
-        TF.minhashSignature(col("__t"), shingleN, numHashes).as("sig"))
+    // exchange played before (see minhashPairs)
+    val base = jaccardPrep(docs, idCol, textCol, shingleN, numHashes)
       .localCheckpoint()
-    val bandKeys = (0 until numHashes / bandRows).map(b =>
-      xxhash64(((0 until bandRows).map(r => col("sig").getItem(bandRows * b + r)) :+ lit(b)): _*))
-    val banded = base.select(col("id"), posexplode(array(bandKeys: _*)))
-      .withColumnRenamed("col", "bucket").withColumnRenamed("pos", "band")
-    val candidates = pairCandidates(banded, Seq("band", "bucket"), maxBucketSize)
+    val candidates = pairCandidates(jaccardBand(base, numHashes, bandRows),
+      Seq("band", "bucket"), maxBucketSize)
     // exact verify per candidate pair: one linear merge over the sorted
     // shingle sets (JaccardSorted) — the array_intersect/array_union
     // formulation builds two hash sets + a union array per PAIR, the hot
@@ -331,8 +293,8 @@ object Dedup {
     val freshP = jaccardPrep(fresh, idCol, textCol, shingleN, numHashes)
       .localCheckpoint()
     incrementalCore(
-      jaccardBand(oldP, numHashes, bandRows, isNew = false),
-      jaccardBand(freshP, numHashes, bandRows, isNew = true),
+      jaccardBand(oldP, numHashes, bandRows),
+      jaccardBand(freshP, numHashes, bandRows),
       oldP.select(col("id"), col("sh")), freshP.select(col("id"), col("sh")),
       minJaccard, maxBucketSize)
   }
@@ -372,9 +334,7 @@ object Dedup {
       graft.util.Par.actions(
         () => Bucketing.writeBucketed(prep.select(col("id"), col("sh")),
           shingleTable, "id", buckets),
-        () => Bucketing.writeBucketed(
-          jaccardBand(prep, numHashes, bandRows, isNew = false)
-            .select("id", "band", "bucket"),
+        () => Bucketing.writeBucketed(jaccardBand(prep, numHashes, bandRows),
           bandTable, "bucket", buckets))
     } finally prep.unpersist()
   }
@@ -387,32 +347,17 @@ object Dedup {
     * cap, same A-side restriction, same exact verify — so the d17 oracle
     * pins both paths. Per-batch cost: O(batch text) + one linear scan of
     * the slim index, never a re-shingle of the corpus.
+    *
+    * Returns `(pairs, prep)`: prep is the batch's materialized
+    * `(id, sh, sig)` rows, localCheckpoint'd and batch-sized by contract.
+    * The ingest loops probe a batch and then append it (or its admitted
+    * slice) through [[appendJaccardIngestIndex]], which takes this prep, so
+    * the batch's dominant compute (the shingle+minhash text walk) runs once
+    * per batch. The probe's uniqueness `require` is the family's one
+    * duplicate-id guard: a batch id already in the index is refused here,
+    * before anything is appended.
     */
   def incrementalJaccardPairsIndexed(
-      spark: org.apache.spark.sql.SparkSession,
-      bandTable: String,
-      shingleTable: String,
-      fresh: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      minJaccard: Double = 0.5,
-      numHashes: Int = 16,
-      bandRows: Int = 1,
-      maxBucketSize: Int = 1000): DataFrame =
-    incrementalJaccardPairsIndexedWithPrep(spark, bandTable, shingleTable,
-      fresh, idCol, textCol, shingleN, minJaccard, numHashes, bandRows,
-      maxBucketSize)._1
-
-  /** [[incrementalJaccardPairsIndexed]] that ALSO returns the batch's
-    * materialized `(id, sh, sig)` prep (round-21): the ingest loops probe
-    * a batch and then append the SAME batch to the index —
-    * [[appendJaccardIngestIndexPrepped]] consumes this frame so the
-    * batch's dominant compute (the shingle+minhash text walk) runs once
-    * per batch instead of twice. The prep is localCheckpoint'd (the probe
-    * requires that anyway) and batch-sized by contract.
-    */
-  def incrementalJaccardPairsIndexedWithPrep(
       spark: org.apache.spark.sql.SparkSession,
       bandTable: String,
       shingleTable: String,
@@ -442,127 +387,87 @@ object Dedup {
         .limit(1).collect().isEmpty,
       "incrementalJaccardPairsIndexed: ids must be globally unique across " +
         "the indexed corpus and fresh — at least one id appears on both sides")
-    (incrementalCore(
-      spark.table(bandTable).withColumn("is_new", lit(false)),
-      jaccardBand(freshP, numHashes, bandRows, isNew = true),
+    (incrementalCore(spark.table(bandTable),
+      jaccardBand(freshP, numHashes, bandRows),
       oldSh, freshP.select(col("id"), col("sh")),
       minJaccard, maxBucketSize), freshP)
   }
 
   /** MAINTAIN the ingest index: append a batch's ACCEPTED rows (the
     * dedup survivors — only admitted docs enter the corpus) to both index
-    * tables, so the NEXT batch blocks against them. One text pass over
-    * the batch; the existing index is never rewritten (bucketed appends
-    * add per-bucket files, and both the bucket-join and the attach keep
-    * their pruning). Ids already present are refused — an id appended
-    * twice would shadow-pair against itself in every later batch. The
-    * (shingleN, numHashes, bandRows) parameters MUST match the build's;
-    * `buckets` must match the table's bucket spec (Spark refuses a
-    * mismatched bucketed append loudly).
-    */
-  def appendJaccardIngestIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      bandTable: String,
-      shingleTable: String,
-      accepted: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      numHashes: Int = 16,
-      bandRows: Int = 1,
-      buckets: Int = 16): Unit = {
-    require(spark.table(shingleTable).select(col("id").as(idCol))
-        .join(broadcast(accepted.select(col(idCol))), Seq(idCol))
-        .limit(1).collect().isEmpty,
-      "appendJaccardIngestIndex: an accepted id is already in the index — " +
-        "appending it again would make every later batch pair against a " +
-        "phantom duplicate")
-    val prep = jaccardPrep(accepted, idCol, textCol, shingleN, numHashes).persist()
-    try {
-      // materialize once, then the two independent appends run
-      // CONCURRENTLY (guide §2.6 — same overlap as the build path; the
-      // appends are mostly fixed commit cost per batch)
-      prep.count()
-      appendPrep(spark, bandTable, shingleTable, prep, numHashes, bandRows,
-        buckets)
-    } finally prep.unpersist()
-  }
-
-  /** [[appendJaccardIngestIndex]] from an ALREADY-MATERIALIZED
-    * `(id, sh, sig)` prep frame — the probe's checkpoint from
-    * [[incrementalJaccardPairsIndexedWithPrep]] (round-21): the ingest
-    * loops probe then append the SAME batch, so re-reading a staged copy
-    * and re-running the shingle+minhash walk paid the batch's dominant
-    * compute twice per micro-batch. CONTRACT: `prep` must be materialized
-    * (checkpointed/persisted — the two concurrent appends would otherwise
-    * race-compute it twice) and its ids must have just passed the probe's
-    * uniqueness guard against the SAME tables — this path intentionally
-    * skips the duplicate-id re-check the raw-text overload pays (one
-    * bounded collect per batch). `prep` may derive from a
+    * tables, so the NEXT batch blocks against them. `prep` is the probe's
+    * `(id, sh, sig)` frame from [[incrementalJaccardPairsIndexed]], or a
+    * slice of it: the batch's text is never walked again. The existing
+    * index is never rewritten (bucketed appends add per-bucket files, and
+    * both the bucket-join and the attach keep their pruning).
+    *
+    * CONTRACT: `prep` must be materialized (the probe's checkpoint — the
+    * two concurrent appends would otherwise race-compute it twice), and
+    * its ids must have just passed the probe's uniqueness guard against
+    * the SAME tables; the append does not re-check them (an id appended
+    * twice would shadow-pair against itself in every later batch). The
+    * (numHashes, bandRows) parameters MUST match the build's; `buckets`
+    * must match the table's bucket spec (Spark refuses a mismatched
+    * bucketed append loudly). `prep` may derive from a
     * foreachBatch-cloned session: the append rebinds it through the main
     * session (a bucketed saveAsTable append fed a streaming-derived frame
     * writes through the cloned session and lands zero rows — the st13
     * lesson).
     */
-  def appendJaccardIngestIndexPrepped(
+  def appendJaccardIngestIndex(
       spark: org.apache.spark.sql.SparkSession,
       bandTable: String,
       shingleTable: String,
       prep: DataFrame,
       numHashes: Int = 16,
       bandRows: Int = 1,
-      buckets: Int = 16): Unit =
-    appendPrep(spark, bandTable, shingleTable,
-      spark.createDataFrame(prep.rdd, prep.schema), numHashes, bandRows,
-      buckets)
-
-  /** The two concurrent bucketed appends shared by both append overloads.
-    * Repartition by the bucket key first (see Bucketing.writeBucketed):
-    * an append otherwise adds input-partitions x buckets files PER BATCH,
-    * and the probe's scan cost becomes file-open overhead.
-    */
-  private def appendPrep(
-      spark: org.apache.spark.sql.SparkSession,
-      bandTable: String,
-      shingleTable: String,
-      prep: DataFrame,
-      numHashes: Int,
-      bandRows: Int,
-      buckets: Int): Unit =
+      buckets: Int = 16): Unit = {
+    val bound = spark.createDataFrame(prep.rdd, prep.schema)
+    // the two appends are independent — run them CONCURRENTLY (guide
+    // §2.6, the build path's overlap; each is mostly fixed commit cost)
     graft.util.Par.actions(
-      () => prep.select(col("id"), col("sh"))
-        .repartition(buckets, col("id"))
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "id").sortBy("id").saveAsTable(shingleTable),
-      () => jaccardBand(prep, numHashes, bandRows, isNew = false)
-        .select("id", "band", "bucket")
-        .repartition(buckets, col("bucket"))
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "bucket").sortBy("bucket").saveAsTable(bandTable))
+      () => appendBucketed(bound.select(col("id"), col("sh")),
+        shingleTable, "id", buckets),
+      () => appendBucketed(jaccardBand(bound, numHashes, bandRows),
+        bandTable, "bucket", buckets))
+  }
 
-  /** Combination-key banding rows (id, sig, band, chunk, is_new) for the
-    * SIMHASH ingest-index family — the [[simhashPairs]] blocks>0 scheme
-    * factored out so the build/append/probe trio shares one definition
-    * (a second copy drifting would silently break candidate recall). The
-    * signature RIDES the banding row (one long — the d06 carry-payload
-    * lesson: the Hamming verify then runs inline in the candidate join,
-    * no re-attach round trip).
+  /** Bucketed append of `df` to `table`. Repartition by the bucket key
+    * first (see Bucketing.writeBucketed): an append otherwise adds
+    * input-partitions x buckets files PER BATCH, and the probe's scan cost
+    * becomes file-open overhead.
+    */
+  private def appendBucketed(df: DataFrame, table: String, key: String,
+      buckets: Int): Unit =
+    df.repartition(buckets, col(key))
+      .write.mode("append").format("parquet")
+      .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
+
+  /** Combination-key banding rows (id, sig, band, chunk) — the ONE
+    * definition of the [[simhashPairs]] blocks>0 scheme, shared with the
+    * SIMHASH ingest-index family's build/append/probe (a second copy
+    * drifting would silently break candidate recall). The signature RIDES
+    * the banding row (one long — the d06 carry-payload lesson: the Hamming
+    * verify then runs inline in the candidate join, no re-attach round
+    * trip).
     */
   private def simhashBandRows(sigs: DataFrame, bits: Int, blocks: Int,
-      maxHamming: Int, isNew: Boolean): DataFrame = {
+      maxHamming: Int): DataFrame = {
     require(bits % blocks == 0, s"blocks must divide $bits (got $blocks)")
     require(maxHamming < blocks,
       s"maxHamming ($maxHamming) must be < blocks ($blocks) for the pigeonhole guarantee")
     val width = bits / blocks
+    // width == 64 (blocks = 1): Java's shift wraps, (1L << 64) - 1 == 0
+    // — every signature would collapse into one bucket
     val mask = if (width == 64) -1L else (1L << width) - 1
     val chunk = (b: Int) => shiftright(col("sig"), b * width).bitwiseAND(mask)
     val combos = (0 until blocks).combinations(blocks - maxHamming).toSeq
+    // key = hash of (combo id, the chosen chunks) — unrolled, in codegen
     val comboKeys = combos.zipWithIndex.map { case (c, i) =>
       xxhash64((lit(i) +: c.map(chunk)): _*)
     }
     sigs.select(col("id"), col("sig"), posexplode(array(comboKeys: _*)))
       .withColumnRenamed("col", "chunk").withColumnRenamed("pos", "band")
-      .withColumn("is_new", lit(isNew))
   }
 
   /** Build the PERCEPTUAL/simhash ingest-side dedup index
@@ -587,16 +492,18 @@ object Dedup {
       buckets: Int = 16): Unit = {
     val base = sigs.select(col(idCol).as("id"), col(sigCol).as("sig"))
       .where(col("sig").isNotNull)
-    Bucketing.writeBucketed(
-      simhashBandRows(base, bits, blocks, maxHamming, isNew = false)
-        .select("id", "sig", "band", "chunk"),
+    Bucketing.writeBucketed(simhashBandRows(base, bits, blocks, maxHamming),
       bandTable, "chunk", buckets)
   }
 
   /** MAINTAIN the simhash ingest index: append a batch's signatures so
     * the next batch blocks against them (bucketed append — the existing
-    * index is never rewritten). Duplicate ids are refused loudly, the
-    * [[appendJaccardIngestIndex]] contract.
+    * index is never rewritten). As for [[appendJaccardIngestIndex]],
+    * the ids of `sigs` must have just passed
+    * [[incrementalSimhashPairsIndexed]]'s uniqueness guard against the
+    * same table (the append does not re-check them), and `sigs` is
+    * rebound through the main session, so a checkpointed frame from a
+    * foreachBatch-cloned session appends correctly.
     */
   def appendSimhashIngestIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -607,32 +514,12 @@ object Dedup {
       maxHamming: Int = 4,
       blocks: Int = 8,
       bits: Int = 64,
-      buckets: Int = 16,
-      // true: the caller JUST ran [[incrementalSimhashPairsIndexed]] on
-      // the same ids against the same table, whose require already proved
-      // uniqueness — skip the re-check (one bounded collect + a
-      // corpus-index id scan per batch). The append also rebinds `sigs`
-      // through the main session, so a materialized (checkpointed) frame
-      // from a foreachBatch-cloned session appends correctly (round-21).
-      idsPrechecked: Boolean = false): Unit = {
-    if (!idsPrechecked)
-      // no distinct before the existence probe: limit(1) short-circuits on
-      // the first match, and in the common (no-duplicate) case the distinct
-      // was a full shuffle of the banding-rows index for nothing
-      require(spark.table(bandTable).select(col("id").as(idCol))
-          .join(broadcast(sigs.select(col(idCol))), Seq(idCol))
-          .limit(1).collect().isEmpty,
-        "appendSimhashIngestIndex: an id is already in the index — " +
-          "appending it again would make every later batch pair against a " +
-          "phantom duplicate")
+      buckets: Int = 16): Unit = {
     val bound = spark.createDataFrame(sigs.rdd, sigs.schema)
     val base = bound.select(col(idCol).as("id"), col(sigCol).as("sig"))
       .where(col("sig").isNotNull)
-    simhashBandRows(base, bits, blocks, maxHamming, isNew = false)
-      .select("id", "sig", "band", "chunk")
-      .repartition(buckets, col("chunk"))
-      .write.mode("append").format("parquet")
-      .bucketBy(buckets, "chunk").sortBy("chunk").saveAsTable(bandTable)
+    appendBucketed(simhashBandRows(base, bits, blocks, maxHamming),
+      bandTable, "chunk", buckets)
   }
 
   /** INCREMENTAL simhash near-dup pairs against the persisted band index
@@ -669,8 +556,8 @@ object Dedup {
         "the indexed corpus and fresh — at least one id appears on both sides")
     val freshBase = fresh.select(col(idCol).as("id"), col(sigCol).as("sig"))
       .where(col("sig").isNotNull)
-    val freshBanded = simhashBandRows(freshBase, bits, blocks, maxHamming,
-      isNew = true)
+    val freshBanded = simhashBandRows(freshBase, bits, blocks, maxHamming)
+      .withColumn("is_new", lit(true))
     val oldBanded = spark.table(bandTable).withColumn("is_new", lit(false))
     val freshBuckets = broadcast(
       freshBanded.select(col("band"), col("chunk")).distinct())
@@ -692,11 +579,12 @@ object Dedup {
 
   /** (id, sh, sig) signature rows over one exchange — all consumers (band
     * explode, shingle attach) hang off the same shuffle so the text walk
-    * happens once (see [[minhashPairs]]).
+    * happens once (see [[minhashPairs]]). The slim (id, text) rows are
+    * repartitioned FIRST (round-20, guide §2.5): written
+    * select-then-repartition, the shingle+minhash walk ran map-side on the
+    * scan's split count — ONE task for a single-file corpus — and the
+    * exchange carried the fatter (sh, sig) rows.
     */
-  // repartition the slim (id, text) rows FIRST so the shingle+minhash walk
-  // runs at shuffle parallelism instead of on the scan's split count (one
-  // task for a single-file corpus) — see ngramJaccardPairs' base
   private def jaccardPrep(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int): DataFrame = df
     .select(col(idCol).as("id"), col(textCol).as("__t"))
@@ -706,23 +594,30 @@ object Dedup {
       TF.shingleHashes(col("__t"), shingleN).as("sh"),
       TF.minhashSignature(col("__t"), shingleN, numHashes).as("sig"))
 
-  /** Slim (id, band, bucket, is_new) banding rows for the incremental
-    * candidate join — the rows [[buildJaccardIngestIndex]] persists.
+  /** Slim (id, band, bucket) MinHash banding rows — the ONE band-key
+    * definition of the signature family: [[minhashPairs]] and
+    * [[ngramJaccardPairs]] band through it, the incremental candidate join
+    * bands both sides through it, and [[buildJaccardIngestIndex]] persists
+    * its rows (so a second copy drifting would silently break recall
+    * against every persisted index). Band hash: one flat variadic xxhash64
+    * over the band's `bandRows` signature slots, UNROLLED in Scala
+    * (literal getItem indices) rather than a nested higher-order transform
+    * — HOFs are CodegenFallback and a lambda that slices an attribute
+    * array per band turned out pathologically slow (~3ms/row); the
+    * unrolled form stays inside whole-stage codegen.
     */
-  private def jaccardBand(base: DataFrame, numHashes: Int, bandRows: Int,
-      isNew: Boolean): DataFrame = {
+  private def jaccardBand(base: DataFrame, numHashes: Int, bandRows: Int): DataFrame = {
     require(numHashes % bandRows == 0, "bandRows must divide numHashes")
     val bandKeys = (0 until numHashes / bandRows).map(b =>
       xxhash64(((0 until bandRows).map(r => col("sig").getItem(bandRows * b + r)) :+ lit(b)): _*))
     base.select(col("id"), posexplode(array(bandKeys: _*)))
       .withColumnRenamed("col", "bucket").withColumnRenamed("pos", "band")
-      .withColumn("is_new", lit(isNew))
   }
 
   /** The incremental pair shape shared by the inline and indexed paths:
-    * cap buckets over old+fresh banding rows, restrict the candidate
-    * join's A side to NEW rows (old x old structurally absent), verify
-    * with exact Jaccard over the attached shingle sets.
+    * cap buckets over old+fresh (id, band, bucket) banding rows, restrict
+    * the candidate join's A side to NEW rows (old x old structurally
+    * absent), verify with exact Jaccard over the attached shingle sets.
     */
   private def incrementalCore(oldBanded: DataFrame, freshBanded: DataFrame,
       oldSh: DataFrame, freshSh: DataFrame,
@@ -738,9 +633,9 @@ object Dedup {
     // any sane ingest batch.
     val freshBuckets = broadcast(
       freshBanded.select(col("band"), col("bucket")).distinct())
-    val oldPruned = oldBanded
+    val oldPruned = oldBanded.withColumn("is_new", lit(false))
       .join(freshBuckets, Seq("band", "bucket"), "left_semi")
-    val banded = oldPruned.unionByName(freshBanded)
+    val banded = oldPruned.unionByName(freshBanded.withColumn("is_new", lit(true)))
     val capped = capBuckets(banded, Seq("band", "bucket"), maxBucketSize)
     // A side = NEW rows only; B side = old rows, or new rows with a
     // smaller id (keep-first within the batch) — old x old never forms
@@ -1234,54 +1129,6 @@ object Dedup {
       .select(col("id"), coalesce(col("__c"), col("id")).as("cluster"))
   }
 
-  /** INCREMENTAL cluster-closure maintenance (round-19 verdict #1): the
-    * closure family (d09/d12/d25/t34) was the only index-like family
-    * still rebuilt from scratch every run — and the soak's cost wall (the
-    * x64 full recompute runs ~300 s). This is its CDC pairing, the
-    * d17/st13 build-once discipline applied to connected components.
-    * Persisted state is two slim frames:
-    *
-    *   - STORED labels `(id, cluster)`: one row per ingested doc, the
-    *     cluster label assigned when its batch merged — APPEND-ONLY
-    *     (a batch writes its own rows once; prior rows are never
-    *     rewritten);
-    *   - REMAP `(cluster, root)`: stored-label values whose cluster later
-    *     merged into a smaller-rooted component. Bounded by cumulative
-    *     cluster MERGES — an entry exists only for a label that stopped
-    *     being a root — never corpus-sized, so it broadcasts at any
-    *     corpus scale.
-    *
-    * Effective label of id = `coalesce(remap[stored[id]], stored[id])` —
-    * exactly ONE lookup deep, because [[closureMerge]] composes the remap
-    * EAGERLY each batch (old entries re-root through the batch's merges),
-    * so the read side never chases remap chains.
-    *
-    * This is one batch's state transition. Inputs: the prior state, the
-    * batch's ids (globally unique, disjoint from stored — the same
-    * contract the ingest-index append enforces loudly), and the batch's
-    * NEW near-dup pairs (from the d17 ingest index probe: batch x corpus
-    * + batch x earlier-batch rows, occupancy-bounded — old x old pairs
-    * never re-derive). Only the pairs' ENDPOINT labels and the remap are
-    * touched: stored is narrow-scanned under a broadcast endpoint filter,
-    * never shuffled, so per-batch cost is O(batch + pairs + remap) — FLAT
-    * in corpus size, where the full recompute pays O(corpus pairs +
-    * closure rounds) every run. The batch's pair graph is projected onto
-    * effective labels and closed EXACTLY ([[clusters]] on the label
-    * quotient graph — convergence in O(new-chain diameter) rounds; prior
-    * clusters never re-walk), yielding the merge map label -> strictly
-    * smaller root. Returns `(storedAppend, remap')`: the batch rows'
-    * labels, and the re-rooted, merge-extended remap.
-    *
-    * CORRECTNESS (d09's recursive-CTE oracle pins it end to end): by
-    * induction, effective labels after batch k equal the
-    * min-reachable-id components of the UNION of all pairs seen through
-    * batch k — the union-find argument, with the remap as the
-    * path-compressed parent table. At recall-1 banding parameters the
-    * per-batch incremental pairs union to exactly the one-shot pair set
-    * (every pair surfaces when its later-arriving member's batch merges
-    * — d17's oracle pins that equivalence), so the maintained labels
-    * equal the one-shot [[clusters]] for ANY batch split (st23).
-    */
   /** Graph size (pair rows) up to which [[clusters]] / [[closureMerge]]
     * run their closure as a union-find on the driver instead of the
     * distributed label propagation: at 16 bytes/row the collect is
@@ -1320,13 +1167,62 @@ object Dedup {
     out
   }
 
+  /** INCREMENTAL cluster-closure maintenance (round-19 verdict #1): the
+    * closure family (d09/d12/d25/t34) was the only index-like family
+    * still rebuilt from scratch every run — and the soak's cost wall (the
+    * x64 full recompute runs ~300 s). This is its CDC pairing, the
+    * d17/st13 build-once discipline applied to connected components.
+    * Persisted state is two slim frames:
+    *
+    *   - STORED labels `(id, cluster)`: one row per ingested doc, the
+    *     cluster label assigned when its batch merged — APPEND-ONLY
+    *     (a batch writes its own rows once; prior rows are never
+    *     rewritten);
+    *   - REMAP `(cluster, root)`: stored-label values whose cluster later
+    *     merged into a smaller-rooted component. Bounded by cumulative
+    *     cluster MERGES — an entry exists only for a label that stopped
+    *     being a root — never corpus-sized, so it broadcasts at any
+    *     corpus scale.
+    *
+    * Effective label of id = `coalesce(remap[stored[id]], stored[id])` —
+    * exactly ONE lookup deep, because [[closureMerge]] composes the remap
+    * EAGERLY each batch (old entries re-root through the batch's merges),
+    * so the read side never chases remap chains.
+    *
+    * This is one batch's state transition. Inputs: the prior state, the
+    * batch's ids (globally unique, disjoint from stored — the same
+    * contract the ingest-index probe enforces loudly), and the batch's
+    * NEW near-dup pairs (from the d17 ingest index probe: batch x corpus
+    * + batch x earlier-batch rows, occupancy-bounded — old x old pairs
+    * never re-derive). Only the pairs' ENDPOINT labels and the remap are
+    * touched: stored is narrow-scanned under a broadcast endpoint filter,
+    * never shuffled, so per-batch cost is O(batch + pairs + remap) — FLAT
+    * in corpus size, where the full recompute pays O(corpus pairs +
+    * closure rounds) every run. The batch's pair graph is projected onto
+    * effective labels and closed EXACTLY ([[clusters]] on the label
+    * quotient graph — convergence in O(new-chain diameter) rounds; prior
+    * clusters never re-walk), yielding the merge map label -> strictly
+    * smaller root. Returns `(storedAppend, remap')`: the batch rows'
+    * labels, and the re-rooted, merge-extended remap.
+    *
+    * CORRECTNESS (d09's recursive-CTE oracle pins it end to end): by
+    * induction, effective labels after batch k equal the
+    * min-reachable-id components of the UNION of all pairs seen through
+    * batch k — the union-find argument, with the remap as the
+    * path-compressed parent table. At recall-1 banding parameters the
+    * per-batch incremental pairs union to exactly the one-shot pair set
+    * (every pair surfaces when its later-arriving member's batch merges
+    * — d17's oracle pins that equivalence), so the maintained labels
+    * equal the one-shot [[clusters]] for ANY batch split (st23).
+    */
   def closureMerge(
       stored: DataFrame,   // (id, cluster) — prior batches' labels
       remap: DataFrame,    // (cluster, root) — accumulated merges
       batchIds: DataFrame, // one column: the arriving batch's ids
       pairs: DataFrame,    // (idA, idB) — the batch's new pairs
       // pair rows up to which the whole merge runs driver-side (see
-      // [[SmallMergeGraphMax]]); 0 pins the distributed body (tests)
+      // [[SmallMergeGraphMax]]); 0 pins the distributed body and its
+      // label propagation (tests)
       smallGraphMax: Long = SmallMergeGraphMax
   ): (DataFrame, DataFrame) = {
     val ids = batchIds.select(col(batchIds.columns.head).as("id"))
@@ -1396,34 +1292,15 @@ object Dedup {
     val labelNodes = labelPairs.select(col("idA").as("id"))
       .unionByName(labelPairs.select(col("idB").as("id"))).distinct()
     // (label, root) for every label whose root CHANGED this batch —
-    // bounded by the batch's merges. SMALL-GRAPH FAST PATH (round-21,
-    // guide §1.2 "remove passes"): the quotient graph is merge-bounded by
-    // contract and at micro-batch cadence it is usually a handful of
-    // rows, while the distributed closure costs ~10 scheduler round-trips
-    // per batch (edge/label checkpoints, per-round convergence probes) —
-    // profiled at 223 jobs for st23's 3-batch loop, where job LATENCY,
-    // not data, was the wall. When the (already checkpointed) pair list
-    // is provably small, run the exact min-root union-find on the driver
-    // and return a LOCAL relation — the three broadcast consumers below
-    // then build from it with zero extra jobs. The hard row cap keeps the
-    // collect bounded (never corpus-sized); larger graphs — or non-long
-    // id types — take the distributed [[clusters]] path unchanged.
-    val longIds = labelPairs.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    val merges =
-      if (longIds && smallGraphMax > 0 &&
-          labelPairs.count() <= smallGraphMax) {
-        val roots = localMinRoots(labelPairs.collect()
-          .map(r => (r.getLong(0), r.getLong(1))))
-        val out = roots.toSeq.filter { case (x, r) => r != x }
-        stored.sparkSession.createDataFrame(out).toDF("__ml", "__mr")
-      } else
-        clusters(labelNodes, "id", labelPairs)
-          .where(col("id") =!= col("cluster"))
-          .select(col("id").as("__ml"), col("cluster").as("__mr"))
-          // referenced three times below (remap compose, new entries,
-          // batch labels)
-          .localCheckpoint()
+    // bounded by the batch's merges. [[clusters]] closes the quotient graph
+    // under the same cap: a small graph runs its driver union-find, a
+    // bigger one (or smallGraphMax = 0) the distributed label propagation.
+    val merges = clusters(labelNodes, "id", labelPairs, smallGraphMax = smallGraphMax)
+      .where(col("id") =!= col("cluster"))
+      .select(col("id").as("__ml"), col("cluster").as("__mr"))
+      // referenced three times below (remap compose, new entries, batch
+      // labels)
+      .localCheckpoint()
     // compose EAGERLY: old entries re-root through this batch's merges;
     // merged PRIOR roots gain their own entry (batch-id labels need none
     // — their stored rows are written post-merge below, and id
@@ -1451,7 +1328,7 @@ object Dedup {
     *     collected remap;
     *   - label pairs = endpoint pairs projected onto effective labels,
     *     self-loops dropped, oriented, distinct — then the same min-root
-    *     union-find [[localMinRoots]] the distributed path's fast tier
+    *     union-find [[localMinRoots]] that [[clusters]]' driver fast path
     *     uses;
     *   - merge-map keys are prior roots or batch ids, and the two sets
     *     are DISJOINT (id uniqueness: no prior stored row carries a batch
@@ -1528,6 +1405,18 @@ object Dedup {
     stored.join(broadcast(remap), Seq("cluster"), "left")
       .select(col("id"), coalesce(col("root"), col("cluster")).as("cluster"))
 
+  /** Slim (id, wh) stride-grid window hashes — the shared primitive of
+    * [[substringContamination]] and [[crossContamination]]. Window starts
+    * 0, stride, 2*stride... while a full window fits; short docs get one
+    * (truncated) window so every doc is represented. Empty/null window
+    * content hashes to NULL, never md5('') — two contentless docs share
+    * NOTHING. All codegen'd (sequence/substring/md5), no HOF lambdas.
+    */
+  private[graft] def windowHashes(docs: DataFrame, idCol: String, textCol: String,
+      windowChars: Int, stride: Int): DataFrame =
+    windowHashesWithPos(docs, idCol, textCol, windowChars, stride)
+      .select("id", "wh")
+
   /** Exact-substring contamination signal (the "deduplicating training data"
     * window-hash technique): hash fixed-size character windows of every
     * document on a stride grid; a window whose hash occurs in MORE THAN ONE
@@ -1544,18 +1433,6 @@ object Dedup {
     * window shared by 100k docs costs O(100k) rows, not O(100k^2) pairs),
     * and a groupBy(id) folds the flags into per-doc counts.
     */
-  /** Slim (id, wh) stride-grid window hashes — the shared primitive of
-    * [[substringContamination]] and [[crossContamination]]. Window starts
-    * 0, stride, 2*stride... while a full window fits; short docs get one
-    * (truncated) window so every doc is represented. Empty/null window
-    * content hashes to NULL, never md5('') — two contentless docs share
-    * NOTHING. All codegen'd (sequence/substring/md5), no HOF lambdas.
-    */
-  private[graft] def windowHashes(docs: DataFrame, idCol: String, textCol: String,
-      windowChars: Int, stride: Int): DataFrame =
-    windowHashesWithPos(docs, idCol, textCol, windowChars, stride)
-      .select("id", "wh")
-
   def substringContamination(
       docs: DataFrame,
       idCol: String,

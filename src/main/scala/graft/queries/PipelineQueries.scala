@@ -403,7 +403,7 @@ object PipelineQueries {
       d17IngestIndex(s, dir, t(s, dir, "documents").select("doc_id", "text"))
     val pairs = Dedup.incrementalJaccardPairsIndexed(s, bandTable, shTable,
       batch, "doc_id", "text",
-      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)._1
     batch.join(pairs.select(col("idA").as("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
       .select("doc_id")
@@ -415,7 +415,7 @@ object PipelineQueries {
     * corpus. Body is the load-bearing st13 shape: per-invocation index,
     * probe -> admitted rows staged to parquet BEFORE the append -> bucketed
     * append, committed by [[IngestLoop]] (a crash between the append and
-    * the publish replays into the append's duplicate-id refusal).
+    * the publish replays into the probe's duplicate-id refusal).
     */
   private def st13Ingest(s: SparkSession, corpusDocs: DataFrame,
       batchDocs: DataFrame, key: String): DataFrame = {
@@ -450,11 +450,10 @@ object PipelineQueries {
       // the corpus side is bucketed, so the probe join never reshuffles it
       val loop = ingestLoop(s, "st13_ingest", key)
       lastIngestBatchWalls = loop.run(docSchema, Seq(batch1, batch2)) { (batch, _, out) =>
-        // probe + prep in one pass (round-21): the append below derives
-        // from the probe's checkpointed prep, so the batch's
-        // shingle+minhash walk runs once per micro-batch (it previously
-        // re-ran over the staged re-read)
-        val (pairs, prep) = Dedup.incrementalJaccardPairsIndexedWithPrep(
+        // the probe returns its checkpointed prep, and the append below
+        // derives from it, so the batch's shingle+minhash walk runs once
+        // per micro-batch
+        val (pairs, prep) = Dedup.incrementalJaccardPairsIndexed(
           s, bandT, shT, batch, "doc_id", "text",
           shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
         // materialize admitted BEFORE the append mutates the index
@@ -464,8 +463,8 @@ object PipelineQueries {
         // append only the ADMITTED slice of the prep: a broadcast semi
         // against the just-staged ids over the checkpointed prep —
         // admitted ⊆ batch, whose ids the probe's guard just proved
-        // unique against the same tables
-        Dedup.appendJaccardIngestIndexPrepped(s, bandT, shT,
+        // unique against the same tables (the append does not re-check)
+        Dedup.appendJaccardIngestIndex(s, bandT, shT,
           prep.join(broadcast(s.read.parquet(out)
               .select(col("doc_id").as("id"))), Seq("id"), "left_semi"),
           numHashes = 16, bandRows = 1, buckets = 16)
@@ -977,13 +976,11 @@ object PipelineQueries {
       def label(x: String): Unit =
         s.sparkContext.setJobDescription(s"st23 b$id: $x")
       label("probe")
-      // probe + prep in one pass (round-21): the checkpointed prep
-      // carries the batch's ids AND feeds the index append below, so
-      // the shingle+minhash walk — the batch's dominant compute —
-      // runs exactly once per micro-batch (it previously re-ran for
-      // the staged re-read) and the streaming batch frame is scanned
-      // once instead of per consumer
-      val (pairs, prep) = Dedup.incrementalJaccardPairsIndexedWithPrep(
+      // the probe's checkpointed prep carries the batch's ids AND feeds
+      // the index append below, so the shingle+minhash walk — the
+      // batch's dominant compute — runs exactly once per micro-batch and
+      // the streaming batch frame is scanned once instead of per consumer
+      val (pairs, prep) = Dedup.incrementalJaccardPairsIndexed(
         s, bandT, shT, batch, "doc_id", "text",
         shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
       val vs = loop.payloads()
@@ -1004,18 +1001,17 @@ object PipelineQueries {
       // the two staged writes are independent (closureMerge returns
       // frames over checkpointed inputs) — run them concurrently
       // (guide §2.6): each is mostly fixed job/commit cost per batch.
-      // The index append consumes the probe's checkpointed prep
-      // (rebound to the main session inside the Prepped overload —
-      // a bucketed saveAsTable append fed the streaming batch DF
-      // directly writes through the micro-batch's cloned session and
-      // lands zero rows in the shared catalog's table), so the
-      // previous staged batch copy — read by nothing else — is gone
+      // The index append consumes the probe's checkpointed prep, which
+      // it rebinds to the main session (a bucketed saveAsTable append
+      // fed the streaming batch DF directly writes through the
+      // micro-batch's cloned session and lands zero rows in the shared
+      // catalog's table); the probe's guard already proved its ids new
       label("staged state writes")
       graft.util.Par.actions(
         () => storedApp.write.mode("overwrite").parquet(out + "/stored"),
         () => remapNew.write.mode("overwrite").parquet(out + "/remap"))
       label("index append")
-      Dedup.appendJaccardIngestIndexPrepped(s, bandT, shT, prep,
+      Dedup.appendJaccardIngestIndex(s, bandT, shT, prep,
         numHashes = 16, bandRows = 1, buckets = 16)
       s.sparkContext.setJobDescription(null)
     }
@@ -1079,7 +1075,7 @@ object PipelineQueries {
         // here — the mutating append path is st23Ingest's)
         val vsCorpus = Dedup.incrementalJaccardPairsIndexed(s, bandT, shT,
           batch, "doc_id", "text",
-          shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+          shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)._1
         val vsEarlier = Dedup.incrementalJaccardPairs(earlier, batch,
           "doc_id", "text",
           shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
@@ -1155,17 +1151,15 @@ object PipelineQueries {
       val pairs = Dedup.incrementalSimhashPairsIndexed(s, bandT,
         sigs, "media_id", "dhash", maxHamming = 4, blocks = 8)
       pairs.write.mode("overwrite").parquet(out + "/pairs")
-      // append the CHECKPOINTED signatures directly (round-21): the
-      // probe's require just proved these ids unique against the same
-      // table (idsPrechecked skips the re-check), and the append
-      // rebinds the frame through the main session internally (the
-      // st23 lesson: a bucketed saveAsTable append fed a
-      // streaming-derived frame writes through the micro-batch's
-      // cloned session and lands zero rows) — so the staged sigs
-      // copy, read by nothing else, is gone
+      // append the CHECKPOINTED signatures directly: the probe's
+      // require just proved these ids unique against the same table
+      // (the append does not re-check), and the append rebinds the
+      // frame through the main session internally (the st23 lesson: a
+      // bucketed saveAsTable append fed a streaming-derived frame
+      // writes through the micro-batch's cloned session and lands zero
+      // rows)
       Dedup.appendSimhashIngestIndex(s, bandT, sigs,
-        "media_id", "dhash", maxHamming = 4, blocks = 8,
-        idsPrechecked = true)
+        "media_id", "dhash", maxHamming = 4, blocks = 8)
     }
     val out = ordered(s.read.parquet(loop.payloads().map(_ + "/pairs"): _*)
       .select(col("idA"), col("idB"), col("hamming").cast("int").as("hamming")))
@@ -2246,7 +2240,7 @@ object PipelineQueries {
       val (bandTable, shTable) = d17IngestIndex(s, dir, docs)
       val pairs = Dedup.incrementalJaccardPairsIndexed(s, bandTable, shTable,
         batch, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)._1
       ordered(batch.join(pairs.select(col("idA").as("doc_id")).distinct(),
           Seq("doc_id"), "left_anti")
         .select("doc_id"))

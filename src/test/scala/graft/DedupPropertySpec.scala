@@ -138,13 +138,13 @@ class DedupPropertySpec extends SparkSpec {
       val perBatch = (0 to batchOf.max).flatMap { b =>
         val batch = docs.zip(batchOf).collect { case (d, `b`) => d }
           .toDF("doc_id", "text")
-        val (pairs, prep) = Dedup.incrementalJaccardPairsIndexedWithPrep(
+        val (pairs, prep) = Dedup.incrementalJaccardPairsIndexed(
           spark, bandT, shT, batch, "doc_id", "text",
           shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
         val got = pairs.collect()
           .map(r => (math.min(r.getLong(0), r.getLong(1)),
             math.max(r.getLong(0), r.getLong(1)), r.getDouble(2)))
-        Dedup.appendJaccardIngestIndexPrepped(spark, bandT, shT, prep,
+        Dedup.appendJaccardIngestIndex(spark, bandT, shT, prep,
           numHashes = 16, bandRows = 1, buckets = 4)
         got
       }

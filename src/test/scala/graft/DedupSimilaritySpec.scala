@@ -790,7 +790,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(spark.catalog.tableExists("dspec_band_live"))
     val indexed = graft.operators.Dedup.incrementalJaccardPairsIndexed(spark,
       "dspec_band_live", "dspec_sh_live", batch, "doc_id", "text",
-      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)._1
     val a = inline.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val b = indexed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b, s"indexed path diverged: only-inline=${a.diff(b).take(5)} " +
@@ -1104,16 +1104,18 @@ class DedupSimilaritySpec extends SparkSpec {
         .select(($"doc_id" + 3000000L).as("doc_id"),
           expr("array_join(transform(split(text, ' '), t -> concat(t, '_ap')), ' ')")
             .as("text")))
-    val blocked1 = graft.operators.Dedup.incrementalJaccardPairsIndexed(spark,
-      "dspeca_band", "dspeca_sh", batch1, "doc_id", "text",
+    val (pairs1, prep1) = graft.operators.Dedup.incrementalJaccardPairsIndexed(
+      spark, "dspeca_band", "dspeca_sh", batch1, "doc_id", "text",
       shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
-      .select($"idA".as("doc_id")).distinct()
+    val blocked1 = pairs1.select($"idA".as("doc_id")).distinct()
     val accepted1 = batch1.join(blocked1, Seq("doc_id"), "left_anti")
     assert(accepted1.limit(1).collect().nonEmpty,
       "fixture admitted nothing — append test is vacuous")
+    // append the ADMITTED slice of the probe's prep, as st13 does
     graft.operators.Dedup.appendJaccardIngestIndex(spark,
-      "dspeca_band", "dspeca_sh", accepted1, "doc_id", "text",
-      shingleN = 3, numHashes = 16, bandRows = 1, buckets = 4)
+      "dspeca_band", "dspeca_sh",
+      prep1.join(accepted1.select($"doc_id".as("id")), Seq("id"), "left_semi"),
+      numHashes = 16, bandRows = 1, buckets = 4)
     // batch 2 contains near-dups of batch-1 SURVIVORS (+4e6 ids, first
     // token dropped) — only an appended index can block those
     val batch2 = accepted1
@@ -1121,7 +1123,7 @@ class DedupSimilaritySpec extends SparkSpec {
         expr("substring(text, instr(text, ' ') + 1)").as("text"))
     val indexed2 = graft.operators.Dedup.incrementalJaccardPairsIndexed(spark,
       "dspeca_band", "dspeca_sh", batch2, "doc_id", "text",
-      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val inline2 = graft.operators.Dedup.incrementalJaccardPairs(
       docs.unionByName(accepted1), batch2, "doc_id", "text",
@@ -1134,12 +1136,13 @@ class DedupSimilaritySpec extends SparkSpec {
     // the append is load-bearing, not just harmless
     assert(indexed2.exists(_._2 >= 3000000L),
       s"no batch-2 pair blocks on an appended survivor: ${indexed2.take(5)}")
-    // re-appending the same ids is refused (they would shadow-pair forever)
+    // re-ingesting appended ids is refused by the probe, the family's one
+    // duplicate-id guard (they would shadow-pair forever)
     val e = intercept[IllegalArgumentException](
-      graft.operators.Dedup.appendJaccardIngestIndex(spark,
+      graft.operators.Dedup.incrementalJaccardPairsIndexed(spark,
         "dspeca_band", "dspeca_sh", accepted1, "doc_id", "text",
-        shingleN = 3, numHashes = 16, bandRows = 1, buckets = 4))
-    assert(e.getMessage.contains("already in the index"), e.getMessage)
+        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1))
+    assert(e.getMessage.contains("globally unique"), e.getMessage)
     graft.util.TableRetention.sweep(spark, "dspeca_", keep = Set.empty)
   }
 
@@ -1255,12 +1258,13 @@ class DedupSimilaritySpec extends SparkSpec {
     assert((q1 ++ q2) == oneShot,
       s"incremental union != one-shot:\n${q1 ++ q2}\nvs\n$oneShot")
     assert(q1.intersect(q2).isEmpty, "a pair surfaced in two batches")
-    // duplicate-id append refused loudly
+    // re-ingesting appended ids is refused by the probe, the family's one
+    // duplicate-id guard
     val e = intercept[IllegalArgumentException] {
-      Dedup.appendSimhashIngestIndex(spark, bandT, b1, "id", "sig",
-        maxHamming = 4, blocks = 8, buckets = 4)
+      Dedup.incrementalSimhashPairsIndexed(spark, bandT,
+        b1, "id", "sig", maxHamming = 4, blocks = 8)
     }
-    assert(e.getMessage.contains("already in the index"), e.getMessage)
+    assert(e.getMessage.contains("globally unique"), e.getMessage)
     graft.util.TableRetention.sweep(spark, "simix", keep = Set.empty)
   }
 
@@ -1347,5 +1351,20 @@ class DedupSimilaritySpec extends SparkSpec {
       stored = stored.unionByName(sL).localCheckpoint()
       remap = rL.localCheckpoint()
     }
+  }
+
+  test("closureMerge(smallGraphMax = 0) closes the label graph by distributed propagation") {
+    // the distributed body passes its cap on to clusters, so the quotient
+    // graph is closed by label propagation and the comparison above sets
+    // the driver union-find against a different algorithm
+    def ids(xs: Long*) = xs.toDF("id")
+    val stored = ids(10, 20, 30).select(col("id"), col("id").as("cluster"))
+    val remap = ids().select(col("id").as("cluster"), col("id").as("root"))
+    Dedup.lastClusterRounds = -1
+    val (s, _) = Dedup.closureMerge(stored, remap, ids(5),
+      Seq((5L, 20L), (5L, 30L)).toDF("idA", "idB"), smallGraphMax = 0)
+    assert(s.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(5L -> 5L))
+    assert(Dedup.lastClusterRounds > 0,
+      s"label propagation ran ${Dedup.lastClusterRounds} rounds")
   }
 }

@@ -42,12 +42,12 @@ abstract class SparkSpec extends AnyFunSuite {
     p.toString
   }
 
-  /** Runs a ScalaCheck property over `samples` inputs from a fixed seed, so
-    * a failure reproduces; a failing sample rethrows its own assertion.
+  /** Runs a ScalaCheck property over 12 inputs from a fixed seed, so a
+    * failure reproduces; a failing sample rethrows its own assertion.
     */
-  def check(prop: Prop, samples: Int = 12): Unit = {
+  def check(prop: Prop): Unit = {
     val res = Test.check(Test.Parameters.default
-      .withMinSuccessfulTests(samples).withInitialSeed(Seed(20261017L)), prop)
+      .withMinSuccessfulTests(12).withInitialSeed(Seed(20261017L)), prop)
     res.status match {
       case Test.PropException(_, e, _) => throw e // the failing assertion, as is
       case _ => assert(res.passed, Pretty.pretty(Pretty.prettyTestRes(res)))

@@ -24,20 +24,27 @@ class St23ClosureSpec extends SparkSpec {
       expr("substring(text, instr(text, ' ') + 1)").as("text"))
     Dedup.buildJaccardIngestIndex(b1.limit(0), "doc_id", "text", bandT, shT,
       shingleN = 3, numHashes = 16, bandRows = 1, buckets = 4)
-    val p1 = Dedup.incrementalJaccardPairsIndexed(spark, bandT, shT, b1,
+    val (p1, prep1) = Dedup.incrementalJaccardPairsIndexed(spark, bandT, shT, b1,
       "doc_id", "text", shingleN = 3, minJaccard = 0.5, numHashes = 16,
       bandRows = 1)
     assert(p1.count() == 0, "no near-dups were planted within batch 1")
-    Dedup.appendJaccardIngestIndex(spark, bandT, shT, b1, "doc_id", "text",
-      shingleN = 3, numHashes = 16, bandRows = 1, buckets = 4)
+    Dedup.appendJaccardIngestIndex(spark, bandT, shT, prep1,
+      numHashes = 16, bandRows = 1, buckets = 4)
     assert(spark.table(bandT).count() == 160 && spark.table(shT).count() == 10,
       "append did not land in the index tables")
     val p2 = Dedup.incrementalJaccardPairsIndexed(spark, bandT, shT, b2,
       "doc_id", "text", shingleN = 3, minJaccard = 0.5, numHashes = 16,
-      bandRows = 1)
+      bandRows = 1)._1
     val pairs = p2.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(b1.collect().map(_.getLong(0)).forall(i => pairs.contains((i + 100L, i))),
       s"cross-batch pairs missing: $pairs")
+    // re-probing the appended ids is refused: the probe is the loop's one
+    // duplicate-id guard
+    val e = intercept[IllegalArgumentException](
+      Dedup.incrementalJaccardPairsIndexed(spark, bandT, shT, b1,
+        "doc_id", "text", shingleN = 3, minJaccard = 0.5, numHashes = 16,
+        bandRows = 1))
+    assert(e.getMessage.contains("globally unique"), e.getMessage)
     graft.util.TableRetention.sweep(spark, "st23dbg", keep = Set.empty)
   }
 
