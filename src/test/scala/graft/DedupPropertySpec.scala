@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 
 /** The dedup family's dual-path contracts over generated inputs: the
