@@ -210,11 +210,16 @@ object Bench {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The measurement session Bench, OneQuery and ScaleSoak share:
+    * `local[SPARK_GRAFT_CPUS]` (default: the core count, at most 32) with
+    * as many shuffle partitions, AQE, UTC, the UI off, and the
+    * oracle-determinism sort skipped (`graft.bench.skipOrder`) — measure
+    * operators, not the sort.
+    */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    sys.props("graft.bench.skipOrder") = "1" // measure operators, not the oracle-determinism sort
+    sys.props("graft.bench.skipOrder") = "1"
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -228,6 +233,13 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
+    val cpus = spark.sparkContext.defaultParallelism
     graft.util.FixtureSchemas.banner(spark, sfDir, "bench")
 
     def time[A](f: => A): Double = {
@@ -263,7 +275,7 @@ object Bench {
     // automatic re-run — the recorded artifact then carries both windows
     // and uses the better one, so no round needs manual adjudication
     // against BENCH_NOTES prose.
-    def canaryProbe(): Double = graft.util.IoCanary.probe(tmp)
+    def canaryProbe() = graft.util.IoCanary.probe(tmp)
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val csvIn = tmp.resolve("lineitem_csv").toString
     // columns in unified (sorted) order — the shape of any maw-written CSV,
@@ -283,7 +295,7 @@ object Bench {
     // measurement-fidelity move as the parquet leg's 10x replication
     // ("rather than being capped by the fixture's single 11 MB row group").
     (1 to 4).map(_ => liCsvShape).reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.option("header", "true").csv(csvIn)
     val csvBytes = fileBytes(csvIn)
     // same story for parquet: materialize lineitem as maw-shape parquet
@@ -315,8 +327,7 @@ object Bench {
     }
 
     def runWindow(): Window = {
-      val cPre = canaryProbe()
-      val dPre = graft.util.IoCanary.lastDirectReadMbps
+      val pre = canaryProbe()
       val csvCsvSec = conv(csvIn, "out_csv.csv", Discovery.Csv)
       val csvParquetSec = conv(csvIn, "out_pq.parquet", Discovery.Parquet)
       val pqPqSec = conv(pqIn, "out_pq2.parquet", Discovery.Parquet)
@@ -335,10 +346,10 @@ object Bench {
         val b = if (a < 0) a else { val c = once(); if (c < 0) a else math.min(a, c) }
         name -> b
       }
-      val cPost = canaryProbe()
-      Window("live", cPre, cPost, csvCsvSec, csvParquetSec, pqPqSec,
+      val post = canaryProbe()
+      Window("live", pre.mbps, post.mbps, csvCsvSec, csvParquetSec, pqPqSec,
         csvBytes, parquetBytes, results,
-        dirPre = dPre, dirPost = graft.util.IoCanary.lastDirectReadMbps)
+        dirPre = pre.directReadMbps, dirPost = post.directReadMbps)
     }
 
     // window gate: one automatic re-run when either signal says the window
@@ -390,7 +401,7 @@ object Bench {
     // fingerprint guard means a code or fixture change empties the pool.
     val fp = srcFingerprint() match {
       case "nosrc" => "nosrc"
-      case s       => s + "-" + envFingerprint(sfDir, cpus)
+      case s       => s + "-" + envFingerprint(sfDir, cpus.toString)
     }
     val sfShort = sfDir.stripSuffix("/").split('/').last
     val histPath = java.nio.file.Paths.get(

@@ -1,11 +1,10 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Optimization-round profiler: run named queries under the EXACT bench
-  * session shape (same master/conf/noop sink/min-of-N) and report, per
+/** Optimization-round profiler: run named queries in the bench session
+  * ([[Bench.session]], the same noop sink) and report, per
   * repetition, the wall time plus the scheduler-level work the query
   * submitted — job / stage / task counts, shuffle bytes, executor run+GC
   * time. The deltas expose where a leg's wall goes at bench scale (fixed
@@ -21,25 +20,7 @@ object OneQuery {
       .getOrElse(Seq("q01_pricing_summary"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    sys.props("graft.bench.skipOrder") = "1" // mirror Bench: no determinism sort
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (8L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // diagnostic override: measure a leg under a different shuffle/state
-      // partition count without touching the query (bench default = cpus)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_PROF_SHUFFLE", cpus))
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("GRAFT_PROF_COMMITTER", "1"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger
     val shufRead = new AtomicLong; val shufWrite = new AtomicLong

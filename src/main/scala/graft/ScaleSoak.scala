@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.{IoCanary, Recorder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -210,17 +211,18 @@ object ScaleSoak {
       // round-15: the funnel at ingest — per-batch cost is the batch's
       // row-local decision + the parquet write; no corpus-wide state, so
       // the wall scales with the arriving data only. Since round 16 the
-      // recorded wall EXCLUDES fixture staging (addStreamFile's
-      // single-task writes of the whole scaled corpus — measured via
-      // lastStagingSecs and subtracted, see StagedCorpusLegs), so the leg
-      // ratio reflects the funnel's own cost
+      // recorded wall EXCLUDES fixture staging (IngestLoop.land's
+      // single-task writes of the whole scaled corpus — recorded and
+      // subtracted, see StagedCorpusLegs), so the leg ratio reflects the
+      // funnel's own cost
       "st16_streaming_curation",
       // round-16: token packing at ingest — the first genuinely
       // CROSS-BATCH-stateful leg (per-lang running totals on RocksDB,
       // query restarted between batches). State is O(langs) longs, so the
       // wall must scale with arriving rows only; same staging exclusion
-      // as st16 (both batches together are the whole corpus). Per-batch
-      // walls land in ingest_batch_sec_max via lastPackBatchWalls
+      // as st16 (both batches together are the whole corpus). The
+      // per-batch walls in ingest_batch_sec_max are the evidence that
+      // per-batch packing cost is sized by the batch, not the corpus
       "st17_streaming_packing",
       // round-16: t29 is one NgramLmExpr pass (narrow, no shuffle — must
       // track the t23/t24 scan floor); t30 adds the regex/HOF candidate
@@ -332,10 +334,11 @@ object ScaleSoak {
       "st24_streaming_perceptual")
 
   /** Legs whose stream input is the WHOLE scaled corpus: their
-    * addStreamFile staging (single-task coalesce(1) writes) is test
-    * harness, not operator cost, and is measured + subtracted from the
-    * recorded wall (round-15 verdict ask #7). st13/st15 stage small
-    * derived subsets and keep their historical all-in walls.
+    * [[graft.streaming.IngestLoop.land]] staging (single-task coalesce(1)
+    * writes) is test harness, not operator cost, so the recorded staging
+    * total ([[Recorder.StagingSecs]]) is subtracted from the recorded wall
+    * (round-15 verdict ask #7). st13/st15 stage small derived subsets and
+    * keep their historical all-in walls.
     */
   private val StagedCorpusLegs =
     Set("st16_streaming_curation", "st17_streaming_packing",
@@ -513,26 +516,16 @@ object ScaleSoak {
       .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(1, 4, 16))
     val queryFilter = sys.env.get("SPARK_GRAFT_SOAK_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    sys.props("graft.bench.skipOrder") = "1" // measure operators, not the oracle sort
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // old ns-ts fixture compat only (no-op on us fixtures); the real ts
-      // handling is the adaptive Q.normalizeTs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", (8L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    def wanted(q: String) = queryFilter.forall(_.contains(q))
+    val spark = Bench.session()
+    val cpus = spark.sparkContext.defaultParallelism
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-soak")
     final case class Leg(q: String, scale: Int, sec: Double, rows: Long,
-      rounds: Int, recallMin: Double, batches: Long, stateRows: Long,
-      ingestBatchSecMax: Double, canaryMbps: Double = -1.0)
+        rounds: Int, recallMin: Double, batches: Long, stateRows: Long,
+        walls: Seq[Double], canaryMbps: Double) {
+      def ingestBatchSecMax: Double = if (walls.isEmpty) -1.0 else walls.max
+    }
     // per-leg RAW-I/O canary (round-18 verdict #6): the archived uniform
     // q55 x64 leg (11.61 s) was disk weather the CSV could not express —
     // the clean rerun (4.91 s) lived only in BENCH_NOTES prose. Probe the
@@ -542,8 +535,8 @@ object ScaleSoak {
     // better reading is recorded — mirroring Bench's canaryBest rule.
     val canaryMin = sys.env.getOrElse("SPARK_GRAFT_CANARY_MIN", "850").toDouble
     def canary(): Double = {
-      val c1 = graft.util.IoCanary.probe(tmp)
-      if (c1 >= canaryMin) c1 else math.max(c1, graft.util.IoCanary.probe(tmp))
+      val c1 = IoCanary.probe(tmp).mbps
+      if (c1 >= canaryMin) c1 else math.max(c1, IoCanary.probe(tmp).mbps)
     }
     val results = scala.collection.mutable.ArrayBuffer.empty[Leg]
     // STREAMING ATTRIBUTION (round-11 verdict #7): the st legs' x16 ratios
@@ -551,8 +544,7 @@ object ScaleSoak {
     // worst rows (st10 5.9x, st07 5.0x) were indistinguishable from disk
     // weather. Count micro-batches and peak state rows per leg so a future
     // regression separates "more batches scheduled" from "state blew up".
-    // Listener delivery is async; counters are reset before the SECOND
-    // (recorded) run and read after it — attribution, not a gate.
+    // Listener delivery is async — attribution, not a gate.
     val batchCount = new java.util.concurrent.atomic.AtomicLong
     val peakStateRows = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -568,6 +560,55 @@ object ScaleSoak {
           e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(listener)
+
+    // One leg: a canary reading, an untimed warm-up call when `warm` (it
+    // pays a once-per-fixture index build and codegen), then `runs` timed
+    // runs of `body`. The wall is their minimum (with 2 runs, the first
+    // pays codegen for this (leg, scale)); the rows are the first run's.
+    // Each run executes the query's OWN physical plan, not count(df):
+    // Catalyst prunes deterministic projections under a count, so a
+    // pure-expression leg (t23..t27's one-pass scorers) would measure
+    // scan+filter only (round-15 fix). The recorder and the streaming
+    // counters are cleared before each timed run, so the batch walls,
+    // rounds and micro-batch counts describe the last one.
+    def leg(q: String, scale: Int, warm: Boolean, runs: Int)(body: => DataFrame): Leg = {
+      val legCanary = canary()
+      if (warm) body.count()
+      val timed = (1 to runs).map { _ =>
+        Recorder.clear(); batchCount.set(0); peakStateRows.set(0)
+        val t0 = System.nanoTime()
+        val rows = body.queryExecution.toRdd.count()
+        val staging =
+          if (StagedCorpusLegs.contains(q)) Recorder.get(Recorder.StagingSecs).sum
+          else 0.0
+        (math.max(0.0, (System.nanoTime() - t0) / 1e9 - staging), rows)
+      }
+      val walls = Recorder.get(Recorder.BatchWalls)
+      // micro-batches: the triggers the listener saw; an st leg that chains
+      // batches without a stream counts its recorded batch walls and has
+      // no state store
+      val (nb, sr) =
+        if (!q.startsWith("st")) (-1L, -1L)
+        else if (batchCount.get > 0) (batchCount.get, peakStateRows.get)
+        else (walls.size.toLong, -1L)
+      val rounds =
+        if (q == "d09_dedup_clusters")
+          Recorder.get(Recorder.ClusterRounds).headOption.fold(-1)(_.toInt)
+        else -1
+      Leg(q, scale, timed.map(_._1).min, timed.head._2, rounds, -1.0, nb, sr,
+        walls, legCanary)
+    }
+    def record(l: Leg): Unit = {
+      results += l
+      println(f"${l.q}%-28s x${l.scale}%-3d ${l.sec}%8.2f s  rows=${l.rows}%-8d" +
+        f" canary=${l.canaryMbps}%.0f" +
+        (if (l.rounds >= 0) s" rounds=${l.rounds}" else "") +
+        (if (l.recallMin >= 0) f" recall_min=${l.recallMin}%.3f" else "") +
+        (if (l.batches >= 0) s" batches=${l.batches}" else "") +
+        (if (l.stateRows >= 0) s" state_rows=${l.stateRows}" else "") +
+        (if (l.walls.isEmpty) ""
+         else l.walls.map(w => f"$w%.2f").mkString(" batch_walls=[", ",", "]")))
+    }
     try {
       for (scale <- scales) {
         // shuffle partitions must scale with the data or large-scale sorts
@@ -576,62 +617,18 @@ object ScaleSoak {
         // AQE coalesces the excess at small scales, so over-provisioning is
         // free. This mirrors production, where partitions track input size.
         spark.conf.set("spark.sql.shuffle.partitions",
-          math.min(1024, cpus.toInt * scale))
+          math.min(1024, cpus * scale))
         val dir = replicate(spark, base, scale, tmp)
-        for (q <- SoakQueries if queryFilter.forall(_.contains(q))) {
+        for (q <- SoakQueries if wanted(q)) {
           val fn = SparkEntry.queries(q)
-          val legCanary = canary()
-          // min of 2: the first run pays codegen for this (query, scale)
-          def once(): (Double, Long) = {
-            // corpus-sized stream legs: measured fixture-staging wall is
-            // subtracted (StagedCorpusLegs); zero for everything else
-            graft.queries.PipelineQueries.lastStagingSecs = 0.0
-            val t0 = System.nanoTime()
-            val df = fn(spark, dir)
-            // execute the query's OWN physical plan, not count(df):
-            // Catalyst prunes deterministic projections under a count, so
-            // a pure-expression leg (t23..t27's one-pass scorers) would
-            // measure scan+filter only — the expression never evaluated.
-            // toRdd runs the plan as the consumer would see it (round-15
-            // fix; earlier narrow-leg walls under-measured for this reason)
-            val rows = df.queryExecution.toRdd.count()
-            val staging =
-              if (StagedCorpusLegs.contains(q))
-                graft.queries.PipelineQueries.lastStagingSecs
-              else 0.0
-            (math.max(0.0, (System.nanoTime() - t0) / 1e9 - staging), rows)
-          }
-          val (t1, rows) = once()
-          batchCount.set(0); peakStateRows.set(0)
-          val (t2, _) = once()
-          val sec = math.min(t1, t2)
-          // streaming attribution counters FIRST: anything below that
-          // re-invokes fn (the recall probe, the d04 bound) re-runs an
-          // eager st pipeline and would double-count its batches
-          // (ADVICE round-12 #1)
-          val (nb, sr) =
-            if (q.startsWith("st")) (batchCount.get, peakStateRows.get)
-            else (-1L, -1L)
-          val ingestBatchSecMax =
-            if (q == "st13_streaming_ingest_dedup") {
-              val walls = graft.queries.PipelineQueries.lastIngestBatchWalls
-              if (walls.isEmpty) -1.0 else walls.max
-            } else if (q == "st15_streaming_decontamination") {
-              val walls = graft.queries.PipelineQueries.lastProbeBatchWalls
-              if (walls.isEmpty) -1.0 else walls.max
-            } else if (q == "st17_streaming_packing") {
-              val walls = graft.queries.PipelineQueries.lastPackBatchWalls
-              if (walls.isEmpty) -1.0 else walls.max
-            } else if (q == "st23_streaming_closure") {
-              val walls = graft.queries.PipelineQueries.lastClosureBatchWalls
-              if (walls.isEmpty) -1.0 else walls.max
-            } else -1.0
-          val rounds = if (q == "d09_dedup_clusters") graft.operators.Dedup.lastClusterRounds else -1
+          val l = leg(q, scale, warm = false, runs = 2)(fn(spark, dir))
           // recall-gated ANN legs ONLY: the in-query requireRecall gate
           // already fired (>= 0.9) during both timed runs at THIS scale;
           // one more evaluation surfaces the measured number into the CSV.
           // Null-guarded: a zero-row probe must record a missing recall,
-          // not kill the soak run (ADVICE round-12 #3).
+          // not kill the soak run (ADVICE round-12 #3). It runs after
+          // the leg read its counters: re-invoking an eager st pipeline
+          // would double-count its batches (ADVICE round-12 #1).
           val recallMin =
             if (RecallLegs.contains(q)) {
               val r = fn(spark, dir).agg(min(col("recall"))).head
@@ -682,106 +679,56 @@ object ScaleSoak {
                 f"max=${perRep.last.toDouble / bp}%.2f")
             }
           }
-          results += Leg(q, scale, sec, rows, rounds, recallMin, nb, sr,
-            ingestBatchSecMax, legCanary)
-          println(f"$q%-28s x$scale%-3d ${sec}%8.2f s  rows=$rows%-8d" +
-            f" canary=$legCanary%.0f" +
-            (if (rounds >= 0) s" rounds=$rounds" else "") +
-            (if (recallMin >= 0) f" recall_min=$recallMin%.3f" else "") +
-            (if (nb >= 0) s" batches=$nb state_rows=$sr" else "") +
-            (if (ingestBatchSecMax >= 0) f" batch_sec_max=$ingestBatchSecMax%.2f" else ""))
+          record(l.copy(recallMin = recallMin))
         }
+        val pq = graft.queries.PipelineQueries
         // t38 query-count sweep (round-18 verdict #2): Q = 4/16/64
         // overlapping 3-term queries against the BASE corpus's index in
         // one batchTopK pass each — wall must grow SUB-linearly in Q (the
         // pruned postings scan is shared; only the aggregate fan-out
         // grows). Base scale only: query count is the variable here, and
         // mixing it with corpus growth would confound both reads. Legs
-        // land as t38_qcount_q<Q> at scale 1 (min-of-2, build discarded
-        // by the warm call like s12/d19).
+        // land as t38_qcount_q<Q> at scale 1 (the warm call pays the
+        // index build, like s12/d19).
         // Q = 256 (round-19 verdict #7): one more decade past the
         // scan-dominated regime, where the per-(query, doc) fan-out and
         // the rank-limit shuffle become the terms that matter at serving
         // scale — wall must stay sub-linear in Q (or name the crossover)
-        if (scale == scales.head &&
-            queryFilter.forall(_.contains("t38_qcount_probe"))) {
-          for (nq <- Seq(4, 16, 64, 256)) {
-            def probe() = graft.queries.PipelineQueries
-              .t38QueryCountProbe(spark, dir, nq)
-            val legCanary = canary()
-            probe().count() // warm: pays the once-per-fixture index build
-            def once(): (Double, Long) = {
-              val t0 = System.nanoTime()
-              val n = probe().queryExecution.toRdd.count()
-              ((System.nanoTime() - t0) / 1e9, n)
-            }
-            val (t1, r1) = once(); val (t2, _) = once()
-            val sec = math.min(t1, t2)
-            results += Leg(s"t38_qcount_q$nq", scale, sec, r1,
-              -1, -1.0, -1L, -1L, -1.0, legCanary)
-            println(f"t38_qcount_q$nq%-14s x$scale%-3d ${sec}%8.2f s  rows=$r1%-8d" +
-              f" canary=$legCanary%.0f")
-          }
-        }
+        if (scale == scales.head && wanted("t38_qcount_probe"))
+          for (nq <- Seq(4, 16, 64, 256))
+            record(leg(s"t38_qcount_q$nq", scale, warm = true, runs = 2)(
+              pq.t38QueryCountProbe(spark, dir, nq)))
         // K-batch BM25 ingest-chain flatness (round-18 verdict #1's
         // measurement): 8 doc-disjoint batches appended as segments; the
-        // recorded claim column is the MAX per-batch MERGE wall, and the
-        // full per-batch wall list prints for the flat-vs-growing read
-        // (the replaced rewrite grew the merge with the accumulated index)
-        if (queryFilter.forall(_.contains("st21_multibatch_ingest"))) {
-          val legCanary = canary()
-          val t0 = System.nanoTime()
-          val rows = graft.queries.PipelineQueries
-            .st21MultiBatchIngest(spark, dir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val walls = graft.queries.PipelineQueries.lastBm25MergeWalls
-          val bmax = if (walls.isEmpty) -1.0 else walls.max
-          results += Leg("st21_multibatch_ingest", scale, sec, rows,
-            -1, -1.0, walls.size.toLong, -1L, bmax, legCanary)
-          println(f"st21_multibatch_ingest       x$scale%-3d ${sec}%8.2f s  rows=$rows%-8d" +
-            f" canary=$legCanary%.0f merge_walls=" +
-            walls.map(w => f"$w%.2f").mkString("[", ",", "]"))
-        }
+        // claim column is the MAX per-batch MERGE wall. Each merge is a
+        // postings-table rename + a vocabulary-sized df sum + 1-row stats
+        // arithmetic, so the wall must stay FLAT across batches; the
+        // replaced prior-UNION-delta rewrite grew per-batch cost with the
+        // accumulated index (the 5.20 -> 12.04 s x16 growth in
+        // SOAK_UNIFORM_r18)
+        if (wanted("st21_multibatch_ingest"))
+          record(leg("st21_multibatch_ingest", scale, warm = false, runs = 1)(
+            pq.st21MultiBatchIngest(spark, dir)))
         // the positional chain's K=8 soak (round-19 verdict #2): same
-        // evidence shape as st21's block — per-batch MERGE walls flat
-        // except the one visible size-tiered fold (which carries the _2g
-        // bigram sibling), claim column = max merge wall
-        if (queryFilter.forall(_.contains("st22_multibatch_ingest"))) {
-          val legCanary = canary()
-          val t0 = System.nanoTime()
-          val rows = graft.queries.PipelineQueries
-            .st22MultiBatchIngest(spark, dir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val walls = graft.queries.PipelineQueries.lastPosMergeWalls
-          val bmax = if (walls.isEmpty) -1.0 else walls.max
-          results += Leg("st22_multibatch_ingest", scale, sec, rows,
-            -1, -1.0, walls.size.toLong, -1L, bmax, legCanary)
-          println(f"st22_multibatch_ingest       x$scale%-3d ${sec}%8.2f s  rows=$rows%-8d" +
-            f" canary=$legCanary%.0f merge_walls=" +
-            walls.map(w => f"$w%.2f").mkString("[", ",", "]"))
-        }
+        // evidence shape as st21's — each merge is a postings-segment
+        // rename + a bigram-stats arithmetic sum, so per-batch MERGE walls
+        // stay flat except the one visible size-tiered fold (which carries
+        // the _2g bigram sibling)
+        if (wanted("st22_multibatch_ingest"))
+          record(leg("st22_multibatch_ingest", scale, warm = false, runs = 1)(
+            pq.st22MultiBatchIngest(spark, dir)))
         // st23's fixed-batch flatness probe (round-19 verdict #1's done
         // criterion): closure state over THIS scale's corpus is seeded
         // once by the one-shot d09 path (the full-recompute cost d25
         // pays every run — included in this leg's total wall), then the
         // SAME two base-fixture batches are closure-MAINTAINED against
         // it. The claim column is ingest_batch_sec_max: per-batch
-        // maintenance wall flat across x1/x16/x64, vs d25's ~300 s x64
-        // full recompute. One run, like st13's block.
-        if (queryFilter.forall(_.contains("st23_fixed_batch_maintain"))) {
-          val legCanary = canary()
-          val t0 = System.nanoTime()
-          val rows = graft.queries.PipelineQueries
-            .st23FixedBatchMaintain(spark, dir, base).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val walls = graft.queries.PipelineQueries.lastClosureBatchWalls
-          val bmax = if (walls.isEmpty) -1.0 else walls.max
-          results += Leg("st23_fixed_batch_maintain", scale, sec, rows,
-            -1, -1.0, walls.size.toLong, -1L, bmax, legCanary)
-          println(f"st23_fixed_batch_maintain    x$scale%-3d ${sec}%8.2f s  rows=$rows%-8d" +
-            f" batch_sec_max=$bmax%.2f walls=" +
-            walls.map(w => f"$w%.2f").mkString("[", ",", "]"))
-        }
+        // maintenance wall (pair probe + closureMerge) flat across
+        // x1/x16/x64, vs d25's ~300 s x64 full recompute. One run, like
+        // st13's leg.
+        if (wanted("st23_fixed_batch_maintain"))
+          record(leg("st23_fixed_batch_maintain", scale, warm = false, runs = 1)(
+            pq.st23FixedBatchMaintain(spark, dir, base)))
         // FIXED-batch flatness probe (round-13): the d17 soak leg derives
         // its batch from the scaled corpus, so its wall grows with the
         // batch and can't witness the indexed probe's product claim —
@@ -791,67 +738,31 @@ object ScaleSoak {
         // the index build (if the d17 leg didn't already) + codegen,
         // untimed — the product cost under measurement is the probe, the
         // build is a once-per-corpus ingest cost measured by the d17 leg.
-        if (queryFilter.forall(_.contains("d17_incremental_dedup"))) {
-          def probe() = graft.queries.PipelineQueries
-            .d17FixedBatchProbe(spark, dir, base)
-          val legCanary = canary() // BEFORE the timed runs (the column's contract)
-          probe().count()
-          def once(): (Double, Long) = {
-            val t0 = System.nanoTime()
-            val n = probe().count()
-            ((System.nanoTime() - t0) / 1e9, n)
-          }
-          val (t1, r1) = once(); val (t2, _) = once()
-          val sec = math.min(t1, t2)
-          results += Leg("d17_fixed_batch_probe", scale, sec, r1,
-            -1, -1.0, -1L, -1L, -1.0, legCanary)
-          println(f"d17_fixed_batch_probe        x$scale%-3d ${sec}%8.2f s  rows=$r1%-8d")
-        }
+        if (wanted("d17_incremental_dedup"))
+          record(leg("d17_fixed_batch_probe", scale, warm = true, runs = 2)(
+            pq.d17FixedBatchProbe(spark, dir, base)))
         // st13's analog: the SAME two base-fixture micro-batches ingested
         // against this scale's corpus index. The leg's total wall includes
         // the per-invocation index build (linear in corpus by design); the
         // CLAIM column is ingest_batch_sec_max — per-batch cost (probe +
         // staged admitted write + bucketed append + marker) flat in corpus
-        // size. One run, not min-of-2: the number under test is internal
-        // per-batch wall, already amortized over two batches, and a second
-        // run would pay a full corpus index rebuild for a warmup the
-        // foreachBatch path doesn't need.
-        if (queryFilter.forall(_.contains("st13_streaming_ingest_dedup"))) {
-          val legCanary = canary() // BEFORE the timed run
-          batchCount.set(0); peakStateRows.set(0)
-          val t0 = System.nanoTime()
-          val rows = graft.queries.PipelineQueries
-            .st13FixedBatchIngest(spark, dir, base).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val walls = graft.queries.PipelineQueries.lastIngestBatchWalls
-          val bmax = if (walls.isEmpty) -1.0 else walls.max
-          results += Leg("st13_fixed_batch_ingest", scale, sec, rows,
-            -1, -1.0, batchCount.get, peakStateRows.get, bmax, legCanary)
-          println(f"st13_fixed_batch_ingest      x$scale%-3d ${sec}%8.2f s  rows=$rows%-8d" +
-            f" batch_sec_max=$bmax%.2f")
-        }
+        // size, linear in batch rows. One run, not min-of-2: the number
+        // under test is internal per-batch wall, already amortized over
+        // two batches, and a second run would pay a full corpus index
+        // rebuild for a warmup the foreachBatch path doesn't need.
+        if (wanted("st13_streaming_ingest_dedup"))
+          record(leg("st13_fixed_batch_ingest", scale, warm = false, runs = 1)(
+            pq.st13FixedBatchIngest(spark, dir, base)))
         // st15's analog: the SAME two base-fixture eval micro-batches
         // probed against this scale's train index. The leg wall includes
         // the once-per-fixture index build (linear in train, and already
         // paid when the st15 leg ran first at this scale); the CLAIM
         // column is ingest_batch_sec_max — per-batch probe wall flat in
-        // TRAIN size (the index is slim/bucketed, only the batch is
-        // windowed). One run, like st13's block: the number under test is
-        // internal per-batch wall.
-        if (queryFilter.forall(_.contains("st15_streaming_decontamination"))) {
-          val legCanary = canary() // BEFORE the timed run
-          batchCount.set(0); peakStateRows.set(0)
-          val t0 = System.nanoTime()
-          val rows = graft.queries.PipelineQueries
-            .st15FixedEvalProbe(spark, dir, base).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val walls = graft.queries.PipelineQueries.lastProbeBatchWalls
-          val bmax = if (walls.isEmpty) -1.0 else walls.max
-          results += Leg("st15_fixed_eval_probe", scale, sec, rows,
-            -1, -1.0, batchCount.get, peakStateRows.get, bmax, legCanary)
-          println(f"st15_fixed_eval_probe        x$scale%-3d ${sec}%8.2f s  rows=$rows%-8d" +
-            f" batch_sec_max=$bmax%.2f")
-        }
+        // TRAIN size (the index is slim/bucketed, the batch is the only
+        // text windowed per arrival). One run, like st13's leg.
+        if (wanted("st15_streaming_decontamination"))
+          record(leg("st15_fixed_eval_probe", scale, warm = false, runs = 1)(
+            pq.st15Probe(spark, dir, base)))
       }
       // summary: time and row ratios vs the 1x run for each query; also
       // persisted as CSV (SPARK_GRAFT_SOAK_OUT, default SOAK_RESULTS.csv)

@@ -982,12 +982,6 @@ object Dedup {
       .withColumnRenamed("id", idCol)
   }
 
-  /** Diagnostic only: label-propagation rounds used by the LAST
-    * [[clusters]] call that ran on this driver — soak evidence that round
-    * count stays O(component diameter) as the corpus scales (ScaleSoak).
-    */
-  @volatile var lastClusterRounds: Int = -1
-
   /** EXACT connected-component clustering of near-dup pairs: every doc
     * labeled with the minimum id reachable through the pair graph (the
     * cluster representative). This is the full transitive closure that
@@ -1015,7 +1009,8 @@ object Dedup {
     * (no recompute), and costs one light job per round. An exhausted
     * budget now REFUSES loudly instead of returning partial labels —
     * under-merged clusters would flow straight into survivor/quota
-    * decisions downstream.
+    * decisions downstream. The round count (0 on the driver fast path) is
+    * recorded under [[graft.util.Recorder.ClusterRounds]].
     */
   def clusters(docs: DataFrame, idCol: String, pairs: DataFrame,
       maxIters: Int = 25,
@@ -1046,7 +1041,7 @@ object Dedup {
       val rows = edges.collect()
       if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
         val roots = localMinRoots(rows.map(r => (r.getLong(0), r.getLong(1))))
-        lastClusterRounds = 0 // diagnostic: the fast path runs no rounds
+        graft.util.Recorder.put(graft.util.Recorder.ClusterRounds, Seq(0.0))
         val labelsDf = docs.sparkSession
           .createDataFrame(roots.toSeq).toDF("id", "__c")
         return docs.select(col(idCol).as("id"))
@@ -1117,7 +1112,7 @@ object Dedup {
       labels = next.select(col("id"), col("cluster"))
       iter += 1
     }
-    lastClusterRounds = iter
+    graft.util.Recorder.put(graft.util.Recorder.ClusterRounds, Seq(iter.toDouble))
     require(converged,
       s"clusters: label propagation did not converge in $maxIters rounds — " +
         "refusing to return partially merged clusters (raise maxIters; " +

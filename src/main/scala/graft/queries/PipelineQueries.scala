@@ -19,15 +19,6 @@ import Q._
   */
 object PipelineQueries {
 
-  /** Per-batch wall seconds of the most recent st13 invocation, in batch
-    * order — soak ATTRIBUTION only (the walls IngestLoop.run returns,
-    * read by ScaleSoak after the query returns; harnesses are
-    * single-threaded over legs). st13's product claim is per-batch cost
-    * flat in corpus size / linear in batch rows; the total leg wall mixes
-    * in the one-off index build, so the claim needs per-batch numbers.
-    */
-  @volatile var lastIngestBatchWalls: List[Double] = Nil
-
   /** Minimal English stopword list used by the quality queries (kept tiny and
     * explicit so the DuckDB oracle can mirror it verbatim).
     */
@@ -101,24 +92,9 @@ object PipelineQueries {
     s.table(sinkName)
   }
 
-  /** Wall seconds spent STAGING stream-input fixtures (IngestLoop.land's
-    * coalesce(1) writes) since the last reset — ScaleSoak zeroes this
-    * before a timed run and subtracts it from the corpus-sized streaming
-    * legs (st16/st17), whose input staging is test harness, not operator
-    * cost (round-15 verdict ask #7). Derived-subset legs (st13/st15) keep
-    * staging in their walls as they always have — it is small there.
-    */
-  @volatile var lastStagingSecs: Double = 0.0
-
   /** (doc_id, text): the input schema of the document ingest loops. */
   private val docSchema = StructType(Seq(StructField("doc_id", LongType),
     StructField("text", StringType)))
-
-  /** A fresh [[IngestLoop]] for (tag, key) under the local temp dir; its
-    * input staging counts into [[lastStagingSecs]].
-    */
-  private def ingestLoop(s: SparkSession, tag: String, key: String): IngestLoop =
-    IngestLoop.local(s, tag, key, secs => lastStagingSecs += secs)
 
   /** embeddings + 5 EXACT duplicates of each query vector (< 10), planted at
     * ids 100000 + query*10 + j. The recall-1 trick d05/d06 use for the dedup
@@ -448,8 +424,8 @@ object PipelineQueries {
       // in corpus size (round 13 measured the 1x->16x fixed-batch step,
       // 4.54 -> 7.65 s, tracking the soak's 32->1024 partition scaling);
       // the corpus side is bucketed, so the probe join never reshuffles it
-      val loop = ingestLoop(s, "st13_ingest", key)
-      lastIngestBatchWalls = loop.run(docSchema, Seq(batch1, batch2)) { (batch, _, out) =>
+      val loop = IngestLoop.local(s, "st13_ingest", key)
+      loop.run(docSchema, Seq(batch1, batch2)) { (batch, _, out) =>
         // the probe returns its checkpointed prep, and the append below
         // derives from it, so the batch's shingle+minhash walk runs once
         // per micro-batch
@@ -601,7 +577,7 @@ object PipelineQueries {
     val batch2 = corpus.where(col("doc_id") >= 5000000L)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("url_norm"))
       .orderBy(col("n_chars").desc, col("doc_id").asc)
-    val loop = ingestLoop(s, "st20_url", dir)
+    val loop = IngestLoop.local(s, "st20_url", dir)
     loop.run(StructType(Seq(StructField("doc_id", LongType),
         StructField("url", StringType), StructField("n_chars", LongType))),
         Seq(batch1, batch2)) { (batch, _, out) =>
@@ -657,7 +633,7 @@ object PipelineQueries {
     val tblBase = s"st21bm25_${java.lang.Integer.toHexString(dir.hashCode)}"
     wipeWarehousePrefix(s, tblBase)
     def version(n: Long) = s"${tblBase}_b$n"
-    val loop = ingestLoop(s, "st21_bm25", dir)
+    val loop = IngestLoop.local(s, "st21_bm25", dir)
     loop.run(docSchema, Seq(batch1, batch2)) { (batch, id, _) =>
       val delta = s"${tblBase}_delta"
       graft.operators.Bm25Index.build(batch, "doc_id", "text", delta)
@@ -709,66 +685,71 @@ object PipelineQueries {
       .foreach(n => s.sql(s"DROP TABLE IF EXISTS `$n`"))
   }
 
-  /** Per-batch appendSegment (MERGE) walls of the most recent
-    * [[st21MultiBatchIngest]], batch order — ScaleSoak's evidence column
-    * for the append-shaped-maintenance claim (round-18 verdict #1): each
-    * merge is a postings-table rename + a vocabulary-sized df sum + 1-row
-    * stats arithmetic, so the wall must stay FLAT across batches; the
-    * previous prior-UNION-delta postings rewrite grew per-batch cost with
-    * the accumulated index (the 5.20 -> 12.04 s x16 growth in
-    * SOAK_UNIFORM_r18 this rework exists to remove).
-    */
-  @volatile var lastBm25MergeWalls: List[Double] = Nil
+  /** Batches in a K-batch index chain (the K >= 8 flatness soak). */
+  private val ChainBatches = 8
 
-  /** The K-batch BM25 ingest chain (K = 8 — the round-18 verdict's K>=8
-    * flatness soak): the corpus arrives as K doc-disjoint batches; each
-    * builds its delta trio and appendSegment-merges it into the chain
-    * under the size-tiered COMPACTION POLICY (compactAt = 6: the 6th
-    * segment folds the chain into one table — the amortized O(index)
-    * event that bounds probe fan-out; every other merge is
+  /** Segment count at which a K-batch chain folds into one table. */
+  private val ChainCompactAt = 6
+
+  /** The K-batch ingest chain of the BM25 (st21) and positional (st22)
+    * families: the corpus arrives as [[ChainBatches]] doc-disjoint batches;
+    * each builds its delta with `build` and merges it into the chain with
+    * `append` under the size-tiered COMPACTION POLICY (the
+    * [[ChainCompactAt]]-th segment folds the chain — with the positional
+    * family's `_2g` bigram sibling — into one table: the amortized
+    * O(index) event that bounds probe fan-out; every other merge is
     * O(delta + vocabulary)), with keep-newest-2 retention sweeping as it
-    * goes (st21's bounded-litter contract). Returns the final t36
-    * serving probe; the per-batch MERGE walls land in
-    * [[lastBm25MergeWalls]] — flat except the one visible fold.
+    * goes (st21's bounded-litter contract). The per-batch MERGE walls are
+    * recorded under [[graft.util.Recorder.BatchWalls]]. Returns the final
+    * version and its segment count.
     */
-  def st21MultiBatchIngest(s: SparkSession, dir: String, k: Int = 8): DataFrame = {
+  private def kBatchChain(s: SparkSession, dir: String, prefix: String,
+      build: (DataFrame, String) => Unit,
+      append: (Option[String], String, String, Int) => Unit): (String, Long) = {
     val docs = t(s, dir, "documents").select("doc_id", "text")
-    val tblBase = s"st21mb_${java.lang.Integer.toHexString(dir.hashCode)}"
+    val tblBase = s"${prefix}_${java.lang.Integer.toHexString(dir.hashCode)}"
     wipeWarehousePrefix(s, tblBase)
     var prior: Option[String] = None
-    val walls = List.newBuilder[Double]
+    val walls = Vector.newBuilder[Double]
     withShufflePartitions(s, s.sparkContext.defaultParallelism) {
-      for (b <- 0 until k) {
+      for (b <- 0 until ChainBatches) {
         val delta = s"${tblBase}_delta"
-        graft.operators.Bm25Index.build(
-          docs.where(pmod(col("doc_id"), lit(k)) === b), "doc_id", "text", delta)
+        build(docs.where(pmod(col("doc_id"), lit(ChainBatches)) === b), delta)
         val t0 = System.nanoTime()
-        graft.operators.Bm25Index.appendSegment(s, prior, delta,
-          s"${tblBase}_b$b", compactAt = 6)
+        append(prior, delta, s"${tblBase}_b$b", ChainCompactAt)
         walls += (System.nanoTime() - t0) / 1e9
         prior = Some(s"${tblBase}_b$b")
         graft.operators.Bm25Index.sweepVersions(s, tblBase,
           (math.max(0, b - 1) to b).map(n => s"${tblBase}_b$n"))
       }
     }
-    lastBm25MergeWalls = walls.result()
-    // the policy's invariant: segments bounded at compactAt-1 (K=8 with
-    // compactAt=6 folds at batch 6, leaving 1 + 2 appended = 3)
+    graft.util.Recorder.put(graft.util.Recorder.BatchWalls, walls.result())
+    // the policy's invariant: segments bounded below compactAt (8 batches
+    // with compactAt = 6 fold at batch 6, leaving 1 folded + 2 appended)
     val finalSegs = s.table(prior.get + "_segs").count()
-    require(finalSegs < 6,
-      s"st21 multibatch: compaction policy failed to bound segments ($finalSegs)")
+    require(finalSegs < ChainCompactAt,
+      s"$prefix: compaction policy failed to bound segments ($finalSegs)")
     // the bounded-chain gate (r18 verdict #4): after K batches with
-    // in-loop retention, only the newest TWO versions' df/stats/segs
-    // trios remain — an unswept chain would hold K of each
+    // in-loop retention, only the newest TWO versions' trios remain — an
+    // unswept chain would hold K of each
     val verTables = s.catalog.listTables().collect().map(_.name)
       .filter(n => n.startsWith(s"${tblBase}_b") && !n.contains("_seg"))
     val keptIds = verTables.flatMap(
       s"^${java.util.regex.Pattern.quote(tblBase)}_b([0-9]+).*$$".r
         .findFirstMatchIn(_).map(_.group(1).toLong)).distinct.sorted
-    require(keptIds.toSeq == Seq(k - 2L, k - 1L),
-      s"st21 multibatch: version chain not bounded to newest 2 — " +
-        s"found versions ${keptIds.mkString(",")} of $k")
-    val idx = prior.get
+    require(keptIds.toSeq == Seq(ChainBatches - 2L, ChainBatches - 1L),
+      s"$prefix: version chain not bounded to newest 2 — " +
+        s"found versions ${keptIds.mkString(",")} of $ChainBatches")
+    (prior.get, finalSegs)
+  }
+
+  /** The K-batch BM25 chain ([[kBatchChain]]; round-18 verdict #1) and the
+    * final t36 serving probe over it.
+    */
+  def st21MultiBatchIngest(s: SparkSession, dir: String): DataFrame = {
+    val (idx, _) = kBatchChain(s, dir, "st21mb",
+      graft.operators.Bm25Index.build(_, "doc_id", "text", _),
+      graft.operators.Bm25Index.appendSegment(s, _, _, _, _))
     val terms = graft.operators.Bm25Index.selectTerms(s, idx)
     graft.operators.Bm25Index.topK(s, idx, terms)
   }
@@ -821,7 +802,7 @@ object PipelineQueries {
     val tblBase = s"st22pos_${java.lang.Integer.toHexString(dir.hashCode)}"
     wipeWarehousePrefix(s, tblBase)
     def version(n: Long) = s"${tblBase}_b$n"
-    val loop = ingestLoop(s, "st22_phrase", dir)
+    val loop = IngestLoop.local(s, "st22_phrase", dir)
     loop.run(docSchema, Seq(batch1, batch2)) { (batch, id, _) =>
       val delta = s"${tblBase}_delta"
       graft.operators.Bm25Index.buildPositional(batch, "doc_id", "text", delta)
@@ -845,65 +826,17 @@ object PipelineQueries {
     ordered(hits.select(col("doc_id"), col("n_hits"), col("first_pos")))
   }
 
-  /** Per-batch appendPositionalSegment (MERGE) walls of the most recent
-    * [[st22MultiBatchIngest]], batch order — ScaleSoak's evidence column
-    * for the positional family's append-shaped-maintenance claim
-    * (round-19 verdict #2): each merge is a postings-segment rename + a
-    * bigram-stats arithmetic sum, so the wall must stay FLAT across
-    * batches except the one visible size-tiered fold.
+  /** The K-batch positional chain ([[kBatchChain]]; round-19 verdict #2)
+    * and the final phrase probe: derivePhrase reads the folded+merged `_2g`
+    * (the sibling carry exercised on the driver path, previously only
+    * Bm25Spec-pinned).
     */
-  @volatile var lastPosMergeWalls: List[Double] = Nil
-
-  /** The K-batch POSITIONAL ingest chain (round-19 verdict #2 — st21's
-    * K>=8 flatness soak, mirrored for the t39/st22 family): the corpus
-    * arrives as K doc-disjoint batches; each builds its positional delta
-    * and appendPositionalSegment-merges it under the size-tiered
-    * compaction policy (compactAt = 6: the 6th merge folds the chain —
-    * including the `_2g` bigram sibling carry — into one table; every
-    * other merge is O(delta + bigram vocabulary)), with keep-newest-2
-    * retention sweeping as it goes. Returns the final phrase probe
-    * (derivePhrase reads the folded+merged `_2g` — the sibling carry
-    * exercised on the driver path, previously only Bm25Spec-pinned); the
-    * per-batch MERGE walls land in [[lastPosMergeWalls]] — flat except
-    * the one visible fold.
-    */
-  def st22MultiBatchIngest(s: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    val docs = t(s, dir, "documents").select("doc_id", "text")
-    val tblBase = s"st22mb_${java.lang.Integer.toHexString(dir.hashCode)}"
-    wipeWarehousePrefix(s, tblBase)
-    var prior: Option[String] = None
-    val walls = List.newBuilder[Double]
-    withShufflePartitions(s, s.sparkContext.defaultParallelism) {
-      for (b <- 0 until k) {
-        val delta = s"${tblBase}_delta"
-        graft.operators.Bm25Index.buildPositional(
-          docs.where(pmod(col("doc_id"), lit(k)) === b), "doc_id", "text", delta)
-        val t0 = System.nanoTime()
-        graft.operators.Bm25Index.appendPositionalSegment(s, prior, delta,
-          s"${tblBase}_b$b", compactAt = 6)
-        walls += (System.nanoTime() - t0) / 1e9
-        prior = Some(s"${tblBase}_b$b")
-        graft.operators.Bm25Index.sweepVersions(s, tblBase,
-          (math.max(0, b - 1) to b).map(n => s"${tblBase}_b$n"))
-      }
-    }
-    lastPosMergeWalls = walls.result()
-    // compaction invariant: K=8 with compactAt=6 folds at batch 6,
-    // leaving 1 folded + 2 appended = 3 segments
-    val finalSegs = s.table(prior.get + "_segs").count()
-    require(finalSegs < 6,
-      s"st22 multibatch: compaction policy failed to bound segments ($finalSegs)")
-    val verTables = s.catalog.listTables().collect().map(_.name)
-      .filter(n => n.startsWith(s"${tblBase}_b") && !n.contains("_seg"))
-    val keptIds = verTables.flatMap(
-      s"^${java.util.regex.Pattern.quote(tblBase)}_b([0-9]+).*$$".r
-        .findFirstMatchIn(_).map(_.group(1).toLong)).distinct.sorted
-    require(keptIds.toSeq == Seq(k - 2L, k - 1L),
-      s"st22 multibatch: version chain not bounded to newest 2 — " +
-        s"found versions ${keptIds.mkString(",")} of $k")
+  def st22MultiBatchIngest(s: SparkSession, dir: String): DataFrame = {
+    val (idx, finalSegs) = kBatchChain(s, dir, "st22mb",
+      graft.operators.Bm25Index.buildPositional(_, "doc_id", "text", _),
+      graft.operators.Bm25Index.appendPositionalSegment(s, _, _, _, _))
     // the folded chain's _2g sibling must still serve phrase derivation
     // AND the probe must prune every remaining segment scan
-    val idx = prior.get
     val phrase = graft.operators.Bm25Index.derivePhrase(s, idx)
     val hits = graft.operators.Bm25Index.phraseHits(s, idx, phrase)
     val plan = hits.queryExecution.executedPlan.toString
@@ -915,15 +848,6 @@ object PipelineQueries {
         s"saw ${sels.map(_.matched).mkString("[", ", ", "]")}")
     hits
   }
-
-  /** Per-batch closure-maintenance walls (pair probe + closureMerge +
-    * staged state write + index append) of the most recent st23 /
-    * [[st23FixedBatchMaintain]] invocation, batch order — ScaleSoak's
-    * evidence column for the round-19 verdict-#1 claim: per-batch
-    * maintenance cost FLAT in corpus size, vs the ~300 s x64 full
-    * recompute the d25/t34 legs pay every run.
-    */
-  @volatile var lastClosureBatchWalls: List[Double] = Nil
 
   /** st23: cluster-closure maintenance at ingest (round-19 verdict #1) —
     * the d17/st13 build-once discipline applied to the LAST index-like
@@ -951,7 +875,7 @@ object PipelineQueries {
       corpus.where(col("doc_id") < 1000000L && col("doc_id") % 2 =!= 0),
       corpus.where(col("doc_id") >= 1000000L))
     val tblBase = s"st23cl_${java.lang.Integer.toHexString(dir.hashCode)}"
-    st23Ingest(s, batches, ingestLoop(s, "st23_closure", dir), tblBase)
+    st23Ingest(s, batches, IngestLoop.local(s, "st23_closure", dir), tblBase)
   }
 
   /** The st23 ingest loop: stream `batches` through `loop`, maintaining
@@ -972,7 +896,7 @@ object PipelineQueries {
     // fresh-vs-fresh leg) and appends, exactly like every later batch
     Dedup.buildJaccardIngestIndex(batches.head.limit(0), "doc_id", "text",
       bandT, shT, shingleN = 3, numHashes = 16, bandRows = 1, buckets = 16)
-    lastClosureBatchWalls = loop.run(docSchema, batches) { (batch, id, out) =>
+    loop.run(docSchema, batches) { (batch, id, out) =>
       def label(x: String): Unit =
         s.sparkContext.setJobDescription(s"st23 b$id: $x")
       label("probe")
@@ -1036,9 +960,9 @@ object PipelineQueries {
     * corpus) plus the inline incremental overload (batch vs earlier
     * batch — the persisted index is never mutated, so the versioned
     * fixture index stays shared), then [[graft.operators.Dedup
-    * .closureMerge]]. The per-batch walls land in
-    * [[lastClosureBatchWalls]]; flat across x1/x16/x64 — against d25's
-    * ~300 s x64 full recompute — is the claim. Batch ids (+4e6/+5e6/+6e6
+    * .closureMerge]]. The per-batch walls are recorded under
+    * [[graft.util.Recorder.BatchWalls]]; flat across x1/x16/x64 — against
+    * d25's ~300 s x64 full recompute — is the claim. Batch ids (+4e6/+5e6/+6e6
     * over base ids) stay disjoint from every soak replica id (r * 1e7)
     * and from the closure corpus's raw ids.
     */
@@ -1065,7 +989,7 @@ object PipelineQueries {
         .select((col("doc_id") + 6000000L).as("doc_id"),
           array_join(transform(split(col("text"), " "),
             t => concat(t, lit("_xz"))), " ").as("text")))
-    lastClosureBatchWalls = Nil
+    val walls = Vector.newBuilder[Double]
     var earlier = b1.limit(0)
     for (batch <- Seq(b1, b2)) {
       val tb0 = System.nanoTime()
@@ -1084,10 +1008,10 @@ object PipelineQueries {
         stored = stored.unionByName(storedApp).localCheckpoint()
         remap = remapNew.localCheckpoint()
       }
-      lastClosureBatchWalls =
-        lastClosureBatchWalls :+ (System.nanoTime() - tb0) / 1e9
+      walls += (System.nanoTime() - tb0) / 1e9
       earlier = earlier.unionByName(batch)
     }
+    graft.util.Recorder.put(graft.util.Recorder.BatchWalls, walls.result())
     Dedup.closureLabels(stored, remap)
       .select(col("id").as("doc_id"), col("cluster"))
   }
@@ -1139,7 +1063,7 @@ object PipelineQueries {
     Dedup.buildSimhashIngestIndex(
       batch1.select(col("media_id").as("id"), lit(0L).as("sig")).limit(0),
       "id", "sig", bandT, maxHamming = 4, blocks = 8)
-    val loop = ingestLoop(s, "st24_perceptual", dir)
+    val loop = IngestLoop.local(s, "st24_perceptual", dir)
     loop.run(StructType(Seq(StructField("media_id", LongType),
         StructField("payload", BinaryType),
         StructField("meta", Multimodal.mediaSchema("meta").dataType))),
@@ -1184,14 +1108,6 @@ object PipelineQueries {
       build = name => Dedup.buildContaminationIndex(train, "doc_id", "text", name))
   }
 
-  /** Per-batch wall seconds of the most recent st15 invocation (the d19
-    * probe inside foreachBatch), batch order — ScaleSoak's evidence column
-    * for the streaming-decontamination claim: per-batch probe cost flat in
-    * TRAIN-corpus size (the index is slim and bucketed; the batch is the
-    * only text windowed per arrival).
-    */
-  @volatile var lastProbeBatchWalls: List[Double] = Nil
-
   /** st15's probe loop: the d11/d19 eval set arrives as a STREAM (two
     * micro-batches) and each batch is decontamination-checked inside
     * foreachBatch against the PERSISTED train-hash table — the
@@ -1201,9 +1117,13 @@ object PipelineQueries {
     * without an index mutation to guard). Per-doc counts are batch-local
     * AND correct: a document's windows all arrive in its batch, so the
     * union over batches equals the one-shot d19 output — one oracle pins
-    * all three paths (d11, d19, st15).
+    * all three paths (d11, d19, st15). The train index comes from `dir`
+    * and the eval batches from `baseDir`: the st15 query passes one dir
+    * for both, and ScaleSoak's `st15_fixed_eval_probe` leg scales only
+    * the train side (when `dir == baseDir` the output equals the st15
+    * query's, spec-pinned).
     */
-  private def st15Probe(s: SparkSession, dir: String, baseDir: String): DataFrame = {
+  def st15Probe(s: SparkSession, dir: String, baseDir: String): DataFrame = {
     val train = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val table = d19ContaminationIndex(s, dir, train)
     val eval0 = t(s, baseDir, "documents").select(col("doc_id"), col("text"))
@@ -1215,8 +1135,8 @@ object PipelineQueries {
     // route NULL ids
     val batch1 = eval0.where(col("doc_id") % 2 === 0)
     val batch2 = eval0.where(col("doc_id") % 2 =!= 0)
-    val loop = ingestLoop(s, "st15_probe", dir + "|" + baseDir)
-    lastProbeBatchWalls = loop.run(docSchema, Seq(batch1, batch2)) { (batch, _, out) =>
+    val loop = IngestLoop.local(s, "st15_probe", dir + "|" + baseDir)
+    loop.run(docSchema, Seq(batch1, batch2)) { (batch, _, out) =>
       Dedup.crossContaminationIndexed(s, table, batch, "doc_id", "text")
         .select(col("id").as("doc_id"), col("n_windows"), col("n_contaminated"))
         .write.mode("overwrite").parquet(out)
@@ -1224,15 +1144,6 @@ object PipelineQueries {
     ordered(s.read.parquet(loop.payloads(): _*)
       .select("doc_id", "n_windows", "n_contaminated"))
   }
-
-  /** st15's loop with the train index from `dir` (soak-scaled) and the
-    * SAME eval batches from `baseDir`: ScaleSoak's
-    * `st15_fixed_eval_probe` leg — per-batch probe wall flat in train
-    * size is the claim; when `dir == baseDir` the output equals the st15
-    * query's (spec-pinned).
-    */
-  def st15FixedEvalProbe(s: SparkSession, dir: String, baseDir: String): DataFrame =
-    st15Probe(s, dir, baseDir)
 
   /** st16's ingest loop: two parity micro-batches of documents decided by
     * [[curationDecision]] through an [[IngestLoop]] — see the query
@@ -1245,7 +1156,7 @@ object PipelineQueries {
     val docs = t(s, dir, "documents").select("doc_id", "text", "source")
     val batch1 = docs.where(col("doc_id") % 2 === 0 || col("doc_id").isNull)
     val batch2 = docs.where(col("doc_id") % 2 =!= 0)
-    val loop = ingestLoop(s, "st16_funnel", dir)
+    val loop = IngestLoop.local(s, "st16_funnel", dir)
     loop.run(StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType), StructField("source", StringType))),
         Seq(batch1, batch2)) { (batch, _, out) =>
@@ -1253,12 +1164,6 @@ object PipelineQueries {
     }
     ordered(s.read.parquet(loop.payloads(): _*).select("doc_id", "keep", "reason"))
   }
-
-  /** Per-batch wall seconds of the most recent st17 invocation (batch
-    * order) — the soak's evidence that per-batch packing cost is sized by
-    * the batch, not the corpus.
-    */
-  @volatile var lastPackBatchWalls: List[Double] = Nil
 
   /** st17's packing loop: the corpus arrives as two micro-batches split at
     * the median doc_id — every batch-1 id precedes every batch-2 id, so
@@ -1296,8 +1201,8 @@ object PipelineQueries {
     // state-store partition count pins at the first batch, so the scope
     // covers BOTH query incarnations. Partitions derived from the stream's
     // row volume (see stateStorePartitions), not the session core count.
-    val loop = ingestLoop(s, "st17_pack", dir)
-    lastPackBatchWalls = withConf(s, "spark.sql.streaming.stateStore.providerClass",
+    val loop = IngestLoop.local(s, "st17_pack", dir)
+    withConf(s, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       withShufflePartitions(s, stateStorePartitions(s, nRows)) {
       loop.run(StructType(Seq(StructField("doc_id", LongType),
@@ -1344,7 +1249,7 @@ object PipelineQueries {
         TimeMode.None(), OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[graft.streaming.FunnelOut])
       .toDF("user_id", "event_id", "converted")
-    val loop = ingestLoop(s, "st19_funnel", dir)
+    val loop = IngestLoop.local(s, "st19_funnel", dir)
     withConf(s, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       // state partitions sized by the stream's row volume, not core count
@@ -1395,7 +1300,7 @@ object PipelineQueries {
             col(s"__nulls_$c").as("n_nulls"))): _*)).as("p"))
         .select("p.col_name", "p.n_rows", "p.n_nulls")
     }
-    val loop = ingestLoop(s, "st18_profile", dir)
+    val loop = IngestLoop.local(s, "st18_profile", dir)
     loop.run(StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType), StructField("lang", StringType),
         StructField("source", StringType))),
@@ -2454,7 +2359,7 @@ object PipelineQueries {
     "st11_streaming_merge" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select("doc_id", "text", "lang", "source", "n_chars")
-      val loop = ingestLoop(s, "st11_merge", dir)
+      val loop = IngestLoop.local(s, "st11_merge", dir)
       val snap = java.nio.file.Paths.get(
         new org.apache.hadoop.fs.Path(loop.base, "snapshot").toUri)
       docs.write.parquet(snap.toString)
@@ -2525,7 +2430,7 @@ object PipelineQueries {
       graft.util.TableRetention.sweep(s, "st12_ivfpq_", keep = Set.empty)
       var current = baseTable
       val applied = scala.collection.mutable.ArrayBuffer.empty[Long]
-      ingestLoop(s, "st12_annidx", dir).feed(StructType(Seq(
+      IngestLoop.local(s, "st12_annidx", dir).feed(StructType(Seq(
           StructField("vec_id", LongType), StructField("embedding", vecT),
           StructField("op", StringType))),
           Seq(del.unionByName(moved), news)) { (batch, batchId) =>
@@ -4158,7 +4063,7 @@ object PipelineQueries {
       // normalize BEFORE the split: the parity is on the microsecond value,
       // which exists for every fixture vintage after normalizeTs
       val ev = normalizeTs(s.read.parquet(s"$dir/events.parquet"))
-      val src = ingestLoop(s, "st05_src", dir)
+      val src = IngestLoop.local(s, "st05_src", dir)
       src.land(ev.where(pmod(unix_micros(col("ts")), lit(2)) === 0), "f1")
       val stream = s.readStream.schema(ev.schema).parquet(src.delta.toString)
       val deduped = stream
@@ -4184,7 +4089,7 @@ object PipelineQueries {
     // sees the original events.
     "st06_late_data_drop" -> ((s, dir) => withShufflePartitions(s, 8) {
       val ev = normalizeTs(s.read.parquet(s"$dir/events.parquet"))
-      val src = ingestLoop(s, "st06_src", dir)
+      val src = IngestLoop.local(s, "st06_src", dir)
       src.land(ev, "f1")
       val stream = s.readStream.schema(ev.schema).parquet(src.delta.toString)
       val agg = stream

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.util.Recorder
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -22,8 +23,7 @@ import org.apache.spark.sql.types.StructType
   * [[feed]] is the input half, [[commit]] the output half, and [[run]] the
   * two together.
   */
-final class IngestLoop private (s: SparkSession, val base: Path,
-    onStaged: Double => Unit) {
+final class IngestLoop private (s: SparkSession, val base: Path) {
 
   private val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
 
@@ -42,6 +42,8 @@ final class IngestLoop private (s: SparkSession, val base: Path,
 
   private def marker(id: Long) = new Path(committedDir, s"b$id")
 
+  private var stagingSecs = Vector.empty[Double]
+
   /** Ids of the committed batches, ascending. */
   def committedIds(): Seq[Long] =
     fs.listStatus(committedDir).toSeq.map(_.getPath.getName)
@@ -57,7 +59,8 @@ final class IngestLoop private (s: SparkSession, val base: Path,
     * arrival for a file-source micro-batch. It is written under `staged/`
     * and renamed in, because a staging dir inside the watched dir races
     * the source's recursive listing (the source can list a dir that is
-    * then deleted under it). The wall seconds go to `onStaged`.
+    * then deleted under it). This loop's staging walls so far are recorded
+    * under [[graft.util.Recorder.StagingSecs]].
     */
   def land(df: DataFrame, name: String): Unit = {
     val t0 = System.nanoTime()
@@ -69,7 +72,10 @@ final class IngestLoop private (s: SparkSession, val base: Path,
         .head
       rename(part, new Path(delta, s"$name.parquet"))
       fs.delete(tmp, true)
-    } finally onStaged((System.nanoTime() - t0) / 1e9)
+    } finally {
+      stagingSecs :+= (System.nanoTime() - t0) / 1e9
+      Recorder.put(Recorder.StagingSecs, stagingSecs)
+    }
   }
 
   private def rename(from: Path, to: Path): Unit =
@@ -136,28 +142,27 @@ final class IngestLoop private (s: SparkSession, val base: Path,
     }
   }
 
-  /** [[feed]] with [[commit]] as the sink: returns the per-batch walls of the
-    * bodies that ran, and requires one committed id per fed batch.
+  /** [[feed]] with [[commit]] as the sink: records the per-batch walls of the
+    * bodies that ran under [[graft.util.Recorder.BatchWalls]], and requires
+    * one committed id per fed batch.
     */
   def run(schema: StructType, batches: Seq[DataFrame],
       stateful: Option[DataFrame => DataFrame] = None)
-      (body: (DataFrame, Long, String) => Unit): List[Double] = {
+      (body: (DataFrame, Long, String) => Unit): Unit = {
     val walls = List.newBuilder[Double]
     feed(schema, batches, stateful)((b, id) => walls ++= commit(b, id)(body))
     val n = committedIds().size
     require(n == batches.size,
       s"${base.getName}: expected ${batches.size} committed micro-batches, saw $n")
-    walls.result()
+    Recorder.put(Recorder.BatchWalls, walls.result())
   }
 }
 
 object IngestLoop {
 
-  /** A loop over an empty tree at `base`: any earlier run's tree is deleted.
-    * Input staging seconds go to `onStaged`.
-    */
-  def apply(s: SparkSession, base: Path, onStaged: Double => Unit): IngestLoop = {
-    val loop = new IngestLoop(s, base, onStaged)
+  /** A loop over an empty tree at `base`: any earlier run's tree is deleted. */
+  def apply(s: SparkSession, base: Path): IngestLoop = {
+    val loop = new IngestLoop(s, base)
     loop.reset()
     loop
   }
@@ -165,8 +170,7 @@ object IngestLoop {
   /** [[apply]] at `<java.io.tmpdir>/<tag>_<hex of key's hash>` on the local
     * FS — one fixed tree per (tag, key), so a rerun replaces the last run's.
     */
-  def local(s: SparkSession, tag: String, key: String,
-      onStaged: Double => Unit): IngestLoop =
+  def local(s: SparkSession, tag: String, key: String): IngestLoop =
     apply(s, new Path("file", null, new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"${tag}_${java.lang.Integer.toHexString(key.hashCode)}").getAbsolutePath), onStaged)
+      s"${tag}_${java.lang.Integer.toHexString(key.hashCode)}").getAbsolutePath))
 }

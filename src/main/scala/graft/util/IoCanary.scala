@@ -22,7 +22,7 @@ package graft.util
   * new scale), so EVERY bench run would read "degraded" and triple-run.
   * Round 20 restores the gate metric's historical definition and measures
   * the device read as its own, separately-reported number:
-  * [[lastDirectReadMbps]] — an O_DIRECT (page-cache-bypassing) read of
+  * [[Reading.directReadMbps]] — an O_DIRECT (page-cache-bypassing) read of
   * the same 200 MB, exposed for the artifacts so read-side disk
   * degradation is visible, but NOT folded into a threshold that was never
   * calibrated for it. A filesystem that refuses O_DIRECT (tmpfs) reports
@@ -30,19 +30,16 @@ package graft.util
   */
 object IoCanary {
 
-  /** MB/s of the O_DIRECT device-read leg of the most recent [[probe]]
-    * on this JVM (-1 before any probe, or where O_DIRECT is unsupported).
-    * Diagnostic only — recorded next to the gate metric in artifacts,
-    * never compared against the gate threshold.
+  /** One probe's readings: `mbps` is the gate-calibrated metric
+    * (write+fsync + cached read, MB moved per second); `directReadMbps`
+    * is the O_DIRECT device-read MB/s of the same file (-1 where O_DIRECT
+    * is unsupported) — diagnostic only, recorded next to the gate metric
+    * in artifacts, never compared against the gate threshold.
     */
-  @volatile var lastDirectReadMbps: Double = -1.0
+  final case class Reading(mbps: Double, directReadMbps: Double)
 
-  /** One probe under `dir` (the measurement's own tmp filesystem).
-    * Returns the gate-calibrated metric (write+fsync + cached read); as a
-    * side effect refreshes [[lastDirectReadMbps]] with the device-read
-    * throughput of the same file.
-    */
-  def probe(dir: java.nio.file.Path): Double = {
+  /** One probe under `dir` (the measurement's own tmp filesystem). */
+  def probe(dir: java.nio.file.Path): Reading = {
     val p = dir.resolve("io_canary.bin")
     val f = p.toFile
     val buf = new Array[Byte](1 << 20)
@@ -69,10 +66,10 @@ object IoCanary {
     // direct buffers per the O_DIRECT contract); timed separately so it
     // never shifts the gate metric
     val tD = System.nanoTime()
-    lastDirectReadMbps =
+    val direct =
       if (readDirect(p)) mb / ((System.nanoTime() - tD) / 1e9) else -1.0
     f.delete()
-    2.0 * mb / sec // MB moved (write+read) per second
+    Reading(2.0 * mb / sec, direct) // gate: MB moved (write+read) per second
   }
 
   /** O_DIRECT read of the whole file; false where the filesystem refuses

@@ -2,10 +2,15 @@ package graft
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.operators.{Dedup, IvfIndex, Similarity}
+import graft.util.Recorder
 import org.apache.spark.sql.functions._
 
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
+
+  /** Rounds of the last [[Dedup.clusters]] call since [[Recorder.clear]]; -1 if none ran. */
+  private def clusterRounds: Int =
+    Recorder.get(Recorder.ClusterRounds).headOption.fold(-1)(_.toInt)
 
   private def mkDocs(n: Int) = (1L to n).map { i =>
     (i, (0 until 80).map(j => s"w${(i * 37 + j * 13) % 500}_$j").mkString(" "))
@@ -164,11 +169,12 @@ class DedupSimilaritySpec extends SparkSpec {
     val n = 101L // nodes 0..100, diameter 100
     val docs = (0L until n).map(i => (i, s"d$i")).toDF("id", "text")
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("idA", "idB")
+    Recorder.clear()
     val got = Dedup.clusters(docs, "id", pairs, smallGraphMax = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == n && got.values.forall(_ == 0L),
       s"chain must collapse to one cluster rooted at 0: ${got.toSeq.sortBy(_._1).take(10)}")
-    val rounds = Dedup.lastClusterRounds
+    val rounds = clusterRounds
     assert(rounds > 0 && rounds <= 13,
       s"diameter-100 chain took $rounds rounds — 3 plain + ~log2(100) jumped expected")
     // an exhausted budget REFUSES instead of returning partial labels
@@ -190,9 +196,10 @@ class DedupSimilaritySpec extends SparkSpec {
       Seq((50L, 20L))).toDF("idA", "idB") // bridge into the chain's tail
     val fast = Dedup.clusters(docs, "id", pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Recorder.clear()
     val dist = Dedup.clusters(docs, "id", pairs, smallGraphMax = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Dedup.lastClusterRounds > 0, "distributed run must be the real one")
+    assert(clusterRounds > 0, "distributed run must be the real one")
     assert(fast == dist, s"fast-path labels diverge: ${
       fast.toSeq.sorted.zip(dist.toSeq.sorted).filter(x => x._1 != x._2).take(5)}")
   }
@@ -1065,7 +1072,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(viaFixed.nonEmpty, "fixture produced no admissions — test is vacuous")
   }
 
-  test("st15FixedEvalProbe at the base fixture == st15 == d19's one-shot output") {
+  test("st15Probe at the base fixture == st15 == d19's one-shot output") {
     // the streaming probe must be THE d19 check batched over arrivals:
     // union over micro-batches == one-shot output, and the soak's
     // fixed-eval leg must run the same loop
@@ -1078,11 +1085,12 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(streamed == oneShot,
       s"streamed probe diverged: only-oneshot=${oneShot.diff(streamed).take(3)} " +
         s"only-streamed=${streamed.diff(oneShot).take(3)}")
-    val viaFixed = graft.queries.PipelineQueries.st15FixedEvalProbe(spark, dir, dir)
+    Recorder.clear()
+    val viaFixed = graft.queries.PipelineQueries.st15Probe(spark, dir, dir)
       .collect().map(key).toSet
     assert(viaFixed == streamed, "fixed-eval soak leg diverged from st15")
     assert(streamed.nonEmpty, "fixture produced no probed rows — test is vacuous")
-    val walls = graft.queries.PipelineQueries.lastProbeBatchWalls
+    val walls = Recorder.get(Recorder.BatchWalls)
     assert(walls.size == 2, s"expected 2 per-batch walls, got $walls")
   }
 
@@ -1360,11 +1368,10 @@ class DedupSimilaritySpec extends SparkSpec {
     def ids(xs: Long*) = xs.toDF("id")
     val stored = ids(10, 20, 30).select(col("id"), col("id").as("cluster"))
     val remap = ids().select(col("id").as("cluster"), col("id").as("root"))
-    Dedup.lastClusterRounds = -1
+    Recorder.clear()
     val (s, _) = Dedup.closureMerge(stored, remap, ids(5),
       Seq((5L, 20L), (5L, 30L)).toDF("idA", "idB"), smallGraphMax = 0)
     assert(s.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(5L -> 5L))
-    assert(Dedup.lastClusterRounds > 0,
-      s"label propagation ran ${Dedup.lastClusterRounds} rounds")
+    assert(clusterRounds > 0, s"label propagation ran $clusterRounds rounds")
   }
 }

@@ -245,7 +245,7 @@ class FaultInjectionSpec extends SparkSpec {
     * marker check, publish and listing goes through [[FaultRenameFs]].
     */
   private def faultLoop(prefix: String) = graft.streaming.IngestLoop(spark,
-    new org.apache.hadoop.fs.Path(s"fault://${tmpDir(prefix)}"), _ => ())
+    new org.apache.hadoop.fs.Path(s"fault://${tmpDir(prefix)}"))
 
   private def loopBatch = {
     import spark.implicits._
@@ -296,6 +296,23 @@ class FaultInjectionSpec extends SparkSpec {
     })
     assert(boom.getMessage == "injected body crash")
     assert(loop.committedIds().isEmpty && loop.payloads().isEmpty)
+  }
+
+  test("ingest loop: run records one wall per body that ran and the staging of each landed file") {
+    import graft.util.Recorder
+    val schema = loopBatch.schema
+    val loop = faultLoop("looprecord")
+    Recorder.clear()
+    loop.run(schema, Seq(loopBatch, loopBatch.limit(0), loopBatch))(new CountingBody()(_, _, _))
+    assert(loop.committedIds() == Seq(0L, 1L, 2L) && loop.payloads().size == 2)
+    val walls = Recorder.get(Recorder.BatchWalls)
+    assert(walls.size == 2 && walls.forall(_ > 0), s"one wall per non-empty batch: $walls")
+    val staged = Recorder.get(Recorder.StagingSecs)
+    assert(staged.size == 3 && staged.forall(_ > 0), s"one staging wall per landed file: $staged")
+    // a later run replaces the walls instead of appending to them
+    faultLoop("looprecord2").run(schema, Seq(loopBatch))(new CountingBody()(_, _, _))
+    assert(Recorder.get(Recorder.BatchWalls).size == 1)
+    assert(Recorder.get(Recorder.StagingSecs).size == 1)
   }
 
   test("ingest loop: an empty batch gets a marker without payload; the body is not called") {

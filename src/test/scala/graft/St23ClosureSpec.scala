@@ -60,7 +60,7 @@ class St23ClosureSpec extends SparkSpec {
       all.where(col("doc_id") <= 100L && col("doc_id") % 2 === 0),
       all.where(col("doc_id") <= 100L && col("doc_id") % 2 =!= 0),
       all.where(col("doc_id") > 100L))
-    val loop = graft.streaming.IngestLoop.local(spark, "st23dbg_loop", "", _ => ())
+    val loop = graft.streaming.IngestLoop.local(spark, "st23dbg_loop", "")
     val got = graft.queries.PipelineQueries
       .st23Ingest(spark, batches, loop, "st23dbg2")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
