@@ -388,16 +388,16 @@ object ScaleSoak {
     // the guard must cover EVERY id family the replicas offset — events'
     // event_id/user_id stride by the same 10^7 below
     val evIds = spark.read.parquet(s"$base/events.parquet")
-      .agg(max("event_id"), max("user_id")).head
+      .agg(max("event_id"), max("user_id")).head()
     // lineitem keys stride by the same 10^7 below — at a larger base scale
     // factor (sf>=10, l_orderkey up to ~6e7) replica key domains would
     // silently overlap and p15's z-order scaling signal degrade; cover them
     // in the same guard as the doc/emb/event ids
     val liKeys = spark.read.parquet(s"$base/lineitem.parquet")
-      .agg(max("l_orderkey"), max("l_partkey")).head
+      .agg(max("l_orderkey"), max("l_partkey")).head()
     val maxId = Seq(
-      docs.agg(max("doc_id")).head.getLong(0),
-      emb.agg(max("vec_id")).head.getLong(0),
+      docs.agg(max("doc_id")).head().getLong(0),
+      emb.agg(max("vec_id")).head().getLong(0),
       evIds.getLong(0), evIds.getLong(1),
       liKeys.getLong(0), liKeys.getLong(1)).max
     // 7e6: the largest in-query id offset applied to (replica-strided)
@@ -631,7 +631,7 @@ object ScaleSoak {
           // would double-count its batches (ADVICE round-12 #1).
           val recallMin =
             if (RecallLegs.contains(q)) {
-              val r = fn(spark, dir).agg(min(col("recall"))).head
+              val r = fn(spark, dir).agg(min(col("recall"))).head()
               if (r.isNullAt(0)) -1.0 else r.getDouble(0)
             } else -1.0
           // d04's OUTPUT BOUND (round-11 verdict #5), derived from the

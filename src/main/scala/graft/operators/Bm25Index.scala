@@ -387,7 +387,7 @@ object Bm25Index {
   private def guardStats(spark: SparkSession, statsTable: String,
       requireNonEmpty: Boolean = true): (Long, Long) = {
     val r = spark.table(statsTable)
-      .select("n_docs", "sum_dl", "max_dl").head
+      .select("n_docs", "sum_dl", "max_dl").head()
     val (nDocs, sumDl, maxDl) = (r.getLong(0), r.getLong(1), r.getLong(2))
     if (requireNonEmpty)
       require(nDocs > 0,

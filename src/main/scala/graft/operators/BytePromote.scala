@@ -98,7 +98,7 @@ private[operators] object BytePromote {
         val ifs = in.getFileSystem(conf)
         val inBytes = ifs.getFileStatus(in).getLen
         val attemptName =
-          f"part-$idx%05d-a${org.apache.spark.TaskContext.get.taskAttemptId}%d"
+          f"part-$idx%05d-a${org.apache.spark.TaskContext.get().taskAttemptId()}%d"
         val part = new Path(tmpDir, attemptName)
         val pfs = part.getFileSystem(conf)
         val rows = copy(ifs, in, () => new BufferedOutputStream(pfs.create(part, true), bufBytes))

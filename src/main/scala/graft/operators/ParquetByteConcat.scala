@@ -144,7 +144,7 @@ object ParquetByteConcat {
           val conf = HConf.restore(hconfBc.value)
           val sch = org.apache.parquet.schema.MessageTypeParser.parseMessageType(schemaStr)
           val attemptName =
-            f"part-$idx%05d-a${org.apache.spark.TaskContext.get.taskAttemptId}%d.parquet"
+            f"part-$idx%05d-a${org.apache.spark.TaskContext.get().taskAttemptId()}%d.parquet"
           val out = HadoopOutputFile.fromPath(new Path(tmpDir, attemptName), conf)
           val w = new ParquetFileWriter(out, sch,
             ParquetFileWriter.Mode.OVERWRITE, RowGroupSize, MaxPadding)

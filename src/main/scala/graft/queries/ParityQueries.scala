@@ -591,7 +591,7 @@ object ParityQueries {
       val evPaths = fileEv.select("path").collect().map(_.getString(0)).toSet
       require(evPaths == discovered,
         s"p26: per-file events $evPaths != discovered inputs $discovered")
-      val evRows = fileEv.agg(sum("rows")).head.getLong(0)
+      val evRows = fileEv.agg(sum("rows")).head().getLong(0)
       require(evRows == n, s"p26: per-file event rows $evRows != $n")
       require(fileEv.where(col("bytes") <= 0).isEmpty &&
           fileEv.where(col("elapsed_sec") < 0).isEmpty,

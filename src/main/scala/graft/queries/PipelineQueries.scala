@@ -78,17 +78,20 @@ object PipelineQueries {
   }
 
   /** Start `df` into a fresh memory sink, drain synchronously, and return
-    * the sink table. The shared tail of every single-shot st query (st05/
-    * st06 stay inline — they add source files between drains). The sink
-    * name hex-encodes dir.hashCode (no math.abs Int.MinValue edge) under a
-    * per-query prefix so concurrent sf dirs and queries never collide in
-    * the shared session's table catalog.
+    * the sink table — the shared tail of every memory-sink st query. When
+    * given, `arrive` adds source files after the first drain, and the sink
+    * drains once more. The sink name hex-encodes dir.hashCode (no math.abs
+    * Int.MinValue edge) under a per-query prefix so concurrent sf dirs and
+    * queries never collide in the shared session's table catalog.
     */
   private def drainToMemory(s: SparkSession, df: DataFrame, prefix: String,
-      dir: String, mode: String): DataFrame = {
+      dir: String, mode: String, arrive: Option[() => Unit] = None): DataFrame = {
     val sinkName = s"${prefix}_sink_${java.lang.Integer.toHexString(dir.hashCode)}"
     val q = df.writeStream.outputMode(mode).format("memory").queryName(sinkName).start()
-    try { q.processAllAvailable() } finally { q.stop() }
+    try {
+      q.processAllAvailable()
+      arrive.foreach { f => f(); q.processAllAvailable() }
+    } finally q.stop()
     s.table(sinkName)
   }
 
@@ -597,6 +600,44 @@ object PipelineQueries {
       .select("doc_id", "url_norm", "n_chars"))
   }
 
+  /** The documents snapshot that d15 and st11 merge into. */
+  private def mergeDocs(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").select("doc_id", "text", "lang", "source", "n_chars")
+
+  /** d15's CDC delta over `docs`, as st11's two micro-batches: updates
+    * (every 10th doc, text prefixed) with tombstones (every 17th doc),
+    * then inserts (every 13th doc cloned to a high-id range). The key
+    * ranges are disjoint, so any batch split merges to the same snapshot.
+    */
+  private[graft] def mergeDelta(docs: DataFrame): Seq[DataFrame] = {
+    val updates = docs.where(col("doc_id") % 10 === 0)
+      .withColumn("text", concat(lit("u:"), col("text")))
+      .withColumn("op", lit("upsert"))
+    val deletes = docs.where(col("doc_id") % 17 === 3 && col("doc_id") % 10 =!= 0)
+      .withColumn("op", lit("delete"))
+    val inserts = docs.where(col("doc_id") % 13 === 1)
+      .withColumn("doc_id", col("doc_id") + 5000000L)
+      .withColumn("text", concat(lit("n:"), col("text")))
+      .withColumn("op", lit("upsert"))
+    Seq(updates.unionByName(deletes), inserts)
+  }
+
+  /** Where st11's seed snapshot lives: the prior of `loop`'s first batch. */
+  private[graft] def st11Seed(loop: IngestLoop): String =
+    new org.apache.hadoop.fs.Path(loop.base, "seed").toString
+
+  /** st11's commit body: merge the batch into the prior snapshot — the
+    * newest payload, or else the seed — and write the result to `out`.
+    * A replay re-merges from the same prior, so it rewrites the same
+    * snapshot.
+    */
+  private[graft] def st11Merge(s: SparkSession, loop: IngestLoop)
+      (batch: DataFrame, id: Long, out: String): Unit = {
+    val prior = loop.payloads().lastOption.getOrElse(st11Seed(loop))
+    Dedup.mergeSnapshot(s.read.parquet(prior), batch, "doc_id")
+      .write.mode("overwrite").parquet(out)
+  }
+
   /** st21: BM25 index MAINTENANCE at ingest — the CDC pairing every other
     * build-once index already has (d16/st12 for ANN, d19/st15 for
     * decontamination, st13 for near-dup admission), applied to t36's
@@ -627,40 +668,46 @@ object PipelineQueries {
     * in-query plan gates.
     */
   private def st21Bm25Maintain(s: SparkSession, dir: String): DataFrame = {
+    val idx = maintainLoop(s, dir, "st21bm25", "st21_bm25",
+      graft.operators.Bm25Index.build(_, "doc_id", "text", _),
+      graft.operators.Bm25Index.appendSegment(s, _, _, _, _))
+    // selectTerms refuses loudly on empty/stopword-saturated indexes
+    val terms = graft.operators.Bm25Index.selectTerms(s, idx)
+    val top = graft.operators.Bm25Index.topK(s, idx, terms)
+    // the appended layout probes ONE bucket-pruned scan PER SEGMENT: every
+    // segment scan in the unioned plan must prune, not just the first
+    requirePruned("st21", top.queryExecution.executedPlan.toString, Some(2))
+    ordered(top.select(col("doc_id"), col("n_terms"), col("score")))
+  }
+
+  /** The two-batch maintain loop of the BM25 (st21) and positional (st22)
+    * families: the corpus arrives as two doc-disjoint micro-batches
+    * (parity split) through the IngestLoop `loopTag`; each batch builds
+    * its delta with `build`, `append`s it to the newest committed version
+    * as version `<prefix>_<key>_b<id>`, and sweeps the older versions.
+    * Returns the final version.
+    */
+  private def maintainLoop(s: SparkSession, dir: String, prefix: String,
+      loopTag: String, build: (DataFrame, String) => Unit,
+      append: (Option[String], String, String, Int) => Unit): String = {
     val docs = t(s, dir, "documents").select("doc_id", "text")
-    val batch1 = docs.where(col("doc_id") % 2 === 0)
-    val batch2 = docs.where(col("doc_id") % 2 =!= 0)
-    val tblBase = s"st21bm25_${java.lang.Integer.toHexString(dir.hashCode)}"
+    val tblBase = s"${prefix}_${java.lang.Integer.toHexString(dir.hashCode)}"
     wipeWarehousePrefix(s, tblBase)
     def version(n: Long) = s"${tblBase}_b$n"
-    val loop = IngestLoop.local(s, "st21_bm25", dir)
-    loop.run(docSchema, Seq(batch1, batch2)) { (batch, id, _) =>
+    val loop = IngestLoop.local(s, loopTag, dir)
+    loop.run(docSchema, Seq(docs.where(col("doc_id") % 2 === 0),
+        docs.where(col("doc_id") % 2 =!= 0))) { (batch, id, _) =>
       val delta = s"${tblBase}_delta"
-      graft.operators.Bm25Index.build(batch, "doc_id", "text", delta)
+      build(batch, delta)
       val prior = loop.committedIds()
-      graft.operators.Bm25Index.appendSegment(s, prior.lastOption.map(version),
-        delta, version(id))
+      append(prior.lastOption.map(version), delta, version(id), Int.MaxValue)
       // in-loop retention: this version and the newest committed one stay
       // (plus every segment a kept manifest references — segments are
       // shared, append-only state); older version trios sweep
       graft.operators.Bm25Index.sweepVersions(s, tblBase,
         (prior :+ id).takeRight(2).map(version))
     }
-    val idx = version(loop.committedIds().last)
-    // selectTerms refuses loudly on empty/stopword-saturated indexes
-    val terms = graft.operators.Bm25Index.selectTerms(s, idx)
-    val top = graft.operators.Bm25Index.topK(s, idx, terms)
-    val plan = top.queryExecution.executedPlan.toString
-    // the appended layout probes ONE bucket-pruned scan PER SEGMENT: every
-    // segment scan in the unioned plan must prune, not just the first
-    val sels = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findAllMatchIn(plan).toSeq
-    require(sels.size == 2 && sels.forall(m => m.group(1).toInt < m.group(2).toInt),
-      s"st21: expected 2 bucket-pruned segment scans, saw " +
-        s"${sels.map(_.matched).mkString("[", ", ", "]")}")
-    require(!plan.contains("documents.parquet"),
-      "st21: probe plan re-reads document text — probes touch only the index")
-    ordered(top.select(col("doc_id"), col("n_terms"), col("score")))
+    version(loop.committedIds().last)
   }
 
   /** Wipe a plain-named table prefix's residue from the shared warehouse:
@@ -796,33 +843,12 @@ object PipelineQueries {
     * (every segment scan bucket-pruned, no text rescan) as st21.
     */
   private def st22PhraseMaintain(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select("doc_id", "text")
-    val batch1 = docs.where(col("doc_id") % 2 === 0)
-    val batch2 = docs.where(col("doc_id") % 2 =!= 0)
-    val tblBase = s"st22pos_${java.lang.Integer.toHexString(dir.hashCode)}"
-    wipeWarehousePrefix(s, tblBase)
-    def version(n: Long) = s"${tblBase}_b$n"
-    val loop = IngestLoop.local(s, "st22_phrase", dir)
-    loop.run(docSchema, Seq(batch1, batch2)) { (batch, id, _) =>
-      val delta = s"${tblBase}_delta"
-      graft.operators.Bm25Index.buildPositional(batch, "doc_id", "text", delta)
-      val prior = loop.committedIds()
-      graft.operators.Bm25Index.appendPositionalSegment(s,
-        prior.lastOption.map(version), delta, version(id))
-      graft.operators.Bm25Index.sweepVersions(s, tblBase,
-        (prior :+ id).takeRight(2).map(version))
-    }
-    val idx = version(loop.committedIds().last)
+    val idx = maintainLoop(s, dir, "st22pos", "st22_phrase",
+      graft.operators.Bm25Index.buildPositional(_, "doc_id", "text", _),
+      graft.operators.Bm25Index.appendPositionalSegment(s, _, _, _, _))
     val phrase = graft.operators.Bm25Index.derivePhrase(s, idx)
     val hits = graft.operators.Bm25Index.phraseHits(s, idx, phrase)
-    val plan = hits.queryExecution.executedPlan.toString
-    val sels = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findAllMatchIn(plan).toSeq
-    require(sels.size == 2 && sels.forall(m => m.group(1).toInt < m.group(2).toInt),
-      s"st22: expected 2 bucket-pruned segment scans, saw " +
-        s"${sels.map(_.matched).mkString("[", ", ", "]")}")
-    require(!plan.contains("documents.parquet"),
-      "st22: probe plan re-reads document text — probes touch only the index")
+    requirePruned("st22", hits.queryExecution.executedPlan.toString, Some(2))
     ordered(hits.select(col("doc_id"), col("n_hits"), col("first_pos")))
   }
 
@@ -839,13 +865,8 @@ object PipelineQueries {
     // AND the probe must prune every remaining segment scan
     val phrase = graft.operators.Bm25Index.derivePhrase(s, idx)
     val hits = graft.operators.Bm25Index.phraseHits(s, idx, phrase)
-    val plan = hits.queryExecution.executedPlan.toString
-    val sels = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findAllMatchIn(plan).toSeq
-    require(sels.size == finalSegs &&
-        sels.forall(m => m.group(1).toInt < m.group(2).toInt),
-      s"st22 multibatch: expected $finalSegs bucket-pruned segment scans, " +
-        s"saw ${sels.map(_.matched).mkString("[", ", ", "]")}")
+    requirePruned("st22 multibatch", hits.queryExecution.executedPlan.toString,
+      Some(finalSegs.toInt), rescanGuard = false)
     hits
   }
 
@@ -2104,20 +2125,9 @@ object PipelineQueries {
     // equi-join + union — the oracle reproduces the merge relationally
     // and pins every surviving row and value.
     "d15_corpus_merge" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select("doc_id", "text", "lang", "source", "n_chars")
-      val updates = docs.where(col("doc_id") % 10 === 0)
-        .withColumn("text", concat(lit("u:"), col("text")))
-        .withColumn("op", lit("upsert"))
-      val inserts = docs.where(col("doc_id") % 13 === 1)
-        .withColumn("doc_id", col("doc_id") + 5000000L)
-        .withColumn("text", concat(lit("n:"), col("text")))
-        .withColumn("op", lit("upsert"))
-      val deletes = docs.where(col("doc_id") % 17 === 3 && col("doc_id") % 10 =!= 0)
-        .withColumn("op", lit("delete"))
-      val delta = updates.unionByName(inserts).unionByName(deletes)
-      ordered(Dedup.mergeSnapshot(docs, delta, "doc_id")
-        .select("doc_id", "text", "lang", "source", "n_chars"))
+      val docs = mergeDocs(s, dir)
+      ordered(Dedup.mergeSnapshot(docs, mergeDelta(docs).reduce(_ unionByName _),
+        "doc_id").select("doc_id", "text", "lang", "source", "n_chars"))
     }),
     // INCREMENTAL ingest dedup — the daily-batch shape: an arriving batch
     // (near-dup mutations of existing docs at +1e6, genuinely-new
@@ -2315,12 +2325,7 @@ object PipelineQueries {
         val probedCells = qs
           .select(explode(VF.nearestCells(col("embedding"), ivf.centroids, 1)).as("c"))
           .distinct().count()
-        val plan = cand0.queryExecution.executedPlan.toString
-        val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
-        require(sel.isDefined, "d16: post-merge probe lost bucket pruning at the ADC scan")
-        require(sel.get.group(1).toLong <= probedCells,
-          s"d16: post-merge probe read ${sel.get.group(1)}/${sel.get.group(2)} " +
-            s"buckets for $probedCells probed cells")
+        requireCellPruned("d16", cand0.queryExecution.executedPlan.toString, probedCells)
         val cand = cand0.localCheckpoint()
         val sizes = cand.groupBy("query_id").agg(count(lit(1)).as("n")).collect()
         require(sizes.length == 10 && sizes.forall { r =>
@@ -2352,42 +2357,16 @@ object PipelineQueries {
     // targets no built-in sink covers. The SAME delta as d15 arrives as
     // two pinned micro-batches (updates+tombstones, then inserts —
     // disjoint key ranges, so final state is batch-order-free by
-    // construction); each foreachBatch merges into the snapshot tree and
-    // promotes with the staged-rename discipline the sink/compact use. The
-    // final snapshot shares d15's oracle, pinning streaming == batch merge
-    // semantics end to end.
+    // construction); each batch's merged snapshot is one IngestLoop
+    // payload (see st11Merge). The final snapshot shares d15's oracle,
+    // pinning streaming == batch merge semantics end to end.
     "st11_streaming_merge" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select("doc_id", "text", "lang", "source", "n_chars")
+      val docs = mergeDocs(s, dir)
       val loop = IngestLoop.local(s, "st11_merge", dir)
-      val snap = java.nio.file.Paths.get(
-        new org.apache.hadoop.fs.Path(loop.base, "snapshot").toUri)
-      docs.write.parquet(snap.toString)
-      val updates = docs.where(col("doc_id") % 10 === 0)
-        .withColumn("text", concat(lit("u:"), col("text")))
-        .withColumn("op", lit("upsert"))
-      val deletes = docs.where(col("doc_id") % 17 === 3 && col("doc_id") % 10 =!= 0)
-        .withColumn("op", lit("delete"))
-      val inserts = docs.where(col("doc_id") % 13 === 1)
-        .withColumn("doc_id", col("doc_id") + 5000000L)
-        .withColumn("text", concat(lit("n:"), col("text")))
-        .withColumn("op", lit("upsert"))
-      loop.feed(updates.schema,
-          Seq(updates.unionByName(deletes), inserts)) { (batch, _) =>
-        if (!batch.isEmpty) {
-          // crash inside a previous promote leaves the contract path empty
-          // with the complete tree at .next (or .old) — recover FIRST, so
-          // the merge always reads a complete snapshot
-          graft.util.Fs.recoverStaged(snap)
-          val staged = java.nio.file.Paths.get(snap.toString + ".next")
-          Dedup.mergeSnapshot(s.read.parquet(snap.toString), batch, "doc_id")
-            .write.mode("overwrite").parquet(staged.toString)
-          // promote: old aside -> staged in -> old swept; every crash
-          // state recoverable by recoverStaged (see its contract)
-          graft.util.Fs.promoteStaged(snap)
-        }
-      }
-      ordered(s.read.parquet(snap.toString)
+      val batches = mergeDelta(docs)
+      docs.write.parquet(st11Seed(loop))
+      loop.run(batches.head.schema, batches)(st11Merge(s, loop))
+      ordered(s.read.parquet(loop.payloads().last)
         .select("doc_id", "text", "lang", "source", "n_chars"))
     }),
     // Streaming ANN index maintenance — d16's delta arriving as TWO
@@ -2417,9 +2396,9 @@ object PipelineQueries {
         .select((lit(200000L) + col("vec_id") * 10 + col("j")).as("vec_id"),
           col("embedding"), lit("upsert").as("op"))
       val key = java.lang.Integer.toHexString(dir.hashCode)
-      // version tables are keyed by the sink's BATCH ID — the foreachBatch
-      // exactly-once idiom: a batch redelivered after a crash-restart
-      // rewrites ITS OWN table (mode overwrite), so replay is idempotent
+      // one version table per committed batch, keyed by the IngestLoop
+      // batch id: a replay of an uncommitted batch rewrites ITS OWN table
+      // (mode overwrite) from the same prior version, so it is idempotent
       // instead of minting a phantom version
       def versionTable(batchId: Long) = s"st12_ivfpq_b${batchId}_$key"
       // retention sweep at maintenance entry (round-11 verdict #6): the old
@@ -2428,35 +2407,23 @@ object PipelineQueries {
       // left versions behind forever. Sweep the whole version-table prefix
       // — this run creates its versions after this point.
       graft.util.TableRetention.sweep(s, "st12_ivfpq_", keep = Set.empty)
-      var current = baseTable
-      val applied = scala.collection.mutable.ArrayBuffer.empty[Long]
-      IngestLoop.local(s, "st12_annidx", dir).feed(StructType(Seq(
-          StructField("vec_id", LongType), StructField("embedding", vecT),
-          StructField("op", StringType))),
-          Seq(del.unionByName(moved), news)) { (batch, batchId) =>
-        if (!batch.isEmpty) {
-          val next = versionTable(batchId)
-          PqIndex.mergeAssigned(s, current,
-            PqIndex.encodeDelta(batch, "vec_id", "embedding", ivf, pq),
-            "vec_id", next, buckets = 8)
-          current = next
-          applied += batchId
-        }
+      val loop = IngestLoop.local(s, "st12_annidx", dir)
+      loop.run(StructType(Seq(StructField("vec_id", LongType),
+          StructField("embedding", vecT), StructField("op", StringType))),
+          Seq(del.unionByName(moved), news)) { (batch, id, _) =>
+        PqIndex.mergeAssigned(s,
+          loop.committedIds().lastOption.fold(baseTable)(versionTable),
+          PqIndex.encodeDelta(batch, "vec_id", "embedding", ivf, pq),
+          "vec_id", versionTable(id), buckets = 8)
       }
+      val current = versionTable(loop.committedIds().last)
       try {
-        require(applied.size == 2 && current == versionTable(applied.last),
-          s"st12: expected 2 delta micro-batches, applied ${applied.size}")
         val cand0 = PqIndex.adcCandidatesAssigned(s, current, qs, "vec_id",
           "embedding", ivf, pq, nprobe = 1, candidates = 50)
         val probedCells = qs
           .select(explode(VF.nearestCells(col("embedding"), ivf.centroids, 1)).as("c"))
           .distinct().count()
-        val plan = cand0.queryExecution.executedPlan.toString
-        val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
-        require(sel.isDefined, "st12: post-stream probe lost bucket pruning at the ADC scan")
-        require(sel.get.group(1).toLong <= probedCells,
-          s"st12: probe read ${sel.get.group(1)}/${sel.get.group(2)} buckets " +
-            s"for $probedCells probed cells")
+        requireCellPruned("st12", cand0.queryExecution.executedPlan.toString, probedCells)
         val cand = cand0.localCheckpoint()
         val sizes = cand.groupBy("query_id").agg(count(lit(1)).as("n")).collect()
         require(sizes.length == 10 && sizes.forall { r =>
@@ -2937,15 +2904,7 @@ object PipelineQueries {
       // selectTerms refuses loudly on empty/stopword-saturated indexes
       val terms = graft.operators.Bm25Index.selectTerms(s, idx)
       val top = graft.operators.Bm25Index.topK(s, idx, terms)
-      val plan = top.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findFirstMatchIn(plan)
-      require(sel.exists(m => m.group(1).toInt < m.group(2).toInt),
-        s"t36: probe scan did not prune buckets " +
-          s"(${sel.map(_.matched).getOrElse("no bucket pruning in plan")})")
-      require(!plan.contains("documents.parquet"),
-        "t36: probe plan re-reads document text — the build-once contract " +
-          "requires probes to touch only the postings index")
+      requirePruned("t36", top.queryExecution.executedPlan.toString)
       ordered(top.select(col("doc_id"), col("n_terms"), col("score")))
     }),
     // Hybrid retrieval by reciprocal-rank fusion (Cormack/Clarke/Buettcher
@@ -2973,14 +2932,7 @@ object PipelineQueries {
       // selectTerms refuses loudly on empty/stopword-saturated indexes
       val terms = graft.operators.Bm25Index.selectTerms(s, idx)
       val top = graft.operators.Bm25Index.hybridRrfTopK(s, idx, terms)
-      val plan = top.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findFirstMatchIn(plan)
-      require(sel.exists(m => m.group(1).toInt < m.group(2).toInt),
-        s"t37: probe scan did not prune buckets " +
-          s"(${sel.map(_.matched).getOrElse("no bucket pruning in plan")})")
-      require(!plan.contains("documents.parquet"),
-        "t37: probe plan re-reads document text — probes touch only the index")
+      requirePruned("t37", top.queryExecution.executedPlan.toString)
       ordered(top.select(col("doc_id"),
         col("rrf_micros").cast("long").as("rrf_micros"),
         col("bm25_rank").cast("long").as("bm25_rank"),
@@ -3022,15 +2974,9 @@ object PipelineQueries {
         .map { case (q, ts) => (s"q$q", ts.map(_._1)) }
       val top = graft.operators.Bm25Index.batchTopK(s, idx, queries)
       val plan = top.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findFirstMatchIn(plan)
-      require(sel.exists(m => m.group(1).toInt < m.group(2).toInt),
-        s"t38: probe scan did not prune buckets for the term union " +
-          s"(${sel.map(_.matched).getOrElse("no bucket pruning in plan")})")
+      requirePruned("t38", plan)
       require(plan.contains("WindowGroupLimit"),
         "t38: per-query top-k did not plan as a map-side rank-limit window")
-      require(!plan.contains("documents.parquet"),
-        "t38: probe plan re-reads document text — probes touch only the index")
       ordered(top)
     }),
     // BATCH hybrid retrieval (round-19 verdict #3): t38's many-query
@@ -3065,15 +3011,9 @@ object PipelineQueries {
         .map { case (q, ts) => (s"q$q", ts.map(_._1)) }
       val top = graft.operators.Bm25Index.batchHybridRrfTopK(s, idx, queries)
       val plan = top.queryExecution.executedPlan.toString
-      val sels = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findAllMatchIn(plan).toSeq
-      require(sels.size == 1 && sels.forall(m => m.group(1).toInt < m.group(2).toInt),
-        s"t40: expected ONE bucket-pruned postings scan, saw " +
-          s"${sels.map(_.matched).mkString("[", ", ", "]")}")
+      requirePruned("t40", plan, Some(1))
       require(plan.contains("WindowGroupLimit"),
         "t40: per-query top-k did not plan as a map-side rank-limit window")
-      require(!plan.contains("documents.parquet"),
-        "t40: probe plan re-reads document text — probes touch only the index")
       ordered(top.select(col("query_id"), col("doc_id"), col("rank"),
         col("rrf_micros"),
         col("bm25_rank").cast("long").as("bm25_rank"),
@@ -3102,14 +3042,7 @@ object PipelineQueries {
         siblings = graft.operators.Bm25Index.siblingsPositional)
       val phrase = graft.operators.Bm25Index.derivePhrase(s, idx)
       val hits = graft.operators.Bm25Index.phraseHits(s, idx, phrase)
-      val plan = hits.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findFirstMatchIn(plan)
-      require(sel.exists(m => m.group(1).toInt < m.group(2).toInt),
-        s"t39: phrase probe did not prune buckets " +
-          s"(${sel.map(_.matched).getOrElse("no bucket pruning in plan")})")
-      require(!plan.contains("documents.parquet"),
-        "t39: probe plan re-reads document text — probes touch only the index")
+      requirePruned("t39", hits.queryExecution.executedPlan.toString)
       ordered(hits.select(col("doc_id"), col("n_hits"), col("first_pos")))
     }),
     // Proximity (sloppy-phrase) search (round-19 verdict #4): t39's
@@ -3136,14 +3069,7 @@ object PipelineQueries {
         distinctTerms = true)
       val hits = graft.operators.Bm25Index.proximityHits(s, idx, phrase,
         slop = 2)
-      val plan = hits.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findFirstMatchIn(plan)
-      require(sel.exists(m => m.group(1).toInt < m.group(2).toInt),
-        s"t41: proximity probe did not prune buckets " +
-          s"(${sel.map(_.matched).getOrElse("no bucket pruning in plan")})")
-      require(!plan.contains("documents.parquet"),
-        "t41: probe plan re-reads document text — probes touch only the index")
+      requirePruned("t41", hits.queryExecution.executedPlan.toString)
       ordered(hits.select(col("doc_id"), col("n_hits"), col("first_pos")))
     }),
     "t33_mixture_plan" -> ((s, dir) => {
@@ -3399,7 +3325,7 @@ object PipelineQueries {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val qs = e.where(col("vec_id") < 10)
       val model = IvfIndex.train(e, "vec_id", "embedding", k = 8)
-      val table = s"s05_ivf_assigned_${math.abs(dir.hashCode)}"
+      val table = s"s05_ivf_assigned_${java.lang.Integer.toHexString(dir.hashCode)}"
       IvfIndex.saveAssigned(e, "vec_id", "embedding", model, table, buckets = 8)
       try {
         // nprobe=6: fixture-sized like s03 (unclustered vectors, see there)
@@ -3408,11 +3334,8 @@ object PipelineQueries {
         val probedCells = qs
           .select(explode(VF.nearestCells(col("embedding"), model.centroids, 6)).as("c"))
           .distinct().count()
-        val plan = approx.queryExecution.executedPlan.toString
-        val sel = "SelectedBucketsCount: (\\d+) out of 8".r.findFirstMatchIn(plan)
-        require(sel.isDefined, "bucketed IVF probe lost bucket pruning at the scan")
-        require(sel.get.group(1).toLong <= probedCells,
-          s"probe read ${sel.get.group(1)} buckets for $probedCells probed cells")
+        requireCellPruned("s05", approx.queryExecution.executedPlan.toString,
+          probedCells, total = Some(8))
         val exact = Similarity.bruteForceTopK(e, qs, "vec_id", "embedding", k = 5)
         Similarity.requireRecall(approx, exact, Similarity.AnnRecallGate, "s05_knn_ivf_bucketed")
           .orderBy(col("query_id").asc, col("rank").asc)
@@ -3473,12 +3396,7 @@ object PipelineQueries {
       val probedCells = qs
         .select(explode(VF.nearestCells(col("embedding"), model.centroids, 1)).as("c"))
         .distinct().count()
-      val plan = approx.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
-      require(sel.isDefined, "s12: serving probe lost bucket pruning at the scan")
-      require(sel.get.group(1).toLong <= probedCells,
-        s"s12: probe read ${sel.get.group(1)}/${sel.get.group(2)} buckets " +
-          s"for $probedCells probed cells")
+      requireCellPruned("s12", approx.queryExecution.executedPlan.toString, probedCells)
       approx.select("query_id", "neighbor_id", "rank")
         .orderBy(col("query_id").asc, col("rank").asc)
     }),
@@ -3540,12 +3458,7 @@ object PipelineQueries {
       val probedCells = qs
         .select(explode(VF.nearestCells(col("embedding"), ivf.centroids, 1)).as("c"))
         .distinct().count()
-      val plan = cand0.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
-      require(sel.isDefined, "s14: IVF-PQ probe lost bucket pruning at the ADC scan")
-      require(sel.get.group(1).toLong <= probedCells,
-        s"s14: probe read ${sel.get.group(1)}/${sel.get.group(2)} buckets " +
-          s"for $probedCells probed cells")
+      requireCellPruned("s14", cand0.queryExecution.executedPlan.toString, probedCells)
       // localCheckpoint: the size gate and the re-rank both consume the
       // candidate set; the pruned ADC scan must not run twice
       val cand = cand0.localCheckpoint()
@@ -3594,11 +3507,7 @@ object PipelineQueries {
         .select(explode(VF.nearestCells(col("embedding"), ivf.centroids, 1)).as("c"))
         .distinct().count()
       val plan = cand0.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
-      require(sel.isDefined, "s15: filtered probe lost bucket pruning at the ADC scan")
-      require(sel.get.group(1).toLong <= probedCells,
-        s"s15: probe read ${sel.get.group(1)}/${sel.get.group(2)} buckets " +
-          s"for $probedCells probed cells")
+      requireCellPruned("s15", plan, probedCells)
       require(plan.contains("EqualTo(label,0)"),
         s"s15: label predicate did not reach the scan as a pushed filter:\n${plan.take(600)}")
       val cand = cand0.localCheckpoint()
@@ -4070,15 +3979,10 @@ object PipelineQueries {
         .withWatermark("ts", "35 days")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
-      val sinkName = s"st05_sink_${math.abs(dir.hashCode)}"
-      val q = deduped.writeStream.outputMode("append").format("memory")
-        .queryName(sinkName).start()
-      try {
-        q.processAllAvailable() // batch 1; watermark = max(f1 ts) - 35d < min(ts)
-        src.land(ev.where(pmod(unix_micros(col("ts")), lit(2)) === 1), "f2")
-        q.processAllAvailable() // batch 2: cross-batch dups hit live state
-      } finally q.stop()
-      ordered(s.table(sinkName))
+      // batch 1's watermark = max(f1 ts) - 35d < min(ts); batch 2's
+      // cross-batch dups hit live state
+      ordered(drainToMemory(s, deduped, "st05", dir, "append", Some(() =>
+        src.land(ev.where(pmod(unix_micros(col("ts")), lit(2)) === 1), "f2"))))
     }),
     // late-data DROP proof: after file1 establishes the watermark
     // (max event time - 30 min), file2 replays a copy of EVERY event
@@ -4098,16 +4002,11 @@ object PipelineQueries {
         .agg(count(lit(1)).as("n"))
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
           col("event_type"), col("n"))
-      val sinkName = s"st06_sink_${math.abs(dir.hashCode)}"
-      val q = agg.writeStream.outputMode("append").format("memory")
-        .queryName(sinkName).start()
-      try {
-        q.processAllAvailable() // watermark = max(ts) - 30 min
-        // every replay is 30 days early: far below the watermark
-        src.land(ev.withColumn("ts", col("ts") - expr("INTERVAL 30 DAYS")), "f2")
-        q.processAllAvailable() // late rows dropped; no-data batch flushes
-      } finally q.stop()
-      ordered(s.table(sinkName))
+      // batch 1 sets the watermark to max(ts) - 30 min; every replay in
+      // batch 2 is 30 days early, far below it, so its rows drop and the
+      // no-data batch flushes
+      ordered(drainToMemory(s, agg, "st06", dir, "append", Some(() =>
+        src.land(ev.withColumn("ts", col("ts") - expr("INTERVAL 30 DAYS")), "f2"))))
     }),
     // ---- structured streaming (memory sink, drained synchronously) ----
     "st01_streaming_hourly" -> ((s, dir) => withShufflePartitions(s, 8) {

@@ -20,8 +20,10 @@ import org.apache.spark.sql.types.StructType
   *    dir when the batch was empty or its body keeps its state elsewhere
   *    (in tables).
   *
-  * [[feed]] is the input half, [[commit]] the output half, and [[run]] the
-  * two together.
+  * [[run]] is the one way a query consumes micro-batches: it streams the
+  * batches in and hands each one to [[commit]], the output half. [[commit]]
+  * is public so specs can replay a single batch; [[land]] and [[delta]]
+  * serve queries that only need the watched input dir.
   */
 final class IngestLoop private (s: SparkSession, val base: Path) {
 
@@ -81,10 +83,10 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
   private def rename(from: Path, to: Path): Unit =
     if (!fs.rename(from, to)) throw new java.io.IOException(s"rename failed: $from -> $to")
 
-  /** The input half: start a query over `delta/` with `schema`, land each of
-    * `batches` as one file and process it before the next one lands (so
-    * batch order is known and no modification-time race can merge two),
-    * then stop. Each micro-batch goes to `onBatch`.
+  /** The input half of [[run]]: start a query over `delta/` with `schema`,
+    * land each of `batches` as one file and process it before the next one
+    * lands (so batch order is known and no modification-time race can merge
+    * two), then stop. Each micro-batch goes to `onBatch`.
     *
     * `stateful` is a transform applied to the streaming plan itself (a
     * state store only sees stateful work done in the plan, not in the
@@ -92,8 +94,8 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
     * its checkpoint before each later batch, so the carried state must
     * survive a process handover, not only consecutive triggers.
     */
-  def feed(schema: StructType, batches: Seq[DataFrame],
-      stateful: Option[DataFrame => DataFrame] = None)
+  private def feed(schema: StructType, batches: Seq[DataFrame],
+      stateful: Option[DataFrame => DataFrame])
       (onBatch: (DataFrame, Long) => Unit): Unit = {
     def start() = {
       val src = s.readStream.schema(schema).parquet(delta.toString)

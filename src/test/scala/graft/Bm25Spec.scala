@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Bm25Index
+import graft.queries.Q
 import org.apache.spark.sql.functions._
 
 /** Pins the BM25 build-once index (t36): postings/df/stats contents on a
@@ -37,7 +38,7 @@ class Bm25Spec extends SparkSpec {
     val name = "bm25spec_idx"
     wipe("bm25spec_idx")
     Bm25Index.build(corpus, "doc_id", "text", name, buckets = 4)
-    val stats = spark.table(name + "_stats").head
+    val stats = spark.table(name + "_stats").head()
     assert((stats.getLong(0), stats.getLong(1), stats.getLong(2)) == ((4L, 11L, 4L)),
       s"stats (n_docs, sum_dl, max_dl) wrong: $stats")
     val df = spark.table(name + "_df").collect()
@@ -63,9 +64,23 @@ class Bm25Spec extends SparkSpec {
       s"scores not strictly decreasing: ${rows.toSeq}")
     // the probe plan prunes buckets via the literal term IN-list
     val plan = top.queryExecution.executedPlan.toString
-    val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
-    assert(sel.exists(m => m.group(1).toInt < m.group(2).toInt),
-      s"probe did not prune buckets: ${sel.map(_.matched)}")
+    val sel = Q.bucketScans(plan).headOption
+    assert(sel.exists { case (n, m) => n < m }, s"probe did not prune buckets: $sel")
+  }
+
+  test("plan gates: a plain unbucketed scan fails both probe gates, naming the query") {
+    val d = tmpDir("plaingate").resolve("t").toString
+    spark.range(20).write.parquet(d)
+    val plan = spark.read.parquet(d).where(col("id") === 3L)
+      .queryExecution.executedPlan.toString
+    assert(Q.bucketScans(plan).isEmpty, plan)
+    val lex = intercept[IllegalArgumentException](Q.requirePruned("t99", plan))
+    assert(lex.getMessage.startsWith("requirement failed: t99: expected only pruned"),
+      lex.getMessage)
+    val ann = intercept[IllegalArgumentException](
+      Q.requireCellPruned("s99", plan, probedCells = 8))
+    assert(ann.getMessage.startsWith("requirement failed: s99: probe lost bucket pruning"),
+      ann.getMessage)
   }
 
   test("bm25: deterministic term selection honors the df cap and tie-break") {
@@ -112,7 +127,7 @@ class Bm25Spec extends SparkSpec {
     wipe(empty)
     Bm25Index.build(corpus.where(col("doc_id") < 0), "doc_id", "text", empty,
       buckets = 4)
-    val st = spark.table(empty + "_stats").head
+    val st = spark.table(empty + "_stats").head()
     assert((st.getLong(0), st.getLong(1), st.getLong(2)) == ((0L, 0L, 0L)),
       s"empty-corpus stats must be explicit zeros, not NULL: $st")
     val e1 = intercept[IllegalArgumentException] {
@@ -196,10 +211,9 @@ class Bm25Spec extends SparkSpec {
     // every segment scan in the probe plan prunes buckets independently
     val plan = Bm25Index.topK(spark, v, Seq("b", "c"))
       .queryExecution.executedPlan.toString
-    val sels = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findAllMatchIn(plan).toSeq
-    assert(sels.size == 3 && sels.forall(m => m.group(1).toInt < m.group(2).toInt),
-      s"expected 3 pruned segment scans: ${sels.map(_.matched)}")
+    val sels = Q.bucketScans(plan)
+    assert(sels.size == 3 && sels.forall { case (n, m) => n < m },
+      s"expected 3 pruned segment scans: $sels")
   }
 
   test("append-shaped maintenance: crash between merge and marker replays to the identical index") {
@@ -466,9 +480,8 @@ class Bm25Spec extends SparkSpec {
     // the probe plan prunes buckets via the phrase-term IN-list
     val plan = Bm25Index.phraseHits(spark, name, Seq("a", "b"))
       .queryExecution.executedPlan.toString
-    val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
-    assert(sel.exists(m => m.group(1).toInt < m.group(2).toInt),
-      s"phrase probe did not prune buckets: ${sel.map(_.matched)}")
+    val sel = Q.bucketScans(plan).headOption
+    assert(sel.exists { case (n, m) => n < m }, s"phrase probe did not prune buckets: $sel")
     // degenerate: a corpus with no bigrams refuses phrase derivation loudly
     val single = "bm25spec_pos1_idx"
     wipe(single)
@@ -509,9 +522,9 @@ class Bm25Spec extends SparkSpec {
     // the probe plan prunes buckets
     val plan = Bm25Index.proximityHits(spark, name, Seq("a", "b"), 2)
       .queryExecution.executedPlan.toString
-    val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
-    assert(sel.exists(m => m.group(1).toInt < m.group(2).toInt),
-      s"proximity probe did not prune buckets: ${sel.map(_.matched)}")
+    val sel = Q.bucketScans(plan).headOption
+    assert(sel.exists { case (n, m) => n < m },
+      s"proximity probe did not prune buckets: $sel")
     // repeated-term phrases refuse loudly (phantom-match hazard)
     val e = intercept[IllegalArgumentException] {
       Bm25Index.proximityHits(spark, name, Seq("a", "a"), 1)

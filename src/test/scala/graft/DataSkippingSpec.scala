@@ -54,7 +54,7 @@ class DataSkippingSpec extends SparkSpec {
     assert(back.count() == li.count())
     // row groups inside each file are narrow too (sortWithinPartitions):
     // spot-check that a point filter selects the same rows as the source
-    val k = li.select(max("l_orderkey")).head.getLong(0)
+    val k = li.select(max("l_orderkey")).head().getLong(0)
     assert(back.where(col("l_orderkey") === k).count() ==
       li.where(col("l_orderkey") === k).count())
   }
@@ -164,8 +164,8 @@ class DataSkippingSpec extends SparkSpec {
     val back = Sink.readBack(spark, zout, Discovery.Parquet)
     assert(back.count() == li.count())
     import org.apache.spark.sql.functions.sum
-    assert(back.agg(sum("l_quantity")).head.getDouble(0) ==
-      li.agg(sum("l_quantity")).head.getDouble(0))
+    assert(back.agg(sum("l_quantity")).head().getDouble(0) ==
+      li.agg(sum("l_quantity")).head().getDouble(0))
   }
 
   test("zorder-by: string columns hash-bucket; layout rejects partition-by composition") {

@@ -48,7 +48,9 @@ object FaultRenameFs {
   * converges to all-new. (Sink.replaceMove renames FIRST — atomic overwrite
   * on POSIX — falling back to delete+rename only where that fails.) The
   * ingest loop's commit protocol is pinned here too: a kill before the
-  * marker re-runs the batch, a kill after it skips the batch.
+  * marker re-runs the batch, a kill after it skips the batch, and st11's
+  * snapshot merge redelivered after a failed publish re-merges from the
+  * last committed snapshot.
   */
 class FaultInjectionSpec extends SparkSpec {
 
@@ -200,47 +202,6 @@ class FaultInjectionSpec extends SparkSpec {
     assert((0 to 1).map(readPart) == Seq(Set((0L, 200L)), Set((1L, 200L))))
   }
 
-  test("staged snapshot promote crashed between its two moves: recoverable, never torn") {
-    // the st11/d15 snapshot-maintenance promote (Fs.promoteStaged): POSIX
-    // cannot rename-over a non-empty dir, so there is an instant where the
-    // contract path is empty — the contract is that EVERY crash state is
-    // recoverable because .next is complete before the first move
-    val base = Files.createTempDirectory("promote-fault")
-    try {
-      val snap = base.resolve("snapshot")
-      Files.createDirectories(snap)
-      Files.writeString(snap.resolve("data.txt"), "v1")
-      val staged = base.resolve("snapshot.next")
-      Files.createDirectories(staged)
-      Files.writeString(staged.resolve("data.txt"), "v2")
-      // one-shot crash INSIDE the window: old moved aside, staged not in
-      val boom = intercept[RuntimeException](graft.util.Fs.promoteStaged(
-        snap, () => throw new RuntimeException("injected crash")))
-      assert(boom.getMessage == "injected crash")
-      assert(!Files.exists(snap), "crash window: contract path is empty")
-      assert(Files.exists(staged) && Files.exists(base.resolve("snapshot.old")))
-      // recovery moves the COMPLETE newer tree in and sweeps the old
-      assert(graft.util.Fs.recoverStaged(snap))
-      assert(Files.readString(snap.resolve("data.txt")) == "v2")
-      assert(!Files.exists(staged) && !Files.exists(base.resolve("snapshot.old")))
-      // idempotent once healthy
-      assert(!graft.util.Fs.recoverStaged(snap))
-      // degenerate .old-only state rolls back to the previous snapshot
-      val snap2 = base.resolve("s2")
-      Files.createDirectories(base.resolve("s2.old"))
-      Files.writeString(base.resolve("s2.old").resolve("d"), "old")
-      assert(graft.util.Fs.recoverStaged(snap2))
-      assert(Files.readString(snap2.resolve("d")) == "old")
-      // and a clean promote still works end to end after recovery
-      val staged3 = base.resolve("snapshot.next")
-      Files.createDirectories(staged3)
-      Files.writeString(staged3.resolve("data.txt"), "v3")
-      graft.util.Fs.promoteStaged(snap)
-      assert(Files.readString(snap.resolve("data.txt")) == "v3")
-      assert(!Files.exists(staged3) && !Files.exists(base.resolve("snapshot.old")))
-    } finally graft.util.Fs.deleteRecursively(base)
-  }
-
   /** An [[graft.streaming.IngestLoop]] on the `fault:` scheme: every
     * marker check, publish and listing goes through [[FaultRenameFs]].
     */
@@ -313,6 +274,34 @@ class FaultInjectionSpec extends SparkSpec {
     faultLoop("looprecord2").run(schema, Seq(loopBatch))(new CountingBody()(_, _, _))
     assert(Recorder.get(Recorder.BatchWalls).size == 1)
     assert(Recorder.get(Recorder.StagingSecs).size == 1)
+  }
+
+  test("ingest loop: st11 batch 2 redelivered after a failed publish merges to d15's snapshot") {
+    import graft.queries.PipelineQueries.{mergeDelta, st11Merge, st11Seed}
+    import spark.implicits._
+    val docs = (1L to 60L).map(i => (i, s"text $i", "en", "web", i * 3))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val Seq(b1, b2) = mergeDelta(docs)
+    val loop = faultLoop("loopst11")
+    docs.write.parquet(st11Seed(loop))
+    val merge = st11Merge(spark, loop) _
+    assert(loop.commit(b1, 0L)(merge).isDefined)
+    val first = loop.payloads()
+    val e = intercept[java.io.IOException](loop.commit(b2, 1L) { (b, id, out) =>
+      merge(b, id, out)
+      FaultRenameFs.failAfter(0) // the publish rename dies
+    })
+    assert(e.getMessage.contains("injected rename fault"), e.getMessage)
+    FaultRenameFs.allowAll()
+    assert(loop.committedIds() == Seq(0L), "a failed publish must leave no marker")
+    assert(loop.payloads() == first, "batch 1's snapshot must stay the latest")
+    // the redelivered batch re-merges from batch 1's snapshot
+    assert(loop.commit(b2, 1L)(merge).isDefined)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "text", "lang", "source", "n_chars")
+        .collect().map(_.toString).sorted.toSeq
+    val want = graft.operators.Dedup.mergeSnapshot(docs, b1.unionByName(b2), "doc_id")
+    assert(rows(spark.read.parquet(loop.payloads().last)) == rows(want))
   }
 
   test("ingest loop: an empty batch gets a marker without payload; the body is not called") {

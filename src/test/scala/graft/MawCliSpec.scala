@@ -587,7 +587,7 @@ class MawCliSpec extends SparkSpec {
       "--verify", "-q")))
     val back = spark.read.parquet(out2)
     assert(back.count() == 5)
-    assert(back.where("grp = 'x' AND rk = 2").select("v").head.getLong(0) == 3L)
+    assert(back.where("grp = 'x' AND rk = 2").select("v").head().getLong(0) == 3L)
     // a broken query fails loudly, not with a half-written output
     intercept[Exception](Maw.execute(spark, Maw.parse(Seq(a1, "-o",
       d.resolve("bad.csv").toString, "--sql", "SELECT nope FROM t", "-q"))))

@@ -85,10 +85,10 @@ class PqIndexSpec extends SparkSpec {
       val pruned = spark.table(table)
         .where(col("ivf_cell").isin(cells.map(Int.box).toSeq: _*))
       val plan = pruned.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of 8".r.findFirstMatchIn(plan)
+      val sel = graft.queries.Q.bucketScans(plan).find(_._2 == 8)
       assert(sel.isDefined, s"bucket pruning missing from the codes scan:\n${plan.take(400)}")
-      assert(sel.get.group(1).toLong <= cells.length,
-        s"read ${sel.get.group(1)} buckets for ${cells.length} probed cells")
+      assert(sel.get._1 <= cells.length,
+        s"read ${sel.get._1} buckets for ${cells.length} probed cells")
       // and the pruned slice still scores: every surviving row has 16 codes
       val n = pruned.count()
       assert(n > 0 && n < e.count(), s"pruning read $n of ${e.count()} rows")
@@ -179,8 +179,8 @@ class PqIndexSpec extends SparkSpec {
       spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       val pruned = merged.where(col("ivf_cell") === cells(0L))
       val plan = pruned.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of 8".r.findFirstMatchIn(plan)
-      assert(sel.isDefined && sel.get.group(1).toLong <= 1,
+      val sel = graft.queries.Q.bucketScans(plan).find(_._2 == 8)
+      assert(sel.isDefined && sel.get._1 <= 1,
         s"merged table lost bucket pruning:\n${plan.take(400)}")
       // unknown ops are refused BEFORE the encode split can drop them
       val bad = e.where(col("vec_id") === 2)
