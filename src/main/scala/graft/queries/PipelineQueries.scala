@@ -866,7 +866,7 @@ object PipelineQueries {
     val phrase = graft.operators.Bm25Index.derivePhrase(s, idx)
     val hits = graft.operators.Bm25Index.phraseHits(s, idx, phrase)
     requirePruned("st22 multibatch", hits.queryExecution.executedPlan.toString,
-      Some(finalSegs.toInt), rescanGuard = false)
+      Some(finalSegs.toInt))
     hits
   }
 
@@ -2358,8 +2358,8 @@ object PipelineQueries {
     // two pinned micro-batches (updates+tombstones, then inserts —
     // disjoint key ranges, so final state is batch-order-free by
     // construction); each batch's merged snapshot is one IngestLoop
-    // payload (see st11Merge). The final snapshot shares d15's oracle,
-    // pinning streaming == batch merge semantics end to end.
+    // payload (replay contract: st11Merge). The final snapshot shares
+    // d15's oracle, pinning streaming == batch merge semantics end to end.
     "st11_streaming_merge" -> ((s, dir) => {
       val docs = mergeDocs(s, dir)
       val loop = IngestLoop.local(s, "st11_merge", dir)
@@ -2396,10 +2396,7 @@ object PipelineQueries {
         .select((lit(200000L) + col("vec_id") * 10 + col("j")).as("vec_id"),
           col("embedding"), lit("upsert").as("op"))
       val key = java.lang.Integer.toHexString(dir.hashCode)
-      // one version table per committed batch, keyed by the IngestLoop
-      // batch id: a replay of an uncommitted batch rewrites ITS OWN table
-      // (mode overwrite) from the same prior version, so it is idempotent
-      // instead of minting a phantom version
+      // one version table per batch id (replay contract: IngestLoop.commit)
       def versionTable(batchId: Long) = s"st12_ivfpq_b${batchId}_$key"
       // retention sweep at maintenance entry (round-11 verdict #6): the old
       // per-key pre-drop only covered THIS run's rerun; a crashed run with
@@ -3334,8 +3331,7 @@ object PipelineQueries {
         val probedCells = qs
           .select(explode(VF.nearestCells(col("embedding"), model.centroids, 6)).as("c"))
           .distinct().count()
-        requireCellPruned("s05", approx.queryExecution.executedPlan.toString,
-          probedCells, total = Some(8))
+        requireCellPruned("s05", approx.queryExecution.executedPlan.toString, probedCells)
         val exact = Similarity.bruteForceTopK(e, qs, "vec_id", "embedding", k = 5)
         Similarity.requireRecall(approx, exact, Similarity.AnnRecallGate, "s05_knn_ivf_bucketed")
           .orderBy(col("query_id").asc, col("rank").asc)

@@ -128,31 +128,29 @@ object Q {
       .map(m => (m.group(1).toInt, m.group(2).toInt)).toSeq
 
   /** The lexical probe gate of query `tag`: `plan` has at least one
-    * bucketed scan (exactly `scans` when given) and every one selects fewer
-    * buckets than it has; with `rescanGuard`, the plan also never re-reads
-    * `documents.parquet` — probes touch only the index.
+    * bucketed scan (exactly `scans` when given), every one selects fewer
+    * buckets than it has, and the plan never re-reads `documents.parquet` —
+    * probes touch only the index.
     */
-  def requirePruned(tag: String, plan: String, scans: Option[Int] = None,
-      rescanGuard: Boolean = true): Unit = {
+  def requirePruned(tag: String, plan: String, scans: Option[Int] = None): Unit = {
     val sel = bucketScans(plan)
     require(sel.nonEmpty && scans.forall(_ == sel.size) &&
         sel.forall { case (n, m) => n < m },
       s"$tag: expected ${scans.fold("only pruned bucket scans")(n =>
         s"$n pruned bucket scans")}, saw " +
         sel.map { case (n, m) => s"$n out of $m" }.mkString("[", ", ", "]"))
-    require(!rescanGuard || !plan.contains("documents.parquet"),
+    require(!plan.contains("documents.parquet"),
       s"$tag: probe plan re-reads document text — probes touch only the index")
   }
 
   /** The ANN probe gate of query `tag`: the first bucketed scan of `plan`
-    * (over `total` buckets, when given) exists and reads no more buckets
-    * than the probe's `probedCells` distinct coarse cells. A few queries
-    * can legitimately cover every cell, so `selected < total` would flake;
-    * `selected <= probed` is the contract.
+    * exists and reads no more buckets than the probe's `probedCells`
+    * distinct coarse cells. A few queries can legitimately cover every
+    * cell, so `selected < total` would flake; `selected <= probed` is the
+    * contract.
     */
-  def requireCellPruned(tag: String, plan: String, probedCells: Long,
-      total: Option[Int] = None): Unit = {
-    val sel = bucketScans(plan).find(b => total.forall(_ == b._2))
+  def requireCellPruned(tag: String, plan: String, probedCells: Long): Unit = {
+    val sel = bucketScans(plan).headOption
     require(sel.isDefined, s"$tag: probe lost bucket pruning at the scan")
     require(sel.get._1 <= probedCells, s"$tag: probe read " +
       s"${sel.get._1}/${sel.get._2} buckets for $probedCells probed cells")

@@ -156,7 +156,8 @@ class AnnRecallSpec extends SparkSpec {
     val rows = df.collect()
     assert(rows.length == 50, s"expected 10 queries x 5 neighbors, got ${rows.length}")
     // table cleaned up after the query
-    assert(!spark.catalog.tableExists(s"s05_ivf_assigned_${math.abs("/root/testdata/sf0.001".hashCode)}"))
+    assert(!spark.catalog.tableExists(
+      s"s05_ivf_assigned_${java.lang.Integer.toHexString("/root/testdata/sf0.001".hashCode)}"))
   }
 
   test("s17 MMR rerank: k distinct picks per query, greedy invariants hold") {
