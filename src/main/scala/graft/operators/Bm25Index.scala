@@ -280,19 +280,17 @@ object Bm25Index {
     * was swept. The keep set is the caller's (it owns the commit markers);
     * this is VersionedTable.sweepStale's keep-newest-K discipline applied
     * to the segment-sharing chain, where a segment stays live as long as
-    * ANY kept version references it. Three further disciplines the sweep
-    * honors (round-19 advice #2 / verdict #6/#8):
+    * ANY kept version references it. The deletes run through
+    * TableRetention's one sweep of `<base>_b` (prefix-listed, O(chain);
+    * every swept name released from session caches), with two further
+    * keep rules (round-19 advice #2):
     *   - READER LEASES: a sibling session holding a version past the
     *     caller's keep window leases its base location
     *     (VersionedTable.leaseLocation); leased versions keep their trio
     *     and referenced segments, re-statted per delete;
-    *   - PREFIX LISTING: candidates come from a `<base>_b*` catalog
-    *     pattern + warehouse glob — O(chain), never O(warehouse) — and a
-    *     version name is matched EXACTLY (`_b<digits>` + known suffix),
-    *     so an unrelated table sharing the prefix is never doomed;
-    *   - CACHE RELEASE: every swept name is published to SweepHooks, so
-    *     session caches keyed by table name (the hybrid probe registry)
-    *     unpin with the table.
+    *   - EXACT NAMES: a version name is matched exactly (`_b<digits>` +
+    *     known suffix), so an unrelated table sharing the prefix is never
+    *     doomed.
     */
   def sweepVersions(spark: SparkSession, base: String,
       keepVersions: Seq[String]): Seq[String] = {
@@ -303,27 +301,15 @@ object Bm25Index {
     val artifact = s"^(${q}_b[0-9]+)(_segs?|_df|_stats|_2g)?$$".r
     def ownerOf(n: String): Option[String] =
       artifact.findFirstMatchIn(n).map(_.group(1))
-    val wh = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/"))
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // PREFIX-LISTED enumeration (round-19 verdict #8): the catalog listing
-    // takes a SHOW TABLES pattern and the warehouse a glob, so an
-    // ingest-loop sweep stays O(chain), never O(warehouse)
-    val catalogNames = spark.catalog
-      .listTables(spark.catalog.currentDatabase, s"${base}_b*")
-      .collect().map(_.name).toSeq
-    val whNames =
-      if (fs.exists(wh))
-        fs.globStatus(new org.apache.hadoop.fs.Path(wh, s"${base}_b*"))
-          .toSeq.map(_.getPath.getName)
-      else Seq.empty
+    val (wh, fs) = graft.util.TableRetention.warehouse(spark)
     // reader-lease protection (round-19 advice #2): a sibling session
     // probing a just-retired version leases its BASE location
     // (VersionedTable.leaseLocation); a leased version keeps its whole
     // trio AND every segment its manifest references — the same
-    // segment-sharing rule as the caller's keep set. The manifest may
-    // live only as a location (cross-JVM reader), so fall back to a
-    // direct parquet read of `<v>_segs`.
+    // segment-sharing rule as the caller's keep set. A lease file lives
+    // in the location, so the warehouse glob finds every leased version.
+    // The manifest may live only as a location (cross-JVM reader), so
+    // fall back to a direct parquet read of `<v>_segs`.
     def segsOf(v: String): Seq[String] =
       if (spark.catalog.tableExists(v + "_segs"))
         spark.table(v + "_segs").collect().map(_.getString(0)).toSeq
@@ -333,38 +319,19 @@ object Bm25Index {
           .collect().map(_.getString(0)).toSeq
         else Seq.empty
       }
-    val leasedVersions = (catalogNames ++ whNames).distinct
-      .flatMap(ownerOf).distinct
-      .filter(v => graft.util.VersionedTable.locationLeased(spark, v))
+    val leasedVersions =
+      Option(fs.globStatus(new org.apache.hadoop.fs.Path(wh, s"${base}_b*")))
+        .toSeq.flatten.flatMap(st => ownerOf(st.getPath.getName)).distinct
+        .filter(graft.util.VersionedTable.locationLeased(spark, _))
     val effectiveKeep = (keepVersions ++ leasedVersions).distinct
     val keptSegs = effectiveKeep.flatMap(segsOf).toSet
     val keep = effectiveKeep.toSet ++
       effectiveKeep.flatMap(v =>
         Seq(v + "_segs", v + "_df", v + "_stats", v + "_2g")) ++
       keptSegs
-    // leases re-stat PER DELETE (the VersionedTable.sweepStale fate()
-    // discipline): a lease taken after the listing above still spares the
-    // version and its artifacts at the moment of destruction
-    def doomed(n: String): Boolean =
-      artifact.matches(n) && !keep.contains(n) &&
-        !ownerOf(n).exists(graft.util.VersionedTable.locationLeased(spark, _))
-    val swept = scala.collection.mutable.ArrayBuffer.empty[String]
-    catalogNames.foreach { t =>
-      if (doomed(t)) {
-        spark.sql(s"DROP TABLE IF EXISTS `$t`")
-        graft.util.SweepHooks.swept(t)
-        swept += s"table:$t"
-      }
-    }
-    if (fs.exists(wh)) whNames.foreach { n =>
-      val p = new org.apache.hadoop.fs.Path(wh, n)
-      if (doomed(n) && fs.exists(p)) {
-        fs.delete(p, true)
-        graft.util.SweepHooks.swept(n)
-        swept += s"loc:$n"
-      }
-    }
-    swept.toSeq
+    graft.util.TableRetention.sweep(spark, s"${base}_b", n =>
+      !artifact.matches(n) || keep.contains(n) ||
+        ownerOf(n).exists(graft.util.VersionedTable.locationLeased(spark, _)))
   }
 
   /** Read the 1-row stats table and refuse degenerate or overflow-prone
@@ -738,7 +705,7 @@ object Bm25Index {
     * shared entry — every call after the first re-executing the probe scan
     * twice (round-19 advice #1, the exact regression the repeated-serving
     * cache exists to prevent). Entries are released when retention sweeps
-    * the index ([[dropCachedProbe]] via SweepHooks — round-19 verdict #6).
+    * the index ([[dropCachedProbe]] — round-19 verdict #6).
     * Unpersisting a frame a stale consumer still holds is safe: the plan
     * stays valid and recomputes.
     */
@@ -746,14 +713,14 @@ object Bm25Index {
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** Release a swept index version's cached hybrid probe frame (no-op for
-    * names that never probed). Registered as a SweepHooks listener so
-    * EVERY retention path — [[sweepVersions]], VersionedTable.sweepStale,
-    * TableRetention.sweep — unpins the cache when it retires the table.
+    * names that never probed). Registered with TableRetention, whose one
+    * sweep every retention path and wipe runs through, so the cache unpins
+    * whenever retention retires the table.
     */
   private[graft] def dropCachedProbe(name: String): Unit =
     Option(hybridScored.remove(name)).foreach(_.unpersist())
 
-  graft.util.SweepHooks.register(dropCachedProbe)
+  graft.util.TableRetention.onSwept(dropCachedProbe)
 
   /** Number of live hybrid-probe cache entries (spec/PlanLint residue
     * inventory: bounded by live index count, zero after their sweeps).

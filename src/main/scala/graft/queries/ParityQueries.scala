@@ -656,13 +656,8 @@ object ParityQueries {
       // idempotent: wipe this stem's residue from any prior run in this
       // warehouse (locations + catalog entries), so version numbers and
       // sweep outcomes are deterministic on every rerun
-      val wh = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir").stripSuffix("/"))
-      val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-        if (st.getPath.getName.startsWith(stem)) fs.delete(st.getPath, true) }
-      s.catalog.listTables().collect().map(_.name).filter(_.startsWith(stem))
-        .foreach(n => s.sql(s"DROP TABLE IF EXISTS `$n`"))
+      graft.util.TableRetention.sweep(s, stem)
+      val (wh, fs) = graft.util.TableRetention.warehouse(s)
       import graft.util.VersionedTable
       def build(name: String): Unit =
         s.range(3).write.mode("overwrite").saveAsTable(name)

@@ -246,7 +246,7 @@ object PipelineQueries {
     // a fresh JVM builds a NEW version and a sibling session's live reader
     // keeps its old one (retention keeps the newest two committed versions).
     val key = fixtureKey(dir, "embeddings")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
+    val wh = graft.util.TableRetention.warehouse(s)._1
     var model: graft.operators.IvfIndex.Model = null
     val name = graft.util.VersionedTable.ensure(s, "s12_", s"s12_ivf_serve_$key",
       build = n => {
@@ -278,7 +278,7 @@ object PipelineQueries {
       : (String, graft.operators.IvfIndex.Model, graft.operators.PqIndex.Model) = {
     // staged-swap versioned like s12, with TWO model artifacts per version
     val key = fixtureKey(dir, "embeddings")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
+    val wh = graft.util.TableRetention.warehouse(s)._1
     var models: (graft.operators.IvfIndex.Model, graft.operators.PqIndex.Model) = null
     val name = graft.util.VersionedTable.ensure(s, "s14_", s"s14_ivfpq_serve_$key",
       build = n => {
@@ -308,7 +308,7 @@ object PipelineQueries {
       : (String, graft.operators.IvfIndex.Model, graft.operators.PqIndex.Model) = {
     // staged-swap versioned like s14 (separate key space — schemas differ)
     val key = fixtureKey(dir, "embeddings")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
+    val wh = graft.util.TableRetention.warehouse(s)._1
     var models: (graft.operators.IvfIndex.Model, graft.operators.PqIndex.Model) = null
     val name = graft.util.VersionedTable.ensure(s, "s15_", s"s15_ivfpq_filt_$key",
       build = n => {
@@ -400,7 +400,7 @@ object PipelineQueries {
       batchDocs: DataFrame, key: String): DataFrame = {
     val bandT = s"st13_band_$key"; val shT = s"st13_sh_$key"
     // per-invocation index: sweep crashed leftovers, then build fresh
-    graft.util.TableRetention.sweep(s, "st13_", keep = Set.empty)
+    graft.util.TableRetention.sweep(s, "st13_")
     Dedup.buildJaccardIngestIndex(corpusDocs, "doc_id", "text", bandT, shT,
       shingleN = 3, numHashes = 16, bandRows = 1, buckets = 16)
     try {
@@ -450,7 +450,7 @@ object PipelineQueries {
       }
       // the result must OUTLIVE the finally-swept index tables
       ordered(s.read.parquet(loop.payloads(): _*).select("doc_id")).localCheckpoint()
-    } finally graft.util.TableRetention.sweep(s, "st13_", keep = Set.empty)
+    } finally graft.util.TableRetention.sweep(s, "st13_")
   }
 
   /** st13's ingest loop with the corpus index built over `dir` and the
@@ -692,7 +692,7 @@ object PipelineQueries {
       append: (Option[String], String, String, Int) => Unit): String = {
     val docs = t(s, dir, "documents").select("doc_id", "text")
     val tblBase = s"${prefix}_${java.lang.Integer.toHexString(dir.hashCode)}"
-    wipeWarehousePrefix(s, tblBase)
+    graft.util.TableRetention.sweep(s, tblBase)
     def version(n: Long) = s"${tblBase}_b$n"
     val loop = IngestLoop.local(s, loopTag, dir)
     loop.run(docSchema, Seq(docs.where(col("doc_id") % 2 === 0),
@@ -708,28 +708,6 @@ object PipelineQueries {
         (prior :+ id).takeRight(2).map(version))
     }
     version(loop.committedIds().last)
-  }
-
-  /** Wipe a plain-named table prefix's residue from the shared warehouse:
-    * a PREVIOUS JVM's run leaves locations behind while the in-memory
-    * catalog forgot the tables, and saveAsTable then refuses the orphan
-    * location — the cross-JVM failure mode VersionedTable documents (its
-    * versioned names dodge it by construction; plain-named ingest chains
-    * must clean up explicitly).
-    */
-  private def wipeWarehousePrefix(s: SparkSession, prefix: String): Unit = {
-    // prefix-LISTED on both sides (round-19 verdict #8): a warehouse glob
-    // + a SHOW TABLES pattern keep the per-ingest-loop wipe O(prefix
-    // matches), never O(warehouse)
-    val wh = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir").stripSuffix("/"))
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(wh))
-      fs.globStatus(new org.apache.hadoop.fs.Path(wh, prefix + "*"))
-        .foreach(st => fs.delete(st.getPath, true))
-    s.catalog.listTables(s.catalog.currentDatabase, prefix + "*")
-      .collect().map(_.name)
-      .foreach(n => s.sql(s"DROP TABLE IF EXISTS `$n`"))
   }
 
   /** Batches in a K-batch index chain (the K >= 8 flatness soak). */
@@ -755,7 +733,7 @@ object PipelineQueries {
       append: (Option[String], String, String, Int) => Unit): (String, Long) = {
     val docs = t(s, dir, "documents").select("doc_id", "text")
     val tblBase = s"${prefix}_${java.lang.Integer.toHexString(dir.hashCode)}"
-    wipeWarehousePrefix(s, tblBase)
+    graft.util.TableRetention.sweep(s, tblBase)
     var prior: Option[String] = None
     val walls = Vector.newBuilder[Double]
     withShufflePartitions(s, s.sparkContext.defaultParallelism) {
@@ -911,7 +889,7 @@ object PipelineQueries {
   private[graft] def st23Ingest(s: SparkSession, batches: Seq[DataFrame],
       loop: IngestLoop, tblBase: String): DataFrame = {
     val bandT = s"${tblBase}_band"; val shT = s"${tblBase}_sh"
-    graft.util.TableRetention.sweep(s, tblBase, keep = Set.empty)
+    graft.util.TableRetention.sweep(s, tblBase)
     // seed an EMPTY ingest index: the loop is then uniform — batch 1
     // probes it (its own internal pairs still surface through the
     // fresh-vs-fresh leg) and appends, exactly like every later batch
@@ -967,7 +945,7 @@ object PipelineQueries {
     // the result must OUTLIVE the finally-swept index tables
     val out = ordered(labels.select(col("id").as("doc_id"), col("cluster")))
       .localCheckpoint()
-    graft.util.TableRetention.sweep(s, tblBase, keep = Set.empty)
+    graft.util.TableRetention.sweep(s, tblBase)
     out
   }
 
@@ -1079,7 +1057,7 @@ object PipelineQueries {
         "doc_id", "text", rgb = true))
     val tblBase = s"st24pd_${java.lang.Integer.toHexString(dir.hashCode)}"
     val bandT = s"${tblBase}_band"
-    graft.util.TableRetention.sweep(s, tblBase, keep = Set.empty)
+    graft.util.TableRetention.sweep(s, tblBase)
     // seed an EMPTY band index — the uniform-loop trick st23 uses
     Dedup.buildSimhashIngestIndex(
       batch1.select(col("media_id").as("id"), lit(0L).as("sig")).limit(0),
@@ -1109,7 +1087,7 @@ object PipelineQueries {
     val out = ordered(s.read.parquet(loop.payloads().map(_ + "/pairs"): _*)
       .select(col("idA"), col("idB"), col("hamming").cast("int").as("hamming")))
       .localCheckpoint()
-    graft.util.TableRetention.sweep(s, tblBase, keep = Set.empty)
+    graft.util.TableRetention.sweep(s, tblBase)
     out
   }
 
@@ -2313,7 +2291,7 @@ object PipelineQueries {
       // retention sweep at maintenance entry (round-11 verdict #6): a
       // crashed run's merged tables — ANY key, not just this one — are
       // ownerless litter; sweep them all before building this invocation's
-      graft.util.TableRetention.sweep(s, "d16_ivfpq_merged_", keep = Set.empty)
+      graft.util.TableRetention.sweep(s, "d16_ivfpq_merged_")
       PqIndex.mergeAssigned(s, baseTable,
         PqIndex.encodeDelta(delta, "vec_id", "embedding", ivf, pq),
         "vec_id", mergedTable, buckets = 8)
@@ -2403,7 +2381,7 @@ object PipelineQueries {
       // a different fixture key (or a batch id outside the expected range)
       // left versions behind forever. Sweep the whole version-table prefix
       // — this run creates its versions after this point.
-      graft.util.TableRetention.sweep(s, "st12_ivfpq_", keep = Set.empty)
+      graft.util.TableRetention.sweep(s, "st12_ivfpq_")
       val loop = IngestLoop.local(s, "st12_annidx", dir)
       loop.run(StructType(Seq(StructField("vec_id", LongType),
           StructField("embedding", vecT), StructField("op", StringType))),

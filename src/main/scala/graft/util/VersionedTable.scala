@@ -2,6 +2,8 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.TableRetention.warehouse
+
 /** Staged-swap versioning for the fixture-keyed build-once serving tables
   * (round-14 verdict #2).
   *
@@ -72,12 +74,6 @@ object VersionedTable {
   case class Version(name: String, n: Long, committed: Boolean, modifiedMs: Long,
       leaseMs: Long = 0L) {
     def leasedAt(now: Long): Boolean = leaseMs > 0 && now - leaseMs < LeaseMs
-  }
-
-  private def warehouse(spark: SparkSession) = {
-    val wh = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/"))
-    (wh, wh.getFileSystem(spark.sparkContext.hadoopConfiguration))
   }
 
   /** All versions of `stem` visible in the warehouse (committed or not),
@@ -185,33 +181,24 @@ object VersionedTable {
       vs.filter(v => !v.committed && now - v.modifiedMs < InFlightGraceMs) ++
       vs.filter(_.leasedAt(now)) // an explicit reader lease outranks depth-2
 
-  /** Re-stat `name`'s lease file RIGHT NOW (not from a cached listing).
+  /** Is `name`'s warehouse location protected by a FRESH reader lease
+    * RIGHT NOW (its lease file re-statted, not read from a cached listing)?
     * Retention decisions are computed from a point-in-time listing; a
     * reader can take or re-touch a lease between that listing and the
-    * delete, so every delete path re-checks through this immediately
-    * before destroying a versioned location (round-16 advice: the lease
-    * docstring promises survival through EVERY retention path, which a
-    * listing-time-only check could not honor).
+    * delete, so every delete path — depth-2 [[retain]], [[sweepStale]] and
+    * Bm25Index.sweepVersions' `_b<N>` chains — re-checks through this
+    * immediately before destroying a location (round-16 advice, round-19
+    * advice #2).
     */
-  private def leasedNow(spark: SparkSession, versionName: String): Boolean = {
+  def locationLeased(spark: SparkSession, name: String): Boolean = {
     val (wh, fs) = warehouse(spark)
     try {
       val m = fs.getFileStatus(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(wh, versionName), LeaseFile))
+        new org.apache.hadoop.fs.Path(wh, name), LeaseFile))
         .getModificationTime
       System.currentTimeMillis() - m < LeaseMs
     } catch { case _: java.io.FileNotFoundException => false }
   }
-
-  /** Is `name`'s warehouse location protected by a FRESH reader lease
-    * right now (re-statted, not from any cached listing)? Public so
-    * non-versioned chain sweeps — Bm25Index.sweepVersions' `_b<N>` chains
-    * — honor the same lease-file discipline as [[sweepStale]] before
-    * deleting a location a sibling session may still be reading
-    * (round-19 advice #2).
-    */
-  def locationLeased(spark: SparkSession, name: String): Boolean =
-    leasedNow(spark, name)
 
   /** Take (or re-touch) a reader lease on an arbitrary EXISTING warehouse
     * location — the [[lease]] protection for tables outside the
@@ -240,12 +227,13 @@ object VersionedTable {
 
   /** Manual retention across EVERY stem (the CLI's `--sweep-indexes`):
     * apply the standard keep rules (newest two committed versions + young
-    * uncommitted builds) to each stem and delete everything else that
-    * parses as a versioned build — locations, sibling artifacts (by
-    * versioned-name prefix), and catalog entries. Unlike
-    * [[TableRetention.sweep]] this never touches a name that does NOT
-    * derive from a versioned build, so it is safe to run warehouse-wide
-    * without a family prefix. Returns what was swept.
+    * uncommitted builds + leased versions) to each stem and delete
+    * everything else that parses as a versioned build — locations, sibling
+    * artifacts (by versioned-name prefix), and catalog entries — through
+    * TableRetention's one sweep. Unlike a family [[TableRetention.sweep]]
+    * this runs warehouse-wide without a prefix, which is safe because
+    * `fate` never dooms a name that does NOT derive from a versioned build.
+    * Returns what was swept.
     */
   def sweepStale(spark: SparkSession): Seq[String] = {
     val now = System.currentTimeMillis()
@@ -264,28 +252,8 @@ object VersionedTable {
       !keep.exists(k => n == k || n.startsWith(k)) &&
         doomed.filter(d => n == d || n.startsWith(d))
           .maxByOption(_.length)
-          .exists(owner => !leasedNow(spark, owner))
-    val swept = scala.collection.mutable.ArrayBuffer.empty[String]
-    // fate() per candidate at drop time, matching the location loop below
-    // — a lease taken while earlier DROP TABLEs execute still spares
-    // later catalog entries
-    spark.catalog.listTables().collect().map(_.name).foreach { t =>
-      if (fate(t)) {
-        spark.sql(s"DROP TABLE IF EXISTS `$t`")
-        SweepHooks.swept(t)
-        swept += s"table:$t"
-      }
-    }
-    val (wh, fs) = warehouse(spark)
-    if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-      val n = st.getPath.getName
-      if (fate(n)) {
-        fs.delete(st.getPath, true)
-        SweepHooks.swept(n)
-        swept += s"loc:$n"
-      }
-    }
-    swept.toSeq
+          .exists(owner => !locationLeased(spark, owner))
+    TableRetention.sweepListed(spark, "", n => !fate(n))
   }
 
   /** Take (or re-touch) a reader lease on `name`'s warehouse location: the
@@ -354,15 +322,16 @@ object VersionedTable {
     val keepPrefixes =
       otherStems.values.flatMap(keepRules(_, now).map(_.name)).toSet
     // all family version names, for mapping a doomed artifact back to its
-    // owning version; the spare hook re-stats that version's lease at
-    // delete time so a lease taken after this listing still protects it.
-    // Longest match, like sweepStale's fate(): a nonce-prefix collision
-    // must map the artifact to its TRUE owning version
+    // owning version, whose lease is re-statted at delete time so a lease
+    // taken after this listing still protects it. Longest match, like
+    // sweepStale's fate(): a nonce-prefix collision must map the artifact
+    // to its TRUE owning version
     val familyVersions =
       (versions ++ otherStems.values.flatten).map(_.name)
-    TableRetention.sweep(spark, familyPrefix, keep, keepPrefixes,
-      spare = n => familyVersions.filter(v => n == v || n.startsWith(v))
-        .maxByOption(_.length)
-        .exists(leasedNow(spark, _)))
+    TableRetention.sweep(spark, familyPrefix, n =>
+      keep.contains(n) || keepPrefixes.exists(n.startsWith) ||
+        familyVersions.filter(v => n == v || n.startsWith(v))
+          .maxByOption(_.length)
+          .exists(locationLeased(spark, _)))
   }
 }

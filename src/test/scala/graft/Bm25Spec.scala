@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Bm25Index
 import graft.queries.Q
+import graft.util.TableRetention
 import org.apache.spark.sql.functions._
 
 /** Pins the BM25 build-once index (t36): postings/df/stats contents on a
@@ -17,26 +18,9 @@ class Bm25Spec extends SparkSpec {
     (1L, "a a b"), (2L, "a c"), (3L, "b b b c"), (4L, "d d"),
     (5L, null.asInstanceOf[String])).toDF("doc_id", "text")
 
-  /** Wipe this prefix's residue from the shared warehouse: a PREVIOUS
-    * JVM's run leaves locations behind while the in-memory catalog forgot
-    * the tables, and saveAsTable then refuses the orphan location — the
-    * exact cross-JVM failure mode VersionedTable documents (its versioned
-    * names dodge it by construction; the plain-named spec tables must
-    * clean up explicitly).
-    */
-  private def wipe(prefix: String): Unit = {
-    val wh = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/"))
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-      if (st.getPath.getName.startsWith(prefix)) fs.delete(st.getPath, true) }
-    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith(prefix))
-      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
-  }
-
   test("bm25: index tables carry exact integer stats; probe ranks by hand-checkable BM25") {
     val name = "bm25spec_idx"
-    wipe("bm25spec_idx")
+    TableRetention.sweep(spark, "bm25spec_idx")
     Bm25Index.build(corpus, "doc_id", "text", name, buckets = 4)
     val stats = spark.table(name + "_stats").head()
     assert((stats.getLong(0), stats.getLong(1), stats.getLong(2)) == ((4L, 11L, 4L)),
@@ -85,7 +69,7 @@ class Bm25Spec extends SparkSpec {
 
   test("bm25: deterministic term selection honors the df cap and tie-break") {
     val name = "bm25spec_terms_idx"
-    wipe("bm25spec_terms_idx")
+    TableRetention.sweep(spark, "bm25spec_terms_idx")
     Bm25Index.build(corpus, "doc_id", "text", name, buckets = 4)
     // cap df*1 <= 4 admits every token; df desc then token asc
     assert(Bm25Index.selectTerms(spark, name, nTerms = 5, dfCapDenom = 1) ==
@@ -101,7 +85,7 @@ class Bm25Spec extends SparkSpec {
     // dl=3) under TF-IDF but LOSES to it under BM25 (hand-checked:
     // n=3, sum_dl=21 -> bm25 doc1 ~1.58 < doc2 ~1.79)
     val name = "bm25spec_rrf_idx"
-    wipe(name)
+    TableRetention.sweep(spark, name)
     Bm25Index.build(Seq(
       (1L, "b b b b b b x x x x x x x x x x"),
       (2L, "b b b"),
@@ -124,7 +108,7 @@ class Bm25Spec extends SparkSpec {
     // COALESCEd, never NULL), but every probe/selection path refuses
     // instead of silently scoring NULL (round-18 advice #1)
     val empty = "bm25spec_empty_idx"
-    wipe(empty)
+    TableRetention.sweep(spark, empty)
     Bm25Index.build(corpus.where(col("doc_id") < 0), "doc_id", "text", empty,
       buckets = 4)
     val st = spark.table(empty + "_stats").head()
@@ -141,7 +125,7 @@ class Bm25Spec extends SparkSpec {
     // all-NULL text is the same degenerate index (the st21 !batch.isEmpty
     // guard does not cover it — the refusal must)
     val nulls = "bm25spec_nulls_idx"
-    wipe(nulls)
+    TableRetention.sweep(spark, nulls)
     Bm25Index.build(corpus.where(col("text").isNull), "doc_id", "text", nulls,
       buckets = 4)
     val e3 = intercept[IllegalArgumentException] {
@@ -151,7 +135,7 @@ class Bm25Spec extends SparkSpec {
     // stopword saturation: every token in > 1/dfCapDenom of docs -> no
     // selectable term; the refusal names the cap and the remedy
     val sat = "bm25spec_sat_idx"
-    wipe(sat)
+    TableRetention.sweep(spark, sat)
     Bm25Index.build(Seq((1L, "the of"), (2L, "the of"), (3L, "the"))
       .toDF("doc_id", "text"),
       "doc_id", "text", sat, buckets = 4) // df: the=3/3, of=2/3
@@ -168,7 +152,7 @@ class Bm25Spec extends SparkSpec {
     // wrapping (round-18 advice #2). Forged stats stand in for the
     // >10^9-doc corpus the fixture cannot produce.
     val name = "bm25spec_ovf_idx"
-    wipe(name)
+    TableRetention.sweep(spark, name)
     Bm25Index.build(corpus, "doc_id", "text", name, buckets = 4)
     Seq((1099511627776L, 1099511627776L, 16777216L)) // 2^40 docs, max_dl 2^24
       .toDF("n_docs", "sum_dl", "max_dl")
@@ -182,7 +166,7 @@ class Bm25Spec extends SparkSpec {
   test("append-shaped maintenance: any batch split merges to exactly the one-shot build") {
     // one-shot reference
     val ref = "bm25spec_as_ref"
-    wipe("bm25spec_as_")
+    TableRetention.sweep(spark, "bm25spec_as_")
     Bm25Index.build(corpus, "doc_id", "text", ref, buckets = 4)
     val want = Bm25Index.topK(spark, ref, Seq("a", "b", "c", "d"), k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -218,7 +202,7 @@ class Bm25Spec extends SparkSpec {
 
   test("append-shaped maintenance: crash between merge and marker replays to the identical index") {
     val base = "bm25spec_crash_m"
-    wipe(base)
+    TableRetention.sweep(spark, base)
     val b0 = corpus.where(col("doc_id") % 2 === 0)
     val b1 = corpus.where(col("doc_id") % 2 =!= 0)
     def runBatch(batch: org.apache.spark.sql.DataFrame, prior: Option[String],
@@ -252,7 +236,7 @@ class Bm25Spec extends SparkSpec {
 
   test("compaction policy: the compactAt-th merge folds the chain, content and replay unchanged") {
     val base = "bm25spec_tier_m"
-    wipe(base)
+    TableRetention.sweep(spark, base)
     val ref = s"${base}_ref"
     Bm25Index.build(corpus, "doc_id", "text", ref, buckets = 4)
     val want = Bm25Index.topK(spark, ref, Seq("a", "b", "c", "d"))
@@ -284,7 +268,7 @@ class Bm25Spec extends SparkSpec {
 
   test("positional append: any batch split merges to exactly the one-shot positional build") {
     val base = "bm25spec_posm"
-    wipe(base)
+    TableRetention.sweep(spark, base)
     val docs = Seq((1L, "x a b y a b"), (2L, "a a a"), (3L, "b a"),
       (4L, "a b z")).toDF("doc_id", "text")
     val ref = s"${base}_ref"
@@ -323,7 +307,7 @@ class Bm25Spec extends SparkSpec {
     // consumed and before the marker — an unrecoverable replay loop);
     // probes refuse until a later batch brings real text
     val base = "bm25spec_empty_m"
-    wipe(base)
+    TableRetention.sweep(spark, base)
     val delta = s"${base}_delta"
     Bm25Index.build(corpus.where(col("text").isNull), "doc_id", "text",
       delta, buckets = 4)
@@ -342,7 +326,7 @@ class Bm25Spec extends SparkSpec {
 
   test("a chain can be seeded from a MONOLITHIC one-shot build") {
     val base = "bm25spec_seed_m"
-    wipe(base)
+    TableRetention.sweep(spark, base)
     val mono = s"${base}_mono"
     Bm25Index.build(corpus.where(col("doc_id") <= 2), "doc_id", "text",
       mono, buckets = 4)
@@ -361,7 +345,7 @@ class Bm25Spec extends SparkSpec {
 
   test("compact preserves a positional chain's full serving surface (_2g carried)") {
     val base = "bm25spec_pcpt"
-    wipe(base)
+    TableRetention.sweep(spark, base)
     val docs = Seq((1L, "x a b y a b"), (2L, "a a a"), (3L, "a b z"))
       .toDF("doc_id", "text")
     var prior: Option[String] = None
@@ -385,7 +369,7 @@ class Bm25Spec extends SparkSpec {
 
   test("compact + sweep: folding the segment chain preserves probes; retention drops unreferenced tables") {
     val base = "bm25spec_cpt_m"
-    wipe(base)
+    TableRetention.sweep(spark, base)
     var prior: Option[String] = None
     Seq(0L, 1L, 2L).foreach { b =>
       val delta = s"${base}_delta"
@@ -424,7 +408,7 @@ class Bm25Spec extends SparkSpec {
 
   test("batch retrieval: per-query results equal each query's solo topK, in one rank-limited plan") {
     val name = "bm25spec_batch_idx"
-    wipe(name)
+    TableRetention.sweep(spark, name)
     Bm25Index.build(corpus, "doc_id", "text", name, buckets = 4)
     val queries = Seq("qa" -> Seq("a", "d"), "qb" -> Seq("b", "c"),
       "qc" -> Seq("c"))
@@ -457,7 +441,7 @@ class Bm25Spec extends SparkSpec {
 
   test("phrase search: exact adjacency, overlap, repeated-token phrases, derived top bigram") {
     val name = "bm25spec_pos_idx"
-    wipe(name)
+    TableRetention.sweep(spark, name)
     Bm25Index.buildPositional(Seq(
       (1L, "x a b y a b"), // "a b" twice, at starts 1 and 4
       (2L, "a a a"),       // "a a" twice (overlapping), "a b" never
@@ -484,7 +468,7 @@ class Bm25Spec extends SparkSpec {
     assert(sel.exists { case (n, m) => n < m }, s"phrase probe did not prune buckets: $sel")
     // degenerate: a corpus with no bigrams refuses phrase derivation loudly
     val single = "bm25spec_pos1_idx"
-    wipe(single)
+    TableRetention.sweep(spark, single)
     Bm25Index.buildPositional(Seq((1L, "solo")).toDF("doc_id", "text"),
       "doc_id", "text", single, buckets = 4)
     val e = intercept[IllegalArgumentException] {
@@ -495,7 +479,7 @@ class Bm25Spec extends SparkSpec {
 
   test("proximity search: slop=0 == phraseHits; slot displacement bounded by slop; repeated terms refused") {
     val name = "bm25spec_prox_idx"
-    wipe(name)
+    TableRetention.sweep(spark, name)
     Bm25Index.buildPositional(Seq(
       (1L, "a b z"),       // exact adjacency
       (2L, "a z b"),       // gap 1: slop>=1 only
@@ -532,7 +516,7 @@ class Bm25Spec extends SparkSpec {
     assert(e.getMessage.contains("repeated phrase terms"), e.getMessage)
     // distinct-term phrase derivation skips repeated-token top grams
     val d = "bm25spec_proxd_idx"
-    wipe(d)
+    TableRetention.sweep(spark, d)
     Bm25Index.buildPositional(Seq(
       (1L, "x x x x"), (2L, "p q")).toDF("doc_id", "text"),
       "doc_id", "text", d, buckets = 4)
@@ -542,7 +526,7 @@ class Bm25Spec extends SparkSpec {
 
   test("hybrid rrf: both rankers share ONE cached scored frame — the probe scan runs once") {
     val name = "bm25spec_reuse_idx"
-    wipe(name)
+    TableRetention.sweep(spark, name)
     Bm25Index.build(corpus, "doc_id", "text", name, buckets = 4)
     val top = Bm25Index.hybridRrfTopK(spark, name, Seq("b", "c"))
     top.collect()
@@ -584,7 +568,7 @@ class Bm25Spec extends SparkSpec {
     // call after the first executed the probe scan twice. The registry
     // must return the cached frame when the plan is unchanged.
     val name = "bm25spec_recache_idx"
-    wipe(name)
+    TableRetention.sweep(spark, name)
     Bm25Index.build(corpus, "doc_id", "text", name, buckets = 4)
     Bm25Index.hybridRrfTopK(spark, name, Seq("b", "c")).collect()
     val second = Bm25Index.hybridRrfTopK(spark, name, Seq("b", "c"))
@@ -608,7 +592,7 @@ class Bm25Spec extends SparkSpec {
 
   test("batch hybrid: per-query slices equal the solo RRF fusion, in one scan with a rank-limit cut") {
     val name = "bm25spec_bhyb_idx"
-    wipe(name)
+    TableRetention.sweep(spark, name)
     // the rrf-spec corpus where the two rankers genuinely disagree, plus
     // docs matching only one query's terms
     Bm25Index.build(Seq(
@@ -647,21 +631,38 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("sweep releases the hybrid probe cache entry; batchTopK refuses duplicate query ids") {
-    val name = "bm25spec_cachelc_b0" // a _b<N> chain version name
-    wipe("bm25spec_cachelc")
-    Bm25Index.build(corpus, "doc_id", "text", name, buckets = 4)
-    Bm25Index.hybridRrfTopK(spark, name, Seq("b", "c")).collect()
-    val before = Bm25Index.cachedProbeCount
-    // retire the version: the sweep must unpin its cached frame too
-    // (round-19 verdict #6 — a swept index otherwise leaves one cached
-    // frame pinned for the session)
-    Bm25Index.sweepVersions(spark, "bm25spec_cachelc", Seq.empty)
-    assert(!spark.catalog.tableExists(name), "sweep left the version table")
-    assert(Bm25Index.cachedProbeCount == before - 1,
-      s"swept index's cache entry survived ($before -> ${Bm25Index.cachedProbeCount})")
+    TableRetention.sweep(spark, "bm25spec_cachelc")
+    // every retention path retires a probed index version and must unpin
+    // its cached frame too (round-19 verdict #6 — a swept index otherwise
+    // leaves one cached frame pinned for the session): a `_b<N>` chain
+    // sweep, a family prefix sweep, and the CLI's warehouse-wide sweep of
+    // a stale (uncommitted, aged past the grace window) versioned build
+    val stale = "bm25spec_cachelc__v1_5eed"
+    val paths: Seq[(String, String, () => Seq[String])] = Seq(
+      ("sweepVersions", "bm25spec_cachelc_b0",
+        () => Bm25Index.sweepVersions(spark, "bm25spec_cachelc", Seq.empty)),
+      ("TableRetention.sweep", "bm25spec_cachelc_idx",
+        () => TableRetention.sweep(spark, "bm25spec_cachelc")),
+      ("VersionedTable.sweepStale", stale, () => {
+        val (wh, fs) = TableRetention.warehouse(spark)
+        fs.setTimes(new org.apache.hadoop.fs.Path(wh, stale),
+          System.currentTimeMillis() - 2 * graft.util.VersionedTable.InFlightGraceMs, -1)
+        graft.util.VersionedTable.sweepStale(spark)
+      }))
+    paths.foreach { case (path, name, retire) =>
+      Bm25Index.build(corpus, "doc_id", "text", name, buckets = 4)
+      Bm25Index.hybridRrfTopK(spark, name, Seq("b", "c")).collect()
+      val before = Bm25Index.cachedProbeCount
+      val swept = retire()
+      assert(swept.contains(s"table:$name"), s"$path did not sweep $name: $swept")
+      assert(!spark.catalog.tableExists(name), s"$path left the version table")
+      assert(Bm25Index.cachedProbeCount == before - 1,
+        s"$path: swept index's cache entry survived " +
+          s"($before -> ${Bm25Index.cachedProbeCount})")
+    }
     // duplicate query_ids merge into one logical query — refused loudly
     val name2 = "bm25spec_dupq_idx"
-    wipe(name2)
+    TableRetention.sweep(spark, name2)
     Bm25Index.build(corpus, "doc_id", "text", name2, buckets = 4)
     val e = intercept[IllegalArgumentException] {
       Bm25Index.batchTopK(spark, name2, Seq("q1" -> Seq("a"), "q1" -> Seq("b")))
@@ -671,7 +672,7 @@ class Bm25Spec extends SparkSpec {
 
   test("sweepVersions honors reader leases and never dooms a lookalike-prefix table") {
     val base = "bm25spec_lease"
-    wipe(base)
+    TableRetention.sweep(spark, base)
     // two versions + an UNRELATED table whose name merely starts with a
     // version name (the round-19 advice #2 prefix-greedy regex hazard)
     Seq(0L, 1L).foreach { b =>

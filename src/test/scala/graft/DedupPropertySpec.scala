@@ -29,8 +29,8 @@ class DedupPropertySpec extends SparkSpec {
     cliqueSizes <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.choose(2, 5)))
     singles <- Gen.choose(0, 4)
     ids <- shuffledIds(chainLens.sum + cliqueSizes.sum + singles)
-    groups = (chainLens ++ cliqueSizes).scanLeft(0)(_ + _).sliding(2)
-      .map { case Seq(from, to) => ids.slice(from, to) }.toSeq
+    bounds = (chainLens ++ cliqueSizes).scanLeft(0)(_ + _)
+    groups = bounds.zip(bounds.tail).map { case (from, to) => ids.slice(from, to) }
     chains = groups.take(chainLens.size)
       .flatMap(c => c.zip(c.tail))
     cliques = groups.drop(chainLens.size)
@@ -130,7 +130,7 @@ class DedupPropertySpec extends SparkSpec {
     val gen = for (docs <- corpusGen; batchOf <- splitGen(docs.size, 3))
       yield (docs, batchOf)
     check(Prop.forAllNoShrink(gen) { case (docs, batchOf) =>
-      graft.util.TableRetention.sweep(spark, "propjx_", keep = Set.empty)
+      graft.util.TableRetention.sweep(spark, "propjx_")
       val all = docs.toDF("doc_id", "text")
       Dedup.buildJaccardIngestIndex(all.limit(0), "doc_id", "text", bandT, shT,
         shingleN = 3, numHashes = 16, bandRows = 1, buckets = 4)
@@ -154,7 +154,7 @@ class DedupPropertySpec extends SparkSpec {
       assert(perBatch.toSet == oneShot,
         s"incremental union != one-shot: only-incremental=${perBatch.toSet diff oneShot} " +
           s"only-one-shot=${oneShot diff perBatch.toSet}")
-      graft.util.TableRetention.sweep(spark, "propjx_", keep = Set.empty)
+      graft.util.TableRetention.sweep(spark, "propjx_")
       true
     })
   }
@@ -174,7 +174,7 @@ class DedupPropertySpec extends SparkSpec {
       batchOf <- splitGen(sigs.size, 3)
     } yield (ids.zip(sigs), batchOf)
     check(Prop.forAllNoShrink(sigsGen) { case (sigs, batchOf) =>
-      graft.util.TableRetention.sweep(spark, "propsh_", keep = Set.empty)
+      graft.util.TableRetention.sweep(spark, "propsh_")
       val all = sigs.toDF("id", "sig")
       Dedup.buildSimhashIngestIndex(all.limit(0), "id", "sig", bandT,
         maxHamming = 4, blocks = 8, buckets = 4)
@@ -194,7 +194,7 @@ class DedupPropertySpec extends SparkSpec {
       assert(perBatch.toSet == oneShot,
         s"incremental union != one-shot: only-incremental=${perBatch.toSet diff oneShot} " +
           s"only-one-shot=${oneShot diff perBatch.toSet}")
-      graft.util.TableRetention.sweep(spark, "propsh_", keep = Set.empty)
+      graft.util.TableRetention.sweep(spark, "propsh_")
       true
     })
   }

@@ -788,7 +788,7 @@ class DedupSimilaritySpec extends SparkSpec {
       "dspec_band_live", "dspec_sh_live", shingleN = 3, numHashes = 16,
       bandRows = 1, buckets = 4)
     val swept = graft.util.TableRetention.sweep(spark, "dspec_",
-      keep = Set("dspec_band_live", "dspec_sh_live"))
+      Set("dspec_band_live", "dspec_sh_live").contains)
     assert(swept.exists(_.endsWith("dspec_band_deadbeef")), swept)
     assert(swept.exists(_ == "loc:dspec_sh_cafe"), swept)
     assert(!spark.catalog.tableExists("dspec_band_deadbeef"))
@@ -811,9 +811,9 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(e2.getMessage.contains("globally unique"), e2.getMessage)
     // a too-short sweep prefix is refused (it would sweep unrelated tables)
     val e3 = intercept[IllegalArgumentException](
-      graft.util.TableRetention.sweep(spark, "s", Set.empty))
+      graft.util.TableRetention.sweep(spark, "s"))
     assert(e3.getMessage.contains("too short"), e3.getMessage)
-    graft.util.TableRetention.sweep(spark, "dspec_", keep = Set.empty)
+    graft.util.TableRetention.sweep(spark, "dspec_")
   }
 
   test("crossContaminationIndexed == inline; probe plan never re-scans the train corpus") {
@@ -840,7 +840,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val docScans = "documents\\.parquet".r.findAllIn(plan).length
     assert(docScans == 1, s"probe plan scans documents $docScans times:\n${plan.take(800)}")
     assert(plan.contains(table), s"probe plan does not read the index table:\n${plan.take(800)}")
-    graft.util.TableRetention.sweep(spark, "d19_", keep = Set.empty)
+    graft.util.TableRetention.sweep(spark, "d19_")
   }
 
   test("d20 straddle residual: surviving duplicate bytes bounded near one chunk length") {
@@ -1098,7 +1098,7 @@ class DedupSimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.expr
     val docs = sf("documents").select($"doc_id", $"text")
     // a prior failed run's tables/locations would make saveAsTable refuse
-    graft.util.TableRetention.sweep(spark, "dspeca_", keep = Set.empty)
+    graft.util.TableRetention.sweep(spark, "dspeca_")
     graft.operators.Dedup.buildJaccardIngestIndex(docs, "doc_id", "text",
       "dspeca_band", "dspeca_sh", shingleN = 3, numHashes = 16,
       bandRows = 1, buckets = 4)
@@ -1151,7 +1151,7 @@ class DedupSimilaritySpec extends SparkSpec {
         "dspeca_band", "dspeca_sh", accepted1, "doc_id", "text",
         shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1))
     assert(e.getMessage.contains("globally unique"), e.getMessage)
-    graft.util.TableRetention.sweep(spark, "dspeca_", keep = Set.empty)
+    graft.util.TableRetention.sweep(spark, "dspeca_")
   }
 
   test("cosine/dot/norm math") {
@@ -1230,7 +1230,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("incremental simhash index: pair union over batches == one-shot banded pairs") {
     val bandT = "simix_band"
-    graft.util.TableRetention.sweep(spark, "simix", keep = Set.empty)
+    graft.util.TableRetention.sweep(spark, "simix")
     // hand-planted 64-bit signatures (all flips inside one 8-bit chunk, so
     // the pigeonhole banding provably finds every pair): hamming(1,2)=1,
     // hamming(1,3)=4, hamming(1,4)=5 (over the cut), 5 identical to 1,
@@ -1273,7 +1273,7 @@ class DedupSimilaritySpec extends SparkSpec {
         b1, "id", "sig", maxHamming = 4, blocks = 8)
     }
     assert(e.getMessage.contains("globally unique"), e.getMessage)
-    graft.util.TableRetention.sweep(spark, "simix", keep = Set.empty)
+    graft.util.TableRetention.sweep(spark, "simix")
   }
 
   test("closureMerge: incremental labels == one-shot closure; remap stays composed and merge-bounded") {

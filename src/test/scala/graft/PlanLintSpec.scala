@@ -79,7 +79,7 @@ class PlanLintSpec extends SparkSpec {
     // cached scored frames live in Bm25Index.hybridScored — ONE entry per
     // live index name, reused across plan-identical probes, swapped on a
     // changed plan, and RELEASED when retention sweeps the index (every
-    // sweep path publishes swept names through SweepHooks; Bm25Spec pins
+    // sweep path publishes swept names through TableRetention; Bm25Spec pins
     // sweep -> no live entry). Bounded by live index count by
     // construction — never by probe count.
     "st23_streaming_closure", "st24_streaming_perceptual",

@@ -14,7 +14,7 @@ class St23ClosureSpec extends SparkSpec {
 
   test("empty-seeded ingest index: append then probe finds cross-batch pairs") {
     val bandT = "st23dbg_band"; val shT = "st23dbg_sh"
-    graft.util.TableRetention.sweep(spark, "st23dbg", keep = Set.empty)
+    graft.util.TableRetention.sweep(spark, "st23dbg")
     val docs = (1L to 20L).map { i =>
       (i, (0 until 40).map(j => s"w${(i * 37 + j * 13) % 200}_$j").mkString(" "))
     }
@@ -45,7 +45,7 @@ class St23ClosureSpec extends SparkSpec {
         "doc_id", "text", shingleN = 3, minJaccard = 0.5, numHashes = 16,
         bandRows = 1))
     assert(e.getMessage.contains("globally unique"), e.getMessage)
-    graft.util.TableRetention.sweep(spark, "st23dbg", keep = Set.empty)
+    graft.util.TableRetention.sweep(spark, "st23dbg")
   }
 
   test("st23Ingest streaming loop == one-shot closure on synthetic batches") {

@@ -21,7 +21,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("a reader holding v1 survives a v2 rebuild; v1 is swept only at v3") {
     val stem = "vtspec_tbl_k1"
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
     val dataA = Seq((1L, "a"), (2L, "a"))
     val dataB = Seq((1L, "b"), (2L, "b"), (3L, "b"))
     val dataC = Seq((9L, "c"))
@@ -52,12 +52,12 @@ class VersionedTableSpec extends SparkSpec {
       usable = n => n != v1 && n != v2) // simulate a sibling that can't see our catalog
     assert(!whPath(v1).exists(), "v1 must be swept once v2 and v3 are committed")
     assert(whPath(v2).exists() && whPath(v3).exists())
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
   }
 
   test("uncommitted versions are never resolved; in-flight builds are not swept") {
     val stem = "vtspec_tbl_k2"
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
     val v1 = VersionedTable.ensure(spark, "vtspec_", stem,
       buildTable(Seq((1L, "x"))))
     // a torn build: location exists, no commit marker, version number ABOVE
@@ -74,7 +74,7 @@ class VersionedTableSpec extends SparkSpec {
     val v2 = VersionedTable.ensure(spark, "vtspec_", stem,
       buildTable(Seq((2L, "y"))), usable = _ => false)
     assert(v2.contains("__v100_"), s"expected v100, got $v2")
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
   }
 
   test("reuse keeps the resolved version even when two newer committed versions exist") {
@@ -82,7 +82,7 @@ class VersionedTableSpec extends SparkSpec {
     // (no catalog entries here), so resolution falls back to v1 — and the
     // retention pass must NOT sweep the very name it is about to return
     val stem = "vtspec_tbl_k4"
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
     val v1 = VersionedTable.ensure(spark, "vtspec_", stem,
       buildTable(Seq((1L, "a"))))
     for (n <- Seq(2, 3)) { // committed marker-only sibling builds
@@ -95,12 +95,12 @@ class VersionedTableSpec extends SparkSpec {
     assert(resolved == v1, s"expected fallback to $v1, got $resolved")
     assert(whPath(v1).exists(), "the resolved version was swept out from under its caller")
     assert(spark.table(v1).count() == 1)
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
   }
 
   test("crashed builds age out: uncommitted versions older than the grace window sweep") {
     val stem = "vtspec_tbl_k5"
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
     val v1 = VersionedTable.ensure(spark, "vtspec_", stem,
       buildTable(Seq((1L, "x"))))
     // a crashed build: uncommitted location whose mtime is beyond the grace
@@ -113,7 +113,7 @@ class VersionedTableSpec extends SparkSpec {
       _ => fail("v1 is usable — must not rebuild")) == v1)
     assert(!crashed.exists(), "aged-out uncommitted build must be swept")
     assert(whPath(v1).exists())
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
   }
 
   test("a sibling stem (different fixture key) survives another stem's retention") {
@@ -121,7 +121,7 @@ class VersionedTableSpec extends SparkSpec {
     // the same family prefix but keyed by different fixtures — one stem's
     // retain must apply the committed/grace-window keep rules to the OTHER
     // stem instead of sweeping everything the current keep set doesn't name
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
     // the "sibling session": a committed version + an in-flight build +
     // a sibling artifact, all under a DIFFERENT fixture key
     val sibCommitted = "vtspec_tbl_kA__v7_beef0007"
@@ -142,12 +142,12 @@ class VersionedTableSpec extends SparkSpec {
     assert(whPath(sibArtifact).exists(), "sibling stem's artifact swept")
     assert(whPath(sibInFlight).exists(), "sibling stem's in-flight build swept")
     assert(!whPath(sibCrashed).exists(), "sibling stem's aged-out crash must still sweep")
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
   }
 
   test("sibling artifacts (model dirs) version and retire with their table") {
     val stem = "vtspec_tbl_k3"
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
     def buildWithModel(tag: String)(name: String): Unit = {
       buildTable(Seq((1L, tag)))(name)
       Seq((tag, 1)).toDF("m", "k").write.parquet(whPath(s"${name}_model").toString)
@@ -162,12 +162,12 @@ class VersionedTableSpec extends SparkSpec {
       buildWithModel("c"), usable = n => n != v1 && n != v2, siblings = sib)
     assert(!whPath(s"${v1}_model").exists(), "retired version's model must be swept")
     assert(whPath(s"${v2}_model").exists() && whPath(s"${v3}_model").exists())
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
   }
 
   test("a leased version outlives depth-2 retention until the lease expires") {
     val stem = "vtspec_tbl_k4"
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
     val v1 = VersionedTable.ensure(spark, "vtspec_", stem, buildTable(Seq((1L, "a"))))
     // the long-running reader announces itself
     VersionedTable.lease(spark, v1)
@@ -188,12 +188,12 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.sweepStale(spark)
     assert(!whPath(v1).exists(), "expired lease must stop protecting v1")
     assert(whPath(v2).exists() && whPath(v3).exists())
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
   }
 
   test("lease refuses uncommitted versions (readers resolve committed only)") {
     val stem = "vtspec_tbl_k5"
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
     // manufacture an in-flight (uncommitted) versioned location the way
     // ensure() announces one: base dir exists, no _GRAFT_COMMITTED marker
     val name = s"${stem}__v1_deadbeef"
@@ -207,27 +207,28 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.commit(spark, name)
     VersionedTable.lease(spark, name)
     assert(new java.io.File(whPath(name), "_GRAFT_LEASE").exists())
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
   }
 
   test("retention's spare hook re-checks at delete time (lease race closed)") {
-    // TableRetention.sweep evaluates `spare` per candidate at delete time;
-    // VersionedTable wires a lease re-stat through it. Pin the hook
-    // contract directly: a doomed name the hook spares survives, and the
-    // sweep still removes everything else under the prefix.
+    // TableRetention.sweep evaluates its `keep` predicate (the spare hook)
+    // per candidate at delete time; VersionedTable wires a lease re-stat
+    // through it. Pin the predicate contract directly: a doomed name the
+    // predicate spares survives, and the sweep still removes everything
+    // else under the prefix.
     val stem = "vtspec_tbl_k6"
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
     val v1 = VersionedTable.ensure(spark, "vtspec_", stem, buildTable(Seq((1L, "a"))))
     val v2 = VersionedTable.ensure(spark, "vtspec_", stem,
       buildTable(Seq((1L, "b"))), usable = _ => false)
-    // neither is in keep, but the hook (standing in for a just-taken
-    // lease) spares v1 — exactly what leasedNow does between the keep-set
-    // listing and the delete
-    val swept = graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty,
-      spare = n => n == v1 || n.startsWith(v1))
+    // the predicate (standing in for a just-taken lease) spares v1 —
+    // exactly what locationLeased does between the keep-set listing and
+    // the delete
+    val swept = graft.util.TableRetention.sweep(spark, "vtspec_",
+      n => n == v1 || n.startsWith(v1))
     assert(whPath(v1).exists(), "spared version must survive the sweep")
     assert(!whPath(v2).exists(), "unspared version must still sweep")
     assert(swept.exists(_.endsWith(v2)) && !swept.exists(_.endsWith(v1)))
-    graft.util.TableRetention.sweep(spark, "vtspec_", Set.empty)
+    graft.util.TableRetention.sweep(spark, "vtspec_")
   }
 }
