@@ -740,7 +740,7 @@ object ScaleSoak {
         // build is a once-per-corpus ingest cost measured by the d17 leg.
         if (wanted("d17_incremental_dedup"))
           record(leg("d17_fixed_batch_probe", scale, warm = true, runs = 2)(
-            pq.d17FixedBatchProbe(spark, dir, base)))
+            pq.d17Probe(spark, dir, base)))
         // st13's analog: the SAME two base-fixture micro-batches ingested
         // against this scale's corpus index. The leg's total wall includes
         // the per-invocation index build (linear in corpus by design); the

@@ -398,7 +398,7 @@ object Maw {
         // `<stem>_b<N>_segs` manifest is one chain version; its row count
         // is the version's segment count.
         val chain = "^(.+)_b([0-9]+)_segs$".r
-        val chains = spark.catalog.listTables().collect().map(_.name).toSeq
+        val chains = graft.util.TableRetention.tableNames(spark, "")
           .collect { case chain(stem, n) => (stem, n.toLong) }.sorted
         for ((stem, n) <- chains) {
           val nSegs = spark.table(s"${stem}_b${n}_segs").count()

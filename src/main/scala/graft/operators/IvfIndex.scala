@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) approximate nearest neighbor: a coarse k-means
@@ -236,15 +235,11 @@ object IvfIndex {
     queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       explode(nearestCells(col(vecCol), m, nprobe)).as("ivf_cell"))
 
-  /** Cell-local join + exact cosine + deterministic top-k (ties by id). */
+  /** Cell-local join + exact cosine + [[Similarity.topKPerQuery]]. */
   private def cellJoinTopK(c: DataFrame, q: DataFrame, k: Int): DataFrame = {
     val scored = c.join(q, Seq("ivf_cell"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), VF.cosine(col("qv"), col("cv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
+    Similarity.cosineTopK(scored, k)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -288,10 +287,7 @@ object PqIndex {
         ColumnBridge.column(graft.expressions.PqAdcScore(
           ColumnBridge.expression(col("codes")),
           ColumnBridge.expression(col("luts")))).as("score"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= candidates)
+    Similarity.topKPerQuery(scored, candidates, score = "score")
       .select("query_id", "neighbor_id", "score")
   }
 }

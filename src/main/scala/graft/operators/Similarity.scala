@@ -42,7 +42,7 @@ object Similarity {
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         VF.cosine(col("qv"), col("cv")).as("cosine"))
-    topKPerQuery(scored, k)
+    cosineTopK(scored, k)
   }
 
   /** ANN via `tables` independent sign-LSH hash tables: a pair is a
@@ -110,7 +110,7 @@ object Similarity {
       .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")), "neighbor_id")
       .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), "query_id")
       .select(col("query_id"), col("neighbor_id"), VF.cosine(col("qv"), col("cv")).as("cosine"))
-    topKPerQuery(scored, k)
+    cosineTopK(scored, k)
   }
 
   /** Driver-visible recall gate for the approximate paths: recall@k of
@@ -164,12 +164,38 @@ object Similarity {
     } finally { truth.unpersist(); a.unpersist() }
   }
 
-  /** Deterministic top-k: ties broken by neighbor id. */
-  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
+  /** The one ANN ranking rule: per `query_id`, order by `score` DESC then
+    * `neighbor_id` ASC, number the rows 1.. and keep `rank <= k`. Every
+    * ANN top-k in graft goes through here (brute force, LSH, IVF, the PQ
+    * candidate stage and every exact [[rerank]]), and the DuckDB oracles
+    * `knnRankingOracle`, `plantedKnnOracle` and `annCdcOracle` mirror it.
+    * Returns `scored`'s columns plus `rank`; callers pick their own output.
+    */
+  def topKPerQuery(scored: DataFrame, k: Int, score: String = "cosine"): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
+      .orderBy(col(score).desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
+
+  /** [[topKPerQuery]] over exact cosine, emitted as the ANN paths' output:
+    * `(query_id, neighbor_id, cosine rounded to 6 dp, rank)`.
+    */
+  private[operators] def cosineTopK(scored: DataFrame, k: Int): DataFrame =
+    topKPerQuery(scored, k)
+      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
+
+  /** Exact re-rank of an approximate stage's `(query_id, neighbor_id)`
+    * candidates: each pair joins its corpus vector (no hint — AQE picks
+    * the side) and its broadcast query vector, scores exact cosine, and
+    * keeps the top `k` by the one ranking rule ([[topKPerQuery]], mirrored
+    * by the DuckDB oracles). Returns `(query_id, neighbor_id, cosine,
+    * rank)` with cosine unrounded.
+    */
+  def rerank(candidates: DataFrame, corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int): DataFrame =
+    topKPerQuery(candidates
+      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv")), Seq("neighbor_id"))
+      .join(broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))),
+        Seq("query_id"))
+      .select(col("query_id"), col("neighbor_id"), VF.cosine(col("qv"), col("nv")).as("cosine")), k)
 }

@@ -98,9 +98,7 @@ object ParityQueries {
     // whitespace/unicode/null rows.
     "p11_jsonl_roundtrip" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p11_jsonl_${java.lang.Integer.toHexString(dir.hashCode)}")
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p11_jsonl", dir)
       val out = base.resolve("docs.jsonl").toString
       graft.sinks.Sink.write(docs,
         graft.sinks.Sink.Config(out, graft.sources.Discovery.Jsonl))
@@ -116,9 +114,7 @@ object ParityQueries {
     // (unlike JSONL), so the full column set survives unprojected.
     "p12_orc_roundtrip" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p12_orc_${java.lang.Integer.toHexString(dir.hashCode)}")
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p12_orc", dir)
       val out = base.resolve("docs.orc").toString
       graft.sinks.Sink.write(docs,
         graft.sinks.Sink.Config(out, graft.sources.Discovery.Orc))
@@ -138,9 +134,7 @@ object ParityQueries {
     // control characters, which the binary row encoding stores verbatim.
     "p20_avro_roundtrip" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p20_avro_${java.lang.Integer.toHexString(dir.hashCode)}")
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p20_avro", dir)
       val out = base.resolve("docs.avro").toString
       graft.sinks.Sink.write(docs,
         graft.sinks.Sink.Config(out, graft.sources.Discovery.Avro))
@@ -158,9 +152,7 @@ object ParityQueries {
     // hostile raw-text corpus is out of the format's contract by design.
     "p19_xml_roundtrip" -> ((s, dir) => {
       val o = ordersStringified(t(s, dir, "orders"))
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p19_xml_${java.lang.Integer.toHexString(dir.hashCode)}")
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p19_xml", dir)
       val out = base.resolve("orders.xml").toString
       graft.sinks.Sink.write(o,
         graft.sinks.Sink.Config(out, graft.sources.Discovery.Xml))
@@ -176,9 +168,7 @@ object ParityQueries {
     // one row or value changed across the destructive in-place swap.
     "p13_compaction" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p13_compact_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
+      val base = scratchDir("p13_compact", dir)
       val tree = base.resolve("docs-tree").toString
       docs.repartition(16).write.parquet(tree)
       val st = graft.operators.Compact.run(s, tree, graft.sources.Discovery.Parquet)
@@ -195,9 +185,7 @@ object ParityQueries {
     // one language's slice and scanning the corpus.
     "p14_partition_pruned" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p14_part_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
+      val base = scratchDir("p14_part", dir)
       val tree = base.resolve("docs-tree").toString
       graft.sinks.Sink.write(docs, graft.sinks.Sink.Config(tree,
         graft.sources.Discovery.Parquet, partitionBy = Seq("lang")))
@@ -221,10 +209,7 @@ object ParityQueries {
     "p15_zorder_skipping" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity")
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p15_zorder_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p15_zorder", dir)
       val out = base.resolve("liz.parquet").toString
       // the user-facing layout surface: --zorder-by + --roll-by-rows bound
       // rows per file so the tree lands at ~24 files/row groups at EVERY
@@ -289,10 +274,7 @@ object ParityQueries {
     // live. The oracle reproduces the union + null-fill relationally.
     "p16_schema_evolution" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p16_evo_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p16_evo", dir)
       val tree = base.resolve("tree")
       java.nio.file.Files.createDirectories(tree)
       // two generations, disjoint row sets, different schemas
@@ -317,10 +299,7 @@ object ParityQueries {
     "p17_resilient_ingest" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select("doc_id", "text", "lang", "source", "n_chars")
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p17_resilient_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p17_resilient", dir)
       val tree = base.resolve("tree")
       docs.write.parquet(tree.toString)
       java.nio.file.Files.write(tree.resolve("zz-garbage.parquet"),
@@ -360,10 +339,7 @@ object ParityQueries {
     "p18_compact_zorder" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity")
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p18_czorder_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p18_czorder", dir)
       val tree = base.resolve("li-tree").toString
       // 24 tiny hash-scattered parts: the worst maintenance input —
       // fragmented, and every row group spans the full key domain
@@ -430,9 +406,7 @@ object ParityQueries {
     // to NULL — the one normalization this format genuinely requires.
     "p21_csv_roundtrip" -> ((s, dir) => {
       val o = ordersStringified(t(s, dir, "orders"))
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p21_csv_${java.lang.Integer.toHexString(dir.hashCode)}")
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p21_csv", dir)
       val out = base.resolve("orders.csv").toString
       graft.sinks.Sink.write(o,
         graft.sinks.Sink.Config(out, graft.sources.Discovery.Csv,
@@ -455,10 +429,7 @@ object ParityQueries {
     "p22_rolled_parts" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val n = docs.count()
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p22_roll_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p22_roll", dir)
       val out = base.resolve("docs.jsonl").toString
       graft.sinks.Sink.write(docs,
         graft.sinks.Sink.Config(out, graft.sources.Discovery.Jsonl,
@@ -488,10 +459,7 @@ object ParityQueries {
     // table. Integer-only measures (count/min/max) — the engine-exact
     // discipline for anything cross-engine-hashed.
     "p23_cli_sql" -> ((s, dir) => {
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p23_sql_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p23_sql", dir)
       val out = base.resolve("agg.parquet").toString
       graft.cli.Maw.execute(s, graft.cli.Maw.parse(Seq(
         s"$dir/orders.parquet", "-o", out, "-q", "--sql",
@@ -509,10 +477,7 @@ object ParityQueries {
     // the DuckDB oracle pins the verified content independently. Two
     // layers: the engine's own integrity check, and the cross-engine hash.
     "p24_cli_verify" -> ((s, dir) => {
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p24_verify_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p24_verify", dir)
       val out = base.resolve("docs.parquet").toString
       graft.cli.Maw.execute(s, graft.cli.Maw.parse(Seq(
         s"$dir/documents.parquet", "-o", out, "-q", "--verify")))
@@ -525,10 +490,7 @@ object ParityQueries {
     // a destructive bug on a production path), and the subsequent real
     // conversion must deliver the original exactly (the DuckDB oracle).
     "p25_cli_plan_dryrun" -> ((s, dir) => {
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p25_plan_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p25_plan", dir)
       val out = base.resolve("docs.parquet")
       graft.cli.Maw.execute(s, graft.cli.Maw.parse(Seq(
         s"$dir/documents.parquet", "-o", out.toString, "-q", "--plan")))
@@ -556,10 +518,7 @@ object ParityQueries {
     "p26_cli_json_logs" -> ((s, dir) => {
       val o = ordersStringified(t(s, dir, "orders"))
       val n = o.count()
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p26_m1_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p26_m1", dir)
       // stage the input as ROLLED csv parts so the per-file event stream
       // is non-trivial (one event per part, like a real multi-file ingest)
       graft.sinks.Sink.write(o, graft.sinks.Sink.Config(
@@ -620,10 +579,7 @@ object ParityQueries {
     // by MawCliSpec and waived from driver observation in COVERAGE.md.
     "p27_cli_knobs" -> ((s, dir) => {
       val o = ordersStringified(t(s, dir, "orders"))
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p27_knobs_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
-      java.nio.file.Files.createDirectories(base)
+      val base = scratchDir("p27_knobs", dir)
       val in = base.resolve("orders.csv").toString
       graft.sinks.Sink.write(o, graft.sinks.Sink.Config(
         in, graft.sources.Discovery.Csv))
@@ -715,9 +671,7 @@ object ParityQueries {
     "p29_stream_partitioned" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select("doc_id", "text", "lang", "source", "n_chars")
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"p29_k8_${java.lang.Integer.toHexString(dir.hashCode)}")
-      graft.util.Fs.deleteRecursively(base.toFile)
+      val base = scratchDir("p29_k8", dir)
       val in = base.resolve("in")
       java.nio.file.Files.createDirectories(in)
       val out = base.resolve("tree").toString

@@ -50,6 +50,9 @@ object PipelineQueries {
     try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** Rows per state-store instance in [[stateStorePartitions]]. */
+  private val StateStoreRows = 8192L
+
   /** SCALE-ADAPTIVE state-store partition count for a stateful streaming
     * leg (round-20 optimization, guide §2.2's many-tiny-blocks lesson
     * applied to state stores): a stateful operator creates one state-store
@@ -61,9 +64,9 @@ object PipelineQueries {
     * to the core count is a production anti-pattern at BOTH ends — a tiny
     * stream drowns in per-instance overhead, a 100 TB stream wants stores
     * sized by throughput, not cores — so derive the count from the
-    * stream's own row volume: one store per `SPARK_GRAFT_STATE_ROWS` rows
-    * (default 8192 — below ~10k rows/store the fixed lifecycle cost
-    * dominates any per-row work), clamped to [1, defaultParallelism] so
+    * stream's own row volume: one store per [[StateStoreRows]] rows
+    * (below ~10k rows/store the fixed lifecycle cost dominates any
+    * per-row work), clamped to [1, defaultParallelism] so
     * parallelism never exceeds what the session can schedule. Partition
     * count is pinned into the checkpoint at first start, so the derivation
     * is deterministic in the fixture (a restart re-derives the same
@@ -72,8 +75,7 @@ object PipelineQueries {
     * pin.
     */
   private def stateStorePartitions(s: SparkSession, approxRows: Long): Int = {
-    val target = sys.env.getOrElse("SPARK_GRAFT_STATE_ROWS", "8192").toLong
-    val need = math.ceil(math.max(0L, approxRows).toDouble / target).toLong
+    val need = math.ceil(math.max(0L, approxRows).toDouble / StateStoreRows).toLong
     math.max(1L, math.min(need, s.sparkContext.defaultParallelism.toLong)).toInt
   }
 
@@ -264,59 +266,35 @@ object PipelineQueries {
     (name, model)
   }
 
-  /** s14's build-once IVF-PQ serving index — the composition of s12's
-    * bucketed coarse index and s13's PQ compression into the production
-    * serving layout: ONE ingest-time scan assigns every vector its coarse
-    * cell AND its m-byte PQ code, persisted bucketed by `ivf_cell` with
-    * both models alongside (fixture-keyed like [[s12ServeIndex]]). The
-    * serving path then never touches float vectors until the
+  /** The build-once IVF-PQ serving index of s14 (stem `s14_ivfpq_serve`)
+    * and s15 (stem `s15_ivfpq_filt`, with the label column persisted as
+    * `extraCols` so attribute predicates pre-filter the pruned ADC scan) —
+    * the composition of s12's bucketed coarse index and s13's PQ
+    * compression into the production serving layout: ONE ingest-time scan
+    * assigns every vector its coarse cell AND its m-byte PQ code, persisted
+    * bucketed by `ivf_cell` with both models alongside (fixture-keyed like
+    * [[s12ServeIndex]]; each stem is its own family, since the schemas
+    * differ). The serving path then never touches float vectors until the
     * candidates-bounded exact re-rank. Cell count is fixture-sized at 8
     * (= [[graft.operators.IvfIndex.autoNlist]]'s floor region for this
     * corpus); at warehouse scale autoNlist keeps probe cost ~nprobe*sqrt(n).
     */
-  private def s14ServeIndex(s: SparkSession, dir: String, corpus: DataFrame)
+  private def s14ServeIndex(s: SparkSession, dir: String, corpus: DataFrame,
+      stem: String = "s14_ivfpq_serve", extraCols: Seq[String] = Nil)
       : (String, graft.operators.IvfIndex.Model, graft.operators.PqIndex.Model) = {
     // staged-swap versioned like s12, with TWO model artifacts per version
     val key = fixtureKey(dir, "embeddings")
     val wh = graft.util.TableRetention.warehouse(s)._1
     var models: (graft.operators.IvfIndex.Model, graft.operators.PqIndex.Model) = null
-    val name = graft.util.VersionedTable.ensure(s, "s14_", s"s14_ivfpq_serve_$key",
+    // the family prefix is the stem's query tag (`s14_`, `s15_`)
+    val name = graft.util.VersionedTable.ensure(s, stem.takeWhile(_ != '_') + "_",
+      s"${stem}_$key",
       build = n => {
         val ivf = graft.operators.IvfIndex.train(corpus, "vec_id", "embedding", k = 8)
         val pq = graft.operators.PqIndex.train(corpus, "vec_id", "embedding",
           m = 16, k = 256, sampleSize = 4096)
         graft.operators.PqIndex.saveEncodedAssigned(corpus, "vec_id", "embedding",
-          ivf, pq, n, buckets = 8)
-        graft.operators.IvfIndex.save(s, ivf, s"$wh/${n}_ivf")
-        graft.operators.PqIndex.save(s, pq, s"$wh/${n}_pq")
-        models = (ivf, pq)
-      },
-      usable = n => s.catalog.tableExists(n) && {
-        models = (graft.operators.IvfIndex.load(s, s"$wh/${n}_ivf"),
-          graft.operators.PqIndex.load(s, s"$wh/${n}_pq")); true
-      },
-      siblings = n => Seq(s"${n}_ivf", s"${n}_pq"))
-    (name, models._1, models._2)
-  }
-
-  /** s15's build-once filtered-serving index: like [[s14ServeIndex]] but
-    * the corpus carries a label column persisted into the index
-    * (`extraCols`) so attribute predicates can pre-filter the pruned ADC
-    * scan. Separate key space from s14 — the schemas differ.
-    */
-  private def s15ServeIndex(s: SparkSession, dir: String, corpus: DataFrame)
-      : (String, graft.operators.IvfIndex.Model, graft.operators.PqIndex.Model) = {
-    // staged-swap versioned like s14 (separate key space — schemas differ)
-    val key = fixtureKey(dir, "embeddings")
-    val wh = graft.util.TableRetention.warehouse(s)._1
-    var models: (graft.operators.IvfIndex.Model, graft.operators.PqIndex.Model) = null
-    val name = graft.util.VersionedTable.ensure(s, "s15_", s"s15_ivfpq_filt_$key",
-      build = n => {
-        val ivf = graft.operators.IvfIndex.train(corpus, "vec_id", "embedding", k = 8)
-        val pq = graft.operators.PqIndex.train(corpus, "vec_id", "embedding",
-          m = 16, k = 256, sampleSize = 4096)
-        graft.operators.PqIndex.saveEncodedAssigned(corpus, "vec_id", "embedding",
-          ivf, pq, n, buckets = 8, extraCols = Seq("label"))
+          ivf, pq, n, buckets = 8, extraCols = extraCols)
         graft.operators.IvfIndex.save(s, ivf, s"$wh/${n}_ivf")
         graft.operators.PqIndex.save(s, pq, s"$wh/${n}_pq")
         models = (ivf, pq)
@@ -362,13 +340,13 @@ object PipelineQueries {
     * the scaled corpus, so its wall mixes batch growth in); ScaleSoak times
     * THIS at every scale with the same batch, so the `ratio_vs_1x` column
     * is the flatness number directly (round-13 measured: ~2.6 s against a
-    * 1x index vs ~2.2 s against 64x, identical survivors). When
-    * `dir == baseDir` the output is exactly the d17 query's (spec-pinned).
+    * 1x index vs ~2.2 s against 64x, identical survivors). The d17 query
+    * is this probe at `dir == baseDir`.
     * Batch ids (+1e6/+2e6 over base ids) stay disjoint from every soak
     * replica id (r * 1e7 offsets) — the probe's uniqueness guard enforces
     * it rather than trusting this comment.
     */
-  def d17FixedBatchProbe(s: SparkSession, dir: String, baseDir: String): DataFrame = {
+  def d17Probe(s: SparkSession, dir: String, baseDir: String): DataFrame = {
     val baseDocs = t(s, baseDir, "documents").select("doc_id", "text")
     val mut = baseDocs.where(col("doc_id") % 3 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
@@ -757,7 +735,7 @@ object PipelineQueries {
     // the bounded-chain gate (r18 verdict #4): after K batches with
     // in-loop retention, only the newest TWO versions' trios remain — an
     // unswept chain would hold K of each
-    val verTables = s.catalog.listTables().collect().map(_.name)
+    val verTables = graft.util.TableRetention.tableNames(s, s"${tblBase}_b")
       .filter(n => n.startsWith(s"${tblBase}_b") && !n.contains("_seg"))
     val keptIds = verTables.flatMap(
       s"^${java.util.regex.Pattern.quote(tblBase)}_b([0-9]+).*$$".r
@@ -779,6 +757,33 @@ object PipelineQueries {
     graft.operators.Bm25Index.topK(s, idx, terms)
   }
 
+  /** t36's build-once BM25 index over `dir`'s documents (family `t36_`,
+    * fixture-keyed), shared by t36, t37, t38, t40 and
+    * [[t38QueryCountProbe]].
+    */
+  private def bm25Index(s: SparkSession, dir: String): String = {
+    val docs = t(s, dir, "documents")
+    val key = fixtureKey(dir, "documents")
+    graft.util.VersionedTable.ensure(s, "t36_", s"t36_bm25_$key",
+      build = name => graft.operators.Bm25Index.build(docs, "doc_id", "text", name),
+      usable = n => s.catalog.tableExists(n) &&
+        s.catalog.tableExists(n + "_df") &&
+        s.catalog.tableExists(n + "_stats"),
+      siblings = graft.operators.Bm25Index.siblings)
+  }
+
+  /** t39's build-once positional index over `dir`'s documents (family
+    * `t39_`, fixture-keyed), shared by t39 and t41.
+    */
+  private def positionalIndex(s: SparkSession, dir: String): String = {
+    val docs = t(s, dir, "documents")
+    val key = fixtureKey(dir, "documents")
+    graft.util.VersionedTable.ensure(s, "t39_", s"t39_pos_$key",
+      build = name => graft.operators.Bm25Index.buildPositional(docs, "doc_id", "text", name),
+      usable = n => s.catalog.tableExists(n) && s.catalog.tableExists(n + "_2g"),
+      siblings = graft.operators.Bm25Index.siblingsPositional)
+  }
+
   /** t38's query-count scaling probe (round-18 verdict #2's soak leg):
     * derive `nQueries` deterministic 3-term queries over the same
     * vocabulary (query i takes terms[(i + j*7) mod V], j in 0..2 —
@@ -789,15 +794,7 @@ object PipelineQueries {
     * grows; a per-query rescan would show linear wall.
     */
   def t38QueryCountProbe(s: SparkSession, dir: String, nQueries: Int): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val key = fixtureKey(dir, "documents")
-    val idx = graft.util.VersionedTable.ensure(s, "t36_", s"t36_bm25_$key",
-      build = name =>
-        graft.operators.Bm25Index.build(docs, "doc_id", "text", name),
-      usable = n => s.catalog.tableExists(n) &&
-        s.catalog.tableExists(n + "_df") &&
-        s.catalog.tableExists(n + "_stats"),
-      siblings = graft.operators.Bm25Index.siblings)
+    val idx = bm25Index(s, dir)
     val terms = graft.operators.Bm25Index.selectTerms(s, idx, nTerms = 24,
       dfCapDenom = 1)
     val queries = (0 until nQueries).map(i =>
@@ -2112,32 +2109,13 @@ object PipelineQueries {
     // token-salted docs at +2e6) is deduped against the EXISTING corpus
     // and against its own earlier rows, without ever pairing old x old
     // (the candidate join's A side is batch-only — cost O(batch x
-    // occupancy) at any corpus size). Output: the batch's survivors.
+    // occupancy) at any corpus size). Output: the batch's survivors, old
+    // side read from [[d17Probe]]'s persisted build-once ingest index.
     // Oracle: DuckDB brute-force jaccard over new x (old + earlier-new)
     // with the d05 shingle construction — a candidate-stage miss, a wrong
     // asymmetry (old x old pairs, or new-new in the wrong direction), or
     // a verify divergence each changes the survivor set.
-    "d17_incremental_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val mut = docs.where(col("doc_id") % 3 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          expr("substring(text, instr(text, ' ') + 1)").as("text"))
-      val freshNew = docs.where(col("doc_id") % 5 === 1)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          array_join(transform(split(col("text"), " "), t => concat(t, lit("_xq"))),
-            " ").as("text"))
-      val batch = mut.unionByName(freshNew)
-      // the old side comes from the PERSISTED ingest index (build-once per
-      // fixture) — the batch is the only text that gets shingled here; the
-      // oracle is unchanged, pinning indexed == inline semantics
-      val (bandTable, shTable) = d17IngestIndex(s, dir, docs)
-      val pairs = Dedup.incrementalJaccardPairsIndexed(s, bandTable, shTable,
-        batch, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)._1
-      ordered(batch.join(pairs.select(col("idA").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti")
-        .select("doc_id"))
-    }),
+    "d17_incremental_dedup" -> ((s, dir) => ordered(d17Probe(s, dir, dir))),
     // SUB-document exact-span dedup (corpus rewrite; Lee et al. 2022's
     // exact-substring dedup on a 100-char non-overlapping grid). Planted:
     // every 4th doc re-appears at +1e6 as original text + a salted tail
@@ -2305,24 +2283,12 @@ object PipelineQueries {
           .distinct().count()
         requireCellPruned("d16", cand0.queryExecution.executedPlan.toString, probedCells)
         val cand = cand0.localCheckpoint()
-        val sizes = cand.groupBy("query_id").agg(count(lit(1)).as("n")).collect()
-        require(sizes.length == 10 && sizes.forall { r =>
-          r.getLong(1) >= 5L && r.getLong(1) <= 50L },
-          "d16: each query must hand 5..50 post-merge ADC candidates to the re-rank")
+        requireCandidates("d16", cand, 5, 50)
         // float-side merged corpus for the exact re-rank — the SAME
         // mergeSnapshot applied to the vectors, so index and corpus
         // maintenance share one merge semantics by construction
         val mergedCorpus = Dedup.mergeSnapshot(corpus0, delta, "vec_id")
-        val rerank = cand
-          .join(mergedCorpus.select(col("vec_id").as("neighbor_id"),
-            col("embedding").as("nv")), Seq("neighbor_id"))
-          .join(broadcast(qs.select(col("vec_id").as("query_id"),
-            col("embedding").as("qv"))), Seq("query_id"))
-          .select(col("query_id"), col("neighbor_id"),
-            VF.cosine(col("qv"), col("nv")).as("cosine"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)
-        rerank.withColumn("rank", row_number().over(w)).where(col("rank") <= 5)
+        Similarity.rerank(cand, mergedCorpus, qs, "vec_id", "embedding", k = 5)
           .select(col("query_id"), col("neighbor_id"), col("rank"))
           .orderBy(col("query_id").asc, col("rank").asc)
           // the result must OUTLIVE the finally-dropped merged table
@@ -2400,22 +2366,10 @@ object PipelineQueries {
           .distinct().count()
         requireCellPruned("st12", cand0.queryExecution.executedPlan.toString, probedCells)
         val cand = cand0.localCheckpoint()
-        val sizes = cand.groupBy("query_id").agg(count(lit(1)).as("n")).collect()
-        require(sizes.length == 10 && sizes.forall { r =>
-          r.getLong(1) >= 5L && r.getLong(1) <= 50L },
-          "st12: each query must hand 5..50 post-stream ADC candidates to the re-rank")
+        requireCandidates("st12", cand, 5, 50)
         val mergedCorpus = Dedup.mergeSnapshot(corpus0,
           del.unionByName(moved).unionByName(news), "vec_id")
-        val rerank = cand
-          .join(mergedCorpus.select(col("vec_id").as("neighbor_id"),
-            col("embedding").as("nv")), Seq("neighbor_id"))
-          .join(broadcast(qs.select(col("vec_id").as("query_id"),
-            col("embedding").as("qv"))), Seq("query_id"))
-          .select(col("query_id"), col("neighbor_id"),
-            VF.cosine(col("qv"), col("nv")).as("cosine"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)
-        rerank.withColumn("rank", row_number().over(w)).where(col("rank") <= 5)
+        Similarity.rerank(cand, mergedCorpus, qs, "vec_id", "embedding", k = 5)
           .select(col("query_id"), col("neighbor_id"), col("rank"))
           .orderBy(col("query_id").asc, col("rank").asc)
           // the result must OUTLIVE the finally-dropped version tables
@@ -2470,12 +2424,9 @@ object PipelineQueries {
         .option("pathGlobFilter", "events.parquet").parquet(dir)
       val agg = stream.groupBy("event_type")
         .agg(count(lit(1)), sum("event_id"))
-      val ckpt = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"st14_ckpt_${java.lang.Integer.toHexString(dir.hashCode)}")
-      // invocation-fresh checkpoint: a stale one from another fixture at
-      // the same path would serve that fixture's state
-      graft.util.Fs.deleteRecursively(ckpt)
+      // invocation-fresh checkpoint: a stale one at the same path would
+      // serve that run's state
+      val ckpt = scratchDir("st14_ckpt", dir)
       val q = agg.writeStream.outputMode("update").format("noop")
         .option("checkpointLocation", ckpt.toString)
         .start()
@@ -2867,15 +2818,7 @@ object PipelineQueries {
     // scan (SelectedBucketsCount), and the probe plan must never re-read
     // document text — the build-once contract, lexical edition.
     "t36_bm25_retrieval" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val key = fixtureKey(dir, "documents")
-      val idx = graft.util.VersionedTable.ensure(s, "t36_", s"t36_bm25_$key",
-        build = name =>
-          graft.operators.Bm25Index.build(docs, "doc_id", "text", name),
-        usable = n => s.catalog.tableExists(n) &&
-          s.catalog.tableExists(n + "_df") &&
-          s.catalog.tableExists(n + "_stats"),
-        siblings = graft.operators.Bm25Index.siblings)
+      val idx = bm25Index(s, dir)
       // selectTerms refuses loudly on empty/stopword-saturated indexes
       val terms = graft.operators.Bm25Index.selectTerms(s, idx)
       val top = graft.operators.Bm25Index.topK(s, idx, terms)
@@ -2895,15 +2838,7 @@ object PipelineQueries {
     // output make each contribution auditable. Same build-once index and
     // gates as t36.
     "t37_hybrid_rrf" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val key = fixtureKey(dir, "documents")
-      val idx = graft.util.VersionedTable.ensure(s, "t36_", s"t36_bm25_$key",
-        build = name =>
-          graft.operators.Bm25Index.build(docs, "doc_id", "text", name),
-        usable = n => s.catalog.tableExists(n) &&
-          s.catalog.tableExists(n + "_df") &&
-          s.catalog.tableExists(n + "_stats"),
-        siblings = graft.operators.Bm25Index.siblings)
+      val idx = bm25Index(s, dir)
       // selectTerms refuses loudly on empty/stopword-saturated indexes
       val terms = graft.operators.Bm25Index.selectTerms(s, idx)
       val top = graft.operators.Bm25Index.hybridRrfTopK(s, idx, terms)
@@ -2925,15 +2860,7 @@ object PipelineQueries {
     // gated in-plan here). DuckDB replays the whole pipeline from the raw
     // table including the term->query assignment.
     "t38_batch_retrieval" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val key = fixtureKey(dir, "documents")
-      val idx = graft.util.VersionedTable.ensure(s, "t36_", s"t36_bm25_$key",
-        build = name =>
-          graft.operators.Bm25Index.build(docs, "doc_id", "text", name),
-        usable = n => s.catalog.tableExists(n) &&
-          s.catalog.tableExists(n + "_df") &&
-          s.catalog.tableExists(n + "_stats"),
-        siblings = graft.operators.Bm25Index.siblings)
+      val idx = bm25Index(s, dir)
       // dfCapDenom = 1 (admit the whole vocabulary): the synthetic fixture
       // corpus is stopword-saturated by construction (~30 tokens, each in
       // ~77% of docs — exactly ONE passes t36's n/20 cap), and a 1-term
@@ -2967,15 +2894,7 @@ object PipelineQueries {
     // solo t37 fusion for that query's terms (Bm25Spec pins it); DuckDB
     // replays the whole pipeline from the raw table.
     "t40_batch_hybrid" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val key = fixtureKey(dir, "documents")
-      val idx = graft.util.VersionedTable.ensure(s, "t36_", s"t36_bm25_$key",
-        build = name =>
-          graft.operators.Bm25Index.build(docs, "doc_id", "text", name),
-        usable = n => s.catalog.tableExists(n) &&
-          s.catalog.tableExists(n + "_df") &&
-          s.catalog.tableExists(n + "_stats"),
-        siblings = graft.operators.Bm25Index.siblings)
+      val idx = bm25Index(s, dir)
       // t38's derivation verbatim (dfCapDenom = 1 — see t38's note on the
       // stopword-saturated synthetic fixture)
       val terms = graft.operators.Bm25Index.selectTerms(s, idx, nTerms = 12,
@@ -3007,14 +2926,7 @@ object PipelineQueries {
     // Overlapping occurrences each count. DuckDB replays tokenize →
     // bigram stats → top gram → positional adjacency from the raw table.
     "t39_phrase_search" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val key = fixtureKey(dir, "documents")
-      val idx = graft.util.VersionedTable.ensure(s, "t39_", s"t39_pos_$key",
-        build = name =>
-          graft.operators.Bm25Index.buildPositional(docs, "doc_id", "text", name),
-        usable = n => s.catalog.tableExists(n) &&
-          s.catalog.tableExists(n + "_2g"),
-        siblings = graft.operators.Bm25Index.siblingsPositional)
+      val idx = positionalIndex(s, dir)
       val phrase = graft.operators.Bm25Index.derivePhrase(s, idx)
       val hits = graft.operators.Bm25Index.phraseHits(s, idx, phrase)
       requirePruned("t39", hits.queryExecution.executedPlan.toString)
@@ -3032,14 +2944,7 @@ object PipelineQueries {
     // distinct-term bigram stats → top gram → the same slot-displacement
     // votes from the raw table.
     "t41_proximity_search" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val key = fixtureKey(dir, "documents")
-      val idx = graft.util.VersionedTable.ensure(s, "t39_", s"t39_pos_$key",
-        build = name =>
-          graft.operators.Bm25Index.buildPositional(docs, "doc_id", "text", name),
-        usable = n => s.catalog.tableExists(n) &&
-          s.catalog.tableExists(n + "_2g"),
-        siblings = graft.operators.Bm25Index.siblingsPositional)
+      val idx = positionalIndex(s, dir)
       val phrase = graft.operators.Bm25Index.derivePhrase(s, idx,
         distinctTerms = true)
       val hits = graft.operators.Bm25Index.proximityHits(s, idx, phrase,
@@ -3228,16 +3133,8 @@ object PipelineQueries {
       val coarse = Similarity.bruteForceTopK(q8(e), q8(qs), "vec_id", "embedding", k = 100)
         .select(col("query_id"), col("neighbor_id"))
         .localCheckpoint()
-      val sizes = coarse.groupBy("query_id").agg(count(lit(1)).as("n")).collect()
-      require(sizes.length == 10 && sizes.forall(_.getLong(1) == 100L),
-        s"s11: coarse stage must hand exactly 100 candidates per query")
-      val rerank = coarse
-        .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv")), Seq("neighbor_id"))
-        .join(broadcast(qs.select(col("vec_id").as("query_id"), col("embedding").as("qv"))), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"), VF.cosine(col("qv"), col("nv")).as("cosine"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      rerank.withColumn("rank", row_number().over(w)).where(col("rank") <= 5)
+      requireCandidates("s11", coarse, 100, 100)
+      Similarity.rerank(coarse, e, qs, "vec_id", "embedding", k = 5)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
         .orderBy(col("query_id").asc, col("rank").asc)
     }),
@@ -3396,16 +3293,8 @@ object PipelineQueries {
       // candidate set; the corpus-wide ADC scan must not run twice
       val cand = PqIndex.adcCandidates(e, qs, "vec_id", "embedding",
         model, candidates = 100).localCheckpoint()
-      val sizes = cand.groupBy("query_id").agg(count(lit(1)).as("n")).collect()
-      require(sizes.length == 10 && sizes.forall(_.getLong(1) == 100L),
-        "s13: ADC stage must hand exactly 100 candidates per query")
-      val rerank = cand
-        .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv")), Seq("neighbor_id"))
-        .join(broadcast(qs.select(col("vec_id").as("query_id"), col("embedding").as("qv"))), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"), VF.cosine(col("qv"), col("nv")).as("cosine"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      rerank.withColumn("rank", row_number().over(w)).where(col("rank") <= 5)
+      requireCandidates("s13", cand, 100, 100)
+      Similarity.rerank(cand, e, qs, "vec_id", "embedding", k = 5)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
         .orderBy(col("query_id").asc, col("rank").asc)
     }),
@@ -3436,20 +3325,8 @@ object PipelineQueries {
       // localCheckpoint: the size gate and the re-rank both consume the
       // candidate set; the pruned ADC scan must not run twice
       val cand = cand0.localCheckpoint()
-      val sizes = cand.groupBy("query_id").agg(count(lit(1)).as("n")).collect()
-      require(sizes.length == 10 && sizes.forall { r =>
-        r.getLong(1) >= 5L && r.getLong(1) <= 50L },
-        "s14: each query must hand 5..50 ADC candidates to the re-rank")
-      val rerank = cand
-        .join(corpus.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("nv")), Seq("neighbor_id"))
-        .join(broadcast(qs.select(col("vec_id").as("query_id"),
-          col("embedding").as("qv"))), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          VF.cosine(col("qv"), col("nv")).as("cosine"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      rerank.withColumn("rank", row_number().over(w)).where(col("rank") <= 5)
+      requireCandidates("s14", cand, 5, 50)
+      Similarity.rerank(cand, corpus, qs, "vec_id", "embedding", k = 5)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
         .orderBy(col("query_id").asc, col("rank").asc)
     }),
@@ -3473,7 +3350,7 @@ object PipelineQueries {
           col("embedding"),
           when(col("j") < 2, lit(1)).otherwise(lit(0)).as("label"))
       val corpus = e.unionByName(planted)
-      val (table, ivf, pq) = s15ServeIndex(s, dir, corpus)
+      val (table, ivf, pq) = s14ServeIndex(s, dir, corpus, "s15_ivfpq_filt", Seq("label"))
       val cand0 = PqIndex.adcCandidatesAssigned(s, table, qs, "vec_id",
         "embedding", ivf, pq, nprobe = 1, candidates = 50,
         attrFilter = Some(col("label") === 0))
@@ -3485,20 +3362,8 @@ object PipelineQueries {
       require(plan.contains("EqualTo(label,0)"),
         s"s15: label predicate did not reach the scan as a pushed filter:\n${plan.take(600)}")
       val cand = cand0.localCheckpoint()
-      val sizes = cand.groupBy("query_id").agg(count(lit(1)).as("n")).collect()
-      require(sizes.length == 10 && sizes.forall { r =>
-        r.getLong(1) >= 3L && r.getLong(1) <= 50L },
-        "s15: each query must hand 3..50 filtered ADC candidates to the re-rank")
-      val rerank = cand
-        .join(corpus.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("nv")), Seq("neighbor_id"))
-        .join(broadcast(qs.select(col("vec_id").as("query_id"),
-          col("embedding").as("qv"))), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          VF.cosine(col("qv"), col("nv")).as("cosine"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      rerank.withColumn("rank", row_number().over(w)).where(col("rank") <= 3)
+      requireCandidates("s15", cand, 3, 50)
+      Similarity.rerank(cand, corpus, qs, "vec_id", "embedding", k = 3)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
         .orderBy(col("query_id").asc, col("rank").asc)
     }),

@@ -156,6 +156,28 @@ object Q {
       s"${sel.get._1}/${sel.get._2} buckets for $probedCells probed cells")
   }
 
+  /** The candidate gate of two-stage ANN query `tag`: each of its 10
+    * planted queries hands between `min` and `max` candidates to the exact
+    * re-rank — a bounded re-rank is the point of the first stage.
+    */
+  def requireCandidates(tag: String, candidates: DataFrame, min: Long, max: Long): Unit = {
+    val sizes = candidates.groupBy("query_id").agg(count(lit(1)).as("n")).collect()
+    require(sizes.length == 10 && sizes.forall(r => r.getLong(1) >= min && r.getLong(1) <= max),
+      s"$tag: each query must hand ${if (min == max) s"exactly $min" else s"$min..$max"} " +
+        "candidates to the re-rank")
+  }
+
+  /** Query `tag`'s scratch dir for fixture `dir`, emptied and recreated:
+    * `<tag>_<hex of dir's hash>` under the JVM temp dir, so fixtures never
+    * share one and a stale run's files never leak into this one.
+    */
+  def scratchDir(tag: String, dir: String): java.nio.file.Path = {
+    val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"${tag}_${java.lang.Integer.toHexString(dir.hashCode)}")
+    graft.util.Fs.deleteRecursively(base)
+    java.nio.file.Files.createDirectories(base)
+  }
+
   /** `ORDER BY <all cols> NULLS FIRST` suffix for DuckDB oracle SQL. */
   def orderSql(cols: String*): String =
     "ORDER BY " + cols.map(c => s"$c NULLS FIRST").mkString(", ")

@@ -28,6 +28,18 @@ object TableRetention {
     (wh, wh.getFileSystem(spark.sparkContext.hadoopConfiguration))
   }
 
+  /** Names of the current database's tables and temp views matching the
+    * SHOW TABLES pattern `prefix*`, read straight from the session catalog:
+    * the same names as the public `spark.catalog` listing, but no Spark job
+    * (the public API collects its SHOW TABLES plan through one). Callers
+    * that need an exact prefix post-filter with `startsWith`: the pattern
+    * is case-insensitive and `|` in it means "or".
+    */
+  def tableNames(spark: SparkSession, prefix: String): Seq[String] = {
+    val catalog = spark.sessionState.catalog
+    catalog.listTables(catalog.getCurrentDatabase, prefix + "*").map(_.table)
+  }
+
   private val listeners =
     new java.util.concurrent.CopyOnWriteArrayList[String => Unit]()
 
@@ -74,8 +86,7 @@ object TableRetention {
       }
     // catalog entries first: dropping a managed table removes its location,
     // so the warehouse listing after it sees only ORPHAN locations
-    spark.catalog.listTables(spark.catalog.currentDatabase, prefix + "*")
-      .collect().map(_.name)
+    tableNames(spark, prefix)
       .foreach(t => retire("table", t)(spark.sql(s"DROP TABLE IF EXISTS `$t`")))
     val (wh, fs) = warehouse(spark)
     if (fs.exists(wh)) fs.globStatus(new Path(wh, prefix + "*")).foreach { st =>

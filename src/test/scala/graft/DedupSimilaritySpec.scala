@@ -427,13 +427,23 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("brute-force top-k matches manual cosine ranking") {
+    // ids 9 and 6 copy id 2's vector (an exact cosine tie) and sit ahead of
+    // it in row order: every path must rank the tie by lower neighbor_id
     val vecs = Seq(
+      (9L, Seq(0.9f, 0.1f, 0f)), (6L, Seq(0.9f, 0.1f, 0f)),
       (1L, Seq(1f, 0f, 0f)), (2L, Seq(0.9f, 0.1f, 0f)), (3L, Seq(0f, 1f, 0f)),
       (4L, Seq(0.8f, 0.2f, 0f)), (5L, Seq(0f, 0f, 1f)))
     val df = vecs.toDF("vec_id", "embedding")
-    val got = Similarity.bruteForceTopK(df, df.where($"vec_id" === 1), "vec_id", "embedding", k = 2)
-      .collect().map(r => (r.getLong(1), r.getInt(3)))
-    assert(got.toSeq == Seq((2L, 1), (4L, 2))) // by cosine to (1,0,0)
+    val q = df.where($"vec_id" === 1)
+    def ranks(top: org.apache.spark.sql.DataFrame) =
+      top.orderBy("rank").collect().map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank"))).toSeq
+    val expected = Seq((2L, 1), (6L, 2), (9L, 3), (4L, 4)) // by cosine to (1,0,0), ties by id
+    assert(ranks(Similarity.bruteForceTopK(df, q, "vec_id", "embedding", k = 4)) == expected)
+    val everyPair = df.where($"vec_id" =!= 1)
+      .select(lit(1L).as("query_id"), $"vec_id".as("neighbor_id"))
+    assert(ranks(Similarity.rerank(everyPair, df, q, "vec_id", "embedding", k = 4)) == expected)
+    val ivf = IvfIndex.train(df, "vec_id", "embedding", k = 2)
+    assert(ranks(IvfIndex.topK(df, q, "vec_id", "embedding", ivf, k = 4, nprobe = ivf.k)) == expected)
   }
 
   test("LSH top-k returns a subset of true candidates with exact cosines") {
@@ -1043,14 +1053,14 @@ class DedupSimilaritySpec extends SparkSpec {
       s"re-sync too late: only $tailChars of ${shared.length} shared chars align")
   }
 
-  test("d17FixedBatchProbe at the base fixture == the d17 query's survivors") {
+  test("d17Probe at the base fixture == the d17 query's survivors") {
     // the soak flatness leg must measure THE d17 probe, not a lookalike:
     // when the index dir and the batch dir coincide, the probe's output is
     // by construction the d17 query's survivor set
     val dir = "/root/testdata/sf0.001"
     val viaQuery = graft.SparkEntry.queries("d17_incremental_dedup")(spark, dir)
       .collect().map(_.getLong(0)).toSet
-    val viaProbe = graft.queries.PipelineQueries.d17FixedBatchProbe(spark, dir, dir)
+    val viaProbe = graft.queries.PipelineQueries.d17Probe(spark, dir, dir)
       .collect().map(_.getLong(0)).toSet
     assert(viaProbe == viaQuery,
       s"probe diverged from d17: only-query=${viaQuery.diff(viaProbe).take(5)} " +

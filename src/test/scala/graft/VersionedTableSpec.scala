@@ -231,4 +231,26 @@ class VersionedTableSpec extends SparkSpec {
     assert(swept.exists(_.endsWith(v2)) && !swept.exists(_.endsWith(v1)))
     graft.util.TableRetention.sweep(spark, "vtspec_")
   }
+
+  test("tableNames lists what the public catalog lists, temp views included") {
+    graft.util.TableRetention.sweep(spark, "vtspec_")
+    buildTable(Seq((1L, "a")))("vtspec_list_a")
+    buildTable(Seq((2L, "b")))("vtspec_list_b")
+    // a lookalike outside the `vtspec_` prefixes: `_` is no wildcard in a
+    // SHOW TABLES pattern
+    buildTable(Seq((3L, "c")))("vtspecxlist_c")
+    Seq(1L).toDF("id").createOrReplaceTempView("vtspec_list_view")
+    try {
+      val db = spark.catalog.currentDatabase
+      for (prefix <- Seq("vtspec_list", "vtspec_", "vtspecx")) {
+        val public = spark.catalog.listTables(db, prefix + "*").collect().map(_.name).toSet
+        assert(graft.util.TableRetention.tableNames(spark, prefix).toSet == public, prefix)
+      }
+      assert(graft.util.TableRetention.tableNames(spark, "vtspec_list").toSet ==
+        Set("vtspec_list_a", "vtspec_list_b", "vtspec_list_view"))
+    } finally {
+      spark.catalog.dropTempView("vtspec_list_view")
+      graft.util.TableRetention.sweep(spark, "vtspec")
+    }
+  }
 }
