@@ -240,11 +240,8 @@ object Maw {
       if (sql.isEmpty && fmt == Discovery.Jsonl)
         Some(Discovery.discover(cfg.inputs, cfg.discovery))
       else None
-    val bytePathRun = jsonlFiles.exists { files =>
-      graft.operators.JsonByteConcat.eligible(cfg,
-        sinkCfg.getOrElse(Sink.Config(output, fmt))) && files.nonEmpty &&
-        files.forall(f => f.format == Discovery.Jsonl && !Discovery.isGzip(f.path))
-    }
+    val bytePathRun = jsonlFiles.exists(graft.operators.JsonByteConcat.applies(cfg,
+      sinkCfg.getOrElse(Sink.Config(output, fmt)), _))
     val planned0 =
       if (bytePathRun)
         spark.read.json(jsonlFiles.get.map(_.path): _*)
@@ -522,6 +519,12 @@ object Maw {
           "--cluster-by/--zorder-by/--bloom-filter are not supported with --stream")
         require(a.rollByBytes.isEmpty,
           "--roll-by-bytes is not supported with --stream (use --roll-by-rows)")
+        // the stream sink writes with Sink.Config's defaults for these
+        val streamSink = Sink.Config(a.output, fmt)
+        require(a.naOut == streamSink.naString, "--na is not supported with --stream")
+        require(a.compression == streamSink.compression,
+          "--compression is not supported with --stream")
+        require(a.zstdLevel == streamSink.zstdLevel, "--zstd-level is not supported with --stream")
         // M1 progress (progress.rs:6-197): rows/s + totals per micro-batch,
         // plus per-source-file events under --json-logs (file list read from
         // the checkpoint's exactly-once source metadata log)

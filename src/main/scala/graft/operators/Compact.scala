@@ -347,20 +347,17 @@ object Compact {
     val w0 = clustered.write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecords.toString)
     val w = if (partCols.nonEmpty) w0.partitionBy(partCols: _*) else w0
+    // text trees keep their own options, not the sink's: compaction is a
+    // lossless rewrite, and the sink's CSV `emptyValue ""` would turn quoted
+    // empty strings into nulls
     fmt match {
       case Discovery.Parquet =>
-        w.option("compression",
-          if (compression == "none") "uncompressed" else compression).parquet(staging)
+        w.option("compression", graft.sinks.Sink.codec(fmt, compression)).parquet(staging)
       case Discovery.Orc =>
-        w.option("compression",
-          compression match { case "none" => "none"; case "gzip" => "zlib"; case c => c })
-          .orc(staging)
+        w.option("compression", graft.sinks.Sink.codec(fmt, compression)).orc(staging)
       case Discovery.Avro =>
         w.format(Discovery.AvroClass)
-          .option("compression", compression match {
-            case "none" => "uncompressed"; case "gzip" => "deflate"
-            case "zstd" => "zstandard"; case c => c
-          }).save(staging)
+          .option("compression", graft.sinks.Sink.codec(fmt, compression)).save(staging)
       case Discovery.Jsonl => w.option("ignoreNullFields", "false").json(staging)
       case Discovery.Csv => w.option("header", "true")
         .option("delimiter", delimiter).option("escape", "\"")

@@ -49,18 +49,6 @@ object Concat {
       skipCorrupt: Boolean = false,
       discovery: Discovery.Options = Discovery.Options())
 
-  def readOne(spark: SparkSession, f: InputFile, csv: CsvSource.CsvOptions): DataFrame =
-    f.format match {
-      case Csv     => CsvSource.read(spark, f.path, csv)
-      case Parquet => spark.read.parquet(f.path)
-      case Orc     => spark.read.orc(f.path)
-      case Avro    => spark.read.format(Discovery.AvroClass).load(f.path)
-      case Jsonl   => JsonSource.read(spark, f.path,
-        JsonSource.JsonOptions(inferRows = csv.inferRows))
-      case Xml     => XmlSource.read(spark, f.path,
-        XmlSource.XmlOptions(inferRows = csv.inferRows))
-    }
-
   /** `spark.read` reports every file-source column nullable RECURSIVELY
     * (`DataType.asNullable` is private): nested struct fields, array
     * elements (containsNull), and map values written as parquet `required`
@@ -158,24 +146,19 @@ object Concat {
     */
   def fileSchemasTry(spark: SparkSession, files: Seq[InputFile],
       csv: CsvSource.CsvOptions): Seq[scala.util.Try[org.apache.spark.sql.types.StructType]] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val conv = new org.apache.spark.sql.execution.datasources.parquet
       .ParquetToSparkSchemaConverter(spark.sessionState.conf)
     val conf = spark.sessionState.newHadoopConf()
-    Await.result(
-      Future.sequence(files.map(f => Future(scala.util.Try(f.format match {
-        case Csv     => CsvSource.resolveSchema(spark, f.path, csv)
-        case Jsonl   => JsonSource.resolveSchema(spark, f.path,
-          JsonSource.JsonOptions(inferRows = csv.inferRows)) // --infer-rows is format-shared
-        case Parquet => parquetFooterSchema(f.path, conv, conf)
-        case Orc     => orcFooterSchema(f.path, conf)
-        case Avro    => avroHeaderSchema(f.path, conf)
-        case Xml     => XmlSource.resolveSchema(spark, f.path,
-          XmlSource.XmlOptions(inferRows = csv.inferRows))
-      })))),
-      Duration.Inf)
+    graft.util.Par.map(files)(f => scala.util.Try(f.format match {
+      case Csv     => CsvSource.resolveSchema(spark, f.path, csv)
+      case Jsonl   => JsonSource.resolveSchema(spark, f.path,
+        JsonSource.JsonOptions(inferRows = csv.inferRows)) // --infer-rows is format-shared
+      case Parquet => parquetFooterSchema(f.path, conv, conf)
+      case Orc     => orcFooterSchema(f.path, conf)
+      case Avro    => avroHeaderSchema(f.path, conf)
+      case Xml     => XmlSource.resolveSchema(spark, f.path,
+        XmlSource.XmlOptions(inferRows = csv.inferRows))
+    }))
   }
 
   /** One multi-path scan for a group of same-schema files. */

@@ -3,6 +3,7 @@ package graft.operators
 import graft.sinks.Sink
 import graft.sources.CsvSource
 import graft.sources.Discovery.{Csv, InputFile}
+import graft.util.Par
 import java.io.{BufferedInputStream, InputStream, OutputStream}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -43,11 +44,11 @@ object CsvByteConcat {
   private val Lf = '\n'.toByte
   private val Cr = '\r'.toByte
 
-  /** Static eligibility: option combinations that force the record path. */
+  /** Static eligibility: option combinations that force the record path.
+    * Beyond the shared byte-path gate, the parser and NA rules below.
+    */
   def eligible(cfg: Concat.Config, sink: Sink.Config): Boolean =
-    cfg.include.isEmpty && cfg.exclude.isEmpty && cfg.renames.isEmpty &&
-      !cfg.skipCorrupt && // a byte copy would propagate corrupt blocks verbatim
-      sink.format == Csv &&
+    BytePromote.eligible(cfg, sink, Csv) &&
       // the byte path is value-identical to the ALL-STRING typed plan; with
       // type inference on, the typed fallback re-renders values ("007"->7,
       // "1e3"->1000.0), so only fire when the fallback would be all-string
@@ -61,9 +62,6 @@ object CsvByteConcat {
       sink.delimiter == cfg.csv.delimiter &&
       cfg.csv.quote == "\"" &&
       cfg.csv.encoding.equalsIgnoreCase("UTF-8") &&
-      sink.rollByRows.isEmpty && sink.rollByBytes.isEmpty &&
-      // layout options re-shape rows/files — typed path only
-      sink.partitionBy.isEmpty && sink.clusterBy.isEmpty && sink.zorderBy.isEmpty &&
       // a non-empty output NA string means EMPTY source fields must be
       // re-rendered (null -> naString) — not a pass-through; and the scanner
       // needs at least one NA value (maxNa sizing) without CSV
@@ -81,30 +79,15 @@ object CsvByteConcat {
     */
   def tryRun(spark: SparkSession, files: Seq[InputFile], cfg: Concat.Config,
       sink: Sink.Config): Option[Map[String, Any]] = {
-    // gz inputs carry compressed bytes — only the typed path (which lets
-    // the Spark scan decompress) is value-faithful. (A gz->gz byte concat
-    // WOULD be valid — concatenated gzip members are a legal stream — but
-    // compressed output is rejected at the CLI, so the case can't arise.)
-    if (!eligible(cfg, sink) || files.isEmpty || files.exists(_.format != Csv) ||
-        files.exists(f => graft.sources.Discovery.isGzip(f.path)))
-      return None
+    if (!eligible(cfg, sink) || !BytePromote.copyable(files, Csv)) return None
     val hconf = spark.sparkContext.hadoopConfiguration
     // driver pre-flight: first line of every file must be byte-identical
-    // (then no renaming/reordering/widening is possible) and BOM-free.
-    // Concurrent like Concat.planFor — serial open+read round trips would
-    // add O(files) x store-latency dead time before any task launches
-    val headers = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(files.map { f =>
-        Future {
-          val p = new Path(f.path)
-          val fs = p.getFileSystem(hconf)
-          val in = new BufferedInputStream(fs.open(p), 64 * 1024)
-          try readLine(in) finally in.close()
-        }
-      }), Duration.Inf)
+    // (then no renaming/reordering/widening is possible) and BOM-free
+    val headers = Par.map(files) { f =>
+      val p = new Path(f.path)
+      val fs = p.getFileSystem(hconf)
+      val in = new BufferedInputStream(fs.open(p), 64 * 1024)
+      try readLine(in) finally in.close()
     }
     val header = headers.head
     if (header == null || header.isEmpty) return None
@@ -126,37 +109,42 @@ object CsvByteConcat {
     val naOut = sink.naString
     val bufBytes = sink.writerBufferBytes
     val csvOpts = cfg.csv
-
-    val (results, bytesWritten) = if (sink.singleFile) {
-      // driver loop into ONE merged file (headerless bodies after the one
-      // header). A dirty file is found before any of its bytes reach the
-      // merged stream: a validate pass into a discarding stream, then the
-      // clean copy or the record fallback.
-      BytePromote.writeSingleFile(hconf, sink.path, ".csv", files.map(_.path),
-        bufBytes, header = Some(header)) { (fs, p, out) =>
-        def copyClean(o: OutputStream): Option[Long] =
-          opened(fs, p) { in => skipLine(in); scanAndCopy(in, o, delim, naBytes, width) }
-        if (copyClean(OutputStream.nullOutputStream()).isEmpty)
-          opened(fs, p)(parseAndRender(_, out, csvOpts, naOut, width))
-        else copyClean(out).getOrElse(
-          throw new java.io.IOException(s"$p changed while it was being copied"))
+    val single = sink.singleFile
+    // The closure is shipped to tasks, so it calls object methods only.
+    Some(BytePromote.run(spark, sink, ".csv", files.map(_.path)) { (conf, staged) =>
+      def open(): OutputStream = {
+        val o = BytePromote.create(conf, staged, bufBytes)
+        o.write(header); o.write(Lf.toInt); o
       }
-    } else {
-      // one task per file into its own part (header first): validate +
-      // copy; if dirty, rewrite the whole part record-by-record (reopening
-      // truncates it cleanly because the first stream is closed first).
-      // The closure is shipped to tasks, so it calls object methods only.
-      BytePromote.writeParts(spark, sink.path, ".csv", files.map(_.path), bufBytes) {
-        (fs, p, openPart) =>
+      def copyClean(fs: FileSystem, p: Path, o: OutputStream): Option[Long] =
+        opened(fs, p) { in => skipLine(in); scanAndCopy(in, o, delim, naBytes, width) }
+      def rewrite(fs: FileSystem, p: Path, o: OutputStream): Long =
+        opened(fs, p)(parseAndRender(_, o, csvOpts, naOut, width))
+      if (single) new BytePromote.Staged {
+        // ONE merged file, headerless bodies after the one header. A dirty
+        // file is found before any of its bytes reach the merged stream: a
+        // validate pass into a discarding stream, then the clean copy or
+        // the record fallback.
+        private val out = open()
+        def append(fs: FileSystem, p: Path): Long =
+          if (copyClean(fs, p, OutputStream.nullOutputStream()).isEmpty) rewrite(fs, p, out)
+          else copyClean(fs, p, out).getOrElse(
+            throw new java.io.IOException(s"$p changed while it was being copied"))
+        def close(): Unit = out.close()
+      } else new BytePromote.Staged {
+        // one input per part: validate + copy in one pass; if dirty, rewrite
+        // the whole part record-by-record (reopening truncates it cleanly
+        // because the first stream is closed first)
+        def append(fs: FileSystem, p: Path): Long = {
           def withOut[A](f: OutputStream => A): A = {
-            val o = openPart()
-            try { o.write(header); o.write(Lf.toInt); f(o) } finally o.close()
+            val o = open()
+            try f(o) finally o.close()
           }
-          withOut(out => opened(fs, p) { in => skipLine(in); scanAndCopy(in, out, delim, naBytes, width) })
-            .getOrElse(withOut(out => opened(fs, p)(parseAndRender(_, out, csvOpts, naOut, width))))
+          withOut(copyClean(fs, p, _)).getOrElse(withOut(rewrite(fs, p, _)))
+        }
+        def close(): Unit = ()
       }
-    }
-    Some(BytePromote.metrics(results, bytesWritten, i => files(i).path))
+    })
   }
 
   /** Read one line's bytes (without LF / trailing CR); null on empty EOF. */

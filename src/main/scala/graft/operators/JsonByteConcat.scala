@@ -32,25 +32,26 @@ import org.apache.spark.sql.SparkSession
   * against a full-inference read of the inputs, not the sampled typed plan
   * (Maw.verifyOutput).
   *
-  * Commit protocol: [[BytePromote]], shared with CsvByteConcat — tasks
-  * write ATTEMPT-UNIQUE files in the temp dir, the driver promotes exactly
-  * the attempts it collected (never a final path from a task), so chained
-  * concats of a previous run's rolled output can't truncate their own
-  * inputs, and a zombie duplicate attempt can't interleave with the
+  * Commit protocol: [[BytePromote]], shared with the CSV and Parquet paths
+  * — tasks write ATTEMPT-UNIQUE files in the temp dir, the driver promotes
+  * exactly the attempts it collected (never a final path from a task), so
+  * chained concats of a previous run's rolled output can't truncate their
+  * own inputs, and a zombie duplicate attempt can't interleave with the
   * winner's stream.
   */
 object JsonByteConcat {
 
   private val Lf = '\n'.toByte
 
-  /** Static eligibility: any reshaping option forces the typed path. */
+  /** Static eligibility: any reshaping option forces the typed path — the
+    * shared byte-path gate, with nothing JSONL-specific to add.
+    */
   def eligible(cfg: Concat.Config, sink: Sink.Config): Boolean =
-    cfg.include.isEmpty && cfg.exclude.isEmpty && cfg.renames.isEmpty &&
-      !cfg.skipCorrupt && // a byte copy would propagate corrupt blocks verbatim
-      sink.format == Jsonl &&
-      sink.rollByRows.isEmpty && sink.rollByBytes.isEmpty &&
-      // layout options re-shape rows/files — typed path only
-      sink.partitionBy.isEmpty && sink.clusterBy.isEmpty && sink.zorderBy.isEmpty
+    BytePromote.eligible(cfg, sink, Jsonl)
+
+  /** Whether [[tryRun]] copies `files` instead of declining. */
+  def applies(cfg: Concat.Config, sink: Sink.Config, files: Seq[InputFile]): Boolean =
+    eligible(cfg, sink) && BytePromote.copyable(files, Jsonl)
 
   /** Run the byte path if eligible and every input is JSONL. Returns write
     * metrics like [[Sink.write]]; None = caller falls back to the typed
@@ -58,22 +59,15 @@ object JsonByteConcat {
     */
   def tryRun(spark: SparkSession, files: Seq[InputFile], cfg: Concat.Config,
       sink: Sink.Config): Option[Map[String, Any]] = {
-    if (!eligible(cfg, sink) || files.isEmpty || files.exists(_.format != Jsonl) ||
-        files.exists(f => graft.sources.Discovery.isGzip(f.path))) // see CsvByteConcat
-      return None
-    val hconf = spark.sparkContext.hadoopConfiguration
+    if (!applies(cfg, sink, files)) return None
     val bufBytes = sink.writerBufferBytes
-    val (results, bytesWritten) = if (sink.singleFile) {
-      BytePromote.writeSingleFile(hconf, sink.path, ".jsonl", files.map(_.path),
-        bufBytes, header = None)(copyFile)
-    } else {
-      BytePromote.writeParts(spark, sink.path, ".jsonl", files.map(_.path), bufBytes) {
-        (fs, p, openPart) =>
-          val out = openPart()
-          try copyFile(fs, p, out) finally out.close()
+    Some(BytePromote.run(spark, sink, ".jsonl", files.map(_.path)) { (conf, staged) =>
+      val out = BytePromote.create(conf, staged, bufBytes)
+      new BytePromote.Staged {
+        def append(fs: FileSystem, p: Path): Long = copyFile(fs, p, out)
+        def close(): Unit = out.close()
       }
-    }
-    Some(BytePromote.metrics(results, bytesWritten, i => files(i).path))
+    })
   }
 
   private def copyFile(fs: FileSystem, p: Path, out: OutputStream): Long = {

@@ -2,9 +2,11 @@ package graft.operators
 
 import graft.sinks.Sink
 import graft.sources.Discovery.{InputFile, Parquet}
-import org.apache.hadoop.fs.Path
+import graft.util.Par
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
@@ -29,7 +31,7 @@ import scala.jdk.CollectionConverters._
   * property is the physical compression codec (a storage detail, exactly
   * like the CSV path preserving gratuitous source quoting).
   *
-  * Scale shape: schema/row-count pre-flight reads FOOTERS only (KB per
+  * Scale shape: the schema pre-flight reads FOOTERS only (KB per
   * file, driver-side — the same per-file metadata cost Discovery's listing
   * already pays). Multi-file output copies one input per task across the
   * cluster; single-file output is an inherent single-writer step (the
@@ -44,46 +46,32 @@ object ParquetByteConcat {
   private val RowGroupSize = 128L * 1024 * 1024
   private val MaxPadding = 8 * 1024 * 1024
 
-  /** Static eligibility: option combinations that force the typed path. */
+  /** Static eligibility: option combinations that force the typed path.
+    * Beyond the shared byte-path gate, bloom filters: a row-group copy
+    * would silently drop the requested filters.
+    */
   def eligible(cfg: Concat.Config, sink: Sink.Config): Boolean =
-    cfg.include.isEmpty && cfg.exclude.isEmpty && cfg.renames.isEmpty &&
-      !cfg.skipCorrupt && // a byte copy would propagate corrupt blocks verbatim
-      sink.format == Parquet &&
-      sink.rollByRows.isEmpty && sink.rollByBytes.isEmpty &&
-      // layout options re-shape rows/files — typed path only (a byte copy
-      // would silently drop the requested clustering/bloom layout)
-      sink.partitionBy.isEmpty && sink.clusterBy.isEmpty &&
-      sink.zorderBy.isEmpty && sink.bloomFilterCols.isEmpty
+    BytePromote.eligible(cfg, sink, Parquet) && sink.bloomFilterCols.isEmpty
 
   /** Run the row-group copy if eligible; None = caller falls back to the
     * typed pipeline. Returns write metrics like [[Sink.write]].
     */
   def tryRun(spark: SparkSession, files: Seq[InputFile], cfg: Concat.Config,
       sink: Sink.Config): Option[Map[String, Any]] = {
-    if (!eligible(cfg, sink) || files.isEmpty || files.exists(_.format != Parquet))
-      return None
+    if (!eligible(cfg, sink) || !BytePromote.copyable(files, Parquet)) return None
     val hconf = spark.sparkContext.hadoopConfiguration
-    // footer-only pre-flight: schemas must be identical and already sorted.
-    // Concurrent like Concat.planFor — serial footer reads would add
-    // O(files) x store-latency dead time before any task launches
-    val footers = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(files.map { f =>
-        Future {
-          val inFile = HadoopInputFile.fromPath(new Path(f.path), hconf)
-          val r = HConf.openParquet(inFile)
-          try {
-            val md = r.getFooter.getFileMetaData
-            (md.getSchema, r.getFooter.getBlocks.asScala.map(_.getRowCount).sum,
-              inFile.getLength, md.getKeyValueMetaData)
-          } finally r.close()
-        }
-      }), Duration.Inf)
+    // footer-only pre-flight: schemas must be identical and already sorted
+    val footers = Par.map(files) { f =>
+      val r = HConf.openParquet(HadoopInputFile.fromPath(new Path(f.path), hconf))
+      try {
+        val md = r.getFooter.getFileMetaData
+        (md.getSchema, md.getKeyValueMetaData.asScala.toMap)
+      } finally r.close()
     }
     val schema = footers.head._1
     if (!footers.forall(_._1 == schema)) return None
+    val names = schema.getFields.asScala.map(_.getName)
+    if (names.sorted != names || names.distinct != names) return None
     // carry footer key-value metadata (e.g. Spark's
     // org.apache.spark.sql.parquet.row.metadata) ONLY where every input
     // agrees on it: parquet MessageType equality does not imply Catalyst
@@ -93,92 +81,30 @@ object ParquetByteConcat {
     // Spark schema entry just makes readers infer from the parquet schema,
     // which is verified identical. The copy marker is always added.
     val footerMeta: Map[String, String] = {
-      val maps = footers.map(_._4.asScala.toMap)
+      val maps = footers.map(_._2)
       val shared = maps.head.filter { case (k, v) => maps.forall(_.get(k).contains(v)) }
       shared + ("graft.concat" -> "row-group-copy")
     }
-    val names = schema.getFields.asScala.map(_.getName)
-    if (names.sorted != names || names.distinct != names) return None
-    val totalRows = footers.map(_._2).sum
-    val totalBytes = footers.map(_._3).sum
-
-    val outBase = sink.path.stripSuffix(".parquet")
-    // COMMIT PROTOCOL (same as CsvByteConcat): write into a temp location
-    // first, promote by rename after everything is materialized, clean
-    // stale parts LAST. Writing the final paths directly would truncate a
-    // pre-existing output before the new one exists (single-file mode even
-    // truncated an INPUT when the output path was among the inputs), and
-    // rolled task writes would race speculative duplicate attempts.
-    val tmpDir = BytePromote.freshTmpDir(hconf, sink.path)
-    val outFs = new Path(sink.path).getFileSystem(hconf)
-    Option(new Path(sink.path).getParent).foreach(outFs.mkdirs)
-    val perFileSec: Seq[Double] = if (sink.singleFile) {
-      // one output file = one writer (the reference's single-file contract):
-      // the driver appends each input's row groups in discovery order — no
-      // Spark job, no decode; storage-bound
-      val merged = new Path(tmpDir, "merged.parquet")
-      val out = HadoopOutputFile.fromPath(merged, hconf)
-      val w = new ParquetFileWriter(out, schema,
+    // COMMIT PROTOCOL: BytePromote's, shared with the CSV and JSONL paths.
+    // Each staged file gets one writer: the driver's single merged file
+    // appends every input's row groups in discovery order (no Spark job, no
+    // decode; storage-bound), a task's part appends its one input. The
+    // footer is written only once every append succeeded.
+    val schemaStr = schema.toString // MessageType is not serializable
+    Some(BytePromote.run(spark, sink, ".parquet", files.map(_.path)) { (conf, staged) =>
+      val w = new ParquetFileWriter(HadoopOutputFile.fromPath(staged, conf),
+        MessageTypeParser.parseMessageType(schemaStr),
         ParquetFileWriter.Mode.OVERWRITE, RowGroupSize, MaxPadding)
-      w.start()
-      val secs = files.map { f =>
-        val t0 = System.nanoTime()
-        appendTo(w, f.path, hconf)
-        (System.nanoTime() - t0) / 1e9
-      }
-      w.end(footerMeta.asJava)
-      Sink.replaceMove(outFs, merged, new Path(sink.path))
-      Sink.deleteStaleParts(hconf, sink.path, ".parquet", keepBelow = 0)
-      secs
-    } else {
-      // one task per input file, written to an ATTEMPT-UNIQUE temp part
-      // (the driver promotes exactly the attempts it collected); tasks
-      // rebuild the driver's Hadoop conf from a broadcast snapshot so
-      // runtime spark.hadoop.* settings / store credentials survive
-      val schemaStr = schema.toString
-      val hconfBc = spark.sparkContext.broadcast(HConf.snapshot(hconf))
-      val results = spark.sparkContext
-        .parallelize(files.map(_.path).zipWithIndex, files.size)
-        .map { case (path, idx) =>
-          val t0 = System.nanoTime()
-          val conf = HConf.restore(hconfBc.value)
-          val sch = org.apache.parquet.schema.MessageTypeParser.parseMessageType(schemaStr)
-          val attemptName =
-            f"part-$idx%05d-a${org.apache.spark.TaskContext.get().taskAttemptId()}%d.parquet"
-          val out = HadoopOutputFile.fromPath(new Path(tmpDir, attemptName), conf)
-          val w = new ParquetFileWriter(out, sch,
-            ParquetFileWriter.Mode.OVERWRITE, RowGroupSize, MaxPadding)
-          w.start()
-          appendTo(w, path, conf)
-          w.end(footerMeta.asJava)
-          (idx, attemptName, (System.nanoTime() - t0) / 1e9)
+      new BytePromote.Staged {
+        override def start(): Unit = w.start()
+        // copy every row group of `in` byte-for-byte
+        def append(fs: FileSystem, in: Path): Long = {
+          val r = HConf.openParquet(HadoopInputFile.fromPath(in, conf))
+          try { r.appendTo(w); r.getRecordCount } finally r.close()
         }
-        .collect()
-      results.foreach { case (idx, name, _) =>
-        Sink.replaceMove(outFs, new Path(tmpDir, name),
-          new Path(f"$outBase%s-$idx%04d.parquet"))
+        override def finish(): Unit = w.end(footerMeta.asJava)
+        def close(): Unit = w.close()
       }
-      Sink.deleteStaleParts(hconf, sink.path, ".parquet", keepBelow = files.size)
-      results.sortBy(_._1).map(_._3).toSeq
-    }
-    outFs.delete(new Path(tmpDir), true)
-    val bytesWritten =
-      if (sink.singleFile) outFs.getFileStatus(new Path(sink.path)).getLen
-      else files.indices
-        .map(i => outFs.getFileStatus(new Path(f"$outBase%s-$i%04d.parquet")).getLen).sum
-    // per-file completion records (rows/bytes from the footer pre-flight)
-    val perFile = files.zipWithIndex.map { case (f, i) =>
-      Map[String, Any]("path" -> f.path, "rows" -> footers(i)._2,
-        "bytes" -> footers(i)._3, "elapsed_sec" -> perFileSec(i))
-    }
-    Some(Map("rows_written" -> totalRows, "bytes_read" -> totalBytes,
-      "bytes_written" -> bytesWritten, "files" -> perFile))
-  }
-
-  /** Copy every row group of `path` into `w` byte-for-byte. */
-  private def appendTo(w: ParquetFileWriter, path: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val r = HConf.openParquet(HadoopInputFile.fromPath(new Path(path), conf))
-    try r.appendTo(w) finally r.close()
+    })
   }
 }

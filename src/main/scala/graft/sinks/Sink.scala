@@ -4,22 +4,28 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
 import scala.jdk.CollectionConverters._
 
-/** Output side of the reference pipeline.
+/** Output side of the reference pipeline: one writer definition per format
+  * and one promote, shared by every write graft makes.
   *
-  *   - CSV sink: header once, `--na` string for nulls (default empty,
-  *     writer_csv.rs:33), delimiter/quote (`/root/reference/src/writer_csv.rs:38-126`)
-  *   - Parquet sink: compression none/snappy/gzip/zstd (cli.rs:79-86),
-  *     128MB row groups, stats on (`writer_parquet.rs:33-57` — the reference's
-  *     data write is a stub `:77-96`; ours is real)
+  *   - [[writer]] is the one definition of how each format is written (the
+  *     reference's writer_csv / writer_parquet): CSV's header, `--na`
+  *     string (default empty, writer_csv.rs:33), delimiter and RFC 4180
+  *     quoting (writer_csv.rs:38-126); Parquet's compression
+  *     none/snappy/gzip/zstd (cli.rs:79-86), zstd level and 128MB row
+  *     groups (`writer_parquet.rs:33-57` — the reference's data write is a
+  *     stub `:77-96`; ours is real); ORC, Avro, JSONL and XML alongside. The batch write below and the streaming sink
+  *     (graft.streaming.StreamingConcat) both write through it.
   *   - Rolling output `--roll-by-rows` (cli.rs:70-77, unimplemented there) via
   *     `maxRecordsPerFile`; `--roll-by-bytes` approximated from sampled row size
   *   - Single-file output contract (`-o out.csv` = one file): `coalesce(1)` +
   *     part-file promotion. NOTE: single-file output is inherently a
   *     one-writer bottleneck; at cluster scale prefer `singleFile=false`
-  *     (rolled parts). The byte fast paths (graft.operators.CsvByteConcat,
-  *     JsonByteConcat, ParquetByteConcat) never reach this sink: they write
-  *     a single file on the driver with no Spark job, and rolled parts with
-  *     one task per input.
+  *     (rolled parts).
+  *   - [[promoteStaged]] is the one rename of staged files onto the output
+  *     contract, for this sink and for the byte fast paths
+  *     (graft.operators.CsvByteConcat, JsonByteConcat, ParquetByteConcat),
+  *     which never run this sink's write: they copy a single file on the
+  *     driver with no Spark job, and rolled parts with one task per input.
   */
 object Sink {
 
@@ -167,6 +173,11 @@ object Sink {
     // sampling action
     val df = obs.map(o => df2.observe(o, org.apache.spark.sql.functions.count(
       org.apache.spark.sql.functions.lit(1)).as("rows_written"))).getOrElse(df2)
+    val (format, options) = writer(cfg)
+    val hconf = df0.sparkSession.sparkContext.hadoopConfiguration
+    val ext = extFor(cfg.format)
+    val tmpDir = new org.apache.hadoop.fs.Path(cfg.path + ".spark-out")
+    val rolled = maxRecords.map(df.writeConfRows).getOrElse(df.write)
     if (cfg.partitionBy.nonEmpty) {
       // partitioned layout: a directory tree is the contract, so no
       // single-file promotion and no rolled-part renaming. maxRecordsPerFile
@@ -175,9 +186,8 @@ object Sink {
       // writing straight to cfg.path with overwrite would destroy the prior
       // output at JOB START, so a crash mid-write leaves neither old nor new
       // tree at the contract path.
-      val ptmp = cfg.path + ".spark-out"
       val target = new org.apache.hadoop.fs.Path(cfg.path)
-      val fs = target.getFileSystem(df0.sparkSession.sparkContext.hadoopConfiguration)
+      val fs = target.getFileSystem(hconf)
       // fail fast BEFORE the (possibly hours-long) write: if the contract
       // path holds a directory that doesn't look like our output, the
       // promote below would refuse anyway — surface that now
@@ -186,77 +196,30 @@ object Sink {
           s"refusing to overwrite ${cfg.path}: the existing directory does not " +
             "look like graft output (no _SUCCESS, part-* files, or col=value " +
             "subdirectories) — move it aside or choose another -o path")
-      val w0 = maxRecords.map(df.writeConfRows).getOrElse(df.write)
-        .partitionBy(cfg.partitionBy: _*).mode("overwrite")
-      cfg.format match {
-        case graft.sources.Discovery.Csv =>
-          w0.option("header", "true").option("delimiter", cfg.delimiter)
-            .option("nullValue", cfg.naString).option("emptyValue", "")
-            .option("escape", "\"")
-            .option("ignoreLeadingWhiteSpace", "false")
-            .option("ignoreTrailingWhiteSpace", "false")
-            .csv(ptmp)
-        case graft.sources.Discovery.Parquet =>
-          withBloom(w0.option("compression", if (cfg.compression == "none") "uncompressed" else cfg.compression)
-            .option("parquet.compression.codec.zstd.level", cfg.zstdLevel.toString)
-            .option("parquet.block.size", (128L * 1024 * 1024).toString), cfg)
-            .parquet(ptmp)
-        case graft.sources.Discovery.Orc =>
-          orcWriter(w0, cfg).orc(ptmp)
-        case graft.sources.Discovery.Avro =>
-          avroWriter(w0, cfg).save(ptmp)
-        case graft.sources.Discovery.Jsonl =>
-          jsonWriter(w0, cfg).json(ptmp)
-        case graft.sources.Discovery.Xml =>
-          xmlWriter(w0, cfg).save(ptmp)
-      }
-      replaceMove(fs, new org.apache.hadoop.fs.Path(ptmp), target)
-      // stale rolled parts from an earlier non-partitioned run at the same
-      // contract path would survive next to the new directory and confuse
-      // readBack/--verify; sweep them like the file paths sweep stale output
-      val ext = extFor(cfg.format)
-      deleteStaleParts(df0.sparkSession.sparkContext.hadoopConfiguration,
-        cfg.path, ext, keepBelow = 0)
-      return
+      rolled.partitionBy(cfg.partitionBy: _*).mode("overwrite")
+        .format(format).options(options).save(tmpDir.toString)
+      // the whole tree is the one staged entry; the stale-part sweep also
+      // clears rolled parts an earlier non-partitioned run left at the same
+      // contract path, which would confuse readBack/--verify
+      promoteStaged(hconf, cfg.path, ext, tmpDir, Seq(tmpDir), single = true)
+    } else {
+      // clusterBy keeps one file per range partition (coalesce(1) would fold
+      // the ranges back together and lose the within-file sort): the output
+      // promotes as rolled -NNNN parts in range order
+      val out = if (cfg.singleFile && cfg.rollByRows.isEmpty && cfg.rollByBytes.isEmpty
+          && cfg.clusterBy.isEmpty && cfg.zorderBy.isEmpty)
+        df.coalesce(1).write else rolled
+      out.mode("overwrite").format(format).options(options).save(tmpDir.toString)
+      // Hadoop FS API throughout (NOT java.nio): the write itself runs on any
+      // Hadoop filesystem, so the rename step must too — java.nio on an
+      // hdfs:///s3a:// output would fail AFTER a successful write, stranding
+      // the .spark-out dir with no output at the contract path
+      val parts = tmpDir.getFileSystem(hconf).listStatus(tmpDir)
+        .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
+        .map(_.getPath).sortBy(_.getName).toSeq
+      promoteStaged(hconf, cfg.path, ext, tmpDir, parts,
+        single = parts.size == 1 && cfg.singleFile)
     }
-    val rolled = maxRecords.map(df.writeConfRows).getOrElse(df.write)
-    // clusterBy keeps one file per range partition (coalesce(1) would fold
-    // the ranges back together and lose the within-file sort): the output
-    // promotes as rolled -NNNN parts in range order
-    val out = if (cfg.singleFile && cfg.rollByRows.isEmpty && cfg.rollByBytes.isEmpty
-        && cfg.clusterBy.isEmpty && cfg.zorderBy.isEmpty)
-      df.coalesce(1).write else rolled
-    val tmpDir = cfg.path + ".spark-out"
-    cfg.format match {
-      case graft.sources.Discovery.Csv =>
-        out.mode("overwrite")
-          .option("header", "true")
-          .option("delimiter", cfg.delimiter)
-          .option("nullValue", cfg.naString)
-          .option("emptyValue", "")
-          // RFC 4180 output: double embedded quotes (not backslash-escape)
-          // and keep field whitespace — Spark's write defaults TRIM unquoted
-          // whitespace, which would silently alter values on a pure concat
-          .option("escape", "\"")
-          .option("ignoreLeadingWhiteSpace", "false")
-          .option("ignoreTrailingWhiteSpace", "false")
-          .csv(tmpDir)
-      case graft.sources.Discovery.Parquet =>
-        withBloom(out.mode("overwrite")
-          .option("compression", if (cfg.compression == "none") "uncompressed" else cfg.compression)
-          .option("parquet.compression.codec.zstd.level", cfg.zstdLevel.toString) // writer_parquet.rs:53
-          .option("parquet.block.size", (128L * 1024 * 1024).toString), cfg) // writer_parquet.rs:35
-          .parquet(tmpDir)
-      case graft.sources.Discovery.Orc =>
-        orcWriter(out.mode("overwrite"), cfg).orc(tmpDir)
-      case graft.sources.Discovery.Avro =>
-        avroWriter(out.mode("overwrite"), cfg).save(tmpDir)
-      case graft.sources.Discovery.Jsonl =>
-        jsonWriter(out.mode("overwrite"), cfg).json(tmpDir)
-      case graft.sources.Discovery.Xml =>
-        xmlWriter(out.mode("overwrite"), cfg).save(tmpDir)
-    }
-    promote(tmpDir, cfg, df0.sparkSession.sparkContext.hadoopConfiguration)
   }
 
   /** Output-path extension per format — the promote/stale-sweep/readBack
@@ -271,71 +234,73 @@ object Sink {
     case graft.sources.Discovery.Xml     => ".xml"
   }
 
-  /** ORC sink options: the `--compression` knob maps onto ORC's codec set —
-    * ORC spells gzip's deflate "zlib", and the zstd level rides ORC's own
-    * conf key. Same 128 MB stripe target as the parquet sink's row groups.
+  /** The one definition of how each format is written: the writer's format
+    * name and options, for the batch `DataFrameWriter` and the streaming
+    * `DataStreamWriter` alike.
+    *
+    *   - CSV: header once, the `--na` string for nulls (writer_csv.rs:33),
+    *     RFC 4180 output — doubled embedded quotes, not backslash-escape —
+    *     and field whitespace kept: Spark's write defaults TRIM unquoted
+    *     whitespace, which would silently alter values on a pure concat.
+    *   - Parquet: `--compression` codec, `--zstd-level`
+    *     (writer_parquet.rs:53), 128 MB row groups (writer_parquet.rs:35),
+    *     per-column bloom filters ([[Config.bloomFilterCols]]).
+    *   - ORC: the same codec, zstd level, 128 MB stripe target and bloom
+    *     filters, through ORC's own keys.
+    *   - Avro: the codec only. The zstd LEVEL rides a session conf, not a
+    *     writer option, so it is not plumbed (the level knob stays
+    *     parquet's and orc's contract); the container format carries no
+    *     bloom filters.
+    *   - JSONL: uncompressed text like the CSV sink (a `.gz` payload behind
+    *     a `.jsonl` name would break the `-o out.jsonl` promotion contract).
+    *     Nulls are written EXPLICITLY (`"k":null`): an all-null column must
+    *     survive the round trip as a key, not vanish from the schema.
+    *   - XML: uncompressed text; `rowTag` is
+    *     [[graft.sources.XmlSource.XmlOptions]]'s default so the output
+    *     reads back through the same source without configuration. Nulls
+    *     write as ABSENT elements, so an all-null column (as in CSV) carries
+    *     no type evidence.
     */
-  private def orcWriter(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-      cfg: Config): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
-    withBloom(w.option("compression", cfg.compression match {
-        case "none" => "none"
-        case "gzip" => "zlib"
-        case other  => other // snappy | zstd | lz4 pass through
-      })
-      .option("orc.compression.zstd.level", cfg.zstdLevel.toString)
-      .option("orc.stripe.size", (128L * 1024 * 1024).toString), cfg)
-
-  /** Avro sink options: the `--compression` knob maps onto Avro's codec
-    * set — gzip's algorithm is spelled "deflate", zstd "zstandard"; snappy
-    * passes through. The zstd LEVEL rides a session conf, not a writer
-    * option, so it is deliberately not plumbed here (the parquet/orc level
-    * knob stays those formats' contract). No bloom filters in the Avro
-    * container format — row format, no data-skipping metadata.
-    */
-  private def avroWriter(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-      cfg: Config): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
-    w.format(graft.sources.Discovery.AvroClass)
-      .option("compression", cfg.compression match {
-        case "none" => "uncompressed"
-        case "gzip" => "deflate"
-        case "zstd" => "zstandard"
-        case other  => other // snappy | deflate | xz pass through
-      })
-
-  /** Per-column writer-side bloom filters (see [[Config.bloomFilterCols]]). */
-  private def withBloom(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-      cfg: Config): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
+  private[graft] def writer(cfg: Config): (String, Map[String, String]) = {
+    import graft.sources.Discovery._
+    val rowGroup = (128L * 1024 * 1024).toString
     cfg.format match {
-      case graft.sources.Discovery.Parquet =>
-        cfg.bloomFilterCols.foldLeft(w)((acc, c) =>
-          acc.option(s"parquet.bloom.filter.enabled#$c", "true"))
-      case graft.sources.Discovery.Orc if cfg.bloomFilterCols.nonEmpty =>
-        w.option("orc.bloom.filter.columns", cfg.bloomFilterCols.mkString(","))
-      case _ => w
+      case Csv => "csv" -> Map("header" -> "true", "delimiter" -> cfg.delimiter,
+        "nullValue" -> cfg.naString, "emptyValue" -> "", "escape" -> "\"",
+        "ignoreLeadingWhiteSpace" -> "false", "ignoreTrailingWhiteSpace" -> "false")
+      case Parquet => "parquet" -> (Map(
+        "compression" -> codec(Parquet, cfg.compression),
+        "parquet.compression.codec.zstd.level" -> cfg.zstdLevel.toString,
+        "parquet.block.size" -> rowGroup) ++
+        cfg.bloomFilterCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true"))
+      case Orc => "orc" -> (Map(
+        "compression" -> codec(Orc, cfg.compression),
+        "orc.compression.zstd.level" -> cfg.zstdLevel.toString,
+        "orc.stripe.size" -> rowGroup) ++
+        Option.when(cfg.bloomFilterCols.nonEmpty)(
+          "orc.bloom.filter.columns" -> cfg.bloomFilterCols.mkString(",")))
+      case Avro  => AvroClass -> Map("compression" -> codec(Avro, cfg.compression))
+      case Jsonl => "json" -> Map("ignoreNullFields" -> "false")
+      case Xml   => "xml" -> Map("rowTag" -> "row")
     }
+  }
 
-  /** JSONL sink options. Uncompressed text like the CSV sink (the
-    * `--compression` knob is parquet's; compressed text parts would also
-    * break the `-o out.jsonl` promotion contract — a `.gz` payload behind a
-    * `.jsonl` name reads back as garbage). Nulls are written EXPLICITLY
-    * (`"k":null`): an all-null column must survive the round trip as a key,
-    * not silently vanish from the schema.
+  /** The `--compression` value (none|snappy|gzip|zstd, cli.rs:79-86) in the
+    * codec names of a columnar format: ORC spells gzip's deflate "zlib",
+    * Avro spells it deflate and zstd zstandard; other values pass
+    * through.
     */
-  private def jsonWriter(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-      cfg: Config): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
-    w.option("ignoreNullFields", "false")
-
-  /** XML sink options (Spark 4 native XML writer). Uncompressed text like
-    * the CSV/JSONL sinks (same promotion-contract reasoning). `rowTag` is
-    * [[graft.sources.XmlSource.XmlOptions]]'s default so the sink's output
-    * reads back through the same source without configuration. Nulls write
-    * as ABSENT elements; the bounded sampler types an absent field from the
-    * rows that carry it, so an all-null column still needs JSONL/ORC —
-    * XML (like CSV) carries no type evidence for it.
-    */
-  private def xmlWriter(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-      cfg: Config): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
-    w.format("xml").option("rowTag", "row")
+  private[graft] def codec(fmt: graft.sources.Discovery.Format, compression: String): String = {
+    import graft.sources.Discovery.{Avro, Orc}
+    (fmt, compression) match {
+      case (Orc, "none")  => "none"
+      case (_, "none")    => "uncompressed"
+      case (Orc, "gzip")  => "zlib"
+      case (Avro, "gzip") => "deflate"
+      case (Avro, "zstd") => "zstandard"
+      case (_, other)     => other
+    }
+  }
 
   private implicit class RollOps(df: DataFrame) {
     def writeConfRows(rows: Long) = df.write.option("maxRecordsPerFile", rows.toString)
@@ -447,7 +412,7 @@ object Sink {
     * Without this, a re-run over fewer inputs leaves a mix of new and stale
     * parts that [[readBack]] / `--verify` silently glob back in.
     */
-  def deleteStaleParts(hconf: org.apache.hadoop.conf.Configuration,
+  private def deleteStaleParts(hconf: org.apache.hadoop.conf.Configuration,
       path: String, ext: String, keepBelow: Int): Unit = {
     // list-and-filter, never glob: glob metacharacters in the user's path
     // ({}[]*?) would be interpreted as patterns and could match — and
@@ -520,10 +485,8 @@ object Sink {
     fs.delete(dir, true)
   }
 
-  /** Replace-on-rename move (rename does not replace on all filesystems).
-    * Shared by [[promote]] and the byte fast paths' promote steps.
-    */
-  private[graft] def replaceMove(fs: org.apache.hadoop.fs.FileSystem,
+  /** Replace-on-rename move (rename does not replace on all filesystems). */
+  private def replaceMove(fs: org.apache.hadoop.fs.FileSystem,
       src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit = {
     // recursive when dst is a directory: a stale partitioned tree from an
     // earlier --partition-by run at the same path must not kill (local FS:
@@ -542,35 +505,28 @@ object Sink {
     }
   }
 
-  /** Move part files out of the Spark output directory to honor the
-    * reference's file-path contract: one file at `path`, or rolled parts
-    * `path-0000.ext`, `path-0001.ext`, ... (README.md:49-50).
+  /** The one promote step, for every write this sink and the byte fast
+    * paths make: rename the staged entries onto the reference's file-path
+    * contract — one entry at `path` when `single`, else rolled parts
+    * `<base>-0000<ext>`, `<base>-0001<ext>`, ... in `staged` order
+    * (README.md:49-50) — then sweep stale parts a previous run left and
+    * delete the staging dir `tmpDir`. All new data is fully materialized
+    * before anything at the output paths is touched: the destructive window
+    * is the renames, not the write. Returns the promoted paths.
     */
-  private def promote(tmpDir: String, cfg: Config,
-      hconf: org.apache.hadoop.conf.Configuration): Unit = {
+  private[graft] def promoteStaged(hconf: org.apache.hadoop.conf.Configuration,
+      path: String, ext: String, tmpDir: org.apache.hadoop.fs.Path,
+      staged: Seq[org.apache.hadoop.fs.Path], single: Boolean): Seq[org.apache.hadoop.fs.Path] = {
     import org.apache.hadoop.fs.{Path => HPath}
-    val ext = extFor(cfg.format)
-    // Hadoop FS API throughout (NOT java.nio): the write itself runs on any
-    // Hadoop filesystem, so the rename step must too — java.nio on an
-    // hdfs:///s3a:// output would fail AFTER a successful write, stranding
-    // the .spark-out dir with no output at the contract path
-    val dir = new HPath(tmpDir)
-    val fs = dir.getFileSystem(hconf)
-    val parts = fs.listStatus(dir)
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map(_.getPath).sortBy(_.getName).toList
-    val target = new HPath(cfg.path)
+    val target = new HPath(path)
+    val fs = target.getFileSystem(hconf)
     Option(target.getParent).foreach(fs.mkdirs)
-    if (parts.size == 1 && cfg.singleFile) {
-      replaceMove(fs, parts.head, target)
-      deleteStaleParts(hconf, cfg.path, ext, keepBelow = 0)
-    } else {
-      val base = cfg.path.stripSuffix(ext)
-      parts.zipWithIndex.foreach { case (p, i) =>
-        replaceMove(fs, p, new HPath(f"$base%s-$i%04d$ext%s"))
-      }
-      deleteStaleParts(hconf, cfg.path, ext, keepBelow = parts.size)
-    }
-    fs.delete(dir, true) // the spark dir (_SUCCESS, crc files)
+    val promoted =
+      if (single) Seq(target)
+      else staged.indices.map(i => new HPath(f"${path.stripSuffix(ext)}%s-$i%04d$ext%s"))
+    staged.zip(promoted).foreach { case (from, to) => replaceMove(fs, from, to) }
+    deleteStaleParts(hconf, path, ext, keepBelow = if (single) 0 else staged.size)
+    fs.delete(tmpDir, true) // Spark's _SUCCESS and crc files, failed attempts
+    promoted
   }
 }

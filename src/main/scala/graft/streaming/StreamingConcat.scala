@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.Concat
 import graft.schema.SchemaUnifier
+import graft.sinks.Sink
 import graft.sources.{CsvSource, Discovery}
 import graft.sources.Discovery.{Avro, Csv, Format, Jsonl, Orc, Parquet}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -44,8 +45,8 @@ object StreamingConcat {
         s"streaming input $input mixes formats $formats; pass separate inputs per format")
       // per-file schemas from concurrent bounded probes (CSV sample /
       // parquet footer — Concat.fileSchemas), not one sequential reader
-      // setup per file: at 10^5 discovered files the old per-file
-      // readOne(...).schema loop was 10^5 sequential DataSource
+      // setup per file: at 10^5 discovered files a per-file
+      // `spark.read...schema` loop would be 10^5 sequential DataSource
       // resolutions on the driver
       val fileSchemas = Concat.fileSchemas(spark, files, cfg.csv)
       val batchSchema = SchemaUnifier.unify(fileSchemas, cfg.stringifyConflicts)
@@ -122,11 +123,18 @@ object StreamingConcat {
     * files + checkpoint; returns after the stream drains. Resumable across
     * invocations via the checkpoint.
     *
+    * The file sink writes each format through [[graft.sinks.Sink.writer]],
+    * the batch sink's one format definition, from a `Sink.Config` with its
+    * defaults (zstd-3 codecs, empty NA string) and the CLI's one
+    * `--delimiter`; the CLI refuses the flags that would change those
+    * defaults under `--stream`.
+    *
     * `partitionBy` writes a hive `col=value/` tree (same layout contract as
     * the batch sink's K4): the file sink appends new part files under each
     * value directory per micro-batch, so the layout stays consistent across
     * resumed invocations — the streaming door to the 100 TB layout
-    * primitive.
+    * primitive. `rollByRows` bounds file sizes within each micro-batch
+    * commit (the streaming analog of the batch sink's rolling contract).
     */
   def run(spark: SparkSession, cfg: Concat.Config, outPath: String, fmt: Format,
       checkpoint: String, partitionBy: Seq[String] = Nil,
@@ -135,28 +143,20 @@ object StreamingConcat {
     val missing = partitionBy.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"--partition-by columns not in data: ${missing.mkString(", ")}")
-    val writer0 = df.writeStream
+    if (fmt == Discovery.Xml)
+      throw new IllegalArgumentException(
+        "--stream does not support xml output — write jsonl/csv/parquet/orc/avro")
+    val sink = Sink.Config(outPath, fmt, delimiter = cfg.csv.delimiter,
+      rollByRows = rollByRows, partitionBy = partitionBy)
+    val (format, options) = Sink.writer(sink)
+    val writer = df.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-    // --roll-by-rows bounds file sizes within each micro-batch commit
-    // (the streaming analog of the batch sink's rolling contract)
-    val writer1 = rollByRows.fold(writer0)(n =>
-      writer0.option("maxRecordsPerFile", n.toString))
-    val writer =
-      if (partitionBy.nonEmpty) writer1.partitionBy(partitionBy: _*) else writer1
-    val q = fmt match {
-      case Csv     => writer.format("csv").option("header", "true").start(outPath)
-      case Parquet => writer.format("parquet").start(outPath)
-      case Jsonl   => writer.format("json")
-        .option("ignoreNullFields", "false").start(outPath)
-      case Orc     => writer.format("orc").start(outPath)
-      case Avro    => writer.format(Discovery.AvroClass).start(outPath)
-      case Discovery.Xml =>
-        throw new IllegalArgumentException(
-          "--stream does not support xml output — write jsonl/csv/parquet/orc/avro")
-    }
-    q.awaitTermination()
+      .format(format).options(options)
+      .partitionBy(sink.partitionBy: _*)
+    sink.rollByRows.fold(writer)(n => writer.option("maxRecordsPerFile", n.toString))
+      .start(outPath).awaitTermination()
   }
 
   /** Progress listener — the Spark-native replacement for the reference's

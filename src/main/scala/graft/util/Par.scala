@@ -1,6 +1,7 @@
 package graft.util
 
-/** Run independent Spark ACTIONS concurrently from the driver (guide-§2.6
+/** Driver-side concurrency: [[Par.map]] for independent per-file probes,
+  * and [[Par.actions]] to run independent Spark ACTIONS concurrently (guide-§2.6
   * job overlap): Spark's scheduler happily runs several jobs at once inside
   * one application — actions are only sequential because driver code calls
   * them sequentially. Two table writes that share nothing (or share only
@@ -11,8 +12,8 @@ package graft.util
   * before calling, or the racing actions may compute the shared subplan
   * twice.
   *
-  * Failure semantics match sequential code: waits for all, then rethrows
-  * the first failure (the other action has already finished — no orphaned
+  * `actions`' failure semantics match sequential code: waits for all, then
+  * rethrows the first failure (the other action has already finished — no orphaned
   * half-running job).
   */
 object Par {
@@ -47,5 +48,17 @@ object Par {
     // caller that believes nothing is running
     val results = futs.map(f => Await.ready(f, Duration.Inf).value.get)
     results.collectFirst { case scala.util.Failure(e) => throw e }
+  }
+
+  /** `f` over every element concurrently on the global pool, results in
+    * input order: the driver's per-file probes (schema samples, footers,
+    * header lines), where serial open+read round trips would add O(files) x
+    * store-latency dead time before any task launches. Rethrows a failure.
+    */
+  def map[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future.traverse(xs)(x => Future(f(x))), Duration.Inf)
   }
 }

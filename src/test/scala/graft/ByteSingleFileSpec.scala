@@ -11,8 +11,9 @@ import org.scalacheck.{Gen, Prop}
 
 /** The byte paths write single-file output on the driver and multi-file
   * output with one task per input. Over generated inputs the two must agree
-  * byte for byte, the single-file run must launch no Spark job, and the
-  * single file must hold the inputs in discovery order.
+  * (byte for byte for CSV and JSONL, row for row for Parquet), the
+  * single-file run must launch no Spark job, and the single file must hold
+  * the inputs in discovery order.
   */
 class ByteSingleFileSpec extends SparkSpec {
 
@@ -59,6 +60,8 @@ class ByteSingleFileSpec extends SparkSpec {
     Concat.convert(spark, Concat.Config(files, rawPassThrough = fmt == Discovery.Csv),
       Sink.Config(dir.resolve(out).toString, fmt, singleFile = singleFile))
 
+  private def writeText(p: Path, content: String): Unit = Files.writeString(p, content)
+
   // CSV: clean files, NA tokens, ragged rows, quoted delimiters and quotes,
   // CRLF line ends, a missing final newline, header-only files
   private val cleanCell = Gen.oneOf("x", "", "42", " pad ", "\"p,q\"", "\"say \"\"hi\"\"\"")
@@ -83,23 +86,54 @@ class ByteSingleFileSpec extends SparkSpec {
     finalEol <- Gen.oneOf(true, false)
   } yield rows.mkString(eol) + (if (finalEol && rows.nonEmpty) eol else "")
 
-  /** Single-file output == header + the multi-file parts' bodies, in order,
-    * and 0 jobs; the multi-file run (one task per file) is the listener's
-    * positive control.
+  // Parquet: one schema (the byte path's precondition), empty files, nulls,
+  // empty and non-ASCII strings
+  private val parquetFile: Gen[Seq[(Long, Option[String])]] =
+    Gen.choose(0, 8).flatMap(Gen.listOfN(_, for {
+      k <- Gen.choose(0L, 99L)
+      v <- Gen.option(Gen.oneOf("s", "", " pad ", "ünï"))
+    } yield (k, v)))
+
+  private def writeParquet(p: Path, rows: Seq[(Long, Option[String])]): Unit = {
+    import spark.implicits._
+    val dir = p.resolveSibling(p.getFileName.toString + ".d")
+    rows.toDF("k", "v").coalesce(1).write.parquet(dir.toString)
+    val part = Files.list(dir).filter(_.toString.endsWith(".parquet")).findFirst.get
+    Files.move(part, p)
+  }
+
+  /** The single file's bytes == header + the multi-file parts' bodies. */
+  private def sameBytes(header: Option[String])(one: Path, parts: Seq[Path]): Unit = {
+    val want = header.fold(Array.emptyByteArray)(_.getBytes("UTF-8")) ++
+      parts.flatMap(p => if (header.isDefined) body(p) else Files.readAllBytes(p))
+    val got = Files.readAllBytes(one)
+    assert(java.util.Arrays.equals(got, want),
+      s"single-file output diverged:\n<${new String(got, "UTF-8")}>\nvs\n<${new String(want, "UTF-8")}>")
+  }
+
+  /** The single file's rows == the multi-file parts' rows, in order. */
+  private def sameRows(one: Path, parts: Seq[Path]): Unit = {
+    def rows(p: Path) = spark.read.parquet(p.toString).coalesce(1).collect().toSeq
+    assert(rows(one) == parts.flatMap(rows), "single-file rows diverged from the parts'")
+  }
+
+  /** Single-file output == the multi-file parts concatenated in order (as
+    * `same` compares them), and 0 jobs; the multi-file run (one task per
+    * file) is the listener's positive control.
     */
-  private def agreeProp(fmt: Discovery.Format, ext: String, gen: Gen[String]): Prop =
+  private def agreeProp[A](fmt: Discovery.Format, ext: String, gen: Gen[A])(
+      write: (Path, A) => Unit)(same: (Path, Seq[Path]) => Unit): Prop =
     Prop.forAllNoShrink(Gen.choose(1, 5).flatMap(Gen.listOfN(_, gen))) { contents =>
       val d = tmpDir("byteprop")
-      val files = contents.zipWithIndex.map { case (c, i) => writeFile(d, f"in-$i%02d$ext", c) }
+      val files = contents.zipWithIndex.map { case (c, i) =>
+        val p = d.resolve(f"in-$i%02d$ext")
+        write(p, c)
+        p.toString
+      }
       var single: Map[String, Any] = Map.empty
       val singleJobs = jobsStartedBy { single = convert(d, files, s"one$ext", fmt, singleFile = true) }
       val multiJobs = jobsStartedBy { convert(d, files, s"many$ext", fmt, singleFile = false) }
-      val parts = files.indices.map(i => d.resolve(f"many-$i%04d$ext"))
-      val header = if (fmt == Discovery.Csv) "a,b,c\n".getBytes("UTF-8") else Array.emptyByteArray
-      val want = header ++ parts.flatMap(p => if (fmt == Discovery.Csv) body(p) else Files.readAllBytes(p))
-      val got = Files.readAllBytes(d.resolve(s"one$ext"))
-      assert(java.util.Arrays.equals(got, want),
-        s"single-file output diverged:\n<${new String(got, "UTF-8")}>\nvs\n<${new String(want, "UTF-8")}>")
+      same(d.resolve(s"one$ext"), files.indices.map(i => d.resolve(f"many-$i%04d$ext")))
       assert(singleJobs == 0, s"single-file byte path launched $singleJobs Spark job(s)")
       assert(multiJobs == 1, s"multi-file byte path launched $multiJobs job(s), expected 1")
       // per-file completion records, in discovery order
@@ -110,11 +144,15 @@ class ByteSingleFileSpec extends SparkSpec {
     }
 
   test("property: single-file CSV byte output == header + multi-file part bodies, 0 jobs") {
-    check(agreeProp(Discovery.Csv, ".csv", csvFile))
+    check(agreeProp(Discovery.Csv, ".csv", csvFile)(writeText)(sameBytes(Some("a,b,c\n"))))
   }
 
   test("property: single-file JSONL byte output == concatenated multi-file parts, 0 jobs") {
-    check(agreeProp(Discovery.Jsonl, ".jsonl", jsonlFile))
+    check(agreeProp(Discovery.Jsonl, ".jsonl", jsonlFile)(writeText)(sameBytes(None)))
+  }
+
+  test("property: single-file Parquet byte output rows == multi-file part rows, 0 jobs") {
+    check(agreeProp(Discovery.Parquet, ".parquet", parquetFile)(writeParquet)(sameRows))
   }
 
   test("single-file byte paths emit unequal-size shards in discovery order") {

@@ -170,15 +170,27 @@ class MawCliSpec extends SparkSpec {
     val in = d.resolve("in")
     Files.createDirectories(in)
     // header order v,k is NOT alphabetical: a positionally-bound sorted
-    // schema would feed 'x' into k and null out v
-    writeFile(in, "a.csv", "v,k\nx,1\ny,2\n")
+    // schema would feed 'x' into k and null out v. The padded and quoted
+    // cells must come back exactly: the stream sink writes RFC 4180 with
+    // field whitespace kept, like the batch sink
+    writeFile(in, "a.csv", "v,k\nx,1\ny,2\n pad ,3\n\"say \"\"hi\"\"\",4\n")
     val out = d.resolve("out").toString
     StreamingConcat.run(spark, Concat.Config(Seq(in.toString)), out,
       Discovery.Csv, d.resolve("cp").toString)
-    val rows = spark.read.option("header", "true").csv(out + "/*.csv")
+    val rows = spark.read.option("header", "true").option("escape", "\"")
+      .csv(out + "/*.csv")
       .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    assert(rows.toSeq == Seq(("1", "x"), ("2", "y")), // unified order k,v
-      s"mis-bound streaming columns: ${rows.mkString(",")}")
+    assert(rows.toSeq == Seq(("1", "x"), ("2", "y"), ("3", " pad "), ("4", "say \"hi\"")),
+      s"mis-bound or re-rendered streaming columns: ${rows.mkString(",")}") // unified order k,v
+  }
+
+  test("--stream refuses --na, --compression and --zstd-level instead of dropping them") {
+    for ((flag, value) <- Seq("--na" -> "NULL", "--compression" -> "snappy",
+        "--zstd-level" -> "9")) {
+      val e = intercept[IllegalArgumentException](Maw.execute(spark, Maw.parse(
+        Seq("in.csv", "-o", "out.parquet", "--stream", flag, value, "-q"))))
+      assert(e.getMessage.contains(s"$flag is not supported with --stream"), e.getMessage)
+    }
   }
 
   test("LiveProgress renders task-completion bars with ETA from the scheduler bus") {
