@@ -254,26 +254,10 @@ object Compact {
     // the real figure.
     val sizingBytes = dataFiles.map(f => dataLen(fs, f)).sum
 
-    // partition values must survive VERBATIM: a `source=007` directory must
-    // not come back as int 7 (Sink.readBack pins the same rule)
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prevInfer = spark.conf.getOption(inferKey)
-    spark.conf.set(inferKey, "false")
-    val df =
-      try fmt match {
-        case Discovery.Xml => throw new IllegalArgumentException(
-          "--compact does not support xml trees — compact csv/parquet/jsonl/orc/avro")
-        case Discovery.Parquet => spark.read.parquet(dir)
-        case Discovery.Orc     => spark.read.orc(dir)
-        case Discovery.Avro    =>
-          spark.read.format(Discovery.AvroClass).load(dir)
-        case Discovery.Jsonl   => spark.read.json(dir)
-        case Discovery.Csv     => spark.read.option("header", "true")
-          .option("delimiter", delimiter).option("escape", "\"").csv(dir)
-      } finally prevInfer match {
-        case Some(v) => spark.conf.set(inferKey, v)
-        case None    => spark.conf.unset(inferKey)
-      }
+    // the tree reads back as the CLI's --verify reads a sink's output:
+    // partition values survive VERBATIM (a `source=007` directory does not
+    // come back as int 7), CSV with the tree's own delimiter
+    val df = graft.sinks.Sink.readBack(spark, dir, fmt, delimiter)
     // mis-delimiter shape guard: a CSV tree read with the wrong delimiter
     // parses every line as ONE column whose header still contains the real
     // delimiter — and the rewrite would then destroy the column structure
@@ -364,22 +348,12 @@ object Compact {
         .option("ignoreLeadingWhiteSpace", "false")
         .option("ignoreTrailingWhiteSpace", "false").csv(staging)
       case Discovery.Xml => throw new IllegalStateException(
-        "unreachable: xml trees are refused at the compaction read")
+        "unreachable: run refuses xml trees before the rewrite")
     }
 
     // verify BEFORE the swap: the destructive step only runs once the new
     // tree provably holds every row
-    val newRows = (fmt match {
-      case Discovery.Parquet => spark.read.parquet(staging)
-      case Discovery.Orc     => spark.read.orc(staging)
-      case Discovery.Avro    =>
-        spark.read.format(Discovery.AvroClass).load(staging)
-      case Discovery.Jsonl   => spark.read.json(staging)
-      case Discovery.Csv     => spark.read.option("header", "true")
-        .option("delimiter", delimiter).option("escape", "\"").csv(staging)
-      case Discovery.Xml => throw new IllegalStateException(
-        "unreachable: xml trees are refused at the compaction read")
-    }).count()
+    val newRows = graft.sinks.Sink.readBack(spark, staging, fmt, delimiter).count()
     if (newRows != rows) {
       fs.delete(stagingPath, true)
       throw new IllegalStateException(

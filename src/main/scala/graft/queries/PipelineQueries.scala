@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.streaming.IngestLoop
+import graft.streaming.{Checkpoint, IngestLoop}
+import graft.util.Conf.withConf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -44,11 +45,8 @@ object PipelineQueries {
     * halve the fixed cost vs 32 with identical results (at cluster scale
     * you'd size this to keys/executors instead).
     */
-  private def withShufflePartitions[A](s: SparkSession, n: Int)(f: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private def withShufflePartitions[A](s: SparkSession, n: Int)(f: => A): A =
+    withConf(s, "spark.sql.shuffle.partitions", n.toString)(f)
 
   /** Rows per state-store instance in [[stateStorePartitions]]. */
   private val StateStoreRows = 8192L
@@ -89,11 +87,13 @@ object PipelineQueries {
   private def drainToMemory(s: SparkSession, df: DataFrame, prefix: String,
       dir: String, mode: String, arrive: Option[() => Unit] = None): DataFrame = {
     val sinkName = s"${prefix}_sink_${java.lang.Integer.toHexString(dir.hashCode)}"
-    val q = df.writeStream.outputMode(mode).format("memory").queryName(sinkName).start()
-    try {
-      q.processAllAvailable()
-      arrive.foreach { f => f(); q.processAllAvailable() }
-    } finally q.stop()
+    Checkpoint.local(s) {
+      val q = df.writeStream.outputMode(mode).format("memory").queryName(sinkName).start()
+      try {
+        q.processAllAvailable()
+        arrive.foreach { f => f(); q.processAllAvailable() }
+      } finally q.stop()
+    }
     s.table(sinkName)
   }
 
@@ -2427,10 +2427,12 @@ object PipelineQueries {
       // invocation-fresh checkpoint: a stale one at the same path would
       // serve that run's state
       val ckpt = scratchDir("st14_ckpt", dir)
-      val q = agg.writeStream.outputMode("update").format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try { q.processAllAvailable() } finally q.stop()
+      Checkpoint.local(s, ckpt.toString) {
+        val q = agg.writeStream.outputMode("update").format("noop")
+          .option("checkpointLocation", ckpt.toString)
+          .start()
+        try { q.processAllAvailable() } finally q.stop()
+      }
       // the state source returns (key struct, value struct, partition_id);
       // value field names are the canonical agg names (count, sum)
       ordered(s.read.format("statestore").load(ckpt.toString)

@@ -106,19 +106,6 @@ object Q {
   def spread(df: DataFrame, keys: Column*): DataFrame =
     graft.util.Spread.byKeys(df, keys: _*)
 
-  /** Run `f` with a scoped session-conf value, restoring (or unsetting)
-    * the previous value after — queries share one SparkSession, so a bare
-    * `conf.set` would leak into every later query.
-    */
-  def withConf[A](s: SparkSession, key: String, value: String)(f: => A): A = {
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try f finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
-
   /** `(selected, total)` of each bucketed scan in an executed plan's text,
     * in plan order: the one parser of Spark's `SelectedBucketsCount: N out
     * of M` scan annotation.

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.util.Conf.withConf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

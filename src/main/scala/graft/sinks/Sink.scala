@@ -307,7 +307,8 @@ object Sink {
   }
 
   /** Re-read what [[write]] produced (single file or rolled `-NNNN` parts)
-    * — used by the CLI's `--verify` integrity check (S2). Hadoop FS API,
+    * — used by the CLI's `--verify` integrity check (S2), and by
+    * [[graft.operators.Compact]] for the tree it rewrites. Hadoop FS API,
     * not java.io: the write supports any Hadoop filesystem, so verify must
     * too. The rolled-part filter is the SAME 4-7-digit-index rule as
     * [[deleteStaleParts]] — a looser glob would fold user sibling files
@@ -359,19 +360,14 @@ object Sink {
         spark.read.format("xml").option("rowTag", "row")
           .option("ignoreSurroundingSpaces", "false").load(paths: _*)
     }
-    if (isDir) {
-      // partition-column TYPE INFERENCE would re-type the directory names
-      // ("source=007" -> int 7), silently altering values the writer was
-      // given as strings; read partition values back verbatim. Schema
-      // resolution is eager at the read call, so restoring after is safe.
-      val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "false")
-      try read() finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    } else read()
+    // partition-column TYPE INFERENCE would re-type the directory names
+    // ("source=007" -> int 7), silently altering values the writer was
+    // given as strings; read partition values back verbatim. Schema
+    // resolution is eager at the read call, so restoring after is safe.
+    if (isDir)
+      graft.util.Conf.withConf(spark, "spark.sql.sources.partitionColumnTypeInference.enabled",
+        "false")(read())
+    else read()
   }
 
   /** Order-insensitive row checksum for `--verify` (S2): sum over rows of

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.util.Conf.withConf
 import graft.util.Recorder
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -24,6 +25,13 @@ import org.apache.spark.sql.types.StructType
   * batches in and hands each one to [[commit]], the output half. [[commit]]
   * is public so specs can replay a single batch; [[land]] and [[delta]]
   * serve queries that only need the watched input dir.
+  *
+  * The query runs inside [[Checkpoint.local]]: on a local `base` its
+  * offset, commit and source logs are renamed in through Spark's
+  * FileSystem checkpoint manager, because without the native Hadoop
+  * library each FileContext rename forks `readlink` four times, and on
+  * `file:` both managers do the same check-then-rename. A manager the user
+  * sets wins, and a `base` on any other FS keeps FileContext's rename.
   */
 final class IngestLoop private (s: SparkSession, val base: Path) {
 
@@ -97,19 +105,22 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
   private def feed(schema: StructType, batches: Seq[DataFrame],
       stateful: Option[DataFrame => DataFrame])
       (onBatch: (DataFrame, Long) => Unit): Unit = {
+    val ckpt = new Path(base, "ckpt").toString
     def start() = {
       val src = s.readStream.schema(schema).parquet(delta.toString)
       stateful.fold(src)(_(src)).writeStream
         .outputMode(if (stateful.isDefined) "update" else "append")
-        .option("checkpointLocation", new Path(base, "ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .foreachBatch(onBatch).start()
     }
-    var q = start()
-    try batches.zipWithIndex.foreach { case (b, i) =>
-      if (i > 0 && stateful.isDefined) { q.stop(); q = start() }
-      land(b, s"b${i + 1}")
-      q.processAllAvailable()
-    } finally q.stop()
+    Checkpoint.local(s, ckpt) {
+      var q = start()
+      try batches.zipWithIndex.foreach { case (b, i) =>
+        if (i > 0 && stateful.isDefined) { q.stop(); q = start() }
+        land(b, s"b${i + 1}")
+        q.processAllAvailable()
+      } finally q.stop()
+    }
   }
 
   /** The output half, for micro-batch `id`. In order:
@@ -135,10 +146,9 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
     else if (batch.isEmpty) { mkdirs(done); None }
     else {
       val out = new Path(staged, s"b$id")
-      val key = "spark.sql.shuffle.partitions"
-      val prev = s.conf.get(key)
-      s.conf.set(key, s.sparkContext.defaultParallelism.toString)
-      try body(batch, id, out.toString) finally s.conf.set(key, prev)
+      withConf(s, "spark.sql.shuffle.partitions", s.sparkContext.defaultParallelism.toString) {
+        body(batch, id, out.toString)
+      }
       if (fs.exists(out)) rename(out, done) else mkdirs(done)
       Some((System.nanoTime() - t0) / 1e9)
     }

@@ -135,6 +135,14 @@ object StreamingConcat {
     * resumed invocations — the streaming door to the 100 TB layout
     * primitive. `rollByRows` bounds file sizes within each micro-batch
     * commit (the streaming analog of the batch sink's rolling contract).
+    *
+    * The query runs inside [[Checkpoint.local]]: when the checkpoint and
+    * `outPath` (the sink's `_spark_metadata` log) are local, their logs
+    * are written through Spark's FileSystem checkpoint manager, because
+    * without the native Hadoop library each FileContext rename forks
+    * `readlink` four times, and on `file:` both managers do the same
+    * check-then-rename. A manager the user sets wins, and non-local logs
+    * are untouched.
     */
   def run(spark: SparkSession, cfg: Concat.Config, outPath: String, fmt: Format,
       checkpoint: String, partitionBy: Seq[String] = Nil,
@@ -155,8 +163,10 @@ object StreamingConcat {
       .option("checkpointLocation", checkpoint)
       .format(format).options(options)
       .partitionBy(sink.partitionBy: _*)
-    sink.rollByRows.fold(writer)(n => writer.option("maxRecordsPerFile", n.toString))
-      .start(outPath).awaitTermination()
+    Checkpoint.local(spark, checkpoint, outPath) {
+      sink.rollByRows.fold(writer)(n => writer.option("maxRecordsPerFile", n.toString))
+        .start(outPath).awaitTermination()
+    }
   }
 
   /** Progress listener — the Spark-native replacement for the reference's
