@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,8 +14,41 @@ import org.apache.spark.sql.functions._
   *
   * No full cross joins anywhere; skewed buckets are capped so one hot bucket
   * can never quadratically blow up a task at 100 TB (`maxBucketSize`).
+  *
+  * The three families with an ingest or serving index — n-gram Jaccard,
+  * perceptual simhash and the contamination window grid — each have ONE
+  * geometry, fixed below. An index bakes its geometry into its rows, and
+  * an incremental path equals its one-shot twin only while both band and
+  * window alike, so no call site restates it.
   */
 object Dedup {
+
+  // n-gram Jaccard: word 3-gram shingles, 16 MinHash slots banded one slot
+  // per band, exact-Jaccard cut at 0.5 (recall argument on ngramJaccardPairs)
+  private val ShingleN = 3
+  private val NumHashes = 16
+  private val BandRows = 1
+  private val MinJaccard = 0.5
+
+  /** Bucket cap of the Jaccard banding and of both incremental candidate
+    * joins (see [[capBuckets]]).
+    */
+  private val MaxBucketSize = 1000
+
+  /** The perceptual (dHash) simhash family's geometry: 64-bit signatures,
+    * combination keys over 8 blocks, pairs within Hamming distance 4. The
+    * ingest index bands at it, and m05/m06 pass it to [[simhashPairs]] and
+    * [[simhashPairsCollapsed]], so st24's union equals m05's pairs.
+    */
+  private[graft] object Perceptual {
+    val MaxHamming = 4
+    val Blocks = 8
+    val Bits = 64
+  }
+
+  // contamination grid: 64-char windows starting every 32 chars
+  private val WindowChars = 64
+  private val Stride = 32
 
   /** Exact dedup, deterministic survivor: the minimum id per key group.
     * One hash-shuffle on the key; partial aggregation is map-side.
@@ -208,36 +241,23 @@ object Dedup {
     within.unionByName(cross)
   }
 
-  /** Exact n-gram Jaccard similarity for candidate pairs. Candidates come
-    * from minhash position collisions (cheap); the verify step recomputes
-    * TRUE Jaccard from the shingle-hash sets — no estimation error.
+  /** Exact n-gram Jaccard similarity for candidate pairs, at the n-gram
+    * Jaccard family's fixed geometry. Candidates come from minhash position
+    * collisions (cheap); the verify step recomputes TRUE Jaccard from the
+    * shingle-hash sets — no estimation error.
     *
-    * `bandRows` trades candidate recall against candidate volume: a pair
-    * with true Jaccard J collides in one band with probability J^bandRows,
-    * so missing all `numHashes/bandRows` bands has probability
-    * (1 - J^bandRows)^(numHashes/bandRows). The default r=2 keeps false
-    * positives ~J^2 per band (few exact verifies) — right at corpus scale;
-    * r=1 with numHashes>=16 makes recall at J>=0.5 effectively 1
-    * (miss < 2e-5), which is how the driver's DuckDB brute-force oracle can
-    * hash-match this operator end-to-end.
+    * Banding is one signature slot per band: a pair with true Jaccard J
+    * misses all 16 bands with probability (1 - J)^16, so recall at
+    * J >= 0.5 is effectively 1 (miss < 2e-5), which is how the DuckDB
+    * brute-force oracle can hash-match this operator end-to-end.
     */
-  def ngramJaccardPairs(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      minJaccard: Double = 0.5,
-      numHashes: Int = 16,
-      bandRows: Int = 2,
-      maxBucketSize: Int = 1000): DataFrame = {
-    require(numHashes % bandRows == 0, "bandRows must divide numHashes")
+  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // the localCheckpoint keeps the text walk computed ONCE for the three
     // consumers (banding + both verify attaches), the role the shared
     // exchange played before (see minhashPairs)
-    val base = jaccardPrep(docs, idCol, textCol, shingleN, numHashes)
-      .localCheckpoint()
-    val candidates = pairCandidates(jaccardBand(base, numHashes, bandRows),
-      Seq("band", "bucket"), maxBucketSize)
+    val base = jaccardPrep(docs, idCol, textCol).localCheckpoint()
+    val candidates = pairCandidates(jaccardBand(base, NumHashes, BandRows),
+      Seq("band", "bucket"), MaxBucketSize)
     // exact verify per candidate pair: one linear merge over the sorted
     // shingle sets (JaccardSorted) — the array_intersect/array_union
     // formulation builds two hash sets + a union array per PAIR, the hot
@@ -245,7 +265,7 @@ object Dedup {
     attach(candidates, base.select(col("id"), col("sh")), "sh")
       .select(col("idA"), col("idB"),
         TF.jaccardSorted(col("shA"), col("shB")).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
+      .where(col("jaccard") >= MinJaccard)
   }
 
   /** INCREMENTAL ingest dedup: near-dup pairs between an arriving batch
@@ -261,19 +281,11 @@ object Dedup {
     * [[incrementalJaccardPairsIndexed]] (same output, the corpus text is
     * never re-shingled per batch); this overload derives the old side
     * inline from `old` for one-shot use. Ids must be globally unique
-    * across both inputs. Same recall discipline as [[ngramJaccardPairs]]
-    * (bandRows=1, numHashes=16 -> candidate recall ~1 at J>=0.5).
+    * across both inputs. Same geometry, hence the same recall, as
+    * [[ngramJaccardPairs]].
     */
-  def incrementalJaccardPairs(
-      old: DataFrame,
-      fresh: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      minJaccard: Double = 0.5,
-      numHashes: Int = 16,
-      bandRows: Int = 1,
-      maxBucketSize: Int = 1000): DataFrame = {
+  def incrementalJaccardPairs(old: DataFrame, fresh: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     // an id present on BOTH sides would self-pair through the old leg
     // (jaccard 1 -> the new row silently always blocked); one slim
     // bounded equi-join catches it — trivial next to the pair work
@@ -288,39 +300,33 @@ object Dedup {
     // exchange, ReusedExchange no longer dedups it — without this the
     // expensive text pass ran twice per side per action. Both sides are
     // batch-sized by this overload's one-shot contract.
-    val oldP = jaccardPrep(old, idCol, textCol, shingleN, numHashes)
-      .localCheckpoint()
-    val freshP = jaccardPrep(fresh, idCol, textCol, shingleN, numHashes)
-      .localCheckpoint()
-    incrementalCore(
-      jaccardBand(oldP, numHashes, bandRows),
-      jaccardBand(freshP, numHashes, bandRows),
-      oldP.select(col("id"), col("sh")), freshP.select(col("id"), col("sh")),
-      minJaccard, maxBucketSize)
+    val oldP = jaccardPrep(old, idCol, textCol).localCheckpoint()
+    val freshP = jaccardPrep(fresh, idCol, textCol).localCheckpoint()
+    incrementalCore(jaccardBand(oldP, NumHashes, BandRows), freshP,
+      oldP.select(col("id"), col("sh")))
   }
+
+  /** The two tables of the Jaccard ingest index named `index`: the banded
+    * rows `<index>_band` and the shingle sets `<index>_sh`.
+    */
+  def jaccardIndexTables(index: String): Seq[String] =
+    Seq(s"${index}_band", s"${index}_sh")
 
   /** Build the INGEST-SIDE dedup index [[incrementalJaccardPairsIndexed]]
     * probes: one pass over the corpus text computes shingle hashes + the
-    * minhash signature, persisted as two slim bucketed tables —
-    * `bandTable` (id, band, bucket), bucketed by `bucket` (the candidate
-    * join's probe key), and `shingleTable` (id, sh), bucketed by `id` (the
-    * verify attach's key). Built ONCE per corpus at ingest; after that, no
-    * arriving batch ever re-shingles or re-hashes the old corpus — the
-    * warehouse-scale shape the inline [[incrementalJaccardPairs]] only
-    * documented. Band parameters are baked into the table contents; probe
-    * with the SAME (shingleN, numHashes, bandRows) or candidates are
-    * silently wrong.
+    * minhash signature, persisted as two slim bucketed tables (named by
+    * [[jaccardIndexTables]]) — the band table (id, band, bucket),
+    * bucketed by `bucket` (the candidate join's probe key), and the
+    * shingle table (id, sh), bucketed by `id` (the verify attach's key).
+    * Built ONCE per corpus at ingest; after that, no arriving batch ever
+    * re-shingles or re-hashes the old corpus — the warehouse-scale shape
+    * the inline [[incrementalJaccardPairs]] only documented. The family's
+    * one geometry is baked into the table contents, and every probe and
+    * append bands with the same one.
     */
-  def buildJaccardIngestIndex(
-      old: DataFrame,
-      idCol: String,
-      textCol: String,
-      bandTable: String,
-      shingleTable: String,
-      shingleN: Int = 3,
-      numHashes: Int = 16,
-      bandRows: Int = 1,
-      buckets: Int = 16): Unit = {
+  def buildJaccardIngestIndex(old: DataFrame, idCol: String, textCol: String,
+      index: String, buckets: Int = 16): Unit = {
+    val Seq(bandTable, shingleTable) = jaccardIndexTables(index)
     // one expensive text pass (shingle + minhash), two slim table writes:
     // persist() keeps the signatures in memory between the writes instead
     // of recomputing the text walk. The cache is FILLED first (count) so
@@ -328,13 +334,13 @@ object Dedup {
     // CONCURRENTLY (guide §2.6): each write is mostly fixed commit/catalog
     // cost at small corpora and straggler tail at large ones, and the
     // second write's tasks back-fill the first's idle slots.
-    val prep = jaccardPrep(old, idCol, textCol, shingleN, numHashes).persist()
+    val prep = jaccardPrep(old, idCol, textCol).persist()
     try {
       prep.count()
       graft.util.Par.actions(
         () => Bucketing.writeBucketed(prep.select(col("id"), col("sh")),
           shingleTable, "id", buckets),
-        () => Bucketing.writeBucketed(jaccardBand(prep, numHashes, bandRows),
+        () => Bucketing.writeBucketed(jaccardBand(prep, NumHashes, BandRows),
           bandTable, "bucket", buckets))
     } finally prep.unpersist()
   }
@@ -357,18 +363,9 @@ object Dedup {
     * duplicate-id guard: a batch id already in the index is refused here,
     * before anything is appended.
     */
-  def incrementalJaccardPairsIndexed(
-      spark: org.apache.spark.sql.SparkSession,
-      bandTable: String,
-      shingleTable: String,
-      fresh: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      minJaccard: Double = 0.5,
-      numHashes: Int = 16,
-      bandRows: Int = 1,
-      maxBucketSize: Int = 1000): (DataFrame, DataFrame) = {
+  def incrementalJaccardPairsIndexed(spark: SparkSession, index: String,
+      fresh: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame) = {
+    val Seq(bandTable, shingleTable) = jaccardIndexTables(index)
     // materialize the batch's shingle+minhash pass ONCE (round-20): the
     // prep feeds the banding AND both sides of the verify attach, i.e.
     // 3 independent consumers — without this the text walk (the probe's
@@ -377,8 +374,7 @@ object Dedup {
     // FIRST so the uniqueness guard below broadcasts the checkpointed ids
     // instead of re-scanning the raw batch (round-21: one fewer batch
     // read per micro-batch).
-    val freshP = jaccardPrep(fresh, idCol, textCol, shingleN, numHashes)
-      .localCheckpoint()
+    val freshP = jaccardPrep(fresh, idCol, textCol).localCheckpoint()
     val oldSh = spark.table(shingleTable)
     // broadcast the batch ids: the corpus side stays a narrow id-column
     // scan (never a corpus shuffle just to validate ids)
@@ -387,10 +383,7 @@ object Dedup {
         .limit(1).collect().isEmpty,
       "incrementalJaccardPairsIndexed: ids must be globally unique across " +
         "the indexed corpus and fresh — at least one id appears on both sides")
-    (incrementalCore(spark.table(bandTable),
-      jaccardBand(freshP, numHashes, bandRows),
-      oldSh, freshP.select(col("id"), col("sh")),
-      minJaccard, maxBucketSize), freshP)
+    (incrementalCore(spark.table(bandTable), freshP, oldSh), freshP)
   }
 
   /** MAINTAIN the ingest index: append a batch's ACCEPTED rows (the
@@ -399,49 +392,46 @@ object Dedup {
     * `(id, sh, sig)` frame from [[incrementalJaccardPairsIndexed]], or a
     * slice of it: the batch's text is never walked again. The existing
     * index is never rewritten (bucketed appends add per-bucket files, and
-    * both the bucket-join and the attach keep their pruning).
+    * both the bucket-join and the attach keep their pruning), and each
+    * append takes its bucket count from its table's bucket spec.
     *
     * CONTRACT: `prep` must be materialized (the probe's checkpoint — the
     * two concurrent appends would otherwise race-compute it twice), and
     * its ids must have just passed the probe's uniqueness guard against
     * the SAME tables; the append does not re-check them (an id appended
-    * twice would shadow-pair against itself in every later batch). The
-    * (numHashes, bandRows) parameters MUST match the build's; `buckets`
-    * must match the table's bucket spec (Spark refuses a mismatched
-    * bucketed append loudly). `prep` may derive from a
-    * foreachBatch-cloned session: the append rebinds it through the main
-    * session (a bucketed saveAsTable append fed a streaming-derived frame
-    * writes through the cloned session and lands zero rows — the st13
-    * lesson).
+    * twice would shadow-pair against itself in every later batch). `prep`
+    * may derive from a foreachBatch-cloned session: the append rebinds it
+    * through the main session (a bucketed saveAsTable append fed a
+    * streaming-derived frame writes through the cloned session and lands
+    * zero rows — the st13 lesson).
     */
-  def appendJaccardIngestIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      bandTable: String,
-      shingleTable: String,
-      prep: DataFrame,
-      numHashes: Int = 16,
-      bandRows: Int = 1,
-      buckets: Int = 16): Unit = {
+  def appendJaccardIngestIndex(spark: SparkSession, index: String,
+      prep: DataFrame): Unit = {
+    val Seq(bandTable, shingleTable) = jaccardIndexTables(index)
     val bound = spark.createDataFrame(prep.rdd, prep.schema)
     // the two appends are independent — run them CONCURRENTLY (guide
     // §2.6, the build path's overlap; each is mostly fixed commit cost)
     graft.util.Par.actions(
-      () => appendBucketed(bound.select(col("id"), col("sh")),
-        shingleTable, "id", buckets),
-      () => appendBucketed(jaccardBand(bound, numHashes, bandRows),
-        bandTable, "bucket", buckets))
+      () => appendBucketed(bound.select(col("id"), col("sh")), shingleTable, "id"),
+      () => appendBucketed(jaccardBand(bound, NumHashes, BandRows), bandTable, "bucket"))
   }
 
-  /** Bucketed append of `df` to `table`. Repartition by the bucket key
+  /** Bucketed append of `df` to `table`, at the table's own bucket count
+    * (read from its catalog entry — no job). Repartition by the bucket key
     * first (see Bucketing.writeBucketed): an append otherwise adds
     * input-partitions x buckets files PER BATCH, and the probe's scan cost
     * becomes file-open overhead.
     */
-  private def appendBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit =
+  private def appendBucketed(df: DataFrame, table: String, key: String): Unit = {
+    val state = df.sparkSession.sessionState
+    val buckets = state.catalog
+      .getTableMetadata(state.sqlParser.parseTableIdentifier(table))
+      .bucketSpec.map(_.numBuckets)
+      .getOrElse(throw new IllegalArgumentException(s"$table is not a bucketed table"))
     df.repartition(buckets, col(key))
       .write.mode("append").format("parquet")
       .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
+  }
 
   /** Combination-key banding rows (id, sig, band, chunk) — the ONE
     * definition of the [[simhashPairs]] blocks>0 scheme, shared with the
@@ -470,6 +460,16 @@ object Dedup {
       .withColumnRenamed("col", "chunk").withColumnRenamed("pos", "band")
   }
 
+  /** The perceptual family's banding rows over `(idCol, sigCol)`: NULL
+    * signatures dropped (nothing to band), then [[simhashBandRows]] at the
+    * family's geometry. The index build, the append and the probe all
+    * band through this.
+    */
+  private def perceptualBandRows(sigs: DataFrame, idCol: String, sigCol: String): DataFrame =
+    simhashBandRows(
+      sigs.select(col(idCol).as("id"), col(sigCol).as("sig")).where(col("sig").isNotNull),
+      Perceptual.Bits, Perceptual.Blocks, Perceptual.MaxHamming)
+
   /** Build the PERCEPTUAL/simhash ingest-side dedup index
     * [[incrementalSimhashPairsIndexed]] probes: the corpus signatures'
     * combination-key banding rows persisted as ONE slim bucketed table
@@ -477,74 +477,49 @@ object Dedup {
     * candidate join's probe key). Built once per corpus at ingest; after
     * that no arriving batch ever re-decodes or re-bands the old corpus —
     * the d17 discipline applied to the m05 dHash family (round-19
-    * verdict #5). NULL signatures are dropped (nothing to band). Band
-    * parameters are baked into the table contents; probe with the same
-    * (bits, blocks, maxHamming) or candidates are silently wrong.
+    * verdict #5). NULL signatures are dropped (nothing to band). The
+    * family's one geometry ([[Perceptual]]) is baked into the table
+    * contents, and the probe and the append band with the same one.
     */
   def buildSimhashIngestIndex(
       sigs: DataFrame,          // (id, sig)
       idCol: String,
       sigCol: String,
       bandTable: String,
-      maxHamming: Int = 4,
-      blocks: Int = 8,
-      bits: Int = 64,
-      buckets: Int = 16): Unit = {
-    val base = sigs.select(col(idCol).as("id"), col(sigCol).as("sig"))
-      .where(col("sig").isNotNull)
-    Bucketing.writeBucketed(simhashBandRows(base, bits, blocks, maxHamming),
+      buckets: Int = 16): Unit =
+    Bucketing.writeBucketed(perceptualBandRows(sigs, idCol, sigCol),
       bandTable, "chunk", buckets)
-  }
 
   /** MAINTAIN the simhash ingest index: append a batch's signatures so
-    * the next batch blocks against them (bucketed append — the existing
-    * index is never rewritten). As for [[appendJaccardIngestIndex]],
-    * the ids of `sigs` must have just passed
+    * the next batch blocks against them (bucketed append at the table's
+    * own bucket count — the existing index is never rewritten). As for
+    * [[appendJaccardIngestIndex]], the ids of `sigs` must have just passed
     * [[incrementalSimhashPairsIndexed]]'s uniqueness guard against the
     * same table (the append does not re-check them), and `sigs` is
     * rebound through the main session, so a checkpointed frame from a
     * foreachBatch-cloned session appends correctly.
     */
-  def appendSimhashIngestIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      bandTable: String,
-      sigs: DataFrame,
-      idCol: String,
-      sigCol: String,
-      maxHamming: Int = 4,
-      blocks: Int = 8,
-      bits: Int = 64,
-      buckets: Int = 16): Unit = {
-    val bound = spark.createDataFrame(sigs.rdd, sigs.schema)
-    val base = bound.select(col(idCol).as("id"), col(sigCol).as("sig"))
-      .where(col("sig").isNotNull)
-    appendBucketed(simhashBandRows(base, bits, blocks, maxHamming),
-      bandTable, "chunk", buckets)
-  }
+  def appendSimhashIngestIndex(spark: SparkSession, bandTable: String,
+      sigs: DataFrame, idCol: String, sigCol: String): Unit =
+    appendBucketed(perceptualBandRows(spark.createDataFrame(sigs.rdd, sigs.schema),
+      idCol, sigCol), bandTable, "chunk")
 
   /** INCREMENTAL simhash near-dup pairs against the persisted band index
     * ([[buildSimhashIngestIndex]]): only the arriving batch is banded;
     * the old side is one slim bucket-pruned scan, SEMI-FILTERED inside
     * the scan by the batch's broadcast bucket set — per-batch shuffle is
     * batch x C(blocks, blocks-maxHamming) x bucket occupancy, never
-    * corpus-sized (the d17/incrementalCore shape). Old x old pairs never
-    * re-derive (the candidate join's A side is batch-only). Output is
-    * oriented (least, greatest, min hamming), so the UNION over batches
-    * equals the one-shot [[simhashPairs]] for any batch split (each pair
-    * surfaces when its later-arriving member's batch probes — the same
-    * argument d17's oracle pins for jaccard), provided no bucket cap
-    * engages on either path.
+    * corpus-sized (the d17 shape: both probes share
+    * [[newVsIndexCandidates]]). Old x old pairs never re-derive (the
+    * candidate join's A side is batch-only). Output is oriented (least,
+    * greatest, min hamming), so the UNION over batches equals the one-shot
+    * [[simhashPairs]] at the [[Perceptual]] geometry for any batch split
+    * (each pair surfaces when its later-arriving member's batch probes —
+    * the same argument d17's oracle pins for jaccard), provided no bucket
+    * cap engages on either path.
     */
-  def incrementalSimhashPairsIndexed(
-      spark: org.apache.spark.sql.SparkSession,
-      bandTable: String,
-      fresh: DataFrame,         // (id, sig)
-      idCol: String,
-      sigCol: String,
-      maxHamming: Int = 4,
-      blocks: Int = 8,
-      bits: Int = 64,
-      maxBucketSize: Int = 1000): DataFrame = {
+  def incrementalSimhashPairsIndexed(spark: SparkSession, bandTable: String,
+      fresh: DataFrame, idCol: String, sigCol: String): DataFrame = {
     // no distinct before the existence probe (round-21): limit(1)
     // short-circuits on the first match, and in the common (no-duplicate)
     // case the distinct was a full shuffle of the banding-rows index —
@@ -554,26 +529,14 @@ object Dedup {
         .limit(1).collect().isEmpty,
       "incrementalSimhashPairsIndexed: ids must be globally unique across " +
         "the indexed corpus and fresh — at least one id appears on both sides")
-    val freshBase = fresh.select(col(idCol).as("id"), col(sigCol).as("sig"))
-      .where(col("sig").isNotNull)
-    val freshBanded = simhashBandRows(freshBase, bits, blocks, maxHamming)
-      .withColumn("is_new", lit(true))
-    val oldBanded = spark.table(bandTable).withColumn("is_new", lit(false))
-    val freshBuckets = broadcast(
-      freshBanded.select(col("band"), col("chunk")).distinct())
-    val oldPruned = oldBanded.join(freshBuckets, Seq("band", "chunk"), "left_semi")
-    val capped = capBuckets(oldPruned.unionByName(freshBanded),
-      Seq("band", "chunk"), maxBucketSize)
-    val a = capped.where(col("is_new"))
-      .select(col("id").as("idA"), col("sig").as("sigA"), col("band"), col("chunk"))
-    val b = capped.select(col("id").as("idB"), col("sig").as("sigB"),
-      col("is_new").as("b_new"), col("band"), col("chunk"))
-    a.join(b, Seq("band", "chunk"))
-      .where(!col("b_new") || col("idB") < col("idA"))
+    // the signature rides the candidate rows, so the Hamming verify runs
+    // inline in the join stage
+    newVsIndexCandidates(spark.table(bandTable),
+        perceptualBandRows(fresh, idCol, sigCol), "chunk", Seq("sig"))
       .select(least(col("idA"), col("idB")).as("idA"),
         greatest(col("idA"), col("idB")).as("idB"),
         TF.hamming64(col("sigA"), col("sigB")).as("hamming"))
-      .where(col("hamming") <= maxHamming)
+      .where(col("hamming") <= Perceptual.MaxHamming)
       .groupBy("idA", "idB").agg(min("hamming").as("hamming"))
   }
 
@@ -585,14 +548,13 @@ object Dedup {
     * scan's split count — ONE task for a single-file corpus — and the
     * exchange carried the fatter (sh, sig) rows.
     */
-  private def jaccardPrep(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int): DataFrame = df
+  private def jaccardPrep(df: DataFrame, idCol: String, textCol: String): DataFrame = df
     .select(col(idCol).as("id"), col(textCol).as("__t"))
     .repartition(col("id"))
     .select(
       col("id"),
-      TF.shingleHashes(col("__t"), shingleN).as("sh"),
-      TF.minhashSignature(col("__t"), shingleN, numHashes).as("sig"))
+      TF.shingleHashes(col("__t"), ShingleN).as("sh"),
+      TF.minhashSignature(col("__t"), ShingleN, NumHashes).as("sig"))
 
   /** Slim (id, band, bucket) MinHash banding rows — the ONE band-key
     * definition of the signature family: [[minhashPairs]] and
@@ -614,35 +576,48 @@ object Dedup {
       .withColumnRenamed("col", "bucket").withColumnRenamed("pos", "band")
   }
 
-  /** The incremental pair shape shared by the inline and indexed paths:
-    * cap buckets over old+fresh (id, band, bucket) banding rows, restrict
-    * the candidate join's A side to NEW rows (old x old structurally
-    * absent), verify with exact Jaccard over the attached shingle sets.
+  /** The new-vs-index candidate join of both incremental probes, over
+    * (id, band, `key`, `carry`...) banding rows of the old side (the
+    * persisted index, or the inline overload's corpus) and the batch.
+    *
+    * Old rows in (band, key) groups the BATCH never lands in cannot form a
+    * candidate (the A side is batch-only), and [[capBuckets]] drops whole
+    * over-cap groups — so the batch's bucket set is broadcast and
+    * semi-filters the old side INSIDE its scan. Retained groups keep every
+    * row, so the cap (and the output) is unchanged; what changes is cost:
+    * the per-batch shuffle is occupancy-bounded (batch x bands x bucket
+    * size), not corpus-sized. The batch's bucket set is batch x bands rows
+    * of two longs — broadcastable for any sane ingest batch.
+    *
+    * Returns (idA, `carry`A..., band, key) x (idB, `carry`B..., b_new)
+    * candidate rows: A = NEW rows only; B = old rows, or new rows with a
+    * smaller id (keep-first within the batch) — old x old never forms.
+    * Pairs are NOT deduped across bands.
     */
-  private def incrementalCore(oldBanded: DataFrame, freshBanded: DataFrame,
-      oldSh: DataFrame, freshSh: DataFrame,
-      minJaccard: Double, maxBucketSize: Int): DataFrame = {
-    // old banded rows in (band, bucket) groups the BATCH never lands in
-    // cannot form a candidate (the A side is batch-only), and capBuckets
-    // drops whole over-cap groups — so broadcast the batch's bucket set
-    // and semi-filter the corpus side INSIDE its scan. Retained groups
-    // keep every row, so the cap (and the output) is unchanged; what
-    // changes is cost: the per-batch shuffle is occupancy-bounded
-    // (batch x bands x bucket size), not corpus-sized. The batch's
-    // bucket set is batch x bands rows of two longs — broadcastable for
-    // any sane ingest batch.
-    val freshBuckets = broadcast(
-      freshBanded.select(col("band"), col("bucket")).distinct())
+  private def newVsIndexCandidates(oldBanded: DataFrame, freshBanded: DataFrame,
+      key: String, carry: Seq[String]): DataFrame = {
+    val freshBuckets = broadcast(freshBanded.select(col("band"), col(key)).distinct())
     val oldPruned = oldBanded.withColumn("is_new", lit(false))
-      .join(freshBuckets, Seq("band", "bucket"), "left_semi")
-    val banded = oldPruned.unionByName(freshBanded.withColumn("is_new", lit(true)))
-    val capped = capBuckets(banded, Seq("band", "bucket"), maxBucketSize)
-    // A side = NEW rows only; B side = old rows, or new rows with a
-    // smaller id (keep-first within the batch) — old x old never forms
+      .join(freshBuckets, Seq("band", key), "left_semi")
+    val capped = capBuckets(
+      oldPruned.unionByName(freshBanded.withColumn("is_new", lit(true))),
+      Seq("band", key), MaxBucketSize)
+    def side(s: String) = col("id").as(s"id$s") +: carry.map(c => col(c).as(s"$c$s"))
     val a = capped.where(col("is_new"))
-      .select(col("id").as("idA"), col("band"), col("bucket"))
-    val b = capped.select(col("id").as("idB"), col("is_new").as("b_new"),
-      col("band"), col("bucket"))
+      .select(side("A") ++ Seq(col("band"), col(key)): _*)
+    val b = capped.select(side("B") ++ Seq(col("is_new").as("b_new"), col("band"), col(key)): _*)
+    a.join(b, Seq("band", key))
+      .where(!col("b_new") || col("idB") < col("idA"))
+  }
+
+  /** The Jaccard incremental pair shape shared by the inline and indexed
+    * paths: [[newVsIndexCandidates]] over the old side's banding rows and
+    * the batch's, then exact Jaccard over the attached shingle sets.
+    * `freshP` is the batch's checkpointed (id, sh, sig) prep.
+    */
+  private def incrementalCore(oldBanded: DataFrame, freshP: DataFrame,
+      oldSh: DataFrame): DataFrame = {
+    val freshSh = freshP.select(col("id"), col("sh"))
     // candidates are bounded by batch x bucket occupancy — the operator's
     // whole cost contract — so MATERIALIZE them (tiny: two longs/row) and
     // broadcast their id sets to pre-filter both payload sides. The
@@ -654,8 +629,8 @@ object Dedup {
     // removed re-banding. (Joining the bucketed table directly instead
     // was 1.5x worse at x64: it caps the fat sort-merge at the table's
     // bucket count.)
-    val candidates = a.join(b, Seq("band", "bucket"))
-      .where(!col("b_new") || col("idB") < col("idA"))
+    val candidates = newVsIndexCandidates(oldBanded,
+        jaccardBand(freshP, NumHashes, BandRows), "bucket", Nil)
       .select("idA", "idB").distinct()
       .localCheckpoint()
     val bIds = broadcast(candidates.select(col("idB").as("id")).distinct())
@@ -667,7 +642,7 @@ object Dedup {
     candidates.join(shA, Seq("idA")).join(shB, Seq("idB"))
       .select(col("idA"), col("idB"),
         TF.jaccardSorted(col("shA"), col("shB")).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
+      .where(col("jaccard") >= MinJaccard)
   }
 
   /** Embedding near-dup pairs: sign-LSH bucket join + exact cosine verify.
@@ -1400,17 +1375,16 @@ object Dedup {
     stored.join(broadcast(remap), Seq("cluster"), "left")
       .select(col("id"), coalesce(col("root"), col("cluster")).as("cluster"))
 
-  /** Slim (id, wh) stride-grid window hashes — the shared primitive of
-    * [[substringContamination]] and [[crossContamination]]. Window starts
-    * 0, stride, 2*stride... while a full window fits; short docs get one
-    * (truncated) window so every doc is represented. Empty/null window
-    * content hashes to NULL, never md5('') — two contentless docs share
-    * NOTHING. All codegen'd (sequence/substring/md5), no HOF lambdas.
+  /** Slim (id, wh) window hashes on the contamination grid — the shared
+    * primitive of [[substringContamination]] and [[crossContamination]].
+    * Windows of 64 chars start at 0, 32, 64... while a full window fits;
+    * short docs get one (truncated) window so every doc is represented.
+    * Empty/null window content hashes to NULL, never md5('') — two
+    * contentless docs share NOTHING. All codegen'd (sequence/substring/md5),
+    * no HOF lambdas.
     */
-  private[graft] def windowHashes(docs: DataFrame, idCol: String, textCol: String,
-      windowChars: Int, stride: Int): DataFrame =
-    windowHashesWithPos(docs, idCol, textCol, windowChars, stride)
-      .select("id", "wh")
+  private def windowHashes(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    windowHashesWithPos(docs, idCol, textCol).select("id", "wh")
 
   /** Exact-substring contamination signal (the "deduplicating training data"
     * window-hash technique): hash fixed-size character windows of every
@@ -1428,13 +1402,8 @@ object Dedup {
     * window shared by 100k docs costs O(100k) rows, not O(100k^2) pairs),
     * and a groupBy(id) folds the flags into per-doc counts.
     */
-  def substringContamination(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      windowChars: Int = 64,
-      stride: Int = 32): DataFrame = {
-    val windows = windowHashes(docs, idCol, textCol, windowChars, stride)
+  def substringContamination(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val windows = windowHashes(docs, idCol, textCol)
     val byHash = Window.partitionBy(col("wh"))
     windows
       .withColumn("__shared", col("wh").isNotNull &&
@@ -1596,20 +1565,15 @@ object Dedup {
     * one groupBy((id, island)) folds each island to its span. Everything
     * is per-doc-local after the hash join.
     */
-  def contaminationSpans(
-      train: DataFrame,
-      eval: DataFrame,
-      idCol: String,
-      textCol: String,
-      windowChars: Int = 64,
-      stride: Int = 32): DataFrame = {
-    val evalHashes = windowHashes(eval, idCol, textCol, windowChars, stride)
+  def contaminationSpans(train: DataFrame, eval: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    val evalHashes = windowHashes(eval, idCol, textCol)
       .where(col("wh").isNotNull).select("wh").distinct()
     val trainLen = train.select(col(idCol).as("id"),
       length(col(textCol)).as("__len"))
-    val hits = windowHashesWithPos(train, idCol, textCol, windowChars, stride)
+    val hits = windowHashesWithPos(train, idCol, textCol)
       .join(evalHashes, Seq("wh"))
-      .select(col("id"), (col("pos") * stride).as("start"))
+      .select(col("id"), (col("pos") * Stride).as("start"))
     val wOrd = Window.partitionBy("id").orderBy(col("start").asc)
     val islands = hits
       .withColumn("__prev", lag("start", 1).over(wOrd))
@@ -1617,12 +1581,12 @@ object Dedup {
       // window's end — with stride < window, only a real gap in hits
       .withColumn("__new",
         when(col("__prev").isNull ||
-          col("start") > col("__prev") + windowChars, 1L).otherwise(0L))
+          col("start") > col("__prev") + WindowChars, 1L).otherwise(0L))
       .withColumn("__island", sum("__new").over(
         wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     islands.groupBy("id", "__island")
       .agg(min("start").as("span_start"),
-        (max("start") + windowChars).as("__rawEnd"))
+        (max("start") + WindowChars).as("__rawEnd"))
       .join(trainLen, Seq("id"))
       .select(col("id"),
         (col("__island") - 1).cast("int").as("span_idx"),
@@ -1633,17 +1597,17 @@ object Dedup {
   /** [[windowHashes]] keeping the grid index: (id, pos, wh). Same window
     * and null-content contract; shared so the two stay in lockstep.
     */
-  private[graft] def windowHashesWithPos(docs: DataFrame, idCol: String,
-      textCol: String, windowChars: Int, stride: Int): DataFrame = {
+  private def windowHashesWithPos(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     val n = length(col(textCol))
     val nWindows = greatest(
-      (floor((n - windowChars).cast("double") / stride) + 1).cast("int"), lit(1))
+      (floor((n - WindowChars).cast("double") / Stride) + 1).cast("int"), lit(1))
     docs
       .select(col(idCol).as("id"), col(textCol).as("__t"), nWindows.as("__nw"))
       .select(col("id"), col("__t"), posexplode(sequence(lit(0), col("__nw") - 1)))
       .select(col("id"), col("pos"),
-        when(length(expr(s"substring(__t, pos * $stride + 1, $windowChars)")) > 0,
-          md5(expr(s"substring(__t, pos * $stride + 1, $windowChars)").cast("binary"))).as("wh"))
+        when(length(expr(s"substring(__t, pos * $Stride + 1, $WindowChars)")) > 0,
+          md5(expr(s"substring(__t, pos * $Stride + 1, $WindowChars)").cast("binary"))).as("wh"))
   }
 
   /** Cross-corpus decontamination — the train-vs-eval overlap check every
@@ -1660,19 +1624,14 @@ object Dedup {
     * eval windows left-join against it, and a groupBy(id) folds hit flags
     * into per-doc counts. Window alignment caveat (inherent to stride
     * grids, not this operator): a verbatim inclusion is only guaranteed to
-    * hit when it starts on the train grid; production decontamination picks
-    * stride <= windowChars/2 to bound the miss window.
+    * hit when it starts on the train grid; the grid's stride is half its
+    * window, the usual production bound on the miss window.
     */
-  def crossContamination(
-      train: DataFrame,
-      eval: DataFrame,
-      idCol: String,
-      textCol: String,
-      windowChars: Int = 64,
-      stride: Int = 32): DataFrame = {
-    val trainHashes = windowHashes(train, idCol, textCol, windowChars, stride)
+  def crossContamination(train: DataFrame, eval: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    val trainHashes = windowHashes(train, idCol, textCol)
       .where(col("wh").isNotNull).select("wh").distinct()
-    windowHashes(eval, idCol, textCol, windowChars, stride)
+    windowHashes(eval, idCol, textCol)
       .join(trainHashes.withColumn("__hit", lit(1L)), Seq("wh"), "left")
       .groupBy("id")
       .agg(count(lit(1)).as("n_windows"),
@@ -1733,20 +1692,14 @@ object Dedup {
     * as one slim bucketed table keyed by the hash. At warehouse scale the
     * train side is the 100 TB corpus — scanned ONCE here; every later eval
     * set probes the slim table without re-reading train text (the d17
-    * build-once discipline applied to d11's decontamination check). Window
-    * parameters are baked into the table contents; probe with the SAME
-    * (windowChars, stride) or hits are silently wrong.
+    * build-once discipline applied to d11's decontamination check). The
+    * one contamination grid is baked into the table contents, and the
+    * probe windows the eval side on the same grid.
     */
-  def buildContaminationIndex(
-      train: DataFrame,
-      idCol: String,
-      textCol: String,
-      table: String,
-      windowChars: Int = 64,
-      stride: Int = 32,
-      buckets: Int = 16): Unit =
+  def buildContaminationIndex(train: DataFrame, idCol: String, textCol: String,
+      table: String, buckets: Int = 16): Unit =
     Bucketing.writeBucketed(
-      windowHashes(train, idCol, textCol, windowChars, stride)
+      windowHashes(train, idCol, textCol)
         .where(col("wh").isNotNull).select("wh").distinct(),
       table, "wh", buckets)
 
@@ -1757,15 +1710,9 @@ object Dedup {
     * to the inline overload by construction — same grid, same NULL-window
     * rule, same left-join hit counting — so one oracle pins both paths.
     */
-  def crossContaminationIndexed(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      eval: DataFrame,
-      idCol: String,
-      textCol: String,
-      windowChars: Int = 64,
-      stride: Int = 32): DataFrame =
-    windowHashes(eval, idCol, textCol, windowChars, stride)
+  def crossContaminationIndexed(spark: SparkSession, table: String,
+      eval: DataFrame, idCol: String, textCol: String): DataFrame =
+    windowHashes(eval, idCol, textCol)
       .join(spark.table(table).withColumn("__hit", lit(1L)), Seq("wh"), "left")
       .groupBy("id")
       .agg(count(lit(1)).as("n_windows"),
@@ -1795,10 +1742,8 @@ object Dedup {
       idCol: String,
       textCol: String,
       minFracNum: Int = 1,
-      minFracDenom: Int = 2,
-      windowChars: Int = 64,
-      stride: Int = 32): DataFrame =
-    crossContamination(train, eval, idCol, textCol, windowChars, stride)
+      minFracDenom: Int = 2): DataFrame =
+    crossContamination(train, eval, idCol, textCol)
       .select(col("id"), col("n_windows"), col("n_contaminated"),
         round(col("n_contaminated") / col("n_windows").cast("double"), 6)
           .as("contamination_frac"),

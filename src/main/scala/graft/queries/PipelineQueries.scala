@@ -313,24 +313,18 @@ object PipelineQueries {
     * invocation per fixture pays the one corpus text pass; every
     * subsequent batch probe reads the slim tables and never re-shingles
     * the corpus — the warehouse-scale daily-batch absorption shape.
-    * Parameters are pinned to d17's (shingleN=3, numHashes=16, bandRows=1)
-    * — the index bakes them in.
+    * Returns the index name.
     */
-  private def d17IngestIndex(s: SparkSession, dir: String,
-      corpus: DataFrame): (String, String) = {
+  private def d17IngestIndex(s: SparkSession, dir: String, corpus: DataFrame): String = {
     // staged-swap versioned like d19: one version = TWO sibling tables
     // (band + shingle) derived from the versioned base name; the commit
     // marker lands on the base name only after both are written, so a
     // reader never resolves a version with one table missing
     val key = fixtureKey(dir, "documents")
-    val name = graft.util.VersionedTable.ensure(s, "d17_", s"d17_jx_$key",
-      build = n => Dedup.buildJaccardIngestIndex(corpus, "doc_id", "text",
-        s"${n}_band", s"${n}_sh", shingleN = 3, numHashes = 16, bandRows = 1,
-        buckets = 16),
-      usable = n =>
-        s.catalog.tableExists(s"${n}_band") && s.catalog.tableExists(s"${n}_sh"),
-      siblings = n => Seq(s"${n}_band", s"${n}_sh"))
-    (s"${name}_band", s"${name}_sh")
+    graft.util.VersionedTable.ensure(s, "d17_", s"d17_jx_$key",
+      build = n => Dedup.buildJaccardIngestIndex(corpus, "doc_id", "text", n),
+      usable = n => Dedup.jaccardIndexTables(n).forall(s.catalog.tableExists),
+      siblings = Dedup.jaccardIndexTables)
   }
 
   /** FIXED-batch ingest-dedup probe: the d17 batch constructed from
@@ -356,11 +350,8 @@ object PipelineQueries {
         array_join(transform(split(col("text"), " "), t => concat(t, lit("_xq"))),
           " ").as("text"))
     val batch = mut.unionByName(freshNew)
-    val (bandTable, shTable) =
-      d17IngestIndex(s, dir, t(s, dir, "documents").select("doc_id", "text"))
-    val pairs = Dedup.incrementalJaccardPairsIndexed(s, bandTable, shTable,
-      batch, "doc_id", "text",
-      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)._1
+    val index = d17IngestIndex(s, dir, t(s, dir, "documents").select("doc_id", "text"))
+    val pairs = Dedup.incrementalJaccardPairsIndexed(s, index, batch, "doc_id", "text")._1
     batch.join(pairs.select(col("idA").as("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
       .select("doc_id")
@@ -376,11 +367,10 @@ object PipelineQueries {
     */
   private def st13Ingest(s: SparkSession, corpusDocs: DataFrame,
       batchDocs: DataFrame, key: String): DataFrame = {
-    val bandT = s"st13_band_$key"; val shT = s"st13_sh_$key"
+    val index = s"st13_$key"
     // per-invocation index: sweep crashed leftovers, then build fresh
     graft.util.TableRetention.sweep(s, "st13_")
-    Dedup.buildJaccardIngestIndex(corpusDocs, "doc_id", "text", bandT, shT,
-      shingleN = 3, numHashes = 16, bandRows = 1, buckets = 16)
+    Dedup.buildJaccardIngestIndex(corpusDocs, "doc_id", "text", index)
     try {
       val toks = split(col("text"), " ")
       val wdocs = batchDocs.where(size(toks) >= 30 && col("doc_id") % 4 === 0)
@@ -410,9 +400,8 @@ object PipelineQueries {
         // the probe returns its checkpointed prep, and the append below
         // derives from it, so the batch's shingle+minhash walk runs once
         // per micro-batch
-        val (pairs, prep) = Dedup.incrementalJaccardPairsIndexed(
-          s, bandT, shT, batch, "doc_id", "text",
-          shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+        val (pairs, prep) =
+          Dedup.incrementalJaccardPairsIndexed(s, index, batch, "doc_id", "text")
         // materialize admitted BEFORE the append mutates the index
         batch.join(pairs.select(col("idA").as("doc_id")).distinct(),
             Seq("doc_id"), "left_anti")
@@ -421,10 +410,9 @@ object PipelineQueries {
         // against the just-staged ids over the checkpointed prep —
         // admitted ⊆ batch, whose ids the probe's guard just proved
         // unique against the same tables (the append does not re-check)
-        Dedup.appendJaccardIngestIndex(s, bandT, shT,
+        Dedup.appendJaccardIngestIndex(s, index,
           prep.join(broadcast(s.read.parquet(out)
-              .select(col("doc_id").as("id"))), Seq("id"), "left_semi"),
-          numHashes = 16, bandRows = 1, buckets = 16)
+              .select(col("doc_id").as("id"))), Seq("id"), "left_semi"))
       }
       // the result must OUTLIVE the finally-swept index tables
       ordered(s.read.parquet(loop.payloads(): _*).select("doc_id")).localCheckpoint()
@@ -885,13 +873,11 @@ object PipelineQueries {
     */
   private[graft] def st23Ingest(s: SparkSession, batches: Seq[DataFrame],
       loop: IngestLoop, tblBase: String): DataFrame = {
-    val bandT = s"${tblBase}_band"; val shT = s"${tblBase}_sh"
     graft.util.TableRetention.sweep(s, tblBase)
     // seed an EMPTY ingest index: the loop is then uniform — batch 1
     // probes it (its own internal pairs still surface through the
     // fresh-vs-fresh leg) and appends, exactly like every later batch
-    Dedup.buildJaccardIngestIndex(batches.head.limit(0), "doc_id", "text",
-      bandT, shT, shingleN = 3, numHashes = 16, bandRows = 1, buckets = 16)
+    Dedup.buildJaccardIngestIndex(batches.head.limit(0), "doc_id", "text", tblBase)
     loop.run(docSchema, batches) { (batch, id, out) =>
       def label(x: String): Unit =
         s.sparkContext.setJobDescription(s"st23 b$id: $x")
@@ -900,9 +886,8 @@ object PipelineQueries {
       // the index append below, so the shingle+minhash walk — the
       // batch's dominant compute — runs exactly once per micro-batch and
       // the streaming batch frame is scanned once instead of per consumer
-      val (pairs, prep) = Dedup.incrementalJaccardPairsIndexed(
-        s, bandT, shT, batch, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      val (pairs, prep) =
+        Dedup.incrementalJaccardPairsIndexed(s, tblBase, batch, "doc_id", "text")
       val vs = loop.payloads()
       val storedPrior =
         if (vs.isEmpty)
@@ -931,8 +916,7 @@ object PipelineQueries {
         () => storedApp.write.mode("overwrite").parquet(out + "/stored"),
         () => remapNew.write.mode("overwrite").parquet(out + "/remap"))
       label("index append")
-      Dedup.appendJaccardIngestIndex(s, bandT, shT, prep,
-        numHashes = 16, bandRows = 1, buckets = 16)
+      Dedup.appendJaccardIngestIndex(s, tblBase, prep)
       s.sparkContext.setJobDescription(null)
     }
     val vs = loop.payloads()
@@ -966,14 +950,13 @@ object PipelineQueries {
       baseDir: String): DataFrame = {
     val corpus = t(s, dir, "documents").select("doc_id", "text")
     // one-shot state seed (the once-per-corpus ingest cost)
-    val seedPairs = Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
-      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+    val seedPairs = Dedup.ngramJaccardPairs(corpus, "doc_id", "text")
     var stored = Dedup.clusters(corpus, "doc_id", seedPairs).localCheckpoint()
     var remap = stored.select(col("id").as("cluster"),
       col("id").as("root")).limit(0).localCheckpoint()
     // read-only probes of the shared fixture index (d17's versioned
     // build-once — already paid by the d17 legs at this scale)
-    val (bandT, shT) = d17IngestIndex(s, dir, corpus)
+    val index = d17IngestIndex(s, dir, corpus)
     val baseDocs = t(s, baseDir, "documents").select("doc_id", "text")
     def batchOf(off: Long, m: Long, r: Long) = baseDocs
       .where(col("doc_id") % m === r)
@@ -993,12 +976,9 @@ object PipelineQueries {
         // batch vs corpus through the persisted index; batch vs the
         // earlier fixed batch inline (the index is shared and read-only
         // here — the mutating append path is st23Ingest's)
-        val vsCorpus = Dedup.incrementalJaccardPairsIndexed(s, bandT, shT,
-          batch, "doc_id", "text",
-          shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)._1
-        val vsEarlier = Dedup.incrementalJaccardPairs(earlier, batch,
-          "doc_id", "text",
-          shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+        val vsCorpus =
+          Dedup.incrementalJaccardPairsIndexed(s, index, batch, "doc_id", "text")._1
+        val vsEarlier = Dedup.incrementalJaccardPairs(earlier, batch, "doc_id", "text")
         val (storedApp, remapNew) = Dedup.closureMerge(stored, remap,
           batch.select("doc_id"), vsCorpus.unionByName(vsEarlier))
         stored = stored.unionByName(storedApp).localCheckpoint()
@@ -1058,7 +1038,7 @@ object PipelineQueries {
     // seed an EMPTY band index — the uniform-loop trick st23 uses
     Dedup.buildSimhashIngestIndex(
       batch1.select(col("media_id").as("id"), lit(0L).as("sig")).limit(0),
-      "id", "sig", bandT, maxHamming = 4, blocks = 8)
+      "id", "sig", bandT)
     val loop = IngestLoop.local(s, "st24_perceptual", dir)
     loop.run(StructType(Seq(StructField("media_id", LongType),
         StructField("payload", BinaryType),
@@ -1068,8 +1048,7 @@ object PipelineQueries {
       // band index, never re-decoded
       val sigs = Multimodal.withDHash(batch)
         .where(col("dhash").isNotNull).localCheckpoint()
-      val pairs = Dedup.incrementalSimhashPairsIndexed(s, bandT,
-        sigs, "media_id", "dhash", maxHamming = 4, blocks = 8)
+      val pairs = Dedup.incrementalSimhashPairsIndexed(s, bandT, sigs, "media_id", "dhash")
       pairs.write.mode("overwrite").parquet(out + "/pairs")
       // append the CHECKPOINTED signatures directly: the probe's
       // require just proved these ids unique against the same table
@@ -1078,8 +1057,7 @@ object PipelineQueries {
       // bucketed saveAsTable append fed a streaming-derived frame
       // writes through the micro-batch's cloned session and lands zero
       // rows)
-      Dedup.appendSimhashIngestIndex(s, bandT, sigs,
-        "media_id", "dhash", maxHamming = 4, blocks = 8)
+      Dedup.appendSimhashIngestIndex(s, bandT, sigs, "media_id", "dhash")
     }
     val out = ordered(s.read.parquet(loop.payloads().map(_ + "/pairs"): _*)
       .select(col("idA"), col("idB"), col("hamming").cast("int").as("hamming")))
@@ -1993,8 +1971,7 @@ object PipelineQueries {
     // (miss < 2e-5), so the DuckDB brute-force exact-Jaccard oracle is a
     // true end-to-end check INCLUDING the LSH candidate stage's recall
     "d05_ngram_jaccard_pairs" -> ((s, dir) =>
-      ordered(Dedup.ngramJaccardPairs(docsWithNearDups(s, dir), "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      ordered(Dedup.ngramJaccardPairs(docsWithNearDups(s, dir), "doc_id", "text")
         .select(col("idA"), col("idB"), round(col("jaccard"), 6).as("jaccard")))),
     // sign-LSH recall is exactly 1 for the planted pairs (a positively
     // scaled copy keeps every hyperplane sign), and no organic 64-dim pair
@@ -2019,8 +1996,7 @@ object PipelineQueries {
     // end-to-end; minhash estimated pairs stay covered by d03
     "d07_dedup_survivors" -> ((s, dir) => {
       val docs = docsWithNearDups(s, dir)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text")
       ordered(Dedup.survivors(docs, "doc_id", pairs).select("doc_id"))
     }),
     // exact transitive-closure clusters over the recall-1 exact-Jaccard
@@ -2029,8 +2005,7 @@ object PipelineQueries {
     // checked against a DuckDB recursive-CTE reachability oracle
     "d09_dedup_clusters" -> ((s, dir) => {
       val docs = docsWithNearDups(s, dir)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text")
       ordered(Dedup.clusters(docs, "doc_id", pairs)
         .select(col("id").as("doc_id"), col("cluster")))
     }),
@@ -2053,8 +2028,7 @@ object PipelineQueries {
     // the hash
     "d12_best_survivors" -> ((s, dir) => {
       val docs = docsWithNearDups(s, dir).withColumn("score", length(col("text")))
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text")
       ordered(Dedup.bestSurvivors(docs, "doc_id", "score", pairs)
         .select(col("doc_id"), col("cluster"), col("score")))
     }),
@@ -2586,8 +2560,7 @@ object PipelineQueries {
         expr("substring(text, instr(text, ' ') + 1)").as("text"))
       val docs = d.unionByName(drop1).unionByName(drop2)
         .withColumn("score", length(col("text")))
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text")
       ordered(Dedup.quotaSurvivors(docs, "doc_id", "score", pairs, quota = 2)
         .select(col("doc_id"), col("cluster"), col("rank"),
           col("cluster_size"), col("n_kept")))
@@ -2785,8 +2758,7 @@ object PipelineQueries {
         expr("substring(text, instr(text, ' ') + 1)").as("text"), col("lang"))
       val docs = d.unionByName(drop1).unionByName(drop2)
         .withColumn("score", length(col("text")))
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text")
       val kept = Dedup.quotaSurvivors(docs, "doc_id", "score", pairs, quota = 2)
         .withColumn("mass",
           coalesce(length(col("text")).cast("long"), lit(0L)))
@@ -3582,7 +3554,8 @@ object PipelineQueries {
     // m06 below is the linear production shape.
     "m05_perceptual_dedup" -> ((s, dir) =>
       ordered(Dedup.simhashPairsCollapsed(m05Sigs(s, dir), "media_id", "dhash",
-          maxHamming = 4, bits = 64, sigFn = c => c, blocks = 8)
+          maxHamming = Dedup.Perceptual.MaxHamming, bits = Dedup.Perceptual.Bits,
+          sigFn = c => c, blocks = Dedup.Perceptual.Blocks)
         .select(col("idA"), col("idB"), col("hamming").cast("int").as("hamming")))),
     // m05's pairs closed into connected components (d09's exact min-label
     // propagation) — the PRODUCTION shape for perceptual dedup: LINEAR in
@@ -3601,7 +3574,8 @@ object PipelineQueries {
         .localCheckpoint() // used by both the rep pairing and the final attach
       val reps = members.where(col("id") === col("rep")).select("id", "sig")
       val repPairs = Dedup.simhashPairs(reps, "id", "sig",
-        maxHamming = 4, bits = 64, sigFn = c => c, blocks = 8)
+        maxHamming = Dedup.Perceptual.MaxHamming, bits = Dedup.Perceptual.Bits,
+        sigFn = c => c, blocks = Dedup.Perceptual.Blocks)
       val repClusters = Dedup.clusters(reps, "id", repPairs)
         .select(col("id").as("rep"), col("cluster"))
       ordered(members.join(repClusters, Seq("rep"))

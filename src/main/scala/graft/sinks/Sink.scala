@@ -345,8 +345,10 @@ object Sink {
     require(paths.nonEmpty, s"no output found at $path")
     def read(): DataFrame = fmt match {
       case graft.sources.Discovery.Csv =>
+        // multiLine: a value with an embedded newline is one quoted field
+        // (the input reader's default too), not two records
         spark.read.option("header", "true").option("sep", delimiter)
-          .option("escape", "\"").csv(paths: _*)
+          .option("escape", "\"").option("multiLine", "true").csv(paths: _*)
       case graft.sources.Discovery.Parquet => spark.read.parquet(paths: _*)
       case graft.sources.Discovery.Orc     => spark.read.orc(paths: _*)
       case graft.sources.Discovery.Avro    =>

@@ -81,11 +81,39 @@ object CsvSource {
       StructType(names.map(n => StructField(n, inferred(n), nullable = true)))
     }
 
+  /** The CSV reader options of every CSV scan — the batch [[readPaths]]
+    * and the `--stream` source (`StreamingConcat.planStream`) — so both
+    * read each field alike. PERMISSIVE => parse failure -> null, same as
+    * the reference's `.parse().ok()`.
+    */
+  def readerOptions(opts: CsvOptions): Map[String, String] = Map(
+    "header" -> opts.headers.toString,
+    "delimiter" -> opts.delimiter,
+    "quote" -> opts.quote,
+    // RFC 4180: a doubled quote inside a quoted field is a literal quote
+    // (escape char = quote char; Spark's default backslash escaping is
+    // not what CSV writers — including the reference's Rust csv crate —
+    // produce)
+    "escape" -> opts.quote,
+    "encoding" -> opts.encoding,
+    "multiLine" -> opts.multiLine.toString,
+    "mode" -> "PERMISSIVE",
+    "nullValue" -> opts.naValues.headOption.getOrElse(""))
+
+  /** NA list -> null on the string columns of a CSV scan (csv_in.rs:129-131);
+    * non-string columns are already nulled by the typed parse.
+    */
+  def naToNull(df: DataFrame, opts: CsvOptions): DataFrame =
+    df.select(df.schema.fields.map { f =>
+      val c = col(graft.schema.SchemaUnifier.quoted(f.name))
+      if (f.dataType == StringType)
+        when(c.isin(opts.naValues: _*), lit(null)).otherwise(c).as(f.name)
+      else c
+    }.toIndexedSeq: _*)
+
   /** Typed scan of one-or-many same-schema CSV files in ONE reader (one scan
     * node regardless of file count). The full scan happens once, with the
-    * resolved schema, so the CSV parser produces typed columns natively;
-    * PERMISSIVE => parse failure -> null, same as the reference's
-    * `.parse().ok()`.
+    * resolved schema, so the CSV parser produces typed columns natively.
     */
   def readPaths(spark: SparkSession, paths: Seq[String], opts: CsvOptions,
       resolvedSchema: Option[StructType] = None): DataFrame = {
@@ -96,32 +124,11 @@ object CsvSource {
     val parserSchema = StructType(schema.fields.map(f =>
       f.copy(dataType = if (f.dataType == NullType) StringType else f.dataType,
         nullable = true)))
-    val typed = spark.read
-      .schema(parserSchema)
-      .option("header", opts.headers.toString)
-      .option("delimiter", opts.delimiter)
-      .option("quote", opts.quote)
-      // RFC 4180: a doubled quote inside a quoted field is a literal quote
-      // (escape char = quote char; Spark's default backslash escaping is
-      // not what CSV writers — including the reference's Rust csv crate —
-      // produce)
-      .option("escape", opts.quote)
-      .option("encoding", opts.encoding)
-      .option("multiLine", opts.multiLine.toString)
-      .option("mode", "PERMISSIVE")
-      .option("nullValue", opts.naValues.headOption.getOrElse(""))
-      .csv(paths: _*)
-    val withNulls = typed.select(names.map { n =>
+    val typed = spark.read.schema(parserSchema).options(readerOptions(opts)).csv(paths: _*)
+    naToNull(typed.select(names.map { n =>
       if (schema(n).dataType == NullType) lit(null).as(n)
       else col(graft.schema.SchemaUnifier.quoted(n))
-    }.toIndexedSeq: _*)
-    // NA list -> null (csv_in.rs:129-131); non-string cols already nulled by parse
-    withNulls.select(withNulls.schema.fields.map { f =>
-      if (f.dataType == StringType)
-        when(col(graft.schema.SchemaUnifier.quoted(f.name)).isin(opts.naValues: _*), lit(null))
-          .otherwise(col(graft.schema.SchemaUnifier.quoted(f.name))).as(f.name)
-      else col(graft.schema.SchemaUnifier.quoted(f.name))
-    }.toIndexedSeq: _*)
+    }.toIndexedSeq: _*), opts)
   }
 
   /** Driver-side bounded sample: open the file via the Hadoop FS API (works

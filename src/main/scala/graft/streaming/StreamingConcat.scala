@@ -85,25 +85,11 @@ object StreamingConcat {
           val r = spark.readStream.schema(schema)
           globFilter.fold(r)(g => r.option("pathGlobFilter", g)).parquet(path)
         case Csv =>
-          val r0 = spark.readStream
-            .schema(schema)
-            .option("header", cfg.csv.headers.toString)
-            .option("delimiter", cfg.csv.delimiter)
-            .option("quote", cfg.csv.quote)
-            // same RFC 4180 semantics as the batch reader (CsvSource
-            // .readPaths): doubled quotes escape, quoted newlines one record
-            .option("escape", cfg.csv.quote)
-            .option("multiLine", cfg.csv.multiLine.toString)
-            .option("encoding", cfg.csv.encoding)
-            .option("mode", "PERMISSIVE") // parse failure -> null (coercion.rs:117-154)
-          val raw = globFilter.fold(r0)(g => r0.option("pathGlobFilter", g)).csv(path)
-          // NA list -> null on string columns (numeric NA already nulled by parse)
-          raw.select(raw.schema.fields.map { fld =>
-            val c = col(graft.schema.SchemaUnifier.quoted(fld.name))
-            if (fld.dataType == StringType)
-              when(c.isin(cfg.csv.naValues: _*), lit(null)).otherwise(c).as(fld.name)
-            else c
-          }.toIndexedSeq: _*)
+          // the batch reader's options and NA->null projection (one
+          // definition in CsvSource)
+          val r = spark.readStream.schema(schema).options(CsvSource.readerOptions(cfg.csv))
+          CsvSource.naToNull(
+            globFilter.fold(r)(g => r.option("pathGlobFilter", g)).csv(path), cfg.csv)
         case Jsonl =>
           val r = spark.readStream.schema(schema).option("mode", "PERMISSIVE")
           globFilter.fold(r)(g => r.option("pathGlobFilter", g)).json(path)

@@ -160,6 +160,20 @@ class CompactSpec extends SparkSpec {
     assert(back.where(col("addr") === "city,7").count() == 1)
   }
 
+  test("CSV tree whose values hold newlines round-trips rows and values") {
+    val d = tmpDir("compact-newline")
+    val out = d.resolve("tree").toString
+    import spark.implicits._
+    val df = (1 to 40).map(i => (i.toLong, s"line$i\nnext$i")).toDF("id", "txt")
+    df.repartition(4).write.option("header", "true").option("escape", "\"").csv(out)
+    cli.Maw.execute(spark, cli.Maw.parse(Seq(out, "--compact", "--verify", "-q")))
+    assert(fileCount(out) < 4)
+    val back = spark.read.option("header", "true").option("escape", "\"")
+      .option("multiLine", "true").csv(out)
+    assert(back.count() == 40)
+    assert(back.where(col("txt") === "line7\nnext7").count() == 1)
+  }
+
   test("CSV tree compacted with the WRONG delimiter is refused, tree untouched") {
     val d = tmpDir("compact-wrongdelim")
     val out = d.resolve("tree").toString

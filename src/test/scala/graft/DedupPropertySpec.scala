@@ -126,35 +126,54 @@ class DedupPropertySpec extends SparkSpec {
   }
 
   test("property: per-batch Jaccard index pairs over any split == one-shot ngramJaccardPairs") {
-    val bandT = "propjx_band"; val shT = "propjx_sh"
+    val index = "propjx"
     val gen = for (docs <- corpusGen; batchOf <- splitGen(docs.size, 3))
       yield (docs, batchOf)
     check(Prop.forAllNoShrink(gen) { case (docs, batchOf) =>
       graft.util.TableRetention.sweep(spark, "propjx_")
       val all = docs.toDF("doc_id", "text")
-      Dedup.buildJaccardIngestIndex(all.limit(0), "doc_id", "text", bandT, shT,
-        shingleN = 3, numHashes = 16, bandRows = 1, buckets = 4)
+      Dedup.buildJaccardIngestIndex(all.limit(0), "doc_id", "text", index, buckets = 4)
       val perBatch = (0 to batchOf.max).flatMap { b =>
         val batch = docs.zip(batchOf).collect { case (d, `b`) => d }
           .toDF("doc_id", "text")
-        val (pairs, prep) = Dedup.incrementalJaccardPairsIndexed(
-          spark, bandT, shT, batch, "doc_id", "text",
-          shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+        val (pairs, prep) =
+          Dedup.incrementalJaccardPairsIndexed(spark, index, batch, "doc_id", "text")
         val got = pairs.collect()
           .map(r => (math.min(r.getLong(0), r.getLong(1)),
             math.max(r.getLong(0), r.getLong(1)), r.getDouble(2)))
-        Dedup.appendJaccardIngestIndex(spark, bandT, shT, prep,
-          numHashes = 16, bandRows = 1, buckets = 4)
+        Dedup.appendJaccardIngestIndex(spark, index, prep)
         got
       }
-      val oneShot = Dedup.ngramJaccardPairs(all, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      val oneShot = Dedup.ngramJaccardPairs(all, "doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(perBatch.size == perBatch.toSet.size, "a pair surfaced in two batches")
       assert(perBatch.toSet == oneShot,
         s"incremental union != one-shot: only-incremental=${perBatch.toSet diff oneShot} " +
           s"only-one-shot=${oneShot diff perBatch.toSet}")
       graft.util.TableRetention.sweep(spark, "propjx_")
+      true
+    })
+  }
+
+  test("property: st23Ingest labels over any 1-3-way split == one-shot clusters") {
+    // k batches, any of them possibly empty; the corpus always holds docs,
+    // so at least one batch does
+    val gen = for {
+      docs <- corpusGen
+      k <- Gen.choose(1, 3)
+      batchOf <- Gen.listOfN(docs.size, Gen.choose(0, k - 1))
+    } yield (docs, k, batchOf)
+    check(Prop.forAllNoShrink(gen) { case (docs, k, batchOf) =>
+      val batches = (0 until k).map(b =>
+        docs.zip(batchOf).collect { case (d, `b`) => d }.toDF("doc_id", "text"))
+      val loop = graft.streaming.IngestLoop.local(spark, "st23prop_loop", "")
+      val got = lbls(graft.queries.PipelineQueries
+        .st23Ingest(spark, batches, loop, "st23prop"))
+      val all = docs.toDF("doc_id", "text")
+      val want = lbls(Dedup.clusters(all, "doc_id",
+        Dedup.ngramJaccardPairs(all, "doc_id", "text")))
+      assert(got == want, s"st23 labels != one-shot for split ${batchOf.mkString(",")}: " +
+        s"diff=${(got.toSet diff want.toSet) ++ (want.toSet diff got.toSet)}")
       true
     })
   }
@@ -176,19 +195,17 @@ class DedupPropertySpec extends SparkSpec {
     check(Prop.forAllNoShrink(sigsGen) { case (sigs, batchOf) =>
       graft.util.TableRetention.sweep(spark, "propsh_")
       val all = sigs.toDF("id", "sig")
-      Dedup.buildSimhashIngestIndex(all.limit(0), "id", "sig", bandT,
-        maxHamming = 4, blocks = 8, buckets = 4)
+      Dedup.buildSimhashIngestIndex(all.limit(0), "id", "sig", bandT, buckets = 4)
       val perBatch = (0 to batchOf.max).flatMap { b =>
         val batch = sigs.zip(batchOf).collect { case (s, `b`) => s }.toDF("id", "sig")
-        val got = Dedup.incrementalSimhashPairsIndexed(spark, bandT, batch,
-          "id", "sig", maxHamming = 4, blocks = 8)
+        val got = Dedup.incrementalSimhashPairsIndexed(spark, bandT, batch, "id", "sig")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-        Dedup.appendSimhashIngestIndex(spark, bandT, batch, "id", "sig",
-          maxHamming = 4, blocks = 8, buckets = 4)
+        Dedup.appendSimhashIngestIndex(spark, bandT, batch, "id", "sig")
         got
       }
-      val oneShot = Dedup.simhashPairs(all, "id", "sig", maxHamming = 4,
-        bits = 64, sigFn = c => c, blocks = 8)
+      val oneShot = Dedup.simhashPairs(all, "id", "sig",
+        maxHamming = Dedup.Perceptual.MaxHamming, bits = Dedup.Perceptual.Bits,
+        sigFn = c => c, blocks = Dedup.Perceptual.Blocks)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(perBatch.size == perBatch.toSet.size, "a pair surfaced in two batches")
       assert(perBatch.toSet == oneShot,

@@ -222,7 +222,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // doc 2 = doc 1 with one char changed at pos 100 (grid stays aligned)
     val edited = base.substring(0, 99) + "Z" + base.substring(100)
     val df = Seq((1L, base), (2L, edited), (3L, other)).toDF("id", "text")
-    val got = Dedup.substringContamination(df, "id", "text", windowChars = 64, stride = 32)
+    val got = Dedup.substringContamination(df, "id", "text")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     // 248 chars -> 6 windows (starts 0,32,...,160); the pos-99 edit touches
     // the windows starting at 64 and 96 -> 4 of 6 shared for docs 1 and 2
@@ -242,8 +242,7 @@ class DedupSimilaritySpec extends SparkSpec {
                                    // other[0:100] -> windows at 0,32 only)
       (13L, ""), (14L, null.asInstanceOf[String])) // contentless: zero hits
       .toDF("id", "text")
-    val got = Dedup.crossContamination(train, eval, "id", "text",
-      windowChars = 64, stride = 32)
+    val got = Dedup.crossContamination(train, eval, "id", "text")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got(10L) == ((6L, 6L)))         // 248 chars -> 6 windows, all in train
     // 184 chars -> 4 windows at local 0,32,64,96 = train 64..127,96..159,
@@ -762,8 +761,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (11L, "red orange yellow green blue indigo"),
       (12L, "orange yellow green blue indigo")).toDF("doc_id", "text")
     val pairs = graft.operators.Dedup.incrementalJaccardPairs(old, fresh,
-      "doc_id", "text", shingleN = 3, minJaccard = 0.4, numHashes = 16,
-      bandRows = 1).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      "doc_id", "text").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((10L, 1L)), s"old blocker missed: $pairs")
     assert(pairs.contains((12L, 11L)), s"earlier-new blocker missed: $pairs")
     // asymmetry: old x old pairs structurally absent, new side only as A
@@ -783,8 +781,7 @@ class DedupSimilaritySpec extends SparkSpec {
         org.apache.spark.sql.functions.expr(
           "substring(text, instr(text, ' ') + 1)").as("text"))
     val inline = graft.operators.Dedup.incrementalJaccardPairs(docs, batch,
-      "doc_id", "text", shingleN = 3, minJaccard = 0.5, numHashes = 16,
-      bandRows = 1)
+      "doc_id", "text")
     // plant litter a "crashed" earlier build would leave: a stale-key
     // catalog table and an orphan warehouse location
     import spark.implicits._
@@ -794,20 +791,18 @@ class DedupSimilaritySpec extends SparkSpec {
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
     val orphan = new java.io.File(wh, "dspec_sh_cafe")
     orphan.mkdirs()
+    val live = graft.operators.Dedup.jaccardIndexTables("dspec_live")
     graft.operators.Dedup.buildJaccardIngestIndex(docs, "doc_id", "text",
-      "dspec_band_live", "dspec_sh_live", shingleN = 3, numHashes = 16,
-      bandRows = 1, buckets = 4)
-    val swept = graft.util.TableRetention.sweep(spark, "dspec_",
-      Set("dspec_band_live", "dspec_sh_live").contains)
+      "dspec_live", buckets = 4)
+    val swept = graft.util.TableRetention.sweep(spark, "dspec_", live.contains)
     assert(swept.exists(_.endsWith("dspec_band_deadbeef")), swept)
     assert(swept.exists(_ == "loc:dspec_sh_cafe"), swept)
     assert(!spark.catalog.tableExists("dspec_band_deadbeef"))
     assert(!orphan.exists())
     // live index survived the sweep and serves the probe
-    assert(spark.catalog.tableExists("dspec_band_live"))
+    assert(live.forall(spark.catalog.tableExists))
     val indexed = graft.operators.Dedup.incrementalJaccardPairsIndexed(spark,
-      "dspec_band_live", "dspec_sh_live", batch, "doc_id", "text",
-      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)._1
+      "dspec_live", batch, "doc_id", "text")._1
     val a = inline.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val b = indexed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b, s"indexed path diverged: only-inline=${a.diff(b).take(5)} " +
@@ -817,7 +812,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val clash2 = docs.limit(1).select($"doc_id", $"text")
     val e2 = intercept[IllegalArgumentException](
       graft.operators.Dedup.incrementalJaccardPairsIndexed(spark,
-        "dspec_band_live", "dspec_sh_live", clash2, "doc_id", "text"))
+        "dspec_live", clash2, "doc_id", "text"))
     assert(e2.getMessage.contains("globally unique"), e2.getMessage)
     // a too-short sweep prefix is refused (it would sweep unrelated tables)
     val e3 = intercept[IllegalArgumentException](
@@ -1110,8 +1105,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // a prior failed run's tables/locations would make saveAsTable refuse
     graft.util.TableRetention.sweep(spark, "dspeca_")
     graft.operators.Dedup.buildJaccardIngestIndex(docs, "doc_id", "text",
-      "dspeca_band", "dspeca_sh", shingleN = 3, numHashes = 16,
-      bandRows = 1, buckets = 4)
+      "dspeca", buckets = 4)
     // batch 1: near-dup mutations of every 7th doc (blocked) plus
     // genuinely-new docs (every token suffixed — all shingles change);
     // the survivors are what a real ingest admits to the corpus
@@ -1123,29 +1117,24 @@ class DedupSimilaritySpec extends SparkSpec {
           expr("array_join(transform(split(text, ' '), t -> concat(t, '_ap')), ' ')")
             .as("text")))
     val (pairs1, prep1) = graft.operators.Dedup.incrementalJaccardPairsIndexed(
-      spark, "dspeca_band", "dspeca_sh", batch1, "doc_id", "text",
-      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      spark, "dspeca", batch1, "doc_id", "text")
     val blocked1 = pairs1.select($"idA".as("doc_id")).distinct()
     val accepted1 = batch1.join(blocked1, Seq("doc_id"), "left_anti")
     assert(accepted1.limit(1).collect().nonEmpty,
       "fixture admitted nothing — append test is vacuous")
     // append the ADMITTED slice of the probe's prep, as st13 does
-    graft.operators.Dedup.appendJaccardIngestIndex(spark,
-      "dspeca_band", "dspeca_sh",
-      prep1.join(accepted1.select($"doc_id".as("id")), Seq("id"), "left_semi"),
-      numHashes = 16, bandRows = 1, buckets = 4)
+    graft.operators.Dedup.appendJaccardIngestIndex(spark, "dspeca",
+      prep1.join(accepted1.select($"doc_id".as("id")), Seq("id"), "left_semi"))
     // batch 2 contains near-dups of batch-1 SURVIVORS (+4e6 ids, first
     // token dropped) — only an appended index can block those
     val batch2 = accepted1
       .select(($"doc_id" + 1000000L).as("doc_id"),
         expr("substring(text, instr(text, ' ') + 1)").as("text"))
     val indexed2 = graft.operators.Dedup.incrementalJaccardPairsIndexed(spark,
-      "dspeca_band", "dspeca_sh", batch2, "doc_id", "text",
-      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)._1
+      "dspeca", batch2, "doc_id", "text")._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val inline2 = graft.operators.Dedup.incrementalJaccardPairs(
-      docs.unionByName(accepted1), batch2, "doc_id", "text",
-      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+      docs.unionByName(accepted1), batch2, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(indexed2 == inline2, s"appended index diverged from inline over " +
       s"grown corpus: only-indexed=${indexed2.diff(inline2).take(5)} " +
@@ -1158,8 +1147,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // duplicate-id guard (they would shadow-pair forever)
     val e = intercept[IllegalArgumentException](
       graft.operators.Dedup.incrementalJaccardPairsIndexed(spark,
-        "dspeca_band", "dspeca_sh", accepted1, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1))
+        "dspeca", accepted1, "doc_id", "text"))
     assert(e.getMessage.contains("globally unique"), e.getMessage)
     graft.util.TableRetention.sweep(spark, "dspeca_")
   }
@@ -1253,34 +1241,29 @@ class DedupSimilaritySpec extends SparkSpec {
       (4L, base ^ 0x1FL),
       (5L, base),
       (6L, 0x123456789ABCDEF0L)).toDF("id", "sig")
-    val oneShot = Dedup.simhashPairs(sigs, "id", "sig", maxHamming = 4,
-      bits = 64, sigFn = c => c, blocks = 8)
+    val oneShot = Dedup.simhashPairs(sigs, "id", "sig",
+      maxHamming = Dedup.Perceptual.MaxHamming, bits = Dedup.Perceptual.Bits,
+      sigFn = c => c, blocks = Dedup.Perceptual.Blocks)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // split: {1,3,6} first, {2,4,5} second — near-dup pairs straddle
     val b1 = sigs.where(col("id").isin(1L, 3L, 6L))
     val b2 = sigs.where(col("id").isin(2L, 4L, 5L))
     // empty-seeded, then appended per batch — the uniform-loop model st24
     // runs (batch-internal pairs surface through the fresh-vs-fresh leg)
-    Dedup.buildSimhashIngestIndex(b1.limit(0), "id", "sig", bandT,
-      maxHamming = 4, blocks = 8, buckets = 4)
-    val q1 = Dedup.incrementalSimhashPairsIndexed(spark, bandT,
-      b1, "id", "sig", maxHamming = 4, blocks = 8)
+    Dedup.buildSimhashIngestIndex(b1.limit(0), "id", "sig", bandT, buckets = 4)
+    val q1 = Dedup.incrementalSimhashPairsIndexed(spark, bandT, b1, "id", "sig")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    Dedup.appendSimhashIngestIndex(spark, bandT, b1, "id", "sig",
-      maxHamming = 4, blocks = 8, buckets = 4)
-    val q2 = Dedup.incrementalSimhashPairsIndexed(spark, bandT,
-      b2, "id", "sig", maxHamming = 4, blocks = 8)
+    Dedup.appendSimhashIngestIndex(spark, bandT, b1, "id", "sig")
+    val q2 = Dedup.incrementalSimhashPairsIndexed(spark, bandT, b2, "id", "sig")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    Dedup.appendSimhashIngestIndex(spark, bandT, b2, "id", "sig",
-      maxHamming = 4, blocks = 8, buckets = 4)
+    Dedup.appendSimhashIngestIndex(spark, bandT, b2, "id", "sig")
     assert((q1 ++ q2) == oneShot,
       s"incremental union != one-shot:\n${q1 ++ q2}\nvs\n$oneShot")
     assert(q1.intersect(q2).isEmpty, "a pair surfaced in two batches")
     // re-ingesting appended ids is refused by the probe, the family's one
     // duplicate-id guard
     val e = intercept[IllegalArgumentException] {
-      Dedup.incrementalSimhashPairsIndexed(spark, bandT,
-        b1, "id", "sig", maxHamming = 4, blocks = 8)
+      Dedup.incrementalSimhashPairsIndexed(spark, bandT, b1, "id", "sig")
     }
     assert(e.getMessage.contains("globally unique"), e.getMessage)
     graft.util.TableRetention.sweep(spark, "simix")

@@ -184,6 +184,25 @@ class MawCliSpec extends SparkSpec {
       s"mis-bound or re-rendered streaming columns: ${rows.mkString(",")}") // unified order k,v
   }
 
+  test("--stream CSV reads each field as batch does: quoted empty, NA, empty unquoted") {
+    import graft.streaming.StreamingConcat
+    val d = tmpDir("streamcells")
+    val in = d.resolve("in")
+    Files.createDirectories(in)
+    // `a` also holds a real value, so its inference sample types it string
+    writeFile(in, "a.csv", "k,a,b\n1,\"\",x\n2,NA,y\n3,,z\n4,w,q\n")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("k", "a", "b").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)), Option(r.getString(2)))).sortBy(_._1).toSeq
+    val batch = rows(Concat.run(spark, Concat.Config(Seq(in.toString))))
+    val out = d.resolve("out").toString
+    StreamingConcat.run(spark, Concat.Config(Seq(in.toString)), out,
+      Discovery.Parquet, d.resolve("cp").toString)
+    val stream = rows(spark.read.parquet(out))
+    assert(batch == Seq((1L, Some(""), Some("x")), (2L, None, Some("y")),
+      (3L, None, Some("z")), (4L, Some("w"), Some("q"))), s"batch cells: $batch")
+    assert(stream == batch, s"stream $stream != batch $batch")
+  }
+
   test("--stream refuses --na, --compression and --zstd-level instead of dropping them") {
     for ((flag, value) <- Seq("--na" -> "NULL", "--compression" -> "snappy",
         "--zstd-level" -> "9")) {
@@ -354,6 +373,16 @@ class MawCliSpec extends SparkSpec {
     val rolled = d.resolve("rolled.csv").toString
     Sink.write(df.repartition(1), Sink.Config(rolled, Discovery.Csv, rollByRows = Some(20)))
     assert(Sink.readBack(spark, rolled, Discovery.Csv).count() == 50)
+  }
+
+  test("--verify passes a CSV output whose value holds a newline") {
+    val d = tmpDir("verifynl")
+    val f = writeFile(d, "in.csv", "k,v\n1,\"a\nb\"\n2,c\n")
+    val out = d.resolve("out.csv").toString
+    Maw.execute(spark, Maw.parse(Seq(f, "-o", out, "--verify", "-q")))
+    val back = Sink.readBack(spark, out, Discovery.Csv)
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    assert(back == Seq(("1", "a\nb"), ("2", "c")), back.mkString(","))
   }
 
   test("--partition-by writes a hive layout and reads prune partitions") {

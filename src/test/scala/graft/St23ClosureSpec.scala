@@ -13,7 +13,8 @@ class St23ClosureSpec extends SparkSpec {
   import spark.implicits._
 
   test("empty-seeded ingest index: append then probe finds cross-batch pairs") {
-    val bandT = "st23dbg_band"; val shT = "st23dbg_sh"
+    val index = "st23dbg"
+    val Seq(bandT, shT) = Dedup.jaccardIndexTables(index)
     graft.util.TableRetention.sweep(spark, "st23dbg")
     val docs = (1L to 20L).map { i =>
       (i, (0 until 40).map(j => s"w${(i * 37 + j * 13) % 200}_$j").mkString(" "))
@@ -22,28 +23,21 @@ class St23ClosureSpec extends SparkSpec {
     // b2 = near-dup mutations of b1 (first token dropped), ids offset
     val b2 = b1.select((col("doc_id") + 100L).as("doc_id"),
       expr("substring(text, instr(text, ' ') + 1)").as("text"))
-    Dedup.buildJaccardIngestIndex(b1.limit(0), "doc_id", "text", bandT, shT,
-      shingleN = 3, numHashes = 16, bandRows = 1, buckets = 4)
-    val (p1, prep1) = Dedup.incrementalJaccardPairsIndexed(spark, bandT, shT, b1,
-      "doc_id", "text", shingleN = 3, minJaccard = 0.5, numHashes = 16,
-      bandRows = 1)
+    Dedup.buildJaccardIngestIndex(b1.limit(0), "doc_id", "text", index, buckets = 4)
+    val (p1, prep1) = Dedup.incrementalJaccardPairsIndexed(spark, index, b1,
+      "doc_id", "text")
     assert(p1.count() == 0, "no near-dups were planted within batch 1")
-    Dedup.appendJaccardIngestIndex(spark, bandT, shT, prep1,
-      numHashes = 16, bandRows = 1, buckets = 4)
+    Dedup.appendJaccardIngestIndex(spark, index, prep1)
     assert(spark.table(bandT).count() == 160 && spark.table(shT).count() == 10,
       "append did not land in the index tables")
-    val p2 = Dedup.incrementalJaccardPairsIndexed(spark, bandT, shT, b2,
-      "doc_id", "text", shingleN = 3, minJaccard = 0.5, numHashes = 16,
-      bandRows = 1)._1
+    val p2 = Dedup.incrementalJaccardPairsIndexed(spark, index, b2, "doc_id", "text")._1
     val pairs = p2.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(b1.collect().map(_.getLong(0)).forall(i => pairs.contains((i + 100L, i))),
       s"cross-batch pairs missing: $pairs")
     // re-probing the appended ids is refused: the probe is the loop's one
     // duplicate-id guard
     val e = intercept[IllegalArgumentException](
-      Dedup.incrementalJaccardPairsIndexed(spark, bandT, shT, b1,
-        "doc_id", "text", shingleN = 3, minJaccard = 0.5, numHashes = 16,
-        bandRows = 1))
+      Dedup.incrementalJaccardPairsIndexed(spark, index, b1, "doc_id", "text"))
     assert(e.getMessage.contains("globally unique"), e.getMessage)
     graft.util.TableRetention.sweep(spark, "st23dbg")
   }
@@ -64,8 +58,7 @@ class St23ClosureSpec extends SparkSpec {
     val got = graft.queries.PipelineQueries
       .st23Ingest(spark, batches, loop, "st23dbg2")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val pairs = Dedup.ngramJaccardPairs(all, "doc_id", "text",
-      shingleN = 3, minJaccard = 0.5, numHashes = 16, bandRows = 1)
+    val pairs = Dedup.ngramJaccardPairs(all, "doc_id", "text")
     val want = Dedup.clusters(all, "doc_id", pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == want,
