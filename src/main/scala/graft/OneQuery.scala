@@ -1,13 +1,17 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Optimization-round profiler: run named queries in the bench session
   * ([[Bench.session]], the same noop sink) and report, per
   * repetition, the wall time plus the scheduler-level work the query
   * submitted — job / stage / task counts, shuffle bytes, executor run+GC
-  * time. The deltas expose where a leg's wall goes at bench scale (fixed
+  * time — and the Janino class compiles it paid (count and wall, from
+  * Spark's codegen counters; local mode, so executor compiles count
+  * too). The deltas expose where a leg's wall goes at bench scale (fixed
   * per-job overhead vs real compute) and make "this change removed an
   * Exchange / an action" claims checkable from the console. Measurement
   * only — never part of a declared query path.
@@ -64,6 +68,8 @@ object OneQuery {
         val j0 = jobs.get; val s0 = stages.get; val t0 = tasks.get
         val sr0 = shufRead.get; val sw0 = shufWrite.get
         val r0 = runMs.get; val g0 = gcMs.get
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val cns0 = CodeGenerator.compileTime
         val w0 = System.nanoTime()
         spark.sparkContext.setJobDescription(s"$n rep$rep")
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
@@ -75,7 +81,9 @@ object OneQuery {
         println(f"[prof] $n rep$rep wall=$wall%.3f s jobs=${jobs.get - j0} " +
           f"stages=${stages.get - s0} tasks=${tasks.get - t0} " +
           f"shufR=${(shufRead.get - sr0) / 1e6}%.1f MB shufW=${(shufWrite.get - sw0) / 1e6}%.1f MB " +
-          f"exec=${(runMs.get - r0) / 1e3}%.1f s gc=${(gcMs.get - g0) / 1e3}%.2f s")
+          f"exec=${(runMs.get - r0) / 1e3}%.1f s gc=${(gcMs.get - g0) / 1e3}%.2f s " +
+          f"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0} " +
+          f"compile_ms=${(CodeGenerator.compileTime - cns0) / 1e6}%.0f")
       }
     }
     spark.stop()

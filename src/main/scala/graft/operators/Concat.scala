@@ -4,6 +4,7 @@ import graft.schema.SchemaUnifier
 import graft.sources.{CsvSource, Discovery, JsonSource, XmlSource}
 import graft.sources.Discovery.{Avro, Csv, Format, InputFile, Jsonl, Orc, Parquet, Xml}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{NullType, StructType}
 
 /** The reference's whole dataflow as ONE lazy Catalyst plan:
   *
@@ -254,8 +255,17 @@ object Concat {
     val dfs = liveGroups.map { case (fmt, schema, paths) =>
       readGroup(spark, fmt, paths, schema, cfg.csv, cfg.skipCorrupt)
     }
+    // a column whose sample held no value joins the type lattice as
+    // NullType, as in the stream's unify over the same probes, though a
+    // CSV scan reads it as strings
+    val latticeSchemas = liveGroups.zip(dfs).map { case ((_, sampled, _), df) =>
+      StructType(df.schema.fields.map(f =>
+        if (sampled.find(_.name == f.name).exists(_.dataType == NullType))
+          f.copy(dataType = NullType)
+        else f))
+    }
     val unified = SchemaUnifier.unify(
-      dfs.map(_.schema), cfg.stringifyConflicts, cfg.renames, cfg.include, cfg.exclude)
+      latticeSchemas, cfg.stringifyConflicts, cfg.renames, cfg.include, cfg.exclude)
     dfs.map(SchemaUnifier.align(_, unified)).reduce(_ unionByName _)
   }
 

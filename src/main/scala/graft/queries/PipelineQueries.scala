@@ -46,7 +46,7 @@ object PipelineQueries {
     * you'd size this to keys/executors instead).
     */
   private def withShufflePartitions[A](s: SparkSession, n: Int)(f: => A): A =
-    withConf(s, "spark.sql.shuffle.partitions", n.toString)(f)
+    withConf(s, "spark.sql.shuffle.partitions" -> n.toString)(f)
 
   /** Rows per state-store instance in [[stateStorePartitions]]. */
   private val StateStoreRows = 8192L
@@ -542,22 +542,33 @@ object PipelineQueries {
     */
   private def st20UrlIngest(s: SparkSession, dir: String): DataFrame = {
     val corpus = d22Corpus(s, dir)
-    val batch1 = corpus.where(col("doc_id") < 5000000L)
-    val batch2 = corpus.where(col("doc_id") >= 5000000L)
+    st20Ingest(s, Seq(corpus.where(col("doc_id") < 5000000L),
+      corpus.where(col("doc_id") >= 5000000L)), IngestLoop.local(s, "st20_url", dir))
+  }
+
+  /** The best row per normalized URL: (n_chars DESC, doc_id ASC) argmax. */
+  private def bestPerUrl(frame: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("url_norm"))
       .orderBy(col("n_chars").desc, col("doc_id").asc)
-    val loop = IngestLoop.local(s, "st20_url", dir)
+    frame.withColumn("__rk", row_number().over(w)).where(col("__rk") === 1).drop("__rk")
+  }
+
+  /** d22's one-shot survivors of a (doc_id, url, n_chars) corpus. */
+  private[graft] def d22Survivors(s: SparkSession, corpus: DataFrame): DataFrame =
+    ordered(bestPerUrl(urlAllowed(s, corpus)).select("doc_id", "url_norm", "n_chars"))
+
+  /** The st20 ingest loop: stream `batches` of (doc_id, url, n_chars)
+    * through `loop`, merging each batch's per-URL best into the prior
+    * payload. Returns the final best-per-URL index.
+    */
+  private[graft] def st20Ingest(s: SparkSession, batches: Seq[DataFrame],
+      loop: IngestLoop): DataFrame = {
     loop.run(StructType(Seq(StructField("doc_id", LongType),
         StructField("url", StringType), StructField("n_chars", LongType))),
-        Seq(batch1, batch2)) { (batch, _, out) =>
-      val batchBest = urlAllowed(s, batch)
-        .withColumn("__rk", row_number().over(w))
-        .where(col("__rk") === 1).drop("__rk")
+        batches) { (batch, _, out) =>
+      val batchBest = bestPerUrl(urlAllowed(s, batch))
       val merged = loop.payloads().lastOption match {
-        case Some(prior) =>
-          s.read.parquet(prior).unionByName(batchBest)
-            .withColumn("__rk", row_number().over(w))
-            .where(col("__rk") === 1).drop("__rk")
+        case Some(prior) => bestPerUrl(s.read.parquet(prior).unionByName(batchBest))
         case None => batchBest
       }
       merged.write.mode("overwrite").parquet(out)
@@ -1176,7 +1187,7 @@ object PipelineQueries {
     // covers BOTH query incarnations. Partitions derived from the stream's
     // row volume (see stateStorePartitions), not the session core count.
     val loop = IngestLoop.local(s, "st17_pack", dir)
-    withConf(s, "spark.sql.streaming.stateStore.providerClass",
+    withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       withShufflePartitions(s, stateStorePartitions(s, nRows)) {
       loop.run(StructType(Seq(StructField("doc_id", LongType),
@@ -1224,7 +1235,7 @@ object PipelineQueries {
         org.apache.spark.sql.Encoders.product[graft.streaming.FunnelOut])
       .toDF("user_id", "event_id", "converted")
     val loop = IngestLoop.local(s, "st19_funnel", dir)
-    withConf(s, "spark.sql.streaming.stateStore.providerClass",
+    withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       // state partitions sized by the stream's row volume, not core count
       withShufflePartitions(s, stateStorePartitions(s, ev.count())) {
@@ -2175,12 +2186,7 @@ object PipelineQueries {
       // st20's streaming admission); the one-shot picks the global
       // per-URL best with the rank-limit window (map-side
       // WindowGroupLimit, one shuffle, no UDF anywhere)
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("url_norm"))
-        .orderBy(col("n_chars").desc, col("doc_id").asc)
-      ordered(urlAllowed(s, d22Corpus(s, dir))
-        .withColumn("__rk", row_number().over(w))
-        .where(col("__rk") === 1)
-        .select(col("doc_id"), col("url_norm"), col("n_chars")))
+      d22Survivors(s, d22Corpus(s, dir))
     }),
     // URL admission AT INGEST (d22's streaming twin): per-batch
     // normalization + blocklist + per-URL best, merged into a persisted
@@ -3663,7 +3669,7 @@ object PipelineQueries {
       // transformWithState requires the RocksDB provider; scope it — the
       // query starts AND drains inside this block, and other st queries in
       // the same session keep the default HDFS-backed provider
-      withConf(s, "spark.sql.streaming.stateStore.providerClass",
+      withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val stream = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)

@@ -885,18 +885,17 @@ object RelationalQueries {
     // magnitude more I/O. The DuckDB oracle computes the same stats the
     // slow way — footer stats must agree exactly with the data.
     "q51_agg_pushdown" -> ((s, dir) => {
-      val df = withConf(s, "spark.sql.sources.useV1SourceList", "") {
-        withConf(s, "spark.sql.parquet.aggregatePushdown", "true") {
-          val q = t(s, dir, "lineitem").agg(
-            count(lit(1)).as("n"),
-            min(col("l_orderkey")).as("min_key"),
-            max(col("l_orderkey")).as("max_key"),
-            min(col("l_quantity")).as("min_qty"),
-            max(col("l_quantity")).as("max_qty"))
-          // force planning inside the conf scope (same trick as q49)
-          q.queryExecution.executedPlan
-          q
-        }
+      val df = withConf(s, "spark.sql.sources.useV1SourceList" -> "",
+          "spark.sql.parquet.aggregatePushdown" -> "true") {
+        val q = t(s, dir, "lineitem").agg(
+          count(lit(1)).as("n"),
+          min(col("l_orderkey")).as("min_key"),
+          max(col("l_orderkey")).as("max_key"),
+          min(col("l_quantity")).as("min_qty"),
+          max(col("l_quantity")).as("max_qty"))
+        // force planning inside the conf scope (same trick as q49)
+        q.queryExecution.executedPlan
+        q
       }
       val plan = df.queryExecution.executedPlan.toString
       require(plan.contains("PushedAggregation: [COUNT(*)"),
@@ -914,23 +913,21 @@ object RelationalQueries {
     // regardless (the bloom is a prefilter; the hash join still verifies),
     // so the plain-join DuckDB oracle hash-checks it.
     "q49_bloom_filter_join" -> ((s, dir) => {
-      val df = withConf(s, "spark.sql.autoBroadcastJoinThreshold", "-1") {
-        withConf(s, "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0") {
-          withConf(s, "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB") {
-            val o = t(s, dir, "orders").where(col("o_orderpriority") === "1-URGENT")
-              .select("o_orderkey", "o_orderdate")
-            val l = t(s, dir, "lineitem")
-              .select("l_orderkey", "l_extendedprice", "l_discount")
-            val q = ordered(l.join(o, l("l_orderkey") === o("o_orderkey"))
-              .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-              .agg(count(lit(1)).as("n_lines"),
-                dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue")))
-            // force planning inside the conf scope (QueryExecution caches
-            // its phases, so the driver's later action reuses this plan)
-            q.queryExecution.executedPlan
-            q
-          }
-        }
+      val df = withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+          "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB") {
+        val o = t(s, dir, "orders").where(col("o_orderpriority") === "1-URGENT")
+          .select("o_orderkey", "o_orderdate")
+        val l = t(s, dir, "lineitem")
+          .select("l_orderkey", "l_extendedprice", "l_discount")
+        val q = ordered(l.join(o, l("l_orderkey") === o("o_orderkey"))
+          .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
+          .agg(count(lit(1)).as("n_lines"),
+            dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue")))
+        // force planning inside the conf scope (QueryExecution caches
+        // its phases, so the driver's later action reuses this plan)
+        q.queryExecution.executedPlan
+        q
       }
       val plan = df.queryExecution.optimizedPlan.toString
       require(plan.contains("might_contain"),

@@ -367,8 +367,8 @@ object Sink {
     // given as strings; read partition values back verbatim. Schema
     // resolution is eager at the read call, so restoring after is safe.
     if (isDir)
-      graft.util.Conf.withConf(spark, "spark.sql.sources.partitionColumnTypeInference.enabled",
-        "false")(read())
+      graft.util.Conf.withConf(spark,
+        "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false")(read())
     else read()
   }
 

@@ -114,21 +114,16 @@ object CsvSource {
   /** Typed scan of one-or-many same-schema CSV files in ONE reader (one scan
     * node regardless of file count). The full scan happens once, with the
     * resolved schema, so the CSV parser produces typed columns natively.
+    * A column whose sample held no value (NullType) reads as strings, as
+    * the `--stream` source reads it: its values past the sample are kept.
     */
   def readPaths(spark: SparkSession, paths: Seq[String], opts: CsvOptions,
       resolvedSchema: Option[StructType] = None): DataFrame = {
     val schema = resolvedSchema.getOrElse(resolveSchema(spark, paths.head, opts))
-    val names = schema.fieldNames.toSeq
-    // NullType isn't a valid parser type: read those as string, project to
-    // true null columns below
     val parserSchema = StructType(schema.fields.map(f =>
       f.copy(dataType = if (f.dataType == NullType) StringType else f.dataType,
         nullable = true)))
-    val typed = spark.read.schema(parserSchema).options(readerOptions(opts)).csv(paths: _*)
-    naToNull(typed.select(names.map { n =>
-      if (schema(n).dataType == NullType) lit(null).as(n)
-      else col(graft.schema.SchemaUnifier.quoted(n))
-    }.toIndexedSeq: _*), opts)
+    naToNull(spark.read.schema(parserSchema).options(readerOptions(opts)).csv(paths: _*), opts)
   }
 
   /** Driver-side bounded sample: open the file via the Hadoop FS API (works

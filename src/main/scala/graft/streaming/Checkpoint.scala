@@ -52,5 +52,5 @@ private[graft] object Checkpoint {
     * stream thread.
     */
   def local[A](s: SparkSession, dirs: String*)(run: => A): A =
-    manager(s, dirs).fold(run)(m => withConf(s, ManagerKey, m)(run))
+    manager(s, dirs).fold(run)(m => withConf(s, ManagerKey -> m)(run))
 }

@@ -1,10 +1,19 @@
 package graft.streaming
 
+import graft.operators.HConf
 import graft.util.Conf.withConf
 import graft.util.Recorder
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.FileScanRDD
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import scala.collection.concurrent.TrieMap
+import scala.util.Using
 
 /** The marker-gated micro-batch ingest loop: a file-source query with a
   * checkpoint, and a `foreachBatch` sink that commits each batch id at most
@@ -25,6 +34,18 @@ import org.apache.spark.sql.types.StructType
   * batches in and hands each one to [[commit]], the output half. [[commit]]
   * is public so specs can replay a single batch; [[land]] and [[delta]]
   * serve queries that only need the watched input dir.
+  *
+  * A batch this loop landed with at most `InterpretedMaxRows` rows runs
+  * its body with interpreted expressions: whole-stage codegen off and the
+  * expression factories in `NO_CODEGEN` mode, on the main session and on
+  * the micro-batch's own. Such a body is bound by fixed per-plan costs,
+  * and the Janino compile of each generated class costs more than
+  * interpreting a few thousand rows through it — curation loops commit
+  * batches of a few hundred rows, and compiles were about a fifth of
+  * their wall. Larger batches, and batches this loop did not land, keep
+  * codegen. `land` reads each file's row count off its parquet footer, so
+  * the gate costs no job, and a stateless loop decides emptiness from the
+  * same count instead of a `batch.isEmpty` job.
   *
   * The query runs inside [[Checkpoint.local]]: on a local `base` its
   * offset, commit and source logs are renamed in through Spark's
@@ -54,6 +75,11 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
 
   private var stagingSecs = Vector.empty[Double]
 
+  /** Footer row count of each file [[land]] published, by qualified path.
+    * Written on the caller's thread, read on the stream's.
+    */
+  private val landedRows = TrieMap.empty[Path, Long]
+
   /** Ids of the committed batches, ascending. */
   def committedIds(): Seq[Long] =
     fs.listStatus(committedDir).toSeq.map(_.getPath.getName)
@@ -69,7 +95,9 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
     * arrival for a file-source micro-batch. It is written under `staged/`
     * and renamed in, because a staging dir inside the watched dir races
     * the source's recursive listing (the source can list a dir that is
-    * then deleted under it). This loop's staging walls so far are recorded
+    * then deleted under it). The file's footer row count is recorded
+    * before the rename publishes it, so the stream never sees a landed
+    * file without its count. This loop's staging walls so far are recorded
     * under [[graft.util.Recorder.StagingSecs]].
     */
   def land(df: DataFrame, name: String): Unit = {
@@ -77,10 +105,14 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
     try {
       val tmp = new Path(staged, s"in-$name")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = fs.listStatus(tmp).map(_.getPath)
-        .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        .head
-      rename(part, new Path(delta, s"$name.parquet"))
+      val part = fs.listStatus(tmp).find { st =>
+        val n = st.getPath.getName
+        n.startsWith("part-") && n.endsWith(".parquet")
+      }.get
+      val dest = new Path(delta, s"$name.parquet")
+      landedRows(fs.makeQualified(dest)) = Using.resource(HConf.openParquet(
+        HadoopInputFile.fromStatus(part, s.sparkContext.hadoopConfiguration)))(_.getRecordCount)
+      rename(part.getPath, dest)
       fs.delete(tmp, true)
     } finally {
       stagingSecs :+= (System.nanoTime() - t0) / 1e9
@@ -123,6 +155,24 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
     }
   }
 
+  /** Rows [[land]] recorded for the files `batch` reads, when `batch` is a
+    * micro-batch over files this loop landed; None for any other frame (a
+    * spec's replay, a batch without landed input). `foreachBatch` hands the
+    * sink a plan over the batch's already-built RDD, so the files are read
+    * off that RDD's lineage on the driver, with no job.
+    */
+  private def landedRowsOf(batch: DataFrame): Option[Long] = {
+    def scans(r: RDD[_]): Seq[FileScanRDD] = r match {
+      case f: FileScanRDD => Seq(f)
+      case _ => r.dependencies.flatMap(d => scans(d.rdd))
+    }
+    val files = batch.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .flatMap(scans).flatMap(_.filePartitions.flatMap(_.files))
+      .map(f => fs.makeQualified(f.toPath)).distinct
+    val counts = files.map(landedRows.get)
+    if (files.nonEmpty && counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
+  }
+
   /** The output half, for micro-batch `id`. In order:
     *  1. a committed id is skipped — a redelivery after the marker;
     *  2. an empty batch gets a marker with no payload, and `body` is not
@@ -131,7 +181,9 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
     *     (`staged/b<N>`) — with shuffle partitions scoped to the core count,
     *     because per-batch work is sized by the batch, and a corpus-sized
     *     session setting would charge every micro-batch the task-scheduling
-    *     cost of the whole corpus;
+    *     cost of the whole corpus; for the same reason a batch this loop
+    *     landed with at most `InterpretedMaxRows` rows runs interpreted
+    *     (see the class doc);
     *  4. publish: one rename of `out` to the marker, or a `mkdirs` of the
     *     marker when the body wrote nothing.
     * A crash before step 4 leaves no marker, so the redelivered batch runs
@@ -139,15 +191,31 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
     * or refuse loudly). Returns the batch's wall seconds when the body ran.
     */
   def commit(batch: DataFrame, id: Long)
+      (body: (DataFrame, Long, String) => Unit): Option[Double] =
+    commitCounted(batch, id, countIsBatch = true)(body)
+
+  /** [[commit]]; `countIsBatch` says whether the landed row count is the
+    * body's batch (a stateless loop) or only the input of a stateful
+    * transform, whose output's emptiness takes a `batch.isEmpty` job.
+    */
+  private def commitCounted(batch: DataFrame, id: Long, countIsBatch: Boolean)
       (body: (DataFrame, Long, String) => Unit): Option[Double] = {
     val t0 = System.nanoTime()
     val done = marker(id)
+    lazy val rows = landedRowsOf(batch)
+    lazy val empty = rows match {
+      case Some(n) if countIsBatch => n == 0
+      case _ => batch.isEmpty
+    }
     if (fs.exists(done)) None
-    else if (batch.isEmpty) { mkdirs(done); None }
+    else if (empty) { mkdirs(done); None }
     else {
       val out = new Path(staged, s"b$id")
-      withConf(s, "spark.sql.shuffle.partitions", s.sparkContext.defaultParallelism.toString) {
-        body(batch, id, out.toString)
+      val interpreted =
+        if (rows.exists(_ <= IngestLoop.InterpretedMaxRows)) IngestLoop.Interpreted else Nil
+      withConf(s, ("spark.sql.shuffle.partitions" -> s.sparkContext.defaultParallelism.toString)
+          +: interpreted: _*) {
+        withConf(batch.sparkSession, interpreted: _*)(body(batch, id, out.toString))
       }
       if (fs.exists(out)) rename(out, done) else mkdirs(done)
       Some((System.nanoTime() - t0) / 1e9)
@@ -162,7 +230,8 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
       stateful: Option[DataFrame => DataFrame] = None)
       (body: (DataFrame, Long, String) => Unit): Unit = {
     val walls = List.newBuilder[Double]
-    feed(schema, batches, stateful)((b, id) => walls ++= commit(b, id)(body))
+    feed(schema, batches, stateful)((b, id) =>
+      walls ++= commitCounted(b, id, countIsBatch = stateful.isEmpty)(body))
     val n = committedIds().size
     require(n == batches.size,
       s"${base.getName}: expected ${batches.size} committed micro-batches, saw $n")
@@ -171,6 +240,21 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
 }
 
 object IngestLoop {
+
+  /** The largest landed batch whose body runs interpreted. Timed on st20's
+    * body in a warm JVM (table in CHANGES.md): interpreted is faster on
+    * batches of 10^3 and 10^4 rows, and at 10^5 rows a first batch is
+    * faster generated, as per-row work outweighs the compiles.
+    */
+  private[graft] val InterpretedMaxRows = 10000L
+
+  /** Whole-stage codegen off and every expression factory interpreted:
+    * both, since whole-stage codegen off alone still compiles each
+    * projection, predicate and ordering one by one.
+    */
+  private val Interpreted = Seq(
+    SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+    SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.NO_CODEGEN.toString)
 
   /** A loop over an empty tree at `base`: any earlier run's tree is deleted. */
   def apply(s: SparkSession, base: Path): IngestLoop = {

@@ -77,7 +77,7 @@ class CheckpointManagerSpec extends SparkSpec {
     assume(!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded,
       "with the native Hadoop library FileContext renames fork nothing")
     val d = tmpDir("census_user")
-    val w = withConf(spark, Checkpoint.ManagerKey, FileContextManager) {
+    val w = withConf(spark, Checkpoint.ManagerKey -> FileContextManager) {
       wave(d, 0)
       val w = forks(d)(wave(d, 1))
       assert(spark.conf.get(Checkpoint.ManagerKey) == FileContextManager)
@@ -104,7 +104,7 @@ class CheckpointManagerSpec extends SparkSpec {
     assert(decide(s"file://$local", local).contains(Checkpoint.FileSystemManager))
     // no checkpointLocation option: Spark's local temp checkpoint
     assert(decide().contains(Checkpoint.FileSystemManager))
-    withConf(spark, "spark.sql.streaming.checkpointLocation", "hdfs://nn:8020/ckpts") {
+    withConf(spark, "spark.sql.streaming.checkpointLocation" -> "hdfs://nn:8020/ckpts") {
       assert(decide().isEmpty)
     }
     // any other scheme keeps Spark's default (FileContext's atomic rename),
@@ -112,7 +112,7 @@ class CheckpointManagerSpec extends SparkSpec {
     assert(decide(s"fault://$local").isEmpty)
     assert(decide("hdfs://nn:8020/ckpt").isEmpty)
     assert(decide(local, "s3a://bucket/out").isEmpty)
-    withConf(spark, Checkpoint.ManagerKey, FileContextManager) {
+    withConf(spark, Checkpoint.ManagerKey -> FileContextManager) {
       assert(decide(local).isEmpty)
     }
     val hadoop = spark.sparkContext.hadoopConfiguration
@@ -127,11 +127,11 @@ class CheckpointManagerSpec extends SparkSpec {
       .groupBy("id").count().collect()
       .map(r => (r.getAs[Number](0).longValue, r.getLong(1))).sorted.toSeq
     def expected(waves: Int) = for (n <- 1 to waves; i <- 1 to 3) yield (n * 10L + i, 1L)
-    withConf(spark, Checkpoint.ManagerKey, FileContextManager)(wave(d, 1))
+    withConf(spark, Checkpoint.ManagerKey -> FileContextManager)(wave(d, 1))
     assert(ids() == expected(1))
     wave(d, 2) // the helper's FileSystem manager
     assert(ids() == expected(2))
-    withConf(spark, Checkpoint.ManagerKey, FileContextManager)(wave(d, 3))
+    withConf(spark, Checkpoint.ManagerKey -> FileContextManager)(wave(d, 3))
     assert(ids() == expected(3))
     // each wave was one micro-batch, committed once
     val commits = d.resolve("ckpt/commits").toFile.list().filter(_.forall(_.isDigit))

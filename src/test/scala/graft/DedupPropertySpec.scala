@@ -6,8 +6,9 @@ import org.scalacheck.{Gen, Prop}
 
 /** The dedup family's dual-path contracts over generated inputs: the
   * closure's driver union-find equals its distributed label propagation
-  * (one-shot and per batch), and the union of per-batch ingest-index pairs
-  * equals the one-shot pairs for any batch split.
+  * (one-shot and per batch), the union of per-batch ingest-index pairs
+  * equals the one-shot pairs, and st20's and st23's ingest loops end where
+  * their one-shot twins do, for any batch split.
   */
 class DedupPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -174,6 +175,55 @@ class DedupPropertySpec extends SparkSpec {
         Dedup.ngramJaccardPairs(all, "doc_id", "text")))
       assert(got == want, s"st23 labels != one-shot for split ${batchOf.mkString(",")}: " +
         s"diff=${(got.toSet diff want.toSet) ++ (want.toSet diff got.toSet)}")
+      true
+    })
+  }
+
+  /** URL corpus rows (doc_id, url, n_chars): a few hosts and paths, each
+    * row one spelling of its URL that d22's normalization folds (case,
+    * default port, trailing slash, utm params, fragment), with n_chars
+    * ties so the doc_id tiebreak decides; one host is blocklisted.
+    */
+  private val urlCorpusGen: Gen[Seq[(Long, String, Long)]] = {
+    val url = for {
+      host <- Gen.oneOf("www.a.example.com", "www.b.example.com", "www.src3.example.com")
+      path <- Gen.oneOf("/p/1", "/p/2", "")
+      upper <- Gen.prob(0.3)
+      port <- Gen.prob(0.3)
+      slash <- Gen.prob(0.3)
+      query <- Gen.oneOf("", "?utm_source=x", "?id=7&utm_medium=z", "?id=7")
+      frag <- Gen.oneOf("", "#f")
+    } yield {
+      val h = (if (upper) "HTTPS://" + host.toUpperCase else "https://" + host) +
+        (if (port) ":443" else "")
+      h + path + (if (slash) "/" else "") + query + frag
+    }
+    for {
+      n <- Gen.choose(1, 30)
+      urls <- Gen.listOfN(n, url)
+      nChars <- Gen.listOfN(n, Gen.choose(0L, 3L))
+      ids <- shuffledIds(n)
+    } yield ids.lazyZip(urls).lazyZip(nChars).toSeq
+  }
+
+  test("property: st20 over any 1-3-way split, empty batches included, == d22 survivors") {
+    import graft.queries.PipelineQueries
+    val gen = for {
+      rows <- urlCorpusGen
+      k <- Gen.choose(1, 3)
+      batchOf <- Gen.listOfN(rows.size, Gen.choose(0, k - 1))
+    } yield (rows, k, batchOf)
+    def survivors(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    check(Prop.forAllNoShrink(gen) { case (rows, k, batchOf) =>
+      val batches = (0 until k).map(b =>
+        rows.zip(batchOf).collect { case (r, `b`) => r }.toDF("doc_id", "url", "n_chars"))
+      val loop = graft.streaming.IngestLoop.local(spark, "st20prop_loop", "")
+      val got = survivors(PipelineQueries.st20Ingest(spark, batches, loop))
+      val want = survivors(PipelineQueries.d22Survivors(spark,
+        rows.toDF("doc_id", "url", "n_chars")))
+      assert(got == want, s"st20 != d22 for split ${batchOf.mkString(",")}: " +
+        s"only-st20=${got diff want} only-d22=${want diff got}")
       true
     })
   }

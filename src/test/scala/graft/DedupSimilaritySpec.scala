@@ -910,7 +910,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(!out.exists(_._2.contains("src3")), "blocklisted host must drop")
     // plan shape: rank-limit window (map-side WindowGroupLimit) + broadcast
     // anti join for the blocklist — the shapes that survive 100 TB
-    val static = graft.util.Conf.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+    val static = graft.util.Conf.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       graft.queries.PipelineQueries.queries("d22_url_dedup")(spark, dir.toString)
         .queryExecution.executedPlan.toString
     }

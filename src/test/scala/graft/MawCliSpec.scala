@@ -203,6 +203,25 @@ class MawCliSpec extends SparkSpec {
     assert(stream == batch, s"stream $stream != batch $batch")
   }
 
+  test("a column with no value in the --infer-rows sample keeps its later values, batch as stream") {
+    import graft.streaming.StreamingConcat
+    val d = tmpDir("streamnullcol")
+    val in = d.resolve("in")
+    Files.createDirectories(in)
+    // the 2-row sample sees only NA and an empty field in `a`
+    writeFile(in, "a.csv", "k,a\n1,NA\n2,\n3,x\n4,NA\n5,\"\"\n")
+    val cfg = Concat.Config(Seq(in.toString), csv = CsvSource.CsvOptions(inferRows = 2))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("k", "a").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)))).sortBy(_._1).toSeq
+    val batch = rows(Concat.run(spark, cfg))
+    val out = d.resolve("out").toString
+    StreamingConcat.run(spark, cfg, out, Discovery.Parquet, d.resolve("cp").toString)
+    val stream = rows(spark.read.parquet(out))
+    assert(batch == Seq((1L, None), (2L, None), (3L, Some("x")), (4L, None), (5L, Some(""))),
+      s"batch cells: $batch")
+    assert(stream == batch, s"stream $stream != batch $batch")
+  }
+
   test("--stream refuses --na, --compression and --zstd-level instead of dropping them") {
     for ((flag, value) <- Seq("--na" -> "NULL", "--compression" -> "snappy",
         "--zstd-level" -> "9")) {

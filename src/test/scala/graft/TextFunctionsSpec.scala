@@ -149,7 +149,7 @@ class TextFunctionsSpec extends SparkSpec {
     // contains zero corpus parquet scans; df still comes from a window,
     // not a self-join diamond. Checked on the static plan (AQE respells
     // stages).
-    val static = graft.util.Conf.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+    val static = graft.util.Conf.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       graft.queries.PipelineQueries.queries("t16_tfidf")(spark, dir.toString)
         .queryExecution.executedPlan.toString
     }
@@ -195,7 +195,7 @@ class TextFunctionsSpec extends SparkSpec {
 
     // the serving-shape claim: ONE corpus scan, zero UDFs, and the only
     // exchange is the driver-determinism sort (AQE off for a static plan)
-    val static = graft.util.Conf.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+    val static = graft.util.Conf.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       graft.queries.PipelineQueries.queries("t23_quality_model")(spark, dir.toString)
         .queryExecution.executedPlan.toString
     }
@@ -322,7 +322,7 @@ class TextFunctionsSpec extends SparkSpec {
     assert(out(4000003L) == (("zh", 6, 6)), s"planted zh: ${out(4000003L)}")
     assert(out(4000004L) == (("de", 12, 12)), s"planted de x2: ${out(4000004L)}")
     // expression-only: no UDF, and the only exchange is the determinism sort
-    val static = graft.util.Conf.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+    val static = graft.util.Conf.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       graft.queries.PipelineQueries.queries("t26_language_id")(spark, dir.toString)
         .queryExecution.executedPlan.toString
     }
@@ -421,7 +421,7 @@ class TextFunctionsSpec extends SparkSpec {
     assert(out(6L) == ((false, "quality")), s"doc 6: ${out(6L)}")
     assert(out(7L) == ((false, "language")), s"doc 7: ${out(7L)}")
     // one scan, expression-only, no shuffle beyond the determinism sort
-    val static = graft.util.Conf.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+    val static = graft.util.Conf.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       graft.queries.PipelineQueries.queries("t28_curation_funnel")(spark, dir.toString)
         .queryExecution.executedPlan.toString
     }
