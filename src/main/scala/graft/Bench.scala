@@ -211,29 +211,18 @@ object Bench {
   }
 
   /** The measurement session Bench, OneQuery and ScaleSoak share:
-    * `local[SPARK_GRAFT_CPUS]` (default: the core count, at most 32) with
-    * as many shuffle partitions, AQE, UTC, the UI off, and the
-    * oracle-determinism sort skipped (`graft.bench.skipOrder`) — measure
-    * operators, not the sort.
+    * [[graft.util.Session.forQueries]] on `local[SPARK_GRAFT_CPUS]`
+    * (default: the core count, at most 32) with as many shuffle
+    * partitions, 8 MB input splits, and the oracle-determinism sort
+    * skipped (`graft.bench.skipOrder`) — measure operators, not the sort.
     */
   def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
     sys.props("graft.bench.skipOrder") = "1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    graft.util.Session.forQueries(s"local[$cpus]", cpus, "ERROR",
       // split even a single medium CSV/parquet input across cores
-      .config("spark.sql.files.maxPartitionBytes", (8L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // old ns-ts fixture compat only (no-op on us fixtures); the real ts
-      // handling is the adaptive Q.normalizeTs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
+      "spark.sql.files.maxPartitionBytes" -> (8L * 1024 * 1024).toString)
   }
 
   def main(args: Array[String]): Unit = {

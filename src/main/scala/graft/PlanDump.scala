@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Print `explain("formatted")` for one or more declared queries — the
   * source of PLANS.md sections. Usage:
   *   runMain graft.PlanDump q01_pricing_summary[,t16_tfidf,...] [sfDir]
@@ -14,14 +12,7 @@ object PlanDump {
     val names = args.headOption.map(_.split(',').toSeq)
       .getOrElse(Seq("q01_pricing_summary"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Session.forQueries("local[4]", 8, "ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,17 +9,8 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').filter(_.nonEmpty).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // old ns-ts fixture compat only (no-op on us fixtures); the real ts
-      // handling is the adaptive Q.normalizeTs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+    val spark = graft.util.Session.forQueries(s"local[$cpus]", cpus, "WARN")
     graft.util.FixtureSchemas.banner(spark, sfDir, "verify")
     new java.io.File(outDir).mkdirs()
     // oracle_sql.json FIRST — it depends on nothing from the query loop, and

@@ -319,21 +319,15 @@ object Maw {
       files.foreach(f => println(s"  ${f.path} [${f.format}]"))
       return
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${a.concurrency}]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val logLevel = if (a.quiet) "ERROR" else if (a.verbose > 0) "INFO" else "WARN"
+    val spark = graft.util.Session(sys.env.getOrElse("SPARK_MASTER", s"local[${a.concurrency}]"),
+      32, logLevel, "spark.app.name" -> "graft",
       // P1 knobs (cli.rs:88-99): the mem budget, divided across concurrent
       // tasks, bounds per-task input splits (the closest cluster-meaningful
       // analog of maw's streaming budget); --writer-buffer sizes the byte
       // paths' output buffers via Sink.Config below
-      .config("spark.sql.files.maxPartitionBytes",
-        (math.max(16L, a.memBudgetMb.toLong / math.max(1, a.concurrency))
-          * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(if (a.quiet) "ERROR" else if (a.verbose > 0) "INFO" else "WARN")
+      "spark.sql.files.maxPartitionBytes" ->
+        (math.max(16L, a.memBudgetMb.toLong / math.max(1, a.concurrency)) * 1024 * 1024).toString)
     try execute(spark, a)
     catch {
       case e: Exception =>

@@ -4,6 +4,7 @@ import graft.sinks.Sink
 import graft.sources.Discovery.{InputFile, Parquet}
 import graft.util.Par
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.MessageTypeParser
@@ -92,9 +93,14 @@ object ParquetByteConcat {
     // footer is written only once every append succeeded.
     val schemaStr = schema.toString // MessageType is not serializable
     Some(BytePromote.run(spark, sink, ".parquet", files.map(_.path)) { (conf, staged) =>
+      // parquet-mr's default truncation and page-checksum settings, as
+      // the five-argument constructor (deprecated) passes them
       val w = new ParquetFileWriter(HadoopOutputFile.fromPath(staged, conf),
         MessageTypeParser.parseMessageType(schemaStr),
-        ParquetFileWriter.Mode.OVERWRITE, RowGroupSize, MaxPadding)
+        ParquetFileWriter.Mode.OVERWRITE, RowGroupSize, MaxPadding,
+        ParquetProperties.DEFAULT_COLUMN_INDEX_TRUNCATE_LENGTH,
+        ParquetProperties.DEFAULT_STATISTICS_TRUNCATE_LENGTH,
+        ParquetProperties.DEFAULT_PAGE_WRITE_CHECKSUM_ENABLED)
       new BytePromote.Staged {
         override def start(): Unit = w.start()
         // copy every row group of `in` byte-for-byte

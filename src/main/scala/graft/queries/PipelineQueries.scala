@@ -97,10 +97,6 @@ object PipelineQueries {
     s.table(sinkName)
   }
 
-  /** (doc_id, text): the input schema of the document ingest loops. */
-  private val docSchema = StructType(Seq(StructField("doc_id", LongType),
-    StructField("text", StringType)))
-
   /** embeddings + 5 EXACT duplicates of each query vector (< 10), planted at
     * ids 100000 + query*10 + j. The recall-1 trick d05/d06 use for the dedup
     * LSH, applied to ANN: an identical vector hashes to the identical sign-LSH
@@ -396,7 +392,7 @@ object PipelineQueries {
       // 4.54 -> 7.65 s, tracking the soak's 32->1024 partition scaling);
       // the corpus side is bucketed, so the probe join never reshuffles it
       val loop = IngestLoop.local(s, "st13_ingest", key)
-      loop.run(docSchema, Seq(batch1, batch2)) { (batch, _, out) =>
+      loop.run(Seq(batch1, batch2)) { (batch, _, out) =>
         // the probe returns its checkpointed prep, and the append below
         // derives from it, so the batch's shingle+minhash walk runs once
         // per micro-batch
@@ -563,9 +559,7 @@ object PipelineQueries {
     */
   private[graft] def st20Ingest(s: SparkSession, batches: Seq[DataFrame],
       loop: IngestLoop): DataFrame = {
-    loop.run(StructType(Seq(StructField("doc_id", LongType),
-        StructField("url", StringType), StructField("n_chars", LongType))),
-        batches) { (batch, _, out) =>
+    loop.run(batches) { (batch, _, out) =>
       val batchBest = bestPerUrl(urlAllowed(s, batch))
       val merged = loop.payloads().lastOption match {
         case Some(prior) => bestPerUrl(s.read.parquet(prior).unionByName(batchBest))
@@ -602,6 +596,19 @@ object PipelineQueries {
   /** Where st11's seed snapshot lives: the prior of `loop`'s first batch. */
   private[graft] def st11Seed(loop: IngestLoop): String =
     new org.apache.hadoop.fs.Path(loop.base, "seed").toString
+
+  /** The st11 ingest loop: seed `loop` with the `docs` snapshot, then
+    * stream `batches` of CDC rows through it, merging each one into the
+    * prior snapshot ([[st11Merge]]). Returns the final snapshot — the seed
+    * when no batch held a row.
+    */
+  private[graft] def st11Ingest(s: SparkSession, docs: DataFrame, batches: Seq[DataFrame],
+      loop: IngestLoop): DataFrame = {
+    docs.write.parquet(st11Seed(loop))
+    loop.run(batches)(st11Merge(s, loop))
+    ordered(s.read.parquet(loop.payloads().lastOption.getOrElse(st11Seed(loop)))
+      .select("doc_id", "text", "lang", "source", "n_chars"))
+  }
 
   /** st11's commit body: merge the batch into the prior snapshot — the
     * newest payload, or else the seed — and write the result to `out`.
@@ -672,7 +679,7 @@ object PipelineQueries {
     graft.util.TableRetention.sweep(s, tblBase)
     def version(n: Long) = s"${tblBase}_b$n"
     val loop = IngestLoop.local(s, loopTag, dir)
-    loop.run(docSchema, Seq(docs.where(col("doc_id") % 2 === 0),
+    loop.run(Seq(docs.where(col("doc_id") % 2 === 0),
         docs.where(col("doc_id") % 2 =!= 0))) { (batch, id, _) =>
       val delta = s"${tblBase}_delta"
       build(batch, delta)
@@ -889,9 +896,10 @@ object PipelineQueries {
     // probes it (its own internal pairs still surface through the
     // fresh-vs-fresh leg) and appends, exactly like every later batch
     Dedup.buildJaccardIngestIndex(batches.head.limit(0), "doc_id", "text", tblBase)
-    loop.run(docSchema, batches) { (batch, id, out) =>
-      def label(x: String): Unit =
-        s.sparkContext.setJobDescription(s"st23 b$id: $x")
+    loop.run(batches) { (batch, id, out) =>
+      // each phase's jobs carry the loop's per-batch description, suffixed
+      val desc = s.sparkContext.getLocalProperty("spark.job.description")
+      def label(x: String): Unit = s.sparkContext.setJobDescription(s"$desc: $x")
       label("probe")
       // the probe's checkpointed prep carries the batch's ids AND feeds
       // the index append below, so the shingle+minhash walk — the
@@ -928,7 +936,6 @@ object PipelineQueries {
         () => remapNew.write.mode("overwrite").parquet(out + "/remap"))
       label("index append")
       Dedup.appendJaccardIngestIndex(s, tblBase, prep)
-      s.sparkContext.setJobDescription(null)
     }
     val vs = loop.payloads()
     val labels = Dedup.closureLabels(
@@ -1051,10 +1058,7 @@ object PipelineQueries {
       batch1.select(col("media_id").as("id"), lit(0L).as("sig")).limit(0),
       "id", "sig", bandT)
     val loop = IngestLoop.local(s, "st24_perceptual", dir)
-    loop.run(StructType(Seq(StructField("media_id", LongType),
-        StructField("payload", BinaryType),
-        StructField("meta", Multimodal.mediaSchema("meta").dataType))),
-        Seq(batch1, batch2)) { (batch, _, out) =>
+    loop.run(Seq(batch1, batch2)) { (batch, _, out) =>
       // decode ONLY the batch — the corpus side is the slim persisted
       // band index, never re-decoded
       val sigs = Multimodal.withDHash(batch)
@@ -1121,7 +1125,7 @@ object PipelineQueries {
     val batch1 = eval0.where(col("doc_id") % 2 === 0)
     val batch2 = eval0.where(col("doc_id") % 2 =!= 0)
     val loop = IngestLoop.local(s, "st15_probe", dir + "|" + baseDir)
-    loop.run(docSchema, Seq(batch1, batch2)) { (batch, _, out) =>
+    loop.run(Seq(batch1, batch2)) { (batch, _, out) =>
       Dedup.crossContaminationIndexed(s, table, batch, "doc_id", "text")
         .select(col("id").as("doc_id"), col("n_windows"), col("n_contaminated"))
         .write.mode("overwrite").parquet(out)
@@ -1142,9 +1146,7 @@ object PipelineQueries {
     val batch1 = docs.where(col("doc_id") % 2 === 0 || col("doc_id").isNull)
     val batch2 = docs.where(col("doc_id") % 2 =!= 0)
     val loop = IngestLoop.local(s, "st16_funnel", dir)
-    loop.run(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType), StructField("source", StringType))),
-        Seq(batch1, batch2)) { (batch, _, out) =>
+    loop.run(Seq(batch1, batch2)) { (batch, _, out) =>
       curationDecision(batch).write.mode("overwrite").parquet(out)
     }
     ordered(s.read.parquet(loop.payloads(): _*).select("doc_id", "keep", "reason"))
@@ -1190,9 +1192,7 @@ object PipelineQueries {
     withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       withShufflePartitions(s, stateStorePartitions(s, nRows)) {
-      loop.run(StructType(Seq(StructField("doc_id", LongType),
-          StructField("lang", StringType), StructField("n_tokens", LongType))),
-          Seq(batch1, batch2), stateful = Some(pack)) { (batch, _, out) =>
+      loop.run(Seq(batch1, batch2), stateful = Some(pack)) { (batch, _, out) =>
         batch.write.mode("overwrite").parquet(out)
       }
     } }
@@ -1239,11 +1239,7 @@ object PipelineQueries {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       // state partitions sized by the stream's row volume, not core count
       withShufflePartitions(s, stateStorePartitions(s, ev.count())) {
-      loop.run(StructType(Seq(StructField("user_id", LongType),
-          StructField("event_id", LongType),
-          StructField("ts_us", LongType),
-          StructField("event_type", StringType))),
-          Seq(batch1, batch2), stateful = Some(attribute)) { (batch, _, out) =>
+      loop.run(Seq(batch1, batch2), stateful = Some(attribute)) { (batch, _, out) =>
         batch.write.mode("overwrite").parquet(out)
       }
     } }
@@ -1286,10 +1282,7 @@ object PipelineQueries {
         .select("p.col_name", "p.n_rows", "p.n_nulls")
     }
     val loop = IngestLoop.local(s, "st18_profile", dir)
-    loop.run(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType), StructField("lang", StringType),
-        StructField("source", StringType))),
-        Seq(batch1, batch2)) { (batch, _, out) =>
+    loop.run(Seq(batch1, batch2)) { (batch, _, out) =>
       // the prior batches' outputs, read back through the loop, are the
       // event-sourced running state
       val committed = loop.payloads()
@@ -1413,7 +1406,7 @@ object PipelineQueries {
       .when(!gRep, "repetition")
       .when(!gQual, "quality")
       .otherwise("kept")
-    df.select(docs.columns.map(col) :+
+    df.select(docs.columns.toSeq.map(col) :+
       (reason === "kept").as("keep") :+ reason.as("reason"): _*)
   }
 
@@ -2286,12 +2279,7 @@ object PipelineQueries {
     // d15's oracle, pinning streaming == batch merge semantics end to end.
     "st11_streaming_merge" -> ((s, dir) => {
       val docs = mergeDocs(s, dir)
-      val loop = IngestLoop.local(s, "st11_merge", dir)
-      val batches = mergeDelta(docs)
-      docs.write.parquet(st11Seed(loop))
-      loop.run(batches.head.schema, batches)(st11Merge(s, loop))
-      ordered(s.read.parquet(loop.payloads().last)
-        .select("doc_id", "text", "lang", "source", "n_chars"))
+      st11Ingest(s, docs, mergeDelta(docs), IngestLoop.local(s, "st11_merge", dir))
     }),
     // Streaming ANN index maintenance — d16's delta arriving as TWO
     // micro-batches (deletes+moved, then inserts — disjoint key ranges,
@@ -2329,9 +2317,7 @@ object PipelineQueries {
       // — this run creates its versions after this point.
       graft.util.TableRetention.sweep(s, "st12_ivfpq_")
       val loop = IngestLoop.local(s, "st12_annidx", dir)
-      loop.run(StructType(Seq(StructField("vec_id", LongType),
-          StructField("embedding", vecT), StructField("op", StringType))),
-          Seq(del.unionByName(moved), news)) { (batch, id, _) =>
+      loop.run(Seq(del.unionByName(moved), news)) { (batch, id, _) =>
         PqIndex.mergeAssigned(s,
           loop.committedIds().lastOption.fold(baseTable)(versionTable),
           PqIndex.encodeDelta(batch, "vec_id", "embedding", ivf, pq),

@@ -491,7 +491,13 @@ object Sink {
     // 'Directory is not empty') or absorb (FS-dependent rename-into-dir)
     // this run's promotion — but only a tree that LOOKS like our output
     // may be recursively replaced
-    if (fs.exists(dst) && fs.getFileStatus(dst).isDirectory) deleteOutputDir(fs, dst)
+    if (fs.exists(dst)) {
+      if (fs.getFileStatus(dst).isDirectory) deleteOutputDir(fs, dst)
+      // and no FS renames a tree onto a file (POSIX: ENOTDIR): a
+      // partitioned run that replaces an earlier single-file output deletes
+      // that file first
+      else if (fs.getFileStatus(src).isDirectory) fs.delete(dst, false)
+    }
     // rename FIRST: POSIX-backed filesystems overwrite an existing dst file
     // atomically, so a crash in the promote leaves either the old or the
     // new file at dst — never neither (FaultInjectionSpec pins this)

@@ -60,7 +60,7 @@ object JsonSource {
         case scala.util.control.NonFatal(_) => null // corrupt line: typed read nulls it
       }
       if (node != null && node.isObject) {
-        node.fields().forEachRemaining { e =>
+        node.properties().forEach { e =>
           val t = nodeType(e.getValue)
           t.foreach(dt => order.update(e.getKey, order.getOrElse(e.getKey, Vector.empty) :+ dt))
           if (t.isEmpty && !order.contains(e.getKey))

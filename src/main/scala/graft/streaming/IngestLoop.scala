@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
 import scala.collection.concurrent.TrieMap
 import scala.util.Using
 
@@ -120,13 +119,25 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
     }
   }
 
+  /** Run `f` with `desc` as the job description of this thread's jobs,
+    * restoring the previous one after. A body runs on the stream's thread,
+    * whose jobs otherwise all carry the stream's `start` call site.
+    */
+  private def withJobDescription[A](desc: String)(f: => A): A = {
+    val sc = s.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try f finally sc.setJobDescription(prev)
+  }
+
   private def rename(from: Path, to: Path): Unit =
     if (!fs.rename(from, to)) throw new java.io.IOException(s"rename failed: $from -> $to")
 
-  /** The input half of [[run]]: start a query over `delta/` with `schema`,
-    * land each of `batches` as one file and process it before the next one
-    * lands (so batch order is known and no modification-time race can merge
-    * two), then stop. Each micro-batch goes to `onBatch`.
+  /** The input half of [[run]]: start a query over `delta/` with the first
+    * batch's schema, land each of `batches` as one file and process it
+    * before the next one lands (so batch order is known and no
+    * modification-time race can merge two), then stop. Each micro-batch
+    * goes to `onBatch`.
     *
     * `stateful` is a transform applied to the streaming plan itself (a
     * state store only sees stateful work done in the plan, not in the
@@ -134,12 +145,13 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
     * its checkpoint before each later batch, so the carried state must
     * survive a process handover, not only consecutive triggers.
     */
-  private def feed(schema: StructType, batches: Seq[DataFrame],
-      stateful: Option[DataFrame => DataFrame])
+  private def feed(batches: Seq[DataFrame], stateful: Option[DataFrame => DataFrame])
       (onBatch: (DataFrame, Long) => Unit): Unit = {
     val ckpt = new Path(base, "ckpt").toString
     def start() = {
-      val src = s.readStream.schema(schema).parquet(delta.toString)
+      // the file source reads every column as nullable
+      // (spark.sql.streaming.fileSource.schema.forceNullable)
+      val src = s.readStream.schema(batches.head.schema).parquet(delta.toString)
       stateful.fold(src)(_(src)).writeStream
         .outputMode(if (stateful.isDefined) "update" else "append")
         .option("checkpointLocation", ckpt)
@@ -183,7 +195,8 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
     *     session setting would charge every micro-batch the task-scheduling
     *     cost of the whole corpus; for the same reason a batch this loop
     *     landed with at most `InterpretedMaxRows` rows runs interpreted
-    *     (see the class doc);
+    *     (see the class doc); its jobs carry the job description
+    *     `<base dir name> b<N>`;
     *  4. publish: one rename of `out` to the marker, or a `mkdirs` of the
     *     marker when the body wrote nothing.
     * A crash before step 4 leaves no marker, so the redelivered batch runs
@@ -215,7 +228,9 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
         if (rows.exists(_ <= IngestLoop.InterpretedMaxRows)) IngestLoop.Interpreted else Nil
       withConf(s, ("spark.sql.shuffle.partitions" -> s.sparkContext.defaultParallelism.toString)
           +: interpreted: _*) {
-        withConf(batch.sparkSession, interpreted: _*)(body(batch, id, out.toString))
+        withConf(batch.sparkSession, interpreted: _*) {
+          withJobDescription(s"${base.getName} b$id")(body(batch, id, out.toString))
+        }
       }
       if (fs.exists(out)) rename(out, done) else mkdirs(done)
       Some((System.nanoTime() - t0) / 1e9)
@@ -224,13 +239,14 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
 
   /** [[feed]] with [[commit]] as the sink: records the per-batch walls of the
     * bodies that ran under [[graft.util.Recorder.BatchWalls]], and requires
-    * one committed id per fed batch.
+    * one committed id per fed batch. The stream reads every batch with the
+    * first one's schema, so all of `batches` share it.
     */
-  def run(schema: StructType, batches: Seq[DataFrame],
-      stateful: Option[DataFrame => DataFrame] = None)
+  def run(batches: Seq[DataFrame], stateful: Option[DataFrame => DataFrame] = None)
       (body: (DataFrame, Long, String) => Unit): Unit = {
+    require(batches.nonEmpty, s"${base.getName}: an ingest loop needs at least one batch")
     val walls = List.newBuilder[Double]
-    feed(schema, batches, stateful)((b, id) =>
+    feed(batches, stateful)((b, id) =>
       walls ++= commitCounted(b, id, countIsBatch = stateful.isEmpty)(body))
     val n = committedIds().size
     require(n == batches.size,

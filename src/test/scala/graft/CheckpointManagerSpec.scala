@@ -4,43 +4,18 @@ import graft.operators.Concat
 import graft.sources.Discovery
 import graft.streaming.{Checkpoint, IngestLoop, StreamingConcat}
 import graft.util.Conf.withConf
-import java.nio.file.{Files, Path}
-import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
-import scala.jdk.CollectionConverters._
+import java.nio.file.Path
 
 /** Which checkpoint file manager graft's streams write their logs through
-  * ([[graft.streaming.Checkpoint]]), counted by the processes it forks.
-  *
-  * The census is a JFR recording of `jdk.ProcessStart` taken inside this
-  * JVM, so it is deterministic: it counts the child processes whose command
-  * line names the test's own dirs. Without the native Hadoop library a
-  * FileContext rename of a local checkpoint file forks `readlink`; the
-  * FileSystem manager forks none.
+  * ([[graft.streaming.Checkpoint]]), counted by the processes it forks
+  * ([[SparkSpec.forks]]). Without the native Hadoop library a FileContext
+  * rename of a local checkpoint file forks `readlink`; the FileSystem
+  * manager forks none.
   */
 class CheckpointManagerSpec extends SparkSpec {
 
   private val FileContextManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
-
-  /** Child processes started during `f` whose command line names `under`,
-    * counted by program name.
-    */
-  private def forks(under: Path)(f: => Unit): Map[String, Int] = {
-    val rec = new Recording()
-    try {
-      rec.enable("jdk.ProcessStart")
-      rec.start()
-      try f finally rec.stop()
-      val file = Files.createTempFile("forks", ".jfr")
-      try {
-        rec.dump(file)
-        RecordingFile.readAllEvents(file).asScala.toSeq
-          .map(_.getString("command")).filter(_.contains(under.toString))
-          .groupBy(_.split(' ').head.split('/').last).map { case (k, v) => k -> v.size }
-      } finally Files.deleteIfExists(file)
-    } finally rec.close()
-  }
 
   /** One `StreamingConcat.run` wave over `d/in`: lands `w<wave>.csv` with
     * ids `wave*10 + 1 .. wave*10 + 3`, then drains it into `d/out` under
@@ -65,7 +40,7 @@ class CheckpointManagerSpec extends SparkSpec {
     import spark.implicits._
     val batch = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val l = forks(base) {
-      loop.run(batch.schema, Seq(batch, batch)) { (b, _, out) =>
+      loop.run(Seq(batch, batch)) { (b, _, out) =>
         b.write.mode("overwrite").parquet(out)
       }
     }

@@ -7,8 +7,8 @@ import org.scalacheck.{Gen, Prop}
 /** The dedup family's dual-path contracts over generated inputs: the
   * closure's driver union-find equals its distributed label propagation
   * (one-shot and per batch), the union of per-batch ingest-index pairs
-  * equals the one-shot pairs, and st20's and st23's ingest loops end where
-  * their one-shot twins do, for any batch split.
+  * equals the one-shot pairs, and st11's, st20's and st23's ingest loops
+  * end where their one-shot twins do, for any batch split.
   */
 class DedupPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -224,6 +224,41 @@ class DedupPropertySpec extends SparkSpec {
         rows.toDF("doc_id", "url", "n_chars")))
       assert(got == want, s"st20 != d22 for split ${batchOf.mkString(",")}: " +
         s"only-st20=${got diff want} only-d22=${want diff got}")
+      true
+    })
+  }
+
+  /** A documents snapshot (doc_id, text, lang, source, n_chars) and a CDC
+    * delta with one row per key: upserts and tombstones of snapshot docs,
+    * inserts of new ids, and tombstones of ids the snapshot never held.
+    */
+  private val cdcGen = for {
+    n <- Gen.choose(1, 12)
+    ids <- shuffledIds(n + 6)
+    touched <- Gen.someOf(ids)
+    ops <- Gen.listOfN(touched.size, Gen.oneOf("upsert", "delete"))
+  } yield (ids.take(n).map(i => (i, s"t$i", "en", "web", i)),
+    touched.toSeq.zip(ops).map { case (i, op) => (i, s"u$i", "de", "cdc", i * 2, op) })
+
+  test("property: st11 over any 1-3-way split, empty batches included, == d15's one-shot mergeSnapshot") {
+    import graft.queries.PipelineQueries
+    val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
+    val gen = for {
+      (docs, delta) <- cdcGen
+      k <- Gen.choose(1, 3)
+      batchOf <- Gen.listOfN(delta.size, Gen.choose(0, k - 1))
+    } yield (docs, delta, k, batchOf)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    check(Prop.forAllNoShrink(gen) { case (docs, delta, k, batchOf) =>
+      val snapshot = docs.toDF(cols: _*)
+      val batches = (0 until k).map(b =>
+        delta.zip(batchOf).collect { case (d, `b`) => d }.toDF(cols :+ "op": _*))
+      val loop = graft.streaming.IngestLoop.local(spark, "st11prop_loop", "")
+      val got = rows(PipelineQueries.st11Ingest(spark, snapshot, batches, loop))
+      val want = rows(Dedup.mergeSnapshot(snapshot, delta.toDF(cols :+ "op": _*), "doc_id")
+        .select(cols.head, cols.tail: _*))
+      assert(got == want, s"st11 != d15 for split ${batchOf.mkString(",")}: " +
+        s"only-st11=${got diff want} only-d15=${want diff got}")
       true
     })
   }

@@ -261,17 +261,16 @@ class FaultInjectionSpec extends SparkSpec {
 
   test("ingest loop: run records one wall per body that ran and the staging of each landed file") {
     import graft.util.Recorder
-    val schema = loopBatch.schema
     val loop = faultLoop("looprecord")
     Recorder.clear()
-    loop.run(schema, Seq(loopBatch, loopBatch.limit(0), loopBatch))(new CountingBody()(_, _, _))
+    loop.run(Seq(loopBatch, loopBatch.limit(0), loopBatch))(new CountingBody()(_, _, _))
     assert(loop.committedIds() == Seq(0L, 1L, 2L) && loop.payloads().size == 2)
     val walls = Recorder.get(Recorder.BatchWalls)
     assert(walls.size == 2 && walls.forall(_ > 0), s"one wall per non-empty batch: $walls")
     val staged = Recorder.get(Recorder.StagingSecs)
     assert(staged.size == 3 && staged.forall(_ > 0), s"one staging wall per landed file: $staged")
     // a later run replaces the walls instead of appending to them
-    faultLoop("looprecord2").run(schema, Seq(loopBatch))(new CountingBody()(_, _, _))
+    faultLoop("looprecord2").run(Seq(loopBatch))(new CountingBody()(_, _, _))
     assert(Recorder.get(Recorder.BatchWalls).size == 1)
     assert(Recorder.get(Recorder.StagingSecs).size == 1)
   }

@@ -1,30 +1,21 @@
 package graft
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** One shared local session for all suites (cheap, avoids N×JVM-warmup). */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // local[4, 3]: up to 3 attempts per task — a cluster's retry regime,
-      // which RetryDeterminismSpec depends on; deterministic failures in
-      // other suites still fail their jobs (after 2 cheap extra attempts)
-      .master("local[4, 3]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // old ns-ts fixture compat only (no-op on us fixtures); the real ts
-      // handling is the adaptive Q.normalizeTs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[4, 3]: up to 3 attempts per task — a cluster's retry regime,
+  // which RetryDeterminismSpec depends on; deterministic failures in
+  // other suites still fail their jobs (after 2 cheap extra attempts)
+  lazy val spark: SparkSession = graft.util.Session.forQueries("local[4, 3]", 8, "WARN",
+    "spark.app.name" -> "graft-test")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
@@ -40,6 +31,29 @@ abstract class SparkSpec extends AnyFunSuite {
     java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.writeString(p, content)
     p.toString
+  }
+
+  /** Child processes started during `f` whose command line names `under`,
+    * counted by program name. The census is a JFR recording of
+    * `jdk.ProcessStart` taken inside this JVM, so it is deterministic: it
+    * counts only the forks that touch the test's own dirs.
+    */
+  def forks(under: java.nio.file.Path)(f: => Unit): Map[String, Int] = {
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try f finally rec.stop()
+      val file = java.nio.file.Files.createTempFile("forks", ".jfr")
+      try {
+        rec.dump(file)
+        // a recording the JVM was started with lands in the same dump
+        RecordingFile.readAllEvents(file).asScala.toSeq
+          .filter(_.getEventType.getName == "jdk.ProcessStart")
+          .map(_.getString("command")).filter(_.contains(under.toString))
+          .groupBy(_.split(' ').head.split('/').last).map { case (k, v) => k -> v.size }
+      } finally java.nio.file.Files.deleteIfExists(file)
+    } finally rec.close()
   }
 
   /** Runs a ScalaCheck property over 12 inputs from a fixed seed, so a
