@@ -150,6 +150,17 @@ object PipelineQueries {
       .localCheckpoint()
   }
 
+  /** m05's one-shot pairs over `(media_id, dhash)` signatures, at the
+    * perceptual family's geometry: ordered (idA, idB, hamming) with
+    * idA < idB and hamming <= [[Dedup.Perceptual.MaxHamming]]. st24's
+    * union over batches equals this.
+    */
+  private[graft] def perceptualPairs(sigs: DataFrame): DataFrame =
+    ordered(Dedup.simhashPairsCollapsed(sigs, "media_id", "dhash",
+        maxHamming = Dedup.Perceptual.MaxHamming, bits = Dedup.Perceptual.Bits,
+        sigFn = c => c, blocks = Dedup.Perceptual.Blocks)
+      .select(col("idA"), col("idB"), col("hamming").cast("int").as("hamming")))
+
   /** m05/m06's shared oracle CTEs: the dHash rebuilt from text bytes
     * (pixel i = utf-8 byte i mod len; +16 clamp for the shifted copies,
     * RGB re-encode changes nothing), 2x2 block sums, wraparound neighbor
@@ -305,7 +316,7 @@ object PipelineQueries {
 
   /** d17's build-once INGEST-SIDE dedup index (round-11 verdict #2): the
     * corpus's banded minhash signatures + shingle sets persisted as two
-    * slim bucketed tables, fixture-keyed like [[s14ServeIndex]]. First
+    * slim parquet tables, fixture-keyed like [[s14ServeIndex]]. First
     * invocation per fixture pays the one corpus text pass; every
     * subsequent batch probe reads the slim tables and never re-shingles
     * the corpus — the warehouse-scale daily-batch absorption shape.
@@ -357,7 +368,7 @@ object PipelineQueries {
     * side (the two arriving micro-batches) decoupled. The st13 query passes
     * the same docs for both; [[st13FixedBatchIngest]] scales only the
     * corpus. Body is the load-bearing st13 shape: per-invocation index,
-    * probe -> admitted rows staged to parquet BEFORE the append -> bucketed
+    * probe -> admitted rows staged to parquet BEFORE the append -> index
     * append, committed by [[IngestLoop]] (a crash between the append and
     * the publish replays into the probe's duplicate-id refusal).
     */
@@ -390,7 +401,9 @@ object PipelineQueries {
       // the loop's batch-sized shuffle partitions keep per-batch wall flat
       // in corpus size (round 13 measured the 1x->16x fixed-batch step,
       // 4.54 -> 7.65 s, tracking the soak's 32->1024 partition scaling);
-      // the corpus side is bucketed, so the probe join never reshuffles it
+      // the probe's broadcast semi-filters cut both index tables down to
+      // the batch's buckets and candidates inside their scans, so no
+      // shuffle carries the corpus
       val loop = IngestLoop.local(s, "st13_ingest", key)
       loop.run(Seq(batch1, batch2)) { (batch, _, out) =>
         // the probe returns its checkpointed prep, and the append below
@@ -419,7 +432,7 @@ object PipelineQueries {
     * SAME two micro-batches (constructed from `baseDir`) at every corpus
     * scale. ScaleSoak runs this as the `st13_fixed_batch_ingest` leg: the
     * `ingest_batch_sec_max` column across scales is the streaming claim —
-    * per-batch wall (probe + staged admitted write + bucketed append +
+    * per-batch wall (probe + staged admitted write + index append +
     * marker) independent of corpus size — that the st13 soak leg can't
     * witness (its batches are derived from the scaled corpus). When
     * `dir == baseDir` the output equals the st13 query's (spec-pinned).
@@ -885,9 +898,9 @@ object PipelineQueries {
     * Per-batch cost is
     * O(batch + pairs + remap): the corpus-sized stored frame is only
     * narrow-scanned under a broadcast endpoint filter inside
-    * closureMerge, and the index append is bucketed — nothing
-    * corpus-shuffling. Returns the read-side labels over everything
-    * ingested.
+    * closureMerge, and the index append is one plain parquet append of
+    * the batch's prep per table — nothing corpus-shuffling. Returns the
+    * read-side labels over everything ingested.
     */
   private[graft] def st23Ingest(s: SparkSession, batches: Seq[DataFrame],
       loop: IngestLoop, tblBase: String): DataFrame = {
@@ -897,10 +910,7 @@ object PipelineQueries {
     // fresh-vs-fresh leg) and appends, exactly like every later batch
     Dedup.buildJaccardIngestIndex(batches.head.limit(0), "doc_id", "text", tblBase)
     loop.run(batches) { (batch, id, out) =>
-      // each phase's jobs carry the loop's per-batch description, suffixed
-      val desc = s.sparkContext.getLocalProperty("spark.job.description")
-      def label(x: String): Unit = s.sparkContext.setJobDescription(s"$desc: $x")
-      label("probe")
+      loop.phase(id, "probe")
       // the probe's checkpointed prep carries the batch's ids AND feeds
       // the index append below, so the shingle+minhash walk — the
       // batch's dominant compute — runs exactly once per micro-batch and
@@ -918,7 +928,7 @@ object PipelineQueries {
           col("doc_id").as("root")).limit(0)
         case Some(v) => s.read.parquet(v + "/remap")
       }
-      label("closure merge")
+      loop.phase(id, "closure merge")
       val (storedApp, remapNew) = Dedup.closureMerge(
         storedPrior, remapPrior,
         prep.select(col("id").as("doc_id")), pairs)
@@ -926,15 +936,15 @@ object PipelineQueries {
       // frames over checkpointed inputs) — run them concurrently
       // (guide §2.6): each is mostly fixed job/commit cost per batch.
       // The index append consumes the probe's checkpointed prep, which
-      // it rebinds to the main session (a bucketed saveAsTable append
-      // fed the streaming batch DF directly writes through the
-      // micro-batch's cloned session and lands zero rows in the shared
-      // catalog's table); the probe's guard already proved its ids new
-      label("staged state writes")
+      // it rebinds to the main session (a saveAsTable append fed the
+      // streaming batch DF directly writes through the micro-batch's
+      // cloned session and lands zero rows in the shared catalog's
+      // table); the probe's guard already proved its ids new
+      loop.phase(id, "staged state writes")
       graft.util.Par.actions(
         () => storedApp.write.mode("overwrite").parquet(out + "/stored"),
         () => remapNew.write.mode("overwrite").parquet(out + "/remap"))
-      label("index append")
+      loop.phase(id, "index append")
       Dedup.appendJaccardIngestIndex(s, tblBase, prep)
     }
     val vs = loop.payloads()
@@ -1015,18 +1025,10 @@ object PipelineQueries {
     * their d17/st13 pairing. The m05 media corpus arrives as two
     * micro-batches split so every planted perceptual-duplicate group
     * STRADDLES the boundary (base images in batch 1, the
-    * brightness-shifted and RGB-re-encoded copies in batch 2); each
-    * batch is dHashed ALONE (the corpus is never re-decoded — the
-    * build-once claim), probed against the persisted combination-key
-    * band index ([[graft.operators.Dedup.incrementalSimhashPairsIndexed]]
-    * — the old side is one bucket-pruned scan semi-filtered by the
-    * batch's broadcast bucket set, so per-batch shuffle is
-    * occupancy-bounded), and its signatures append to the index. Each
-    * batch's pairs are one [[IngestLoop]] payload; a crash between the
-    * append and the publish replays into the probe's duplicate-id refusal
-    * (st13's contract). The union over batches equals the one-shot m05 banded pairs for any
-    * batch split (orientation-normalized, min-hamming deduped), so
-    * m05's brute-force DuckDB oracle pins batch == streaming verbatim.
+    * brightness-shifted and RGB-re-encoded copies in batch 2), and
+    * [[st24Ingest]] streams them. The union over batches equals the
+    * one-shot m05 pairs for any batch split, so m05's brute-force DuckDB
+    * oracle pins batch == streaming verbatim.
     */
   private def st24PerceptualIngest(s: SparkSession, dir: String): DataFrame = {
     // the batches are CONSTRUCTED directly from their doc slices
@@ -1035,9 +1037,7 @@ object PipelineQueries {
     // EACH batch's write re-rendered every PNG of all three legs and
     // discarded the other batch's — 2x the m-family's dominant cost.
     // Membership is identical (base ids stay below the +2e6/+3e6 offsets)
-    // and the output is split-invariant anyway (the union over batches
-    // equals the one-shot m05 pairs for any split — the docstring's
-    // induction, pinned by the oracle).
+    // and the output is split-invariant anyway (st24Ingest's contract).
     val docs = t(s, dir, "documents")
       .where(col("text").isNotNull && length(col("text")) > 0)
       .select("doc_id", "text")
@@ -1050,28 +1050,48 @@ object PipelineQueries {
         docs.where(col("doc_id") % 9 === 4)
           .select((col("doc_id") + 3000000L).as("doc_id"), col("text")),
         "doc_id", "text", rgb = true))
-    val tblBase = s"st24pd_${java.lang.Integer.toHexString(dir.hashCode)}"
+    st24Ingest(s, Seq(batch1, batch2), IngestLoop.local(s, "st24_perceptual", dir),
+      s"st24pd_${java.lang.Integer.toHexString(dir.hashCode)}")
+  }
+
+  /** The st24 ingest loop: stream the media `batches` (the
+    * [[Multimodal.fromTextPng]] schema) through `loop`. Each batch is
+    * dHashed ALONE (the corpus is never re-decoded — the build-once
+    * claim), probed against the persisted combination-key band index
+    * ([[graft.operators.Dedup.incrementalSimhashPairsIndexed]] — the old
+    * side is one slim scan semi-filtered by the batch's broadcast bucket
+    * set, so per-batch shuffle is occupancy-bounded), and its signatures
+    * append to the index. Each batch's pairs are one [[IngestLoop]]
+    * payload; a crash between the append and the publish replays into
+    * the probe's duplicate-id refusal (st13's contract). The union over
+    * batches equals [[perceptualPairs]] over all of them for any batch
+    * split (orientation-normalized, min-hamming deduped). Returns the
+    * ordered (idA, idB, hamming) pairs.
+    */
+  private[graft] def st24Ingest(s: SparkSession, batches: Seq[DataFrame],
+      loop: IngestLoop, tblBase: String): DataFrame = {
     val bandT = s"${tblBase}_band"
     graft.util.TableRetention.sweep(s, tblBase)
     // seed an EMPTY band index — the uniform-loop trick st23 uses
     Dedup.buildSimhashIngestIndex(
-      batch1.select(col("media_id").as("id"), lit(0L).as("sig")).limit(0),
+      batches.head.select(col("media_id").as("id"), lit(0L).as("sig")).limit(0),
       "id", "sig", bandT)
-    val loop = IngestLoop.local(s, "st24_perceptual", dir)
-    loop.run(Seq(batch1, batch2)) { (batch, _, out) =>
+    loop.run(batches) { (batch, id, out) =>
+      loop.phase(id, "probe")
       // decode ONLY the batch — the corpus side is the slim persisted
       // band index, never re-decoded
       val sigs = Multimodal.withDHash(batch)
         .where(col("dhash").isNotNull).localCheckpoint()
       val pairs = Dedup.incrementalSimhashPairsIndexed(s, bandT, sigs, "media_id", "dhash")
+      loop.phase(id, "pairs write")
       pairs.write.mode("overwrite").parquet(out + "/pairs")
       // append the CHECKPOINTED signatures directly: the probe's
       // require just proved these ids unique against the same table
       // (the append does not re-check), and the append rebinds the
       // frame through the main session internally (the st23 lesson: a
-      // bucketed saveAsTable append fed a streaming-derived frame
-      // writes through the micro-batch's cloned session and lands zero
-      // rows)
+      // saveAsTable append fed a streaming-derived frame writes through
+      // the micro-batch's cloned session and lands zero rows)
+      loop.phase(id, "index append")
       Dedup.appendSimhashIngestIndex(s, bandT, sigs, "media_id", "dhash")
     }
     val out = ordered(s.read.parquet(loop.payloads().map(_ + "/pairs"): _*)
@@ -3544,11 +3564,7 @@ object PipelineQueries {
     // overflow the bucket cap. Output (and the brute-force oracle) is
     // unchanged — the pair VIEW is still O(cluster^2) rows by contract;
     // m06 below is the linear production shape.
-    "m05_perceptual_dedup" -> ((s, dir) =>
-      ordered(Dedup.simhashPairsCollapsed(m05Sigs(s, dir), "media_id", "dhash",
-          maxHamming = Dedup.Perceptual.MaxHamming, bits = Dedup.Perceptual.Bits,
-          sigFn = c => c, blocks = Dedup.Perceptual.Blocks)
-        .select(col("idA"), col("idB"), col("hamming").cast("int").as("hamming")))),
+    "m05_perceptual_dedup" -> ((s, dir) => perceptualPairs(m05Sigs(s, dir))),
     // m05's pairs closed into connected components (d09's exact min-label
     // propagation) — the PRODUCTION shape for perceptual dedup: LINEAR in
     // images end-to-end (v2): identical-dHash groups collapse to their

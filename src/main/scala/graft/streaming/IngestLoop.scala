@@ -130,6 +130,16 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
     try f finally sc.setJobDescription(prev)
   }
 
+  /** Inside batch `id`'s body: label the jobs that follow as the body's
+    * phase `name`, with the job description `<base dir name> b<id>: <name>`.
+    * The caller's description comes back when the body returns.
+    */
+  def phase(id: Long, name: String): Unit =
+    s.sparkContext.setJobDescription(s"${batchDesc(id)}: $name")
+
+  /** Batch `id`'s job description: `<base dir name> b<id>`. */
+  private def batchDesc(id: Long) = s"${base.getName} b$id"
+
   private def rename(from: Path, to: Path): Unit =
     if (!fs.rename(from, to)) throw new java.io.IOException(s"rename failed: $from -> $to")
 
@@ -229,7 +239,7 @@ final class IngestLoop private (s: SparkSession, val base: Path) {
       withConf(s, ("spark.sql.shuffle.partitions" -> s.sparkContext.defaultParallelism.toString)
           +: interpreted: _*) {
         withConf(batch.sparkSession, interpreted: _*) {
-          withJobDescription(s"${base.getName} b$id")(body(batch, id, out.toString))
+          withJobDescription(batchDesc(id))(body(batch, id, out.toString))
         }
       }
       if (fs.exists(out)) rename(out, done) else mkdirs(done)

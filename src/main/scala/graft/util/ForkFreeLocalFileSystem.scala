@@ -1,8 +1,12 @@
 package graft.util
 
+import java.net.URI
 import java.nio.file.{Files, Path => JPath}
 import java.nio.file.attribute.PosixFilePermission
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults,
+  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's checksummed local FS over a raw layer that sets permissions in
@@ -21,6 +25,30 @@ import org.apache.hadoop.fs.permission.FsPermission
   * does.
   */
 final class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeLocalFileSystem.Raw)
+
+/** The same raw layer for `FileContext`, as Hadoop's `LocalFs` is for its
+  * `RawLocalFileSystem`: a checksummed `AbstractFileSystem` over a
+  * `DelegateToFileSystem`. `FileContext` builds its own `file:` FS from
+  * `fs.AbstractFileSystem.file.impl` and never reads `fs.file.impl`, so
+  * [[Session]] registers this class there too. Streaming checkpoint logs
+  * outside [[graft.streaming.Checkpoint.local]] and state-store files are
+  * written through it, and their modes are then set without forking
+  * `chmod`.
+  */
+final class ForkFreeLocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new ForkFreeLocalFs.Raw(uri, conf))
+
+object ForkFreeLocalFs {
+
+  /** Hadoop's `RawLocalFs` over [[ForkFreeLocalFileSystem.Raw]]. */
+  final class Raw(uri: URI, conf: Configuration) extends DelegateToFileSystem(
+      FsConstants.LOCAL_FS_URI, new ForkFreeLocalFileSystem.Raw, conf,
+      FsConstants.LOCAL_FS_URI.getScheme, false) {
+    override def getUriDefaultPort: Int = -1
+    override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
+    override def isValidName(src: String): Boolean = true
+  }
+}
 
 object ForkFreeLocalFileSystem {
 

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * test harness build theirs here and state only what differs.
   *
   * Every session runs in UTC with the UI off, writes `file:` through
-  * [[ForkFreeLocalFileSystem]], and keeps up to 2000 generated classes in
-  * the codegen cache. The cache size is a static conf with a default of
+  * [[ForkFreeLocalFileSystem]] ([[ForkFreeLocalFs]] under Hadoop's
+  * `FileContext` API), and keeps up to 2000 generated classes in the
+  * codegen cache. The cache size is a static conf with a default of
   * 100: a curation pass compiles several hundred classes, and at 100 it
   * evicts and recompiles some of them.
   */
@@ -17,7 +18,8 @@ object Session {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false",
     "spark.sql.codegen.cache.maxEntries" -> "2000",
-    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName)
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
 
   /** The session on `master` with `shufflePartitions` and Spark's log
     * level at `logLevel`, plus the caller's own `conf`.

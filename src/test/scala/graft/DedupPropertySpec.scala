@@ -7,8 +7,8 @@ import org.scalacheck.{Gen, Prop}
 /** The dedup family's dual-path contracts over generated inputs: the
   * closure's driver union-find equals its distributed label propagation
   * (one-shot and per batch), the union of per-batch ingest-index pairs
-  * equals the one-shot pairs, and st11's, st20's and st23's ingest loops
-  * end where their one-shot twins do, for any batch split.
+  * equals the one-shot pairs, and st11's, st20's, st23's and st24's ingest
+  * loops end where their one-shot twins do, for any batch split.
   */
 class DedupPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -133,7 +133,7 @@ class DedupPropertySpec extends SparkSpec {
     check(Prop.forAllNoShrink(gen) { case (docs, batchOf) =>
       graft.util.TableRetention.sweep(spark, "propjx_")
       val all = docs.toDF("doc_id", "text")
-      Dedup.buildJaccardIngestIndex(all.limit(0), "doc_id", "text", index, buckets = 4)
+      Dedup.buildJaccardIngestIndex(all.limit(0), "doc_id", "text", index)
       val perBatch = (0 to batchOf.max).flatMap { b =>
         val batch = docs.zip(batchOf).collect { case (d, `b`) => d }
           .toDF("doc_id", "text")
@@ -175,6 +175,58 @@ class DedupPropertySpec extends SparkSpec {
         Dedup.ngramJaccardPairs(all, "doc_id", "text")))
       assert(got == want, s"st23 labels != one-shot for split ${batchOf.mkString(",")}: " +
         s"diff=${(got.toSet diff want.toSet) ++ (want.toSet diff got.toSet)}")
+      true
+    })
+  }
+
+  /** Media corpus rows (id, text, variant): base texts, each followed by
+    * copies rendered as m05 plants them (variant 1: +16 brightness, 2: RGB
+    * re-encode) or as a plain image of the base text with one character
+    * changed (variant 0), so copies fall at Hamming distances 0 and up;
+    * ids are shuffled.
+    */
+  private val mediaCorpusGen: Gen[Seq[(Long, String, Int)]] = {
+    val text = Gen.choose(8, 40).flatMap(Gen.listOfN(_, Gen.alphaLowerChar)).map(_.mkString)
+    val copy = (t: String) => Gen.oneOf(
+      Gen.oneOf(1, 2).map(v => (t, v)),
+      for (i <- Gen.choose(0, t.length - 1); c <- Gen.alphaUpperChar)
+        yield (t.updated(i, c), 0))
+    for {
+      bases <- Gen.choose(2, 5).flatMap(Gen.listOfN(_, text))
+      copies <- Gen.sequence[List[List[(String, Int)]], List[(String, Int)]](
+        bases.map(b => Gen.choose(0, 3).flatMap(Gen.listOfN(_, copy(b)))))
+      items = bases.map(_ -> 0) ++ copies.flatten
+      ids <- shuffledIds(items.size)
+    } yield ids.zip(items).map { case (id, (t, v)) => (id, t, v) }
+  }
+
+  /** [[mediaCorpusGen]] rows as one media frame, each variant rendered
+    * as m05 renders it.
+    */
+  private def media(rows: Seq[(Long, String, Int)]): DataFrame = {
+    def render(v: Int, shift: Int = 0, rgb: Boolean = false) =
+      graft.operators.Multimodal.fromTextPng(
+        rows.collect { case (id, t, `v`) => (id, t) }.toDF("doc_id", "text"),
+        "doc_id", "text", shift, rgb)
+    render(0).unionByName(render(1, shift = 16)).unionByName(render(2, rgb = true))
+  }
+
+  test("property: st24 over any 1-3-way split, empty batches included, == m05's one-shot pairs") {
+    import graft.queries.PipelineQueries
+    val gen = for {
+      rows <- mediaCorpusGen
+      k <- Gen.choose(1, 3)
+      batchOf <- Gen.listOfN(rows.size, Gen.choose(0, k - 1))
+    } yield (rows, k, batchOf)
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    check(Prop.forAllNoShrink(gen) { case (rows, k, batchOf) =>
+      val batches = (0 until k).map(b => media(rows.zip(batchOf).collect { case (r, `b`) => r }))
+      val loop = graft.streaming.IngestLoop.local(spark, "st24prop_loop", "")
+      val got = pairs(PipelineQueries.st24Ingest(spark, batches, loop, "st24prop"))
+      val want = pairs(PipelineQueries.perceptualPairs(
+        graft.operators.Multimodal.withDHash(media(rows)).where($"dhash".isNotNull)))
+      assert(got == want, s"st24 != m05 for split ${batchOf.mkString(",")}: " +
+        s"only-st24=${got diff want} only-m05=${want diff got}")
       true
     })
   }
@@ -280,7 +332,7 @@ class DedupPropertySpec extends SparkSpec {
     check(Prop.forAllNoShrink(sigsGen) { case (sigs, batchOf) =>
       graft.util.TableRetention.sweep(spark, "propsh_")
       val all = sigs.toDF("id", "sig")
-      Dedup.buildSimhashIngestIndex(all.limit(0), "id", "sig", bandT, buckets = 4)
+      Dedup.buildSimhashIngestIndex(all.limit(0), "id", "sig", bandT)
       val perBatch = (0 to batchOf.max).flatMap { b =>
         val batch = sigs.zip(batchOf).collect { case (s, `b`) => s }.toDF("id", "sig")
         val got = Dedup.incrementalSimhashPairsIndexed(spark, bandT, batch, "id", "sig")

@@ -792,8 +792,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val orphan = new java.io.File(wh, "dspec_sh_cafe")
     orphan.mkdirs()
     val live = graft.operators.Dedup.jaccardIndexTables("dspec_live")
-    graft.operators.Dedup.buildJaccardIngestIndex(docs, "doc_id", "text",
-      "dspec_live", buckets = 4)
+    graft.operators.Dedup.buildJaccardIngestIndex(docs, "doc_id", "text", "dspec_live")
     val swept = graft.util.TableRetention.sweep(spark, "dspec_", live.contains)
     assert(swept.exists(_.endsWith("dspec_band_deadbeef")), swept)
     assert(swept.exists(_ == "loc:dspec_sh_cafe"), swept)
@@ -1104,8 +1103,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val docs = sf("documents").select($"doc_id", $"text")
     // a prior failed run's tables/locations would make saveAsTable refuse
     graft.util.TableRetention.sweep(spark, "dspeca_")
-    graft.operators.Dedup.buildJaccardIngestIndex(docs, "doc_id", "text",
-      "dspeca", buckets = 4)
+    graft.operators.Dedup.buildJaccardIngestIndex(docs, "doc_id", "text", "dspeca")
     // batch 1: near-dup mutations of every 7th doc (blocked) plus
     // genuinely-new docs (every token suffixed — all shingles change);
     // the survivors are what a real ingest admits to the corpus
@@ -1250,7 +1248,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val b2 = sigs.where(col("id").isin(2L, 4L, 5L))
     // empty-seeded, then appended per batch — the uniform-loop model st24
     // runs (batch-internal pairs surface through the fresh-vs-fresh leg)
-    Dedup.buildSimhashIngestIndex(b1.limit(0), "id", "sig", bandT, buckets = 4)
+    Dedup.buildSimhashIngestIndex(b1.limit(0), "id", "sig", bandT)
     val q1 = Dedup.incrementalSimhashPairsIndexed(spark, bandT, b1, "id", "sig")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     Dedup.appendSimhashIngestIndex(spark, bandT, b1, "id", "sig")
@@ -1267,6 +1265,38 @@ class DedupSimilaritySpec extends SparkSpec {
     }
     assert(e.getMessage.contains("globally unique"), e.getMessage)
     graft.util.TableRetention.sweep(spark, "simix")
+  }
+
+  test("ingest index tables are plain: no bucket spec, one file per prep partition per append") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    def meta(t: String) = spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
+    def files(t: String) =
+      new java.io.File(meta(t).location).listFiles().count(_.getName.startsWith("part-"))
+    graft.util.TableRetention.sweep(spark, "plainix")
+    val index = "plainix_jx"
+    val bandT = "plainix_sim_band"
+    val tables = Dedup.jaccardIndexTables(index) :+ bandT
+    val docs = mkDocs(30).toDF("doc_id", "text")
+    Dedup.buildJaccardIngestIndex(docs.limit(0), "doc_id", "text", index)
+    Dedup.buildSimhashIngestIndex(docs.select($"doc_id".as("id"), lit(0L).as("sig")).limit(0),
+      "id", "sig", bandT)
+    for (k <- 0 until 3) {
+      val (_, prep) = Dedup.incrementalJaccardPairsIndexed(spark, index,
+        docs.where($"doc_id" % 3 === k), "doc_id", "text")
+      val sigs = prep.select($"id", xxhash64($"sh").as("sig"))
+      val parts = prep.rdd.getNumPartitions
+      assert(parts == 1, s"a small batch's prep has $parts partitions")
+      val before = tables.map(files)
+      Dedup.appendJaccardIngestIndex(spark, index, prep)
+      Dedup.appendSimhashIngestIndex(spark, bandT, sigs, "id", "sig")
+      assert(tables.map(files) == before.map(_ + parts),
+        s"append $k: files per table ${tables.zip(before)} -> ${tables.map(files)}")
+    }
+    assert(tables.forall(t => meta(t).bucketSpec.isEmpty),
+      tables.map(t => t -> meta(t).bucketSpec))
+    assert(spark.table(tables(1)).count() == 30 && spark.table(bandT).count() == 30 * 70,
+      "every appended row landed")
+    graft.util.TableRetention.sweep(spark, "plainix")
   }
 
   test("closureMerge: incremental labels == one-shot closure; remap stays composed and merge-bounded") {

@@ -1,14 +1,11 @@
 package graft
 
 import graft.streaming.IngestLoop
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.internal.SQLConf
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 /** [[IngestLoop]]'s interpreted gate: a batch the loop landed small runs its
   * body with interpreted expressions, a large one with codegen, both keys
@@ -52,31 +49,6 @@ class IngestLoopSpec extends SparkSpec {
         q.write.mode("overwrite").parquet(out)
       } finally sc.setLocalProperty(BodyTag, null)
     }
-  }
-
-  /** The properties of every job started while `f` runs. A marker job
-    * after `f` drains the listener bus, which delivers events in order.
-    */
-  private def jobsDuring(f: => Unit): Seq[java.util.Properties] = {
-    val sc = spark.sparkContext
-    val marker = s"drain-${java.util.UUID.randomUUID}"
-    val jobs = new ConcurrentLinkedQueue[java.util.Properties]
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties).getOrElse(new java.util.Properties)
-        if (p.getProperty("spark.job.description") == marker) drained.countDown()
-        else jobs.add(p)
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.asScala.toSeq
-    } finally sc.removeSparkListener(listener)
   }
 
   /** Jobs started while `f` runs, outside any [[RecordingBody]]. */

@@ -1,9 +1,10 @@
 package graft
 
-import graft.util.ForkFreeLocalFileSystem
+import graft.util.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
 import java.net.URI
 import java.nio.file.{Files, Path => JPath}
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.Options.CreateOpts
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.NativeCodeLoader
 
@@ -91,6 +92,25 @@ class SessionSpec extends SparkSpec {
     }
     // a four-digit numeric chmod keeps a dir's setgid bit
     assert(dirs == Seq.fill(2)(Integer.parseInt("2750", 8)), dirs.map(_.toOctalString))
+  }
+
+  test("FileContext's file: is the checksummed fork-free FS, and its modes round-trip with no chmod") {
+    val fc = FileContext.getFileContext(URI.create("file:///"), hconf)
+    assert(fc.getDefaultFileSystem.getClass == classOf[ForkFreeLocalFs])
+    val d = tmpDir("session_fc")
+    val at = (name: String) => new Path(d.toUri.toString, name)
+    val census = forks(d) {
+      fc.create(at("f640"), java.util.EnumSet.of(CreateFlag.CREATE),
+        CreateOpts.perms(perm("640"))).close()
+      fc.mkdir(at("d750"), perm("750"), false)
+      fc.setPermission(at("d750"), perm("700"))
+    }
+    assert(census.getOrElse("chmod", 0) == 0, s"forks under FileContext: $census")
+    assert(Files.exists(d.resolve(".f640.crc")), "a checksummed FS writes a .crc beside the file")
+    for ((name, octal) <- Seq("f640" -> "640", "d750" -> "700")) {
+      assert(mode(d.resolve(name)) == perm(octal).toShort.toInt, s"$name on disk")
+      assert(fc.getFileStatus(at(name)).getPermission == perm(octal), s"$name read back")
+    }
   }
 
   test("a small Parquet write forks no chmod") {

@@ -1,7 +1,9 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Prop, Test}
 import org.scalacheck.rng.Seed
@@ -54,6 +56,31 @@ abstract class SparkSpec extends AnyFunSuite {
           .groupBy(_.split(' ').head.split('/').last).map { case (k, v) => k -> v.size }
       } finally java.nio.file.Files.deleteIfExists(file)
     } finally rec.close()
+  }
+
+  /** The properties of every job started while `f` runs. A marker job
+    * after `f` drains the listener bus, which delivers events in order.
+    */
+  def jobsDuring(f: => Unit): Seq[java.util.Properties] = {
+    val sc = spark.sparkContext
+    val marker = s"drain-${java.util.UUID.randomUUID}"
+    val jobs = new ConcurrentLinkedQueue[java.util.Properties]
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties).getOrElse(new java.util.Properties)
+        if (p.getProperty("spark.job.description") == marker) drained.countDown()
+        else jobs.add(p)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+      jobs.asScala.toSeq
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Runs a ScalaCheck property over 12 inputs from a fixed seed, so a

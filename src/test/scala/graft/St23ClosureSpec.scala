@@ -23,7 +23,7 @@ class St23ClosureSpec extends SparkSpec {
     // b2 = near-dup mutations of b1 (first token dropped), ids offset
     val b2 = b1.select((col("doc_id") + 100L).as("doc_id"),
       expr("substring(text, instr(text, ' ') + 1)").as("text"))
-    Dedup.buildJaccardIngestIndex(b1.limit(0), "doc_id", "text", index, buckets = 4)
+    Dedup.buildJaccardIngestIndex(b1.limit(0), "doc_id", "text", index)
     val (p1, prep1) = Dedup.incrementalJaccardPairsIndexed(spark, index, b1,
       "doc_id", "text")
     assert(p1.count() == 0, "no near-dups were planted within batch 1")
